@@ -33,10 +33,15 @@ if _REPO not in os.environ.get("PYTHONPATH", "").split(os.pathsep):
 
 
 def _tune(spark: SparkSession) -> SparkSession:
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    """Apply the engine's session settings the query results depend on
+    to a caller-built session (values from ``session.DEFAULT_CONF``)."""
+    from ragflow_core16_spark.session import DEFAULT_CONF
+    tz = "spark.sql.session.timeZone"
+    spark.conf.set(tz, DEFAULT_CONF[tz])
     try:
-        spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
+        for key in ("spark.sql.execution.arrow.pyspark.enabled",
+                    "spark.sql.adaptive.enabled"):
+            spark.conf.set(key, DEFAULT_CONF[key])
     except Exception:
         pass
     return spark

@@ -147,71 +147,22 @@ def default_bench() -> dict:
 
     # snapshot-time materializations (the jobs/curate_job.py +
     # jobs/index_job.py steps a deployment runs ONCE per corpus snapshot):
-    # the per-document curation decision table, the GraphRAG index
-    # (mentions / entity graph / communities) and the RAPTOR tree, so the
-    # timed queries below measure the deployment shape — scans — instead
-    # of re-running the dedup chain / entity extraction / clustering loop
-    # per query.  The driver's oracle comparison runs in a fresh session
-    # with no tables, so the full compute paths stay correctness-checked.
-    from ragflow_core16_spark.operators.graphrag import (
-        materialize_graph_index)
-    from ragflow_core16_spark.operators.raptor import (
-        materialize_raptor_tree)
-    from ragflow_core16_spark.operators.tagging import (
-        materialize_tag_features)
-    from ragflow_core16_spark.operators.textstats import (
-        materialize_keywords)
-    from ragflow_core16_spark.operators.webclean import (
-        materialize_web_decisions)
-    from ragflow_core16_spark.operators.dedup import (
-        materialize_dedup_index)
-    from ragflow_core16_spark.operators.embed import (
-        materialize_doc_embeddings)
-    from ragflow_core16_spark.operators.graph import (
-        materialize_webgraph_ranks)
-    from ragflow_core16_spark.operators.similarity import (
-        materialize_semantic_labels)
-    from ragflow_core16_spark.operators.textstats import (
-        materialize_kn_bigram_lm, materialize_lang_unigram_lm)
-    from ragflow_core16_spark.operators.training import (
-        materialize_bpe_merges, materialize_dsir_hist)
-    from ragflow_core16_spark.operators.webclean import (
-        materialize_site_boilerplate)
-    from ragflow_core16_spark.operators.retrieval import (
-        materialize_retrieval_index)
-    # dedup index FIRST: the decision-table build's dedup_kept column then
-    # scans the just-written label table instead of re-running propagation.
-    # Each build is TIMED and reported in the bench JSON
-    # (materialize_wall_sec): the per-query numbers below measure the
-    # deployment shape — scans of the once-per-snapshot index — so the
-    # one-time index-build cost must stay visible alongside them for a
-    # reader to amortize (ADVICE r4).  A wall of 0.0 means the table was
-    # already on disk from a previous run of this warehouse.
-    mat_steps = [
-        ("dedup_index", materialize_dedup_index),
-        ("web_decisions", materialize_web_decisions),
-        ("graph_index", materialize_graph_index),
-        ("raptor_tree", materialize_raptor_tree),
-        ("keywords", materialize_keywords),
-        ("tag_features", materialize_tag_features),
-        ("webgraph_ranks", materialize_webgraph_ranks),
-        ("doc_embeddings", materialize_doc_embeddings),
-        ("semantic_labels", materialize_semantic_labels),
-        ("bpe_merges", materialize_bpe_merges),
-        ("kn_bigram_lm", materialize_kn_bigram_lm),
-        ("lang_unigram_lm", materialize_lang_unigram_lm),
-        ("dsir_hist", materialize_dsir_hist),
-        ("site_boilerplate", materialize_site_boilerplate),
-        ("retrieval_index", materialize_retrieval_index),
-    ]
-    # hermetic build timing: drop THIS corpus snapshot's tables (only the
+    # every family of snapshot_cache.FAMILIES, in its dependency order, so
+    # the timed queries below measure the deployment shape — scans —
+    # instead of re-running the dedup chain / entity extraction /
+    # clustering loop per query.  The driver's oracle comparison runs in a
+    # fresh session with no tables, so the full compute paths stay
+    # correctness-checked.  Each build is TIMED and reported in the bench
+    # JSON (materialize_wall_sec) so a reader can amortize the one-time
+    # index-build cost against the per-query scans (ADVICE r4).
+    # Hermetic build timing: drop THIS corpus snapshot's tables (only the
     # fingerprint dirs for SF_DIR — other corpora's tables are untouched)
     # so every bench run pays and reports the true one-time build cost
     # instead of inheriting a previous run's warehouse as all-zeros
     import shutil as _shutil
 
     from ragflow_core16_spark.pipeline.snapshot_cache import (
-        cache_root, corpus_fingerprint)
+        FAMILIES, cache_root, corpus_fingerprint)
     fp = corpus_fingerprint(SF_DIR)
     if os.path.isdir(cache_root()):
         for kind in os.listdir(cache_root()):
@@ -219,10 +170,10 @@ def default_bench() -> dict:
             if os.path.isdir(tdir):
                 _shutil.rmtree(tdir, ignore_errors=True)
     mat_times = {}
-    for mname, mfn in mat_steps:
+    for fam in FAMILIES:
         t0 = time.time()
-        mfn(spark, SF_DIR)
-        mat_times[mname] = round(time.time() - t0, 2)
+        fam.build(spark, SF_DIR)
+        mat_times[fam.name] = round(time.time() - t0, 2)
 
     # hermetic per-query timing: drop ALL persisted state between queries
     # so no measurement inherits a neighbor's storage-memory pressure.
@@ -881,15 +832,10 @@ def incremental_cost() -> None:
     from pyspark.sql import functions as F
 
     from ragflow_core16_spark.datagen.documents import documents_df
-    from ragflow_core16_spark.operators.dedup import (
-        materialize_dedup_index, reset_shared_cache)
-    from ragflow_core16_spark.operators.retrieval import (
-        materialize_retrieval_index)
-    from ragflow_core16_spark.operators.training import (
-        materialize_decon_index)
-    from ragflow_core16_spark.operators.webclean import (
-        materialize_web_decisions)
+    from ragflow_core16_spark.operators.dedup import reset_shared_cache
     from ragflow_core16_spark.pipeline.incremental import incremental_update
+    from ragflow_core16_spark.pipeline.snapshot_cache import (
+        DELTA_FAMILIES, materialize_families)
     from ragflow_core16_spark.streaming.curation_stream import _link_tree
 
     spark = _spark(CPUS)
@@ -900,10 +846,7 @@ def incremental_cost() -> None:
     def full_build(sf_dir: str) -> float:
         reset_shared_cache()
         t0 = time.time()
-        materialize_dedup_index(spark, sf_dir)
-        materialize_web_decisions(spark, sf_dir)
-        materialize_decon_index(spark, sf_dir)
-        materialize_retrieval_index(spark, sf_dir)
+        materialize_families(spark, sf_dir, DELTA_FAMILIES)
         return round(time.time() - t0, 1)
 
     def one_scale(n_base: int) -> dict:

@@ -4,11 +4,13 @@
 Runs the composed corpus materialization (`operators/webclean`:
 Gopher repetition gate ∧ C4 line survival ∧ dedup-cluster survivorship ∧
 benchmark decontamination ∧ robots/blocklist/meta-robots crawl gates,
-eval split excluded) over a documents table and materializes the
-full per-document decision table (every component column plus the
-composed corpus_keep/web_keep verdicts), the kept corpus, and the
-snapshot-fingerprinted cache table that turns later ``web_keep`` /
-``corpus_keep`` queries into pure scans:
+eval split excluded) over a documents table.  It builds every ``curate``
+family of ``pipeline/snapshot_cache.FAMILIES`` — the dedup index, the
+site-boilerplate lexicon, the decontamination index and the full
+per-document decision table (every component column plus the composed
+corpus_keep/web_keep verdicts) that turns later ``web_keep`` /
+``corpus_keep`` queries into pure scans — then writes the kept corpus
+and the run's decision table:
 
     zip -r ragflow_core16_spark.zip ragflow_core16_spark
     spark-submit --py-files ragflow_core16_spark.zip \
@@ -19,12 +21,13 @@ snapshot-fingerprinted cache table that turns later ``web_keep`` /
 
 Master/executor topology comes from spark-submit, like the extraction
 job; the same invocation runs at N and 4N executors.  The write order is
-transactional in the same sense as the extraction pipeline: the kept
-corpus lands first and the decision table (the thing downstream reads to
-trust a run) lands LAST, so a crashed run leaves no authoritative
-decision table and a rerun simply overwrites.
+transactional in the same sense as the extraction pipeline: the snapshot
+tables publish first (atomic temp+rename), then the kept corpus, and the
+run's decision table (the thing downstream reads to trust a run) lands
+LAST, so a crashed run leaves no authoritative decision table and a
+rerun simply overwrites.
 
-Prints ONE JSON line: rows, kept, kept_pct, wall_sec.
+Prints ONE JSON line: mode, rows, kept, kept_pct, tables, wall_sec.
 """
 
 from __future__ import annotations
@@ -64,100 +67,48 @@ def main(argv=None) -> int:
     if args.incremental and not (args.base and args.batch):
         ap.error("--incremental requires --base and --batch")
 
-    from pyspark.sql import SparkSession, functions as F
-    spark = (SparkSession.builder.appName("ragflow_core16_spark.curate")
-             .config("spark.sql.adaptive.enabled", "true")
-             .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-             .config("spark.sql.session.timeZone", "UTC")
-             .getOrCreate())
+    from pyspark.sql import functions as F
 
-    from ragflow_core16_spark.operators.dedup import materialize_dedup_index
-    from ragflow_core16_spark.operators.webclean import (
-        web_decisions_path, web_decisions_unordered)
+    from ragflow_core16_spark.session import get_spark
+    spark = get_spark(app_name="ragflow_core16_spark.curate")
 
     t0 = time.time()
+    sf_dir = args.input.rstrip("/")
     if args.incremental:
         # day-2 path: merge the batch into the base snapshot's dedup
         # index / decision table / retrieval postings without rescanning
         # day-1 documents (pipeline/incremental.py); the merged tables
         # land under the combined corpus fingerprint, so every routed
         # query over --input serves them immediately
-        from pyspark.sql import functions as F
-
         from ragflow_core16_spark.pipeline.incremental import (
             incremental_update)
         paths = incremental_update(spark, args.base.rstrip("/"),
-                                   args.batch.rstrip("/"),
-                                   args.input.rstrip("/"),
+                                   args.batch.rstrip("/"), sf_dir,
                                    allow_recrawl=args.allow_recrawl)
-        dec = spark.read.parquet(paths["web_decisions"])
-        if not args.no_corpus:
-            docs = spark.read.parquet(
-                f"{args.input.rstrip('/')}/documents.parquet")
-            kept = docs.join(dec.filter(F.col("corpus_keep"))
-                             .select("doc_id"), "doc_id")
-            kept.write.mode("overwrite").parquet(f"{args.output}/corpus")
-        dec.write.mode("overwrite").parquet(f"{args.output}/keep")
-        rows = dec.count()
-        kept_n = dec.filter(F.col("corpus_keep")).count()
-        print(json.dumps({
-            "run_id": args.run_id, "mode": "incremental",
-            "rows": rows, "kept": kept_n,
-            "kept_pct": round(100.0 * kept_n / rows, 2) if rows else 0.0,
-            "tables": sorted(paths),
-            "wall_sec": round(time.time() - t0, 2)}))
-        spark.stop()
-        return 0
-    # dedup index first (signatures / verified pairs / cluster labels /
-    # simhash fingerprints): the decision table's dedup_kept column then
-    # scans the just-written labels, and later pair/cluster queries are
-    # scans too — at 100 TB the signature+CC jobs run once per snapshot,
-    # never per query
-    materialize_dedup_index(spark, args.input.rstrip("/"))
-    # the site-frequency boilerplate lexicon is a curation-side corpus
-    # statistic (fit once, strip against the frozen table)
-    from ragflow_core16_spark.operators.webclean import (
-        materialize_site_boilerplate)
-    materialize_site_boilerplate(spark, args.input.rstrip("/"))
-    # the decontamination index (bench gram set + train-gram posting):
-    # the state a later --incremental run needs to re-check day-1 docs
-    # against a grown benchmark set without re-gramming day-1 text
-    from ragflow_core16_spark.operators.training import (
-        materialize_decon_index)
-    materialize_decon_index(spark, args.input.rstrip("/"))
-    # persist: the decision DAG (Gopher aggs, C4 lines, decontamination
-    # gram join, dedup survivors, robots/blocklist/meta-robots gates)
-    # feeds the actions below — without this the corpus write and the
-    # keep write each recompute it end-to-end.  The table carries EVERY
-    # per-component column (gopher_pass, c4_pass, dedup_kept, clean,
-    # corpus_keep, allowed, blocked, indexable, web_keep), so downstream
-    # web_keep/corpus_keep queries are pure scans of it.
-    decisions = web_decisions_unordered(
-        spark, args.input.rstrip("/")).persist()
+    else:
+        # family order is dependency order: the decision table's
+        # dedup_kept column scans the just-written dedup labels, so the
+        # signature + connected-components jobs run once per snapshot
+        from ragflow_core16_spark.pipeline.snapshot_cache import (
+            FAMILIES, materialize_families)
+        paths = materialize_families(
+            spark, sf_dir, [f for f in FAMILIES if f.job == "curate"])
+    dec = spark.read.parquet(paths["web_decisions"])
     if not args.no_corpus:
-        docs = spark.read.parquet(f"{args.input.rstrip('/')}/documents.parquet")
-        kept = (docs.join(decisions.filter(F.col("corpus_keep"))
-                          .select("doc_id"), "doc_id"))
+        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+        kept = docs.join(dec.filter(F.col("corpus_keep")).select("doc_id"),
+                         "doc_id")
         kept.write.mode("overwrite").parquet(f"{args.output}/corpus")
-    # publish to the snapshot-fingerprinted cache path FIRST (what the
-    # query operators scan; atomic temp+rename — a concurrent session
-    # scanning the same corpus never sees a half-written table), then the
-    # run's own decision table LAST — its presence certifies a complete run
-    from ragflow_core16_spark.pipeline.snapshot_cache import atomic_write
-    atomic_write(decisions, web_decisions_path(args.input.rstrip("/")))
-    decisions.write.mode("overwrite").parquet(f"{args.output}/keep")
-
-    persisted = spark.read.parquet(f"{args.output}/keep")
-    rows = persisted.count()
-    kept_n = persisted.filter(F.col("corpus_keep")).count()
-    summary = {
+    dec.write.mode("overwrite").parquet(f"{args.output}/keep")
+    rows = dec.count()
+    kept_n = dec.filter(F.col("corpus_keep")).count()
+    print(json.dumps({
         "run_id": args.run_id,
-        "rows": rows,
-        "kept": kept_n,
+        "mode": "incremental" if args.incremental else "full",
+        "rows": rows, "kept": kept_n,
         "kept_pct": round(100.0 * kept_n / rows, 2) if rows else 0.0,
-        "wall_sec": round(time.time() - t0, 2),
-    }
-    print(json.dumps(summary))
+        "tables": sorted(paths),
+        "wall_sec": round(time.time() - t0, 2)}))
     spark.stop()
     return 0
 

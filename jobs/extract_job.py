@@ -68,13 +68,10 @@ def main(argv=None) -> int:
     ap.add_argument("--target-partition-mb", type=int, default=64)
     args = ap.parse_args(argv)
 
-    from pyspark.sql import SparkSession, functions as F
-    spark = (SparkSession.builder.appName("ragflow_core16_spark.extract")
-             .config("spark.sql.adaptive.enabled", "true")
-             .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-             .config("spark.sql.execution.arrow.maxRecordsPerBatch", "64")
-             .config("spark.sql.session.timeZone", "UTC")
-             .getOrCreate())
+    from pyspark.sql import functions as F
+
+    from ragflow_core16_spark.session import get_spark
+    spark = get_spark(app_name="ragflow_core16_spark.extract")
 
     from ragflow_core16_spark.pipeline.run import (run_extraction,
                                                    run_extraction_snapshotted)
@@ -112,7 +109,6 @@ def main(argv=None) -> int:
         # WET sink reads the COMMITTED extracted table (no recompute) —
         # a rerun with --wet-output alone re-emits shards without
         # re-extracting anything
-        from pyspark.sql import functions as F2
         from ragflow_core16_spark.sources.warc import write_wet_files
         if args.snapshot_table:
             # snapshot mode commits through {output}/_snapshots manifests,
@@ -121,18 +117,18 @@ def main(argv=None) -> int:
             ext = SnapshotTable(spark, args.output).read()
         else:
             ext = spark.read.parquet(f"{args.output}/extracted")
-        ext = ext.where(F2.col("status") == "ok")
+        ext = ext.where(F.col("status") == "ok")
         if args.wet_lang:
             from ragflow_core16_spark.operators.textstats import \
                 lang_pred_expr
             ext = ext.where(
-                lang_pred_expr(F2.col("extracted_text")) == args.wet_lang)
+                lang_pred_expr(F.col("extracted_text")) == args.wet_lang)
         manifest = write_wet_files(ext, args.wet_output,
                                    n_files=args.wet_shards)
         agg = manifest.agg(
-            F2.count(F2.lit(1)).alias("files"),
-            F2.sum("n_records").alias("records"),
-            F2.sum("bytes").alias("bytes")).collect()[0]
+            F.count(F.lit(1)).alias("files"),
+            F.sum("n_records").alias("records"),
+            F.sum("bytes").alias("bytes")).collect()[0]
         summary["wet"] = {"files": int(agg["files"] or 0),
                           "records": int(agg["records"] or 0),
                           "bytes": int(agg["bytes"] or 0)}

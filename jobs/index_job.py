@@ -5,15 +5,16 @@ The reference builds its derived retrieval structures once per corpus at
 indexing time — the GraphRAG entity graph and communities
 (`graphrag/general/index.py`) and the RAPTOR summary tree (`rag/raptor.py`
 via the task executor) — and every query reads the stored result.  This
-job is that step for the Spark engine: it materializes the snapshot
-tables (``pipeline/snapshot_cache.py``) that turn the graph and tree
-queries into scans:
+job is that step for the Spark engine: it materializes every ``index``
+family of ``pipeline/snapshot_cache.FAMILIES`` — the GraphRAG index, the
+RAPTOR tree, per-doc keywords + tag features, document vectors, webgraph
+ranks, SemDeDup labels, the trained BPE merge / LM / DSIR tables and the
+retrieval index — turning those queries into scans:
 
     zip -r ragflow_core16_spark.zip ragflow_core16_spark
     spark-submit --py-files ragflow_core16_spark.zip \
         jobs/index_job.py \
-        --input <dir containing documents.parquet> \
-        [--skip-graph] [--skip-raptor] [--run-id r42]
+        --input <dir containing documents.parquet> [--run-id r42]
 
 Master/executor topology comes from spark-submit; the same invocation
 runs at N and 4N executors.  Each table is written idempotently (an
@@ -35,69 +36,21 @@ def main(argv=None) -> int:
         description="documents → GraphRAG index + RAPTOR tree tables")
     ap.add_argument("--input", required=True,
                     help="dir containing documents.parquet")
-    ap.add_argument("--skip-graph", action="store_true")
-    ap.add_argument("--skip-raptor", action="store_true")
-    ap.add_argument("--skip-features", action="store_true",
-                    help="skip keywords / tag features / embeddings / "
-                         "webgraph ranks / SemDeDup labels / trained "
-                         "BPE+LM artifacts")
     ap.add_argument("--run-id", default=None)
     args = ap.parse_args(argv)
 
-    from pyspark.sql import SparkSession
-    spark = (SparkSession.builder.appName("ragflow_core16_spark.index")
-             .config("spark.sql.adaptive.enabled", "true")
-             .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-             .config("spark.sql.session.timeZone", "UTC")
-             .getOrCreate())
+    from ragflow_core16_spark.pipeline.snapshot_cache import (
+        FAMILIES, materialize_families)
+    from ragflow_core16_spark.session import get_spark
+    spark = get_spark(app_name="ragflow_core16_spark.index")
 
     t0 = time.time()
-    sf_dir = args.input.rstrip("/")
-    paths: list[str] = []
-    if not args.skip_graph:
-        from ragflow_core16_spark.operators.graphrag import (
-            materialize_graph_index)
-        paths += materialize_graph_index(spark, sf_dir)
-    if not args.skip_raptor:
-        from ragflow_core16_spark.operators.raptor import (
-            materialize_raptor_tree)
-        paths += materialize_raptor_tree(spark, sf_dir)
-    if not args.skip_features:
-        # the remaining per-snapshot derived artifacts a deployment
-        # builds at index time: per-doc keywords + tag features (the
-        # task executor's enrichment step), document vectors (the stored
-        # q_{dim}_vec column), webgraph ranks (the precomputed
-        # pagerank_fea the rerank stage reads), SemDeDup labels, and the
-        # trained BPE merge / bigram-LM tables
-        from ragflow_core16_spark.operators.embed import (
-            materialize_doc_embeddings)
-        from ragflow_core16_spark.operators.graph import (
-            materialize_webgraph_ranks)
-        from ragflow_core16_spark.operators.similarity import (
-            materialize_semantic_labels)
-        from ragflow_core16_spark.operators.tagging import (
-            materialize_tag_features)
-        from ragflow_core16_spark.operators.textstats import (
-            materialize_keywords, materialize_kn_bigram_lm,
-            materialize_lang_unigram_lm)
-        from ragflow_core16_spark.operators.retrieval import (
-            materialize_retrieval_index)
-        from ragflow_core16_spark.operators.training import (
-            materialize_bpe_merges, materialize_dsir_hist)
-        paths += [materialize_keywords(spark, sf_dir),
-                  materialize_tag_features(spark, sf_dir),
-                  materialize_doc_embeddings(spark, sf_dir),
-                  materialize_webgraph_ranks(spark, sf_dir),
-                  materialize_semantic_labels(spark, sf_dir),
-                  materialize_bpe_merges(spark, sf_dir),
-                  materialize_kn_bigram_lm(spark, sf_dir),
-                  materialize_lang_unigram_lm(spark, sf_dir),
-                  materialize_dsir_hist(spark, sf_dir)]
-        paths += materialize_retrieval_index(spark, sf_dir)
-
+    paths = materialize_families(
+        spark, args.input.rstrip("/"),
+        [f for f in FAMILIES if f.job == "index"])
     print(json.dumps({
         "run_id": args.run_id,
-        "tables": paths,
+        "tables": list(paths.values()),
         "wall_sec": round(time.time() - t0, 2),
     }))
     spark.stop()

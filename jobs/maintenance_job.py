@@ -19,6 +19,10 @@ expire what the first two unpinned).  Each is its own atomic snapshot
 commit; a concurrent extract job's appends compose with both delete and
 compact, so maintenance never blocks ingestion.
 
+The session comes from ``session.get_spark`` (the engine's tuned
+config; master and topology from spark-submit).  Called in-process, it
+reuses the caller's active session.
+
 Prints ONE JSON line with the versions committed and files touched.
 """
 
@@ -47,11 +51,8 @@ def main(argv=None, stop: bool = True) -> int:
                     help="print the snapshot log and exit")
     args = ap.parse_args(argv)
 
-    from pyspark.sql import SparkSession
-    spark = (SparkSession.builder
-             .appName("ragflow_core16_spark.maintenance")
-             .config("spark.sql.adaptive.enabled", "true")
-             .getOrCreate())
+    from ragflow_core16_spark.session import get_spark
+    spark = get_spark(app_name="ragflow_core16_spark.maintenance")
     spark.sparkContext.setLogLevel("WARN")
 
     from ragflow_core16_spark.pipeline.snapshots import SnapshotTable

@@ -55,10 +55,6 @@ def _md5i(key_expr: str) -> str:
     return f"('0x' || substr(md5({key_expr}), 1, 15))::BIGINT"
 
 
-def _tune(spark: SparkSession) -> None:
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-
-
 def _pages(spark, sf_dir):
     from ..datagen.pages import pages_from_documents
     return pages_from_documents(spark, sf_dir, seed=_SEED)
@@ -66,7 +62,6 @@ def _pages(spark, sf_dir):
 
 def q_extract_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.extract import extract_pages
-    _tune(spark)
     return (extract_pages(_pages(spark, sf_dir))
             .select("url", "lang", "status", "title", "n_sections",
                     "n_chunks", "n_tokens")
@@ -75,7 +70,6 @@ def q_extract_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_extract_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.extract import chunks_table, extract_pages
-    _tune(spark)
     return (chunks_table(extract_pages(_pages(spark, sf_dir)))
             .select("url", "chunk_seq", "chunk_text", "token_cnt")
             .transform(_ordered("url", "chunk_seq")))
@@ -93,7 +87,6 @@ def q_extract_hostile(spark: SparkSession, sf_dir: str) -> DataFrame:
     the value hash."""
     from ..datagen.pages import hostile_pages_from_documents
     from ..operators.extract import extract_pages
-    _tune(spark)
     return (extract_pages(hostile_pages_from_documents(spark, sf_dir,
                                                        seed=_SEED))
             .select("url", "lang", "status", "title", "n_sections",
@@ -111,7 +104,6 @@ def q_extract_density(spark: SparkSession, sf_dir: str) -> DataFrame:
     differ (link-heavy long blocks, orphan shorts) is pinned by
     ``tests/test_html_density.py``."""
     from ..operators.extract import extract_pages
-    _tune(spark)
     return (extract_pages(_pages(spark, sf_dir), strategy="density")
             .select("url", "lang", "status", "title", "n_sections",
                     "n_chunks", "n_tokens")
@@ -134,7 +126,6 @@ def q_latest_capture(spark: SparkSession, sf_dir: str) -> DataFrame:
     through the collapse."""
     from ..datagen.pages import captures_from_documents
     from ..operators.extract import extract_pages
-    _tune(spark)
     caps = captures_from_documents(spark, sf_dir, seed=_SEED)
     from pyspark.sql import functions as F
     latest = (caps.groupBy("url")
@@ -156,7 +147,6 @@ def q_latest_capture(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_extract_book(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.extract import extract_pages
-    _tune(spark)
     return (extract_pages(_pages(spark, sf_dir), template="book")
             .select("url", "status", "n_chunks", "n_tokens")
             .transform(_ordered("url")))
@@ -164,7 +154,6 @@ def q_extract_book(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_extract_one(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.extract import extract_pages
-    _tune(spark)
     return (extract_pages(_pages(spark, sf_dir), template="one")
             .select("url", "status", "n_chunks", "n_tokens")
             .transform(_ordered("url")))

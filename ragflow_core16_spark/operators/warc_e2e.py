@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..session import ordered as _ordered
-from .extract_e2e import _PREFIX, _SEED, _md5i, _tune
+from .extract_e2e import _PREFIX, _SEED, _md5i
 
 _N_FILES = 32
 
@@ -37,7 +37,6 @@ def _files(spark: SparkSession, sf_dir: str):
 
 def q_warc_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.warc import warc_records_df
-    _tune(spark)
     return (warc_records_df(_files(spark, sf_dir))
             .select("file_id", "rec_seq", "url", "ts_micros", "http_status",
                     "content_type")
@@ -47,7 +46,6 @@ def q_warc_records(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_warc_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.extract import extract_pages
     from ..sources.warc import pages_from_warc
-    _tune(spark)
     return (extract_pages(pages_from_warc(_files(spark, sf_dir)))
             .select("url", "status", "title", "n_sections", "n_chunks",
                     "n_tokens")
@@ -109,7 +107,6 @@ def q_wet_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.extract import extract_pages
     from ..sources.warc import (pages_from_warc, text_from_wet,
                                 wet_files_from_extracted)
-    _tune(spark)
     ext = extract_pages(pages_from_warc(_files(spark, sf_dir)))
     wet = wet_files_from_extracted(ext, n_files=_N_FILES)
     return (text_from_wet(wet)
@@ -144,7 +141,6 @@ def _outlinks(spark: SparkSession, sf_dir: str) -> DataFrame:
     links (nav/ads/footer) are all relative, so the absolute-scheme
     filter selects exactly the oracle-derivable set."""
     from ..datagen.pages import pages_from_documents
-    _tune(spark)
     p = pages_from_documents(spark, sf_dir, seed=_SEED)
     links = F.regexp_extract_all(
         F.col("html").cast("string"),
@@ -190,7 +186,6 @@ def q_anchor_texts(spark: SparkSession, sf_dir: str) -> DataFrame:
     popular target (millions of inlinks at crawl scale) partial-aggs
     safely — no skewed unbounded collect."""
     from ..datagen.pages import pages_from_documents
-    _tune(spark)
     p = pages_from_documents(spark, sf_dir, seed=_SEED)
     rx = r'<a href="(https?://[^"]+)">([^<]*)</a>'
     full = F.regexp_extract_all(F.col("html").cast("string"),
@@ -291,7 +286,6 @@ def q_cdx_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     access fields; they are proven by seek-and-reparse unit tests
     (tests/test_warc.py) rather than the SQL oracle."""
     from ..sources.cdx import cdx_entries_df, surt_expr
-    _tune(spark)
     e = cdx_entries_df(_files(spark, sf_dir))
     return (e.select(
                 surt_expr(F.col("url")).alias("surt"),
@@ -344,7 +338,6 @@ def q_warc_revisits(spark: SparkSession, sf_dir: str) -> DataFrame:
     never sees the container — a digest_match=true row therefore proves the
     join hydrated the right record and hashed the right bytes."""
     from ..sources.warc import resolve_revisits, warc_files_from_documents
-    _tune(spark)
     files = warc_files_from_documents(spark, sf_dir, seed=_SEED,
                                       n_files=_N_FILES, revisits=True)
     return resolve_revisits(files).transform(_ordered("url"))

@@ -1203,11 +1203,6 @@ ORDER BY doc_id
 # fingerprint of the backing documents files (name+size+mtime), so a
 # regenerated fixture under an unchanged sf_dir simply misses the cache.
 
-def _curation_root() -> str:
-    from ..pipeline.snapshot_cache import cache_root
-    return cache_root()
-
-
 def web_decisions_path(sf_dir: str) -> str:
     from ..pipeline.snapshot_cache import table_path
     return table_path("web_decisions", sf_dir)
@@ -1235,49 +1230,37 @@ def web_decisions_unordered(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def gate_columns_unordered(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document gate columns EXCLUDING the dedup verdict — the
-    locally-computable decision components (Gopher, C4, decontamination,
-    robots, blocklist, meta-robots are each pure functions of one
-    document).  The delta maintenance path (pipeline/incremental.py)
-    computes these for the daily batch ONLY and recombines them with the
-    corpus-global dedup labels; the coalesce/anchor semantics here must
-    stay exactly those of ``corpus_keep_decisions`` (anchor covers every
-    non-eval document; a gate that filtered a doc out left-joins to NULL
-    and coalesces to a failing gate)."""
-    from .training import (_BENCH_MOD, decontaminate_decisions,
-                           repetition_quality_decisions)
+    """Per-document gate columns EXCLUDING the two corpus-global verdicts
+    (dedup survivorship and decontamination) — the locally-computable
+    decision components (Gopher, C4, robots, blocklist, meta-robots are
+    each pure functions of one document).  The delta maintenance path
+    (pipeline/incremental.py) computes these for the daily batch ONLY
+    and recombines them with the merged dedup labels and decontamination
+    postings; the coalesce/anchor semantics here must stay exactly those
+    of ``corpus_keep_decisions`` (anchor covers every non-eval document;
+    a gate that filtered a doc out left-joins to NULL and coalesces to a
+    failing gate)."""
+    from .training import _BENCH_MOD, repetition_quality_decisions
     anchor = _docs(spark, sf_dir).select("doc_id")
     gopher = repetition_quality_decisions(spark, sf_dir).select(
         "doc_id", "gopher_pass")
     c4 = c4_line_decisions(spark, sf_dir).select("doc_id", "c4_pass")
-    dec = decontaminate_decisions(spark, sf_dir).select(
-        "doc_id", "n_shared_grams")
     rb = robots_decisions(spark, sf_dir).select("doc_id", "allowed")
     bl = url_blocklist_decisions(spark, sf_dir).select("doc_id", "blocked")
     mr = meta_robots_decisions(spark, sf_dir).select("doc_id", "indexable")
     g = F.coalesce(F.col("gopher_pass"), F.lit(False))
     c = F.coalesce(F.col("c4_pass"), F.lit(False))
-    clean = F.coalesce(F.col("n_shared_grams"), F.lit(0)) == 0
     return (anchor.join(c4, "doc_id", "left").join(gopher, "doc_id", "left")
-            .join(dec, "doc_id", "left")
             .join(rb, "doc_id").join(bl, "doc_id").join(mr, "doc_id")
             .filter(F.col("doc_id") % _BENCH_MOD != 0)
             .select("doc_id", g.alias("gopher_pass"), c.alias("c4_pass"),
-                    clean.alias("clean"), "allowed", "blocked",
-                    "indexable"))
+                    "allowed", "blocked", "indexable"))
 
 
-def materialize_web_decisions(spark: SparkSession, sf_dir: str,
-                              path: str | None = None) -> str:
+def materialize_web_decisions(spark: SparkSession, sf_dir: str) -> str:
     """Write the decision table for this corpus snapshot (idempotent: an
     existing complete table is left alone).  Returns the table path."""
-    import os
-
-    from ..pipeline.snapshot_cache import atomic_write, materialize
-    if path is not None:
-        if not os.path.exists(os.path.join(path, "_SUCCESS")):
-            atomic_write(web_decisions_unordered(spark, sf_dir), path)
-        return path
+    from ..pipeline.snapshot_cache import materialize
     return materialize(spark, "web_decisions", sf_dir,
                        lambda: web_decisions_unordered(spark, sf_dir))
 

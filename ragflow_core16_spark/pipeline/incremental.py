@@ -39,13 +39,13 @@ scans beyond the candidate-pruned pair verify.
     are per-doc relations: merge = append (df/idf derive downstream at
     query time, so no global statistic needs patching).
 
-NOT delta-maintained (documented, not silent): ``substring_spans``
-depends on the corpus-global duplicated-gram histogram (a new doc can
-make a day-1 gram duplicated, creating spans inside day-1 docs), and the
-trained artifacts (BPE merges, LMs, DSIR, boilerplate lexicon, GraphRAG,
-RAPTOR, embeddings/ANN labels) are corpus-global fits — those rebuild
-per snapshot; queries over the combined corpus fall back to their
-compute paths until the next full index job.
+What a delta leaves behind is data, not prose:
+``snapshot_cache.NOT_DELTA_MAINTAINED`` (the kinds of every family in
+``snapshot_cache.FAMILIES`` that its merge does not keep current —
+``substring_spans`` depends on the corpus-global duplicated-gram
+histogram, and the trained artifacts are corpus-global fits).  Those
+rebuild per snapshot; queries over the combined corpus fall back to their
+compute paths until the next full build.
 
 Addressing: the combined corpus is a directory whose
 ``documents.parquet`` holds day-1 files plus the batch files (how a
@@ -68,17 +68,17 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .snapshot_cache import (corpus_fingerprint, materialize, read_table,
-                             table_path)
+from .snapshot_cache import (DELTA_FAMILIES, FAMILIES, corpus_fingerprint,
+                             materialize, read_table)
 
+_DELTA_KINDS = {f.name: f.delta_kinds for f in FAMILIES}
 #: dedup-index kinds the delta path maintains, in dependency order
-DEDUP_KINDS = ("minhash_sigwide", "dedup_pairs", "dedup_labels",
-               "simhash_fp")
+DEDUP_KINDS = _DELTA_KINDS["dedup_index"]
 #: decontamination-index kinds (the corpus-global gate's state: the
 #: eval-split benchmark gram set + the per-train-doc gram posting)
-DECON_KINDS = ("decon_bench_grams", "decon_train_grams")
+DECON_KINDS = _DELTA_KINDS["decon_index"]
 #: retrieval-index kinds the delta path maintains
-RETRIEVAL_KINDS = ("term_postings", "doc_stats")
+RETRIEVAL_KINDS = _DELTA_KINDS["retrieval_index"]
 
 
 def _require_base(spark, kinds, base_dir) -> dict[str, DataFrame]:
@@ -99,7 +99,7 @@ def _require_base(spark, kinds, base_dir) -> dict[str, DataFrame]:
 
 # --------------------------------------------------------------- dedup index
 def dedup_index_delta_frames(spark: SparkSession, base_dir: str,
-                             batch_dir: str,
+                             batch_dir: str, combined_dir: str | None = None,
                              recrawl_ids: DataFrame | None = None
                              ) -> dict[str, DataFrame]:
     """The merged dedup-index relations as DataFrames (write-ready, also
@@ -200,6 +200,7 @@ def _anti_ids(df: DataFrame, recrawl_ids: DataFrame | None,
 
 # ------------------------------------------------------ decontamination index
 def decon_delta_frames(spark: SparkSession, base_dir: str, batch_dir: str,
+                       combined_dir: str | None = None,
                        recrawl_ids: DataFrame | None = None
                        ) -> dict[str, DataFrame]:
     """Merged decontamination index: per-doc gram postings are appends of
@@ -251,9 +252,8 @@ def web_decisions_delta_frame(spark: SparkSession, base_dir: str,
                  "allowed", "blocked", "indexable"]
     day1_gates = _anti_ids(base["web_decisions"].select(*gate_cols),
                            recrawl_ids)
-    batch_gates = (gate_columns_unordered(spark, batch_dir)
-                   .select(*gate_cols))
-    gates = day1_gates.unionByName(batch_gates)
+    gates = day1_gates.unionByName(
+        gate_columns_unordered(spark, batch_dir).select(*gate_cols))
     # clean for EVERY row, from the index alone: contaminated iff the
     # doc's train grams intersect the merged bench gram set
     contaminated = (train_all.select("doc_id", "gram")
@@ -277,6 +277,17 @@ def web_decisions_delta_frame(spark: SparkSession, base_dir: str,
                      F.col("indexable")).alias("web_keep")))
 
 
+def web_decisions_delta_frames(spark: SparkSession, base_dir: str,
+                               batch_dir: str, combined_dir: str,
+                               recrawl_ids: DataFrame | None = None
+                               ) -> dict[str, DataFrame]:
+    """``web_decisions_delta_frame`` in the merge shape every family's
+    delta shares (the per-doc merges ignore ``combined_dir``; this one
+    reads the merged index tables written under it)."""
+    return {"web_decisions": web_decisions_delta_frame(
+        spark, base_dir, batch_dir, combined_dir, recrawl_ids)}
+
+
 # ---------------------------------------------------------- retrieval index
 def merge_postings(base_postings: DataFrame,
                    batch_postings: DataFrame) -> DataFrame:
@@ -291,6 +302,7 @@ def merge_postings(base_postings: DataFrame,
 
 def retrieval_index_delta_frames(spark: SparkSession, base_dir: str,
                                  batch_dir: str,
+                                 combined_dir: str | None = None,
                                  recrawl_ids: DataFrame | None = None
                                  ) -> dict[str, DataFrame]:
     from ..operators.retrieval import _dl_rel, _per_doc_tf
@@ -317,42 +329,54 @@ def _write_lineage(path: str, base_dir: str, batch_dir: str,
 def _recrawl_ids(spark, base_dir: str, batch_dir: str,
                  allow_recrawl: bool) -> DataFrame | None:
     """Batch doc_ids already present in the base snapshot, detected with
-    one join against the stored per-doc stats (NO base document scan).
+    one aggregate over the batch ids left-joined to the stored per-doc
+    stats (NO base document scan) — the same pass counts repeated ids.
     Without ``allow_recrawl`` any overlap is an error — merging it
     blindly would double the doc in every table and silently diverge
     from the full recompute.  With it, the overlap set drives the
     retire-then-append upsert in every delta builder; returns None when
-    the batch is genuinely disjoint (the appends stay pure)."""
+    the batch is genuinely disjoint (the appends stay pure).  A doc_id
+    twice WITHIN the batch is always an error: no merge can tell which
+    row is the latest capture."""
     from ..operators.dedup import _docs
+    guidance = ("collapse re-crawls to one row per doc_id upstream "
+                "(latest-capture semantics)")
     base_ids = read_table(spark, "doc_stats", base_dir)
     if base_ids is None:
         raise ValueError(
             f"incremental update needs the base doc_stats table for "
             f"{base_dir} (run the full curate/index job first)")
-    overlap = (_docs(spark, batch_dir).select("doc_id")
-               .join(base_ids.select("doc_id"), "doc_id")
-               .localCheckpoint())
-    n = overlap.count()
-    if n == 0:
+    batch_ids = _docs(spark, batch_dir).select("doc_id")
+    base_ids = base_ids.select("doc_id")
+    c = (batch_ids.join(base_ids.withColumn("in_base", F.lit(True)),
+                        "doc_id", "left")
+         .agg(F.count("doc_id").alias("rows"),
+              F.count_distinct("doc_id").alias("ids"),
+              F.count("in_base").alias("recrawls")).first())
+    if c["rows"] != c["ids"]:
+        raise ValueError(
+            f"batch {batch_dir} repeats doc_ids ({c['rows']} rows, "
+            f"{c['ids']} distinct ids): {guidance}")
+    if c["recrawls"] == 0:
         return None
+    overlap = batch_ids.join(base_ids, "doc_id")
     if not allow_recrawl:
         ids = sorted(r.doc_id for r in overlap.limit(5).collect())
         raise ValueError(
             f"batch doc_ids already exist in the base snapshot "
             f"(first few: {ids}): pass allow_recrawl=True to retire the "
-            "stale rows and merge the new versions, or collapse "
-            "re-crawls to one row per doc_id upstream (latest-capture "
-            "semantics)")
-    return overlap
+            f"stale rows and merge the new versions, or {guidance}")
+    return overlap.localCheckpoint()
 
 
 def incremental_update(spark: SparkSession, base_dir: str, batch_dir: str,
                        combined_dir: str,
                        allow_recrawl: bool = False) -> dict[str, str]:
-    """Run the full delta maintenance: merge the dedup index, then the
+    """Run the full delta maintenance: merge each family of
+    ``DELTA_FAMILIES`` in order — the dedup index, then the
     decontamination index, then the decision table (it reads the merged
-    labels + decon postings), then the retrieval index, writing each
-    under the COMBINED corpus fingerprint (idempotent + atomic via
+    labels + decon postings), then the retrieval index — writing each
+    table under the COMBINED corpus fingerprint (idempotent + atomic via
     ``materialize``).  Returns kind → table path.  An empty batch is a
     valid no-op day (tables under the combined fingerprint equal the
     base content).  A batch doc_id already present in the base is a
@@ -362,26 +386,11 @@ def incremental_update(spark: SparkSession, base_dir: str, batch_dir: str,
     correspondingly compacted documents table)."""
     recrawl = _recrawl_ids(spark, base_dir, batch_dir, allow_recrawl)
     paths: dict[str, str] = {}
-    dedup = dedup_index_delta_frames(spark, base_dir, batch_dir,
-                                     recrawl_ids=recrawl)
-    for kind in DEDUP_KINDS:
-        paths[kind] = materialize(spark, kind, combined_dir,
-                                  lambda k=kind: dedup[k])
-    decon = decon_delta_frames(spark, base_dir, batch_dir,
-                               recrawl_ids=recrawl)
-    for kind in DECON_KINDS:
-        paths[kind] = materialize(spark, kind, combined_dir,
-                                  lambda k=kind: decon[k])
-    paths["web_decisions"] = materialize(
-        spark, "web_decisions", combined_dir,
-        lambda: web_decisions_delta_frame(spark, base_dir, batch_dir,
-                                          combined_dir,
-                                          recrawl_ids=recrawl))
-    retr = retrieval_index_delta_frames(spark, base_dir, batch_dir,
-                                        recrawl_ids=recrawl)
-    for kind in RETRIEVAL_KINDS:
-        paths[kind] = materialize(spark, kind, combined_dir,
-                                  lambda k=kind: retr[k])
+    for fam in DELTA_FAMILIES:
+        frames = fam.merge(spark, base_dir, batch_dir, combined_dir, recrawl)
+        for kind in fam.delta_kinds:
+            paths[kind] = materialize(spark, kind, combined_dir,
+                                      lambda f=frames[kind]: f)
     for p in paths.values():
         if os.path.exists(os.path.join(p, "_SUCCESS")):
             _write_lineage(p, base_dir, batch_dir, combined_dir)

@@ -28,9 +28,109 @@ yields to the complete table the winner published.
 from __future__ import annotations
 
 import hashlib
+import importlib
 import os
 import shutil
 import uuid
+from typing import NamedTuple
+
+
+class Family(NamedTuple):
+    """The snapshot tables one public ``materialize_*`` builder writes.
+
+    ``builder`` and ``delta`` are dotted names under the package,
+    resolved on first call: the builders import this module, so it
+    cannot import them.  ``delta`` names the day-2 merge in
+    ``pipeline/incremental.py`` — ``(spark, base_dir, batch_dir,
+    combined_dir, recrawl_ids) -> {kind: DataFrame}`` for the kinds in
+    ``delta_kinds`` — or is None when the family only rebuilds."""
+    name: str
+    job: str                    # the job that builds it: curate | index
+    kinds: tuple[str, ...]
+    builder: str
+    delta: str | None = None
+    delta_kinds: tuple[str, ...] = ()
+
+    def build(self, spark, sf_dir: str):
+        return _resolve(self.builder)(spark, sf_dir)
+
+    def merge(self, *args):
+        return _resolve(self.delta)(*args)
+
+
+def _resolve(ref: str):
+    mod, _, attr = ref.rpartition(".")
+    return getattr(importlib.import_module(f"..{mod}", __package__), attr)
+
+
+#: every snapshot-table family, in build order: a later family's builder
+#: may scan an earlier family's tables (the decision table's dedup_kept
+#: reads the dedup labels), and a later delta may read an earlier delta's
+#: merged tables (the decision-table merge reads the merged labels and
+#: decontamination postings)
+FAMILIES = (
+    Family("dedup_index", "curate",
+           ("minhash_sigwide", "dedup_pairs", "dedup_labels", "simhash_fp",
+            "substring_spans"),
+           "operators.dedup.materialize_dedup_index",
+           "pipeline.incremental.dedup_index_delta_frames",
+           ("minhash_sigwide", "dedup_pairs", "dedup_labels",
+            "simhash_fp")),
+    Family("site_boilerplate", "curate", ("site_boilerplate",),
+           "operators.webclean.materialize_site_boilerplate"),
+    Family("decon_index", "curate",
+           ("decon_bench_grams", "decon_train_grams"),
+           "operators.training.materialize_decon_index",
+           "pipeline.incremental.decon_delta_frames",
+           ("decon_bench_grams", "decon_train_grams")),
+    Family("web_decisions", "curate", ("web_decisions",),
+           "operators.webclean.materialize_web_decisions",
+           "pipeline.incremental.web_decisions_delta_frames",
+           ("web_decisions",)),
+    Family("graph_index", "index",
+           ("graphrag_mentions", "graphrag_edges", "graphrag_labels"),
+           "operators.graphrag.materialize_graph_index"),
+    Family("raptor_tree", "index", ("raptor_nodes", "raptor_edges"),
+           "operators.raptor.materialize_raptor_tree"),
+    Family("keywords", "index", ("tfidf_keywords",),
+           "operators.textstats.materialize_keywords"),
+    Family("tag_features", "index", ("tag_features",),
+           "operators.tagging.materialize_tag_features"),
+    Family("doc_embeddings", "index", ("doc_embeddings",),
+           "operators.embed.materialize_doc_embeddings"),
+    Family("webgraph_ranks", "index", ("webgraph_ranks",),
+           "operators.graph.materialize_webgraph_ranks"),
+    Family("semantic_labels", "index", ("semantic_labels",),
+           "operators.similarity.materialize_semantic_labels"),
+    Family("bpe_merges", "index", ("bpe_merges",),
+           "operators.training.materialize_bpe_merges"),
+    Family("kn_bigram_lm", "index", ("kn_bigram_lm",),
+           "operators.textstats.materialize_kn_bigram_lm"),
+    Family("lang_unigram_lm", "index", ("lang_unigram_lm",),
+           "operators.textstats.materialize_lang_unigram_lm"),
+    Family("dsir_hist", "index", ("dsir_hist",),
+           "operators.training.materialize_dsir_hist"),
+    Family("retrieval_index", "index", ("term_postings", "doc_stats"),
+           "operators.retrieval.materialize_retrieval_index",
+           "pipeline.incremental.retrieval_index_delta_frames",
+           ("term_postings", "doc_stats")),
+)
+#: the families a day-2 batch merges into: the day-1 base a delta needs
+DELTA_FAMILIES = tuple(f for f in FAMILIES if f.delta)
+#: kinds a delta leaves behind: queries over a delta-built corpus fall
+#: back to their compute paths until the next full build
+NOT_DELTA_MAINTAINED = tuple(k for f in FAMILIES for k in f.kinds
+                             if k not in f.delta_kinds)
+
+
+def materialize_families(spark, sf_dir: str, families) -> dict[str, str]:
+    """Build ``families`` for this corpus snapshot, in order (each build
+    is idempotent).  Returns kind → table path."""
+    paths = {}
+    for fam in families:
+        fam.build(spark, sf_dir)
+        paths.update((k, table_path(k, sf_dir)) for k in fam.kinds)
+    return paths
 
 
 def _default_root() -> str:

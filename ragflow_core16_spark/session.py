@@ -21,7 +21,6 @@ DEFAULT_CONF = {
     "spark.sql.execution.arrow.maxRecordsPerBatch": "64",
     "spark.sql.files.maxPartitionBytes": "134217728",
     "spark.sql.session.timeZone": "UTC",
-    "spark.sql.shuffle.partitions": "32",
     # local mode: the driver JVM IS the executor.  8g starved a 32-thread
     # session late in a long query run (storage + execution + broadcast
     # remnants share old-gen; G1 thrash inflated late queries 3x — bench
@@ -105,11 +104,14 @@ def ordered(*cols):
 
 def get_spark(master: str | None = None, app_name: str = "ragflow_core16_spark",
               extra_conf: dict | None = None) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    builder = (SparkSession.builder
-               .master(master or f"local[{cpus}]")
-               .appName(app_name))
-    conf = {**DEFAULT_CONF, **(extra_conf or {})}
-    for k, v in conf.items():
+    """The engine's one session factory: ``DEFAULT_CONF`` under
+    ``extra_conf``.  ``master=None`` leaves the master (and the executor
+    topology) to spark-submit.  When a session already exists it is
+    returned with the runtime-modifiable settings applied — so a setting
+    the caller tuned survives only if neither dict names it."""
+    builder = SparkSession.builder.appName(app_name)
+    if master is not None:
+        builder = builder.master(master)
+    for k, v in {**DEFAULT_CONF, **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

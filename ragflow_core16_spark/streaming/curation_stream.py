@@ -69,24 +69,19 @@ def _link_tree(src_docs: str, dst_docs: str) -> None:
             os.link(os.path.join(src_docs, name), dst)
 
 
-def _full_build(spark: SparkSession, sf_dir: str) -> None:
-    from ..operators.dedup import materialize_dedup_index
-    from ..operators.retrieval import materialize_retrieval_index
-    from ..operators.training import materialize_decon_index
-    from ..operators.webclean import materialize_web_decisions
-    materialize_dedup_index(spark, sf_dir)
-    materialize_web_decisions(spark, sf_dir)
-    materialize_decon_index(spark, sf_dir)
-    materialize_retrieval_index(spark, sf_dir)
-
-
 def _apply_batch(spark: SparkSession, batch_df: DataFrame, batch_id: int,
                  state_dir: str) -> None:
     from ..pipeline.incremental import incremental_update
-    from ..pipeline.snapshot_cache import read_table
+    from ..pipeline.snapshot_cache import (DELTA_FAMILIES,
+                                           materialize_families, read_table)
     vdir = os.path.join(state_dir, "versions", f"v{batch_id:05d}")
     if os.path.exists(os.path.join(vdir, "_complete")):
-        return  # replayed batch: already fully applied
+        # replayed batch: already fully applied — but a crash between
+        # the marker and the pointer swap left LATEST behind, so repair it
+        newest = _latest_complete(state_dir)
+        if latest_version(state_dir) != newest:
+            _publish(state_dir, newest)
+        return
     if batch_df.isEmpty():
         return
     # 1. the batch's own document copy (write once; a replay reuses it)
@@ -100,7 +95,7 @@ def _apply_batch(spark: SparkSession, batch_df: DataFrame, batch_id: int,
     vdocs = os.path.join(vdir, "documents.parquet")
     if prev is None:
         _link_tree(bdocs, vdocs)
-        _full_build(spark, vdir)
+        materialize_families(spark, vdir, DELTA_FAMILIES)
     else:
         # a crawl feed may RE-DELIVER ids it crawled before; detect via
         # the previous version's per-doc stats (no document scan)
@@ -129,20 +124,32 @@ def _apply_batch(spark: SparkSession, batch_df: DataFrame, batch_id: int,
             incremental_update(spark, prev, bdir, vdir)
     # 3. publish: marker LAST, then the serving pointer
     open(os.path.join(vdir, "_complete"), "w").close()
+    _publish(state_dir, vdir)
+
+
+def _publish(state_dir: str, vdir: str) -> None:
+    """Point ``LATEST`` at ``vdir`` (temp + rename: readers see the old
+    or the new pointer, never a torn one)."""
     tmp = os.path.join(state_dir, ".LATEST.tmp")
     with open(tmp, "w") as f:
         f.write(vdir)
     os.replace(tmp, os.path.join(state_dir, "LATEST"))
 
 
-def _latest_complete(state_dir: str, before: int) -> str | None:
+def _latest_complete(state_dir: str, before: int | None = None
+                     ) -> str | None:
+    """The complete version with the highest batch id (below ``before``,
+    if given).  Ids compare as integers — ``v100000`` follows ``v99999``
+    — and entries that are not ``v<int>`` (a stray temp dir) are
+    skipped."""
     vroot = os.path.join(state_dir, "versions")
     if not os.path.isdir(vroot):
         return None
-    done = [v for v in sorted(os.listdir(vroot))
-            if v.startswith("v") and int(v[1:]) < before
+    done = [(int(v[1:]), v) for v in os.listdir(vroot)
+            if v.startswith("v") and v[1:].isdecimal()
+            and (before is None or int(v[1:]) < before)
             and os.path.exists(os.path.join(vroot, v, "_complete"))]
-    return os.path.join(vroot, done[-1]) if done else None
+    return os.path.join(vroot, max(done)[1]) if done else None
 
 
 def latest_version(state_dir: str) -> str | None:

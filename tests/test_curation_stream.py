@@ -117,6 +117,50 @@ class TestCurationIndexStream:
         from ragflow_core16_spark.pipeline.snapshot_cache import read_table
         assert read_table(spark, "web_decisions", v) is not None
 
+    def test_crash_before_pointer_swap_repairs_latest(self, spark, tmp_path,
+                                                      monkeypatch):
+        """Kill after the ``_complete`` marker but before ``LATEST`` moves:
+        the replay finds the version complete and must still re-publish
+        the pointer, or the stream serves a stale (here: no) version
+        for good."""
+        from ragflow_core16_spark.streaming.curation_stream import (
+            latest_version, run_curation_index_stream)
+        monkeypatch.setenv("RAG_CURATION_DIR", str(tmp_path / "cur"))
+        landing = str(tmp_path / "landing")
+        state = str(tmp_path / "state")
+        docs = spark.read.parquet(f"{SF}/documents.parquet")
+        docs.filter(F.col("doc_id") < 200).coalesce(1) \
+            .write.mode("append").parquet(landing)
+        _deep_clean(spark)
+        q = run_curation_index_stream(spark, landing, state,
+                                      str(tmp_path / "ckpt"))
+        q.awaitTermination(300)
+        v = latest_version(state)
+        assert v is not None
+        os.remove(os.path.join(state, "LATEST"))
+        _deep_clean(spark)
+        q = run_curation_index_stream(spark, landing, state,
+                                      str(tmp_path / "ckpt2"))
+        q.awaitTermination(300)
+        assert latest_version(state) == v
+
+
+def test_latest_complete_orders_ids_as_integers(tmp_path):
+    """Version dirs compare by their parsed batch id (``v100000`` after
+    ``v99999``); a stray non-numeric ``v*`` entry is skipped, not fatal."""
+    from ragflow_core16_spark.streaming.curation_stream import (
+        _latest_complete)
+    vroot = tmp_path / "versions"
+    for v in ("vtmp", "v99999", "v100000", "v100001"):
+        (vroot / v).mkdir(parents=True)
+    for v in ("vtmp", "v99999", "v100000"):   # v100001: crashed mid-apply
+        (vroot / v / "_complete").touch()
+    assert _latest_complete(str(tmp_path), before=10**6) == \
+        str(vroot / "v100000")
+    assert _latest_complete(str(tmp_path), before=100000) == \
+        str(vroot / "v99999")
+    assert _latest_complete(str(tmp_path)) == str(vroot / "v100000")
+
 
 def _compute_relations(spark, sf_dir):
     from ragflow_core16_spark.operators.dedup import (

@@ -30,6 +30,13 @@ def _deep_clean(spark):
     gc.collect()
 
 
+def _day1_base(spark, sf_dir):
+    """The day-1 snapshot's full build of every delta-maintained family."""
+    from ragflow_core16_spark.pipeline.snapshot_cache import DELTA_FAMILIES
+    for fam in DELTA_FAMILIES:
+        fam.build(spark, sf_dir)
+
+
 @pytest.fixture(scope="module")
 def corpora(spark, tmp_path_factory):
     """day-1 / day-2-batch / combined corpus dirs carved from sf0.001.
@@ -70,15 +77,14 @@ def delta_state(spark, corpora):
     run the incremental update.  Shared by the equality / routing /
     idempotence tests."""
     from ragflow_core16_spark.operators.dedup import (
-        materialize_dedup_index, _docs, _lsh_est_unordered,
-        _jaccard_exact_unordered, _cluster_labels, _signature_wide,
-        _simhash_unordered)
+        _docs, _lsh_est_unordered, _jaccard_exact_unordered,
+        _cluster_labels, _signature_wide, _simhash_unordered)
     from ragflow_core16_spark.operators.retrieval import (
-        materialize_retrieval_index, _per_doc_tf, _dl_rel)
+        _per_doc_tf, _dl_rel)
     from ragflow_core16_spark.operators.training import (
-        _BENCH_MOD, decon_gram_rel, materialize_decon_index)
+        _BENCH_MOD, decon_gram_rel)
     from ragflow_core16_spark.operators.webclean import (
-        materialize_web_decisions, web_decisions_unordered)
+        web_decisions_unordered)
     from ragflow_core16_spark.pipeline.incremental import incremental_update
 
     prev = os.environ.get("RAG_CURATION_DIR")
@@ -109,10 +115,7 @@ def delta_state(spark, corpora):
         }
         _deep_clean(spark)
         # day-1 snapshot's full curate/index build
-        materialize_dedup_index(spark, corpora["day1"])
-        materialize_web_decisions(spark, corpora["day1"])
-        materialize_decon_index(spark, corpora["day1"])
-        materialize_retrieval_index(spark, corpora["day1"])
+        _day1_base(spark, corpora["day1"])
         _deep_clean(spark)
         paths = incremental_update(spark, corpora["day1"],
                                    corpora["batch"], comb)
@@ -284,14 +287,8 @@ class TestDeltaChain:
         must equal a full recompute over all three days — the chain
         property that makes daily maintenance sustainable (day N's base
         tables are themselves delta products)."""
-        from ragflow_core16_spark.operators.dedup import (
-            materialize_dedup_index)
-        from ragflow_core16_spark.operators.retrieval import (
-            materialize_retrieval_index)
-        from ragflow_core16_spark.operators.training import (
-            materialize_decon_index)
         from ragflow_core16_spark.operators.webclean import (
-            materialize_web_decisions, web_decisions_unordered)
+            web_decisions_unordered)
         from ragflow_core16_spark.pipeline.incremental import (
             incremental_update)
         from ragflow_core16_spark.pipeline.snapshot_cache import read_table
@@ -312,10 +309,7 @@ class TestDeltaChain:
         want = sorted(map(tuple, web_decisions_unordered(
             spark, dirs["c123"]).collect()))
         _deep_clean(spark)
-        materialize_dedup_index(spark, dirs["day1"])
-        materialize_web_decisions(spark, dirs["day1"])
-        materialize_decon_index(spark, dirs["day1"])
-        materialize_retrieval_index(spark, dirs["day1"])
+        _day1_base(spark, dirs["day1"])
         incremental_update(spark, dirs["day1"], dirs["day2"], dirs["c12"])
         incremental_update(spark, dirs["c12"], dirs["day3"], dirs["c123"])
         got = sorted(map(tuple, read_table(
@@ -339,20 +333,6 @@ class TestDeltaChain:
 
 
 class TestIngestContractEdges:
-    def _full_base(self, spark, base_dir):
-        from ragflow_core16_spark.operators.dedup import (
-            materialize_dedup_index)
-        from ragflow_core16_spark.operators.retrieval import (
-            materialize_retrieval_index)
-        from ragflow_core16_spark.operators.training import (
-            materialize_decon_index)
-        from ragflow_core16_spark.operators.webclean import (
-            materialize_web_decisions)
-        materialize_dedup_index(spark, base_dir)
-        materialize_web_decisions(spark, base_dir)
-        materialize_decon_index(spark, base_dir)
-        materialize_retrieval_index(spark, base_dir)
-
     def test_recrawled_doc_id_is_rejected(self, spark, tmp_path,
                                           monkeypatch):
         """A batch doc_id already present in the base would double the
@@ -371,9 +351,33 @@ class TestIngestContractEdges:
             .coalesce(1).write.parquet(f"{batch_d}/documents.parquet")
         docs.coalesce(1).write.parquet(f"{comb_d}/documents.parquet")
         _deep_clean(spark)
-        self._full_base(spark, base_d)
+        _day1_base(spark, base_d)
         with pytest.raises(ValueError, match="latest-capture"):
             incremental_update(spark, base_d, batch_d, comb_d)
+
+    @pytest.mark.parametrize("allow_recrawl", [False, True])
+    def test_duplicate_doc_id_within_batch_is_rejected(
+            self, spark, tmp_path, monkeypatch, allow_recrawl):
+        """Two rows for one NEW doc_id inside the batch would enter every
+        merged table twice; with or without ``allow_recrawl`` no merge can
+        tell which row is the latest capture, so the batch is refused."""
+        from ragflow_core16_spark.pipeline.incremental import (
+            incremental_update)
+        monkeypatch.setenv("RAG_CURATION_DIR", str(tmp_path / "wh"))
+        docs = spark.read.parquet(f"{SF}/documents.parquet")
+        base_d, batch_d, comb_d = (str(tmp_path / x)
+                                   for x in ("base", "batch", "comb"))
+        docs.filter(F.col("doc_id") < 400).coalesce(1) \
+            .write.parquet(f"{base_d}/documents.parquet")
+        new = docs.filter(F.col("doc_id") >= 400)
+        new.unionByName(new.filter(F.col("doc_id") == 401)).coalesce(1) \
+            .write.parquet(f"{batch_d}/documents.parquet")
+        docs.coalesce(1).write.parquet(f"{comb_d}/documents.parquet")
+        _deep_clean(spark)
+        _day1_base(spark, base_d)
+        with pytest.raises(ValueError, match="latest-capture"):
+            incremental_update(spark, base_d, batch_d, comb_d,
+                               allow_recrawl=allow_recrawl)
 
     def test_empty_batch_is_a_valid_noop_day(self, spark, tmp_path,
                                              monkeypatch):
@@ -393,7 +397,7 @@ class TestIngestContractEdges:
         docs.filter(F.col("doc_id") < 300).coalesce(1) \
             .write.parquet(f"{comb_d}/documents.parquet")
         _deep_clean(spark)
-        self._full_base(spark, base_d)
+        _day1_base(spark, base_d)
         paths = incremental_update(spark, base_d, batch_d, comb_d)
         for kind in ("web_decisions", "dedup_pairs", "term_postings"):
             got = sorted(map(tuple,
@@ -453,18 +457,7 @@ class TestRecrawlUpsert:
             "term_postings": _per_doc_tf(spark, comb_d).collect(),
         }
         _deep_clean(spark)
-        from ragflow_core16_spark.operators.dedup import (
-            materialize_dedup_index)
-        from ragflow_core16_spark.operators.retrieval import (
-            materialize_retrieval_index)
-        from ragflow_core16_spark.operators.training import (
-            materialize_decon_index)
-        from ragflow_core16_spark.operators.webclean import (
-            materialize_web_decisions)
-        materialize_dedup_index(spark, base_d)
-        materialize_web_decisions(spark, base_d)
-        materialize_decon_index(spark, base_d)
-        materialize_retrieval_index(spark, base_d)
+        _day1_base(spark, base_d)
         _deep_clean(spark)
         paths = incremental_update(spark, base_d, batch_d, comb_d,
                                    allow_recrawl=True)

@@ -1,0 +1,85 @@
+"""The snapshot-table family registry (``snapshot_cache.FAMILIES``) is the
+one declaration of which tables exist, who builds them and which a day-2
+delta maintains.  These checks read the package source — no Spark."""
+
+import os
+import re
+
+from ragflow_core16_spark.pipeline import snapshot_cache as SC
+
+PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(
+    __file__))), "ragflow_core16_spark")
+
+
+def _sources(sub=""):
+    root = os.path.join(PKG, sub)
+    for dirpath, _dirs, files in os.walk(root):
+        for f in sorted(files):
+            if f.endswith(".py"):
+                with open(os.path.join(dirpath, f)) as fh:
+                    yield fh.read()
+
+
+def _owner(kind):
+    return [f.name for f in SC.FAMILIES if kind in f.kinds]
+
+
+def test_every_table_literal_belongs_to_exactly_one_family():
+    call = re.compile(r'\b(?:materialize|read_table)\(\s*spark,\s*"(\w+)"')
+    kinds = {k for src in _sources() for k in call.findall(src)}
+    assert len(kinds) == 25
+    for kind in sorted(kinds):
+        assert len(_owner(kind)) == 1, (kind, _owner(kind))
+
+
+def test_every_operator_builder_is_registered_once():
+    defined = {name for src in _sources("operators")
+               for name in re.findall(r"^def (materialize_\w+)\(", src,
+                                      re.M)}
+    registered = [f.builder.rsplit(".", 1)[1] for f in SC.FAMILIES]
+    assert len(defined) == 16
+    assert sorted(registered) == sorted(defined)
+
+
+def test_curate_and_index_jobs_partition_all_kinds():
+    by_job = {job: [k for f in SC.FAMILIES if f.job == job
+                    for k in f.kinds] for job in ("curate", "index")}
+    assert {f.job for f in SC.FAMILIES} == {"curate", "index"}
+    assert not set(by_job["curate"]) & set(by_job["index"])
+    every = by_job["curate"] + by_job["index"]
+    assert len(every) == len(set(every)) == 25
+    assert len(by_job["index"]) == 16
+
+
+def test_names_resolve_to_the_declared_functions():
+    for f in SC.FAMILIES:
+        assert SC._resolve(f.builder).__name__ == f.builder.rsplit(".", 1)[1]
+        if f.delta:
+            assert SC._resolve(f.delta).__name__ == f.delta.rsplit(".", 1)[1]
+            assert f.delta_kinds and set(f.delta_kinds) <= set(f.kinds)
+        else:
+            assert f.delta_kinds == ()
+
+
+def test_order_puts_each_dependency_first():
+    names = [f.name for f in SC.FAMILIES]
+    # the full decision-table build scans the dedup labels
+    assert names.index("dedup_index") < names.index("web_decisions")
+    # the decision-table merge reads the merged labels and decon postings
+    delta = [f.name for f in SC.DELTA_FAMILIES]
+    assert delta == ["dedup_index", "decon_index", "web_decisions",
+                     "retrieval_index"]
+
+
+def test_delta_kind_sets_are_derived_from_the_registry():
+    from ragflow_core16_spark.pipeline import incremental
+    assert incremental.DEDUP_KINDS == ("minhash_sigwide", "dedup_pairs",
+                                       "dedup_labels", "simhash_fp")
+    assert incremental.DECON_KINDS == ("decon_bench_grams",
+                                       "decon_train_grams")
+    assert incremental.RETRIEVAL_KINDS == ("term_postings", "doc_stats")
+    maintained = {k for f in SC.DELTA_FAMILIES for k in f.delta_kinds}
+    assert len(maintained) == 9
+    assert "substring_spans" in SC.NOT_DELTA_MAINTAINED
+    assert len(SC.NOT_DELTA_MAINTAINED) == 25 - 9
+    assert not maintained & set(SC.NOT_DELTA_MAINTAINED)

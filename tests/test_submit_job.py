@@ -195,6 +195,9 @@ def test_maintenance_job_delete_compact_vacuum(tmp_path, spark, capsys):
          "--compact", "--target-mb", "64",
          "--vacuum", "--keep-versions", "1"], stop=False)
     assert rc == 0
+    # the job's session factory reuses this session without overriding
+    # the settings its creator tuned
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
     line = [ln for ln in capsys.readouterr().out.splitlines()
             if ln.startswith("{")][-1]
     out = json.loads(line)
@@ -314,17 +317,9 @@ def test_spark_submit_curate_incremental(tmp_path, spark, monkeypatch):
             web_decisions_unordered(spark, combined).collect()}
 
     # day-1 snapshot build (the full curate/index run's table set)
-    from ragflow_core16_spark.operators.dedup import materialize_dedup_index
-    from ragflow_core16_spark.operators.retrieval import (
-        materialize_retrieval_index)
-    from ragflow_core16_spark.operators.training import (
-        materialize_decon_index)
-    from ragflow_core16_spark.operators.webclean import (
-        materialize_web_decisions)
-    materialize_dedup_index(spark, day1)
-    materialize_web_decisions(spark, day1)
-    materialize_decon_index(spark, day1)
-    materialize_retrieval_index(spark, day1)
+    from ragflow_core16_spark.pipeline.snapshot_cache import DELTA_FAMILIES
+    for fam in DELTA_FAMILIES:
+        fam.build(spark, day1)
 
     out = subprocess.run(
         ["spark-submit", "--master", "local[2]",

@@ -53,19 +53,18 @@ def main(argv=None) -> int:
     import __spark_entry__ as E
     from oracle_compare import compare
 
-    from pyspark.sql import SparkSession
-    spark = (SparkSession.builder.master(f"local[{args.cpus}]")
-             .appName("run_parity")
-             .config("spark.sql.shuffle.partitions", str(args.cpus))
-             .config("spark.sql.session.timeZone", "UTC")
-             .config("spark.ui.enabled", "false")
-             # local mode: the driver hosts every broadcast build; the
-             # 1g default dies on AQE-chosen broadcasts whose compressed
-             # estimate undersells a low-entropy relation (seen at the
-             # 50k generated-corpus sweep)
-             .config("spark.driver.memory",
-                     os.environ.get("SPARK_DRIVER_MEM", "8g"))
-             .getOrCreate())
+    from ragflow_core16_spark.session import get_spark
+    spark = get_spark(f"local[{args.cpus}]", app_name="run_parity",
+                      extra_conf={
+                          "spark.sql.shuffle.partitions": str(args.cpus),
+                          "spark.ui.enabled": "false",
+                          # local mode: the driver hosts every broadcast
+                          # build; the 1g default dies on AQE-chosen
+                          # broadcasts whose compressed estimate undersells
+                          # a low-entropy relation (seen at the 50k
+                          # generated-corpus sweep)
+                          "spark.driver.memory":
+                              os.environ.get("SPARK_DRIVER_MEM", "8g")})
     spark.sparkContext.setLogLevel("ERROR")
 
     reg = E._registry()
