@@ -7,19 +7,24 @@ Deployment (north-rule run mode):
     spark-submit --py-files ragflow_core16_spark.zip \
         jobs/extract_job.py \
         --input  <pages parquet dir | iceberg table | WARC dir> \
-        --output <warehouse dir for extracted/chunks/metrics/lineage> \
+        --output <snapshot table dir, local or shared POSIX path> \
         [--input-format warc] [--wet-output <dir> [--wet-shards 256]] \
         [--lang en] [--chunk-tokens 128] [--no-resume] [--run-id r42]
 
 ``--input-format warc`` ingests a directory of ``*.warc.gz`` crawl files
 (one file = one task); ``--wet-output`` additionally materializes
 ``*.warc.wet.gz`` shards of the extracted text from the committed
-``extracted/`` table — rerunnable on its own without re-extracting.
+table — rerunnable on its own without re-extracting.
+
+``--output`` is a ``SnapshotTable`` (``pipeline/snapshots.py``), one atomic
+commit per run; chunks, per-partition metrics and provenance are views
+over its rows (``chunks_table``, ``metrics_table``, ``versions``).
 
 The script takes master/executor topology from the spark-submit command
 line (no hardcoded master); on a cluster the same invocation runs at N and
 4N executors for the scaling protocol (BASELINE.md §3).  Reruns resume from
-the committed lineage manifest unless --no-resume is given.
+the committed snapshot; --no-resume re-extracts every page as one upsert
+commit (its rows replace those of the same urls; other urls stay).
 
 Prints ONE JSON line with the run summary (rows, ok/error, bytes, chunks,
 wall seconds, docs/sec).
@@ -33,6 +38,9 @@ import sys
 
 
 def main(argv=None) -> int:
+    from ragflow_core16_spark.pipeline.snapshots import (SnapshotTable,
+                                                         local_path)
+
     ap = argparse.ArgumentParser(description="pages → extracted+chunks")
     ap.add_argument("--input", required=True,
                     help="pages source: parquet path, iceberg:<table>, or "
@@ -45,7 +53,7 @@ def main(argv=None) -> int:
                          "one task)")
     ap.add_argument("--wet-output", default=None,
                     help="also write *.warc.wet.gz shards of the extracted "
-                         "text (from the committed extracted/ table)")
+                         "text (from the committed table)")
     ap.add_argument("--wet-shards", type=int, default=256)
     ap.add_argument("--wet-lang", default=None,
                     help="emit WET records only for pages whose DETECTED "
@@ -53,18 +61,18 @@ def main(argv=None) -> int:
                          "text) matches — the per-language WET export "
                          "convention; works on raw crawls, unlike --lang "
                          "which needs a lang column")
-    ap.add_argument("--output", required=True,
-                    help="output warehouse dir (extracted/ chunks/ metrics/ lineage/)")
+    ap.add_argument("--output", required=True, type=local_path,
+                    help="output snapshot table dir: a local or shared "
+                         "POSIX path (s3://, hdfs:// URIs are refused)")
     ap.add_argument("--lang", default=None,
                     help="optional lang filter (e.g. en)")
     ap.add_argument("--chunk-tokens", type=int, default=128)
     ap.add_argument("--delimiter", default="\n!?。；！？")
     ap.add_argument("--run-id", default=None)
-    ap.add_argument("--no-resume", action="store_true")
-    ap.add_argument("--snapshot-table", action="store_true",
-                    help="commit through the snapshot table protocol "
-                         "(atomic manifest commits, time travel) instead "
-                         "of the append+lineage layout")
+    ap.add_argument("--no-resume", action="store_true",
+                    help="re-extract every page and publish it as one "
+                         "upsert commit: its rows replace the committed "
+                         "rows of the same urls")
     ap.add_argument("--target-partition-mb", type=int, default=64)
     args = ap.parse_args(argv)
 
@@ -73,8 +81,7 @@ def main(argv=None) -> int:
     from ragflow_core16_spark.session import get_spark
     spark = get_spark(app_name="ragflow_core16_spark.extract")
 
-    from ragflow_core16_spark.pipeline.run import (run_extraction,
-                                                   run_extraction_snapshotted)
+    from ragflow_core16_spark.pipeline.run import run_extraction_snapshotted
 
     if args.input_format == "warc":
         from ragflow_core16_spark.sources.warc import pages_from_warc_dir
@@ -93,9 +100,7 @@ def main(argv=None) -> int:
     if args.lang:
         pages = pages.filter(F.col("lang") == args.lang)
 
-    runner = (run_extraction_snapshotted if args.snapshot_table
-              else run_extraction)
-    summary = runner(
+    summary = run_extraction_snapshotted(
         spark, pages, args.output,
         run_id=args.run_id,
         resume=not args.no_resume,
@@ -110,14 +115,8 @@ def main(argv=None) -> int:
         # a rerun with --wet-output alone re-emits shards without
         # re-extracting anything
         from ragflow_core16_spark.sources.warc import write_wet_files
-        if args.snapshot_table:
-            # snapshot mode commits through {output}/_snapshots manifests,
-            # never {output}/extracted — read the just-committed version
-            from ragflow_core16_spark.pipeline.snapshots import SnapshotTable
-            ext = SnapshotTable(spark, args.output).read()
-        else:
-            ext = spark.read.parquet(f"{args.output}/extracted")
-        ext = ext.where(F.col("status") == "ok")
+        ext = (SnapshotTable(spark, args.output).read()
+               .where(F.col("status") == "ok"))
         if args.wet_lang:
             from ragflow_core16_spark.operators.textstats import \
                 lang_pred_expr

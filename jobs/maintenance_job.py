@@ -3,8 +3,8 @@
 
 The third job of the deployment triad (extract → curate → maintain):
 the periodic housekeeping a continuously-ingesting corpus needs, run
-against any table written with ``--snapshot-table`` (or any
-``pipeline/snapshots.py`` layout):
+against any ``pipeline/snapshots.py`` table (``extract_job --output``
+is one):
 
     spark-submit --py-files ragflow_core16_spark.zip \
         jobs/maintenance_job.py --table <dir> \

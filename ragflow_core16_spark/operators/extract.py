@@ -10,7 +10,8 @@ Scale design (100 TB / 10^12 rows):
   * The operator is embarrassingly parallel per row — no shuffle at all in
     the extraction stage itself.  The only shuffles in the full pipeline are
     the optional size-targeted repartition before it (see
-    ``pipeline/partitioning.py``) and the metrics rollup after it.
+    ``pipeline/partitioning.py``) and the ``metrics_table`` rollup over
+    the committed rows.
   * Oversize guard (reference DOC_MAXIMUM_SIZE=128 MB,
     ``rag/svr/task_executor.py:218-220`` / ``rag/settings.py:55``) is a
     JVM-side ``length(html)`` predicate evaluated before any Python sees the
@@ -188,3 +189,25 @@ def chunks_table(extracted: DataFrame) -> DataFrame:
                     F.col("c.content_ltks").alias("content_ltks"),
                     F.col("c.content_sm_ltks").alias("content_sm_ltks"),
                     F.col("c.token_cnt").alias("token_cnt")))
+
+
+def rollup_columns() -> list:
+    """The counters over extracted rows, aliased ``n_rows, n_ok,
+    n_error, n_oversize, bytes_in, chunks_out, tokens_out`` — shared by
+    ``metrics_table`` and the run summary."""
+    def n_status(s):
+        return F.sum(F.when(F.col("status") == s, 1).otherwise(0))
+    return [F.count(F.lit(1)).alias("n_rows"),
+            n_status("ok").alias("n_ok"),
+            n_status("error").alias("n_error"),
+            n_status("oversize").alias("n_oversize"),
+            F.sum("bytes_in").alias("bytes_in"),
+            F.sum("n_chunks").alias("chunks_out"),
+            F.sum("n_tokens").alias("tokens_out")]
+
+
+def metrics_table(extracted: DataFrame) -> DataFrame:
+    """Per-(run, spark-partition) rollup of committed extracted rows
+    (run_id, part_id, n_rows, n_ok, n_error, n_oversize, bytes_in,
+    chunks_out, tokens_out)."""
+    return extracted.groupBy("run_id", "part_id").agg(*rollup_columns())

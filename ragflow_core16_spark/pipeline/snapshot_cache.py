@@ -27,6 +27,8 @@ yields to the complete table the winner published.
 
 from __future__ import annotations
 
+import contextlib
+import errno
 import hashlib
 import importlib
 import os
@@ -193,24 +195,37 @@ def atomic_write(df, path: str) -> None:
     one directory move, so a reader (keyed on _SUCCESS inside the final
     path) never observes interleaved part files from two jobs.  If a
     complete table appeared while we were building, ours is discarded —
-    both builds are per-snapshot deterministic, so either is correct."""
+    both builds are per-snapshot deterministic, so either is correct.
+
+    A directory holding ``_SUCCESS`` is never removed: the rename is
+    tried first, and a PARTIAL directory (crashed writer) blocking it is
+    moved aside to a unique sibling — a rival table published after our
+    check is then moved back, not deleted — before one retry."""
     tmp = f"{path}.tmp-{uuid.uuid4().hex[:12]}"
     df.write.mode("overwrite").parquet(tmp)
     os.makedirs(os.path.dirname(path), exist_ok=True)
-    if os.path.exists(os.path.join(path, "_SUCCESS")):
-        shutil.rmtree(tmp, ignore_errors=True)
-        return
-    # tear down a PARTIAL directory (crashed writer, no certificate) so
-    # the rename can land; losing a race here just re-raises into the
-    # winner's complete table on the next check
-    if os.path.exists(path):
-        shutil.rmtree(path, ignore_errors=True)
+    success = os.path.join(path, "_SUCCESS")
     try:
-        os.rename(tmp, path)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
-        if not os.path.exists(os.path.join(path, "_SUCCESS")):
-            raise
+        for last_try in (False, True):
+            try:
+                return os.rename(tmp, path)
+            except OSError as e:    # only a non-empty path is a race
+                if (e.errno not in (errno.ENOTEMPTY, errno.EEXIST)
+                        or last_try and not os.path.exists(success)):
+                    raise
+            if os.path.exists(success):
+                return
+            aside = f"{path}.partial-{uuid.uuid4().hex[:12]}"
+            with contextlib.suppress(FileNotFoundError):
+                os.rename(path, aside)
+            if os.path.exists(os.path.join(aside, "_SUCCESS")):
+                # restore a rival's table; if yet another landed since,
+                # path is complete and this copy goes
+                with contextlib.suppress(OSError):
+                    os.rename(aside, path)
+            shutil.rmtree(aside, ignore_errors=True)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)      # a no-op once renamed
 
 
 def materialize(spark, kind: str, sf_dir: str, build) -> str:

@@ -21,11 +21,11 @@ re-reads the new latest manifest and retries on the next version
 latest-manifest → explicit file list, so a concurrent commit can never
 give them a torn view: snapshot isolation.
 
-Why this matters for the extraction pipeline: ``run.py``'s resume rule is
-"lineage lands last"; a snapshot table generalizes it — data + lineage
-become ONE atomic commit, and a resumed run reads the last committed
-snapshot (never a half-written append) while time travel keeps every
-prior corpus state addressable for reproducing a training-data cut.
+Why this matters for the extraction pipeline: ``run.py`` commits each
+run as ONE snapshot, and that commit is the resume marker — a resumed
+run reads the last committed snapshot (never a half-written append)
+while time travel keeps every prior corpus state addressable for
+reproducing a training-data cut.
 """
 
 from __future__ import annotations
@@ -35,6 +35,7 @@ import os
 import re
 import time
 import uuid
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -93,10 +94,20 @@ def _union_fields(a: StructType, b: StructType) -> StructType:
     return StructType(out)
 
 
+def local_path(path: str) -> str:
+    """``path``, refused (ValueError) if it is a URI: the commit is
+    local-filesystem calls (``os.link``), so an ``s3://`` or ``hdfs://``
+    table must fail before anything is written."""
+    if urlparse(path).scheme:
+        raise ValueError(f"{path}: URIs are not supported; snapshot tables "
+                         f"need a local or shared POSIX path")
+    return path
+
+
 class SnapshotTable:
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
-        self.path = path.rstrip("/")
+        self.path = local_path(path).rstrip("/")
         self._snap_dir = os.path.join(self.path, "_snapshots")
         os.makedirs(self._snap_dir, exist_ok=True)
 
@@ -159,20 +170,9 @@ class SnapshotTable:
             re-cast table instead — one rewrite, as Iceberg's migration
             tooling does without its per-file schema resolution layer).
         """
-        table_schema = self._table_schema()
-        aligned, merged = self._align(df, table_schema)
-        files = self._write_data(aligned)
-
-        def build(parent: dict) -> dict:
-            # a rival append may have evolved the schema between our
-            # table read and this commit — union against the PARENT's
-            # recorded schema so rival columns are never dropped
-            base = parent.get("schema")
-            final = (merged if base is None
-                     else _union_fields(StructType.fromJson(base), merged))
-            return {"files": parent["files"] + files,
-                    "schema": final.jsonValue()}
-        return self._commit(build, "append", retries)
+        aligned, merged = self._align(df, self._table_schema())
+        return self._rewrite(None, None, "append", retries,
+                             self._write_data(aligned), merged)
 
     def commit_overwrite(self, df: DataFrame, retries: int = 10) -> int:
         files = self._write_data(df)
@@ -204,31 +204,61 @@ class SnapshotTable:
         no file contains a matching row (a no-op delete publishes no
         commit, like Iceberg)."""
         pred = F.expr(predicate) if isinstance(predicate, str) else predicate
+        hit = F.coalesce(pred, F.lit(False))
+        return self._rewrite(lambda d: d.filter(hit),
+                             lambda d: d.filter(~hit), "delete", retries)
+
+    def commit_upsert(self, df: DataFrame, key: str,
+                      retries: int = 10) -> int:
+        """Replace the rows whose ``key`` occurs in ``df`` by ``df``'s rows,
+        as ONE atomic snapshot: ``df`` is aligned as in ``commit_append``
+        (and evaluated once — its keys are read back from its files); the
+        replaced rows get ``commit_delete``'s copy-on-write and isolation."""
+        aligned, merged = self._align(df, self._table_schema())
+        files = self._write_data(aligned)
+        keys = self._read_files(files, merged.jsonValue()).select(key)
+        return self._rewrite(lambda d: d.join(keys, key, "left_semi"),
+                             lambda d: d.join(keys, key, "left_anti"),
+                             "upsert", retries, files, merged)
+
+    def _rewrite(self, match, keep, op: str, retries: int,
+                 add_files: list[str] = (),
+                 merged: StructType | None = None) -> int:
+        """The one commit core.  Copy-on-write: files holding a ``match``
+        row (if ``match`` is given) are rewritten to their ``keep`` rows,
+        the rest carried by reference, and ``add_files`` (table schema
+        ``merged``) join the snapshot."""
         m = self.manifest()
-        if not m["files"]:
-            return m["version"]
         schema_json = m.get("schema")
-        full = self._read_files(m["files"], schema_json)
-        hit = (full.withColumn("_sg_file", F.input_file_name())
-               .filter(F.coalesce(pred, F.lit(False)))
-               .select("_sg_file").distinct().collect())
-        affected = {self._local_path(r["_sg_file"]) for r in hit}
-        if not affected:
+        affected = set()
+        if match is not None and m["files"]:
+            full = self._read_files(m["files"], schema_json)
+            hit = (match(full.withColumn("_sg_file", F.input_file_name()))
+                   .select("_sg_file").distinct().collect())
+            affected = {self._local_path(r["_sg_file"]) for r in hit}
+        if not affected and merged is None:
             return m["version"]
-        keep_rows = (self._read_files(sorted(affected), schema_json)
-                     .filter(~F.coalesce(pred, F.lit(False))))
-        new_files = self._write_data(keep_rows)
+        new_files = list(add_files)
+        if affected:
+            new_files += self._write_data(keep(self._read_files(
+                sorted(affected), schema_json)))
 
         def build(parent: dict) -> dict:
             if not affected <= set(parent["files"]):
                 raise CommitConflict(
-                    f"{self.path}: files scanned for delete were unpinned "
-                    f"by a concurrent commit — re-run the delete")
+                    f"{self.path}: files scanned for {op} were unpinned "
+                    f"by a concurrent commit — re-run the {op}")
+            schema = parent.get("schema") or schema_json
+            if merged is not None:
+                # a rival append may have evolved the schema since our
+                # read — union against the PARENT's recorded schema so
+                # rival columns are never dropped
+                schema = (merged if schema is None else _union_fields(
+                    StructType.fromJson(schema), merged)).jsonValue()
             return {"files": [f for f in parent["files"]
                               if f not in affected] + new_files,
-                    "schema": parent.get("schema") or schema_json,
-                    "rewrote_files": len(affected)}
-        return self._commit(build, "delete", retries)
+                    "schema": schema, "rewrote_files": len(affected) or None}
+        return self._commit(build, op, retries)
 
     def compact(self, target_mb: float | None = None,
                 retries: int = 10) -> int:
@@ -379,7 +409,6 @@ class SnapshotTable:
     def _local_path(uri: str) -> str:
         """input_file_name() URI → the plain local path the manifest
         stores (file:/x, file:///x, percent-encoded)."""
-        from urllib.parse import unquote, urlparse
         if uri.startswith("file:"):
             return unquote(urlparse(uri).path)
         return unquote(uri)

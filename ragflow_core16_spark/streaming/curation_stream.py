@@ -24,8 +24,9 @@ Exactly-once design (the ``run_warc_to_cdx_stream`` contract):
     ``materialize`` (complete tables are never rebuilt), and a version
     is published by writing its ``_complete`` marker LAST, so a crash
     mid-apply replays into the identical end state.
-  * ``LATEST`` (written by temp+rename) names the serving version; a
-    query session points ``RAG_CURATION_DIR``-routed operators at it by
+  * ``LATEST`` (written by temp+rename, re-published at stream start
+    when a crash left it behind) names the serving version; a query
+    session points ``RAG_CURATION_DIR``-routed operators at it by
     reading the version's corpus dir like any sf_dir.
   * A micro-batch that RE-DELIVERS ids already in the corpus (a re-crawl
     feed) becomes an upsert day: the surviving previous rows are
@@ -75,14 +76,10 @@ def _apply_batch(spark: SparkSession, batch_df: DataFrame, batch_id: int,
     from ..pipeline.snapshot_cache import (DELTA_FAMILIES,
                                            materialize_families, read_table)
     vdir = os.path.join(state_dir, "versions", f"v{batch_id:05d}")
-    if os.path.exists(os.path.join(vdir, "_complete")):
-        # replayed batch: already fully applied — but a crash between
-        # the marker and the pointer swap left LATEST behind, so repair it
-        newest = _latest_complete(state_dir)
-        if latest_version(state_dir) != newest:
-            _publish(state_dir, newest)
-        return
-    if batch_df.isEmpty():
+    # a replayed batch is applied already (a stale LATEST is repaired
+    # when the stream starts)
+    if (os.path.exists(os.path.join(vdir, "_complete"))
+            or batch_df.isEmpty()):
         return
     # 1. the batch's own document copy (write once; a replay reuses it)
     bdocs = os.path.join(state_dir, "batches", f"b{batch_id:05d}",
@@ -166,7 +163,15 @@ def run_curation_index_stream(spark: SparkSession, input_dir: str,
                               max_files_per_trigger: int = 8):
     """Documents landing zone → versioned snapshot-table chain.  With
     ``once`` (availableNow) this drains the zone and stops — the cron
-    shape; a live deployment runs it continuously."""
+    shape; a live deployment runs it continuously.
+
+    A crash between a version's ``_complete`` marker and the pointer
+    swap leaves ``LATEST`` stale; the restart re-publishes the newest
+    complete version before any batch runs, whether or not the
+    checkpoint has a batch to replay."""
+    newest = _latest_complete(state_dir)
+    if newest is not None and latest_version(state_dir) != newest:
+        _publish(state_dir, newest)
     docs = (spark.readStream
             .schema(DOCUMENTS_SCHEMA)
             .option("maxFilesPerTrigger", max_files_per_trigger)

@@ -7,6 +7,11 @@ sys.path.insert(0, str(Path(__file__).resolve().parent))
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 
+def pytest_configure(config):
+    config.addinivalue_line(
+        "markers", "slow: spark-submit deployment tests (minutes each)")
+
+
 @pytest.fixture(scope="session", autouse=True)
 def _isolated_curation_warehouse(tmp_path_factory):
     """Point the snapshot-table cache at a fresh per-session directory.

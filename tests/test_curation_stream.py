@@ -144,6 +144,30 @@ class TestCurationIndexStream:
         q.awaitTermination(300)
         assert latest_version(state) == v
 
+    def test_restart_without_replay_repairs_latest(self, spark, tmp_path,
+                                                   monkeypatch):
+        """A stale ``LATEST`` with nothing left to replay (same
+        checkpoint, no new landing files) is repaired when the stream
+        starts, not left stale until the next batch."""
+        from ragflow_core16_spark.streaming.curation_stream import (
+            latest_version, run_curation_index_stream)
+        monkeypatch.setenv("RAG_CURATION_DIR", str(tmp_path / "cur"))
+        landing = str(tmp_path / "landing")
+        state = str(tmp_path / "state")
+        ckpt = str(tmp_path / "ckpt")
+        docs = spark.read.parquet(f"{SF}/documents.parquet")
+        docs.filter(F.col("doc_id") < 200).coalesce(1) \
+            .write.mode("append").parquet(landing)
+        _deep_clean(spark)
+        run_curation_index_stream(spark, landing, state, ckpt) \
+            .awaitTermination(300)
+        v = latest_version(state)
+        assert v is not None
+        os.remove(os.path.join(state, "LATEST"))
+        run_curation_index_stream(spark, landing, state, ckpt) \
+            .awaitTermination(300)
+        assert latest_version(state) == v
+
 
 def test_latest_complete_orders_ids_as_integers(tmp_path):
     """Version dirs compare by their parsed batch id (``v100000`` after

@@ -1,5 +1,5 @@
-"""Spark pipeline tests: extraction, chunk table, resume/lineage, oversize,
-determinism across partitionings."""
+"""Spark pipeline tests: extraction, chunk table, snapshot resume, metrics,
+oversize, determinism across partitionings."""
 
 import tempfile
 
@@ -9,8 +9,10 @@ from pyspark.sql import functions as F
 from ragflow_core16_spark.datagen.pages import pages_df, generate_page
 from ragflow_core16_spark.operators.extract import (extract_pages,
                                                     chunks_table,
+                                                    metrics_table,
                                                     DOC_MAXIMUM_SIZE)
-from ragflow_core16_spark.pipeline.run import run_extraction
+from ragflow_core16_spark.pipeline.run import run_extraction_snapshotted
+from ragflow_core16_spark.pipeline.snapshots import SnapshotTable
 
 N = 60  # small but covers malformed/encodings/tables statistically
 
@@ -130,29 +132,69 @@ class TestRunPipeline:
     def test_run_and_resume(self, spark, tmp_path):
         out = str(tmp_path / "out")
         pages = pages_df(spark, 30)
-        s1 = run_extraction(spark, pages, out, run_id="r1")
+        s1 = run_extraction_snapshotted(spark, pages, out, run_id="r1")
         assert s1["rows"] == 30
         # resume over the same input: everything committed → nothing to do
-        s2 = run_extraction(spark, pages, out, run_id="r2")
+        s2 = run_extraction_snapshotted(spark, pages, out, run_id="r2")
         assert s2["rows"] == 0
         # new pages appear → only the delta is processed
         pages2 = pages_df(spark, 40)
-        s3 = run_extraction(spark, pages2, out, run_id="r3")
+        s3 = run_extraction_snapshotted(spark, pages2, out, run_id="r3")
         assert s3["rows"] == 10
-        # all tables present
-        for t in ("extracted", "chunks", "metrics", "lineage"):
-            assert spark.read.parquet(f"{out}/{t}").count() > 0
-        # lineage covers all 40 urls exactly once
-        lin = spark.read.parquet(f"{out}/lineage")
-        assert lin.select("url").distinct().count() == 40
-        assert lin.count() == 40
+        # the committed table covers all 40 urls exactly once
+        t = SnapshotTable(spark, out)
+        assert t.read().select("url").distinct().count() == 40
+        assert t.read().count() == 40
+        assert chunks_table(t.read()).count() > 0
 
     def test_metrics_shape(self, spark, tmp_path):
         out = str(tmp_path / "m")
-        run_extraction(spark, pages_df(spark, 10), out, run_id="r1")
-        m = spark.read.parquet(f"{out}/metrics")
+        s = run_extraction_snapshotted(spark, pages_df(spark, 10), out,
+                                       run_id="r1")
+        m = metrics_table(SnapshotTable(spark, out).read())
         cols = set(m.columns)
         assert {"run_id", "part_id", "n_rows", "n_ok", "n_error",
-                "n_oversize", "bytes_in", "chunks_out"} <= cols
+                "n_oversize", "bytes_in", "chunks_out",
+                "tokens_out"} <= cols
         agg = m.agg(F.sum("n_rows")).collect()[0][0]
-        assert agg == 10
+        assert agg == s["rows"] == 10
+
+    def test_no_resume_replaces_instead_of_duplicating(self, spark,
+                                                      tmp_path):
+        """``resume=False`` re-extracts every page and publishes it as one
+        upsert: the current version holds each url once, and the
+        previous version stays readable."""
+        out = str(tmp_path / "nr")
+        pages = pages_df(spark, 20)
+        s1 = run_extraction_snapshotted(spark, pages, out, run_id="r1",
+                                        resume=False)
+        s2 = run_extraction_snapshotted(spark, pages, out, run_id="r2",
+                                        resume=False)
+        assert s1["rows"] == s2["rows"] == 20
+        t = SnapshotTable(spark, out)
+        cur = t.read()
+        assert cur.count() == cur.select("url").distinct().count() == 20
+        # the chunk view serves each (url, chunk) once
+        assert chunks_table(cur).groupBy("url", "chunk_seq").count() \
+            .filter("count > 1").count() == 0
+        assert {r.run_id for r in cur.select("run_id").distinct()
+                .collect()} == {"r2"}
+        assert t.read(s1["version"]).count() == 20
+
+    def test_no_resume_subset_keeps_other_urls(self, spark, tmp_path):
+        """A ``resume=False`` rerun over PART of the committed urls (a
+        ``--lang`` filter, a new crawl batch) replaces only those urls:
+        every other committed url survives, each url once."""
+        out = str(tmp_path / "sub")
+        pages = pages_df(spark, 20)
+        run_extraction_snapshotted(spark, pages, out, run_id="r1")
+        subset = pages.orderBy("url").limit(5)
+        s2 = run_extraction_snapshotted(spark, subset, out, run_id="r2",
+                                        resume=False)
+        assert s2["rows"] == 5
+        cur = SnapshotTable(spark, out).read()
+        assert cur.count() == cur.select("url").distinct().count() == 20
+        by_run = {r["run_id"]: r["count"]
+                  for r in cur.groupBy("run_id").count().collect()}
+        assert by_run == {"r1": 15, "r2": 5}
+        assert SnapshotTable(spark, out).manifest()["op"] == "upsert"

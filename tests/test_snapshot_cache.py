@@ -368,3 +368,68 @@ class TestCacheHardening:
                        lambda: spark.range(99).toDF("doc_id"))
         assert os.stat(os.path.join(path, "_SUCCESS")).st_mtime_ns == mtime
         assert SC.read_table(spark, "t_atomic", sf).count() == 5
+
+    def test_atomic_write_raises_other_rename_errors_unchanged(
+            self, spark, tmp_path, monkeypatch):
+        """Only a non-empty ``path`` is a publish race; any other rename
+        failure (EXDEV, EACCES, ENOSPC, ...) surfaces as itself, and the
+        build is cleaned up."""
+        import errno
+        import os
+
+        from ragflow_core16_spark.pipeline import snapshot_cache as SC
+        monkeypatch.setenv("RAG_CURATION_DIR", str(tmp_path / "cur"))
+        path = SC.table_path("t_exdev", SF)
+
+        def rename(src, dst):
+            raise OSError(errno.EXDEV, "cross-device link", src)
+        monkeypatch.setattr(os, "rename", rename)
+        with pytest.raises(OSError) as exc:
+            SC.atomic_write(spark.range(5).toDF("doc_id"), path)
+        monkeypatch.undo()
+        assert exc.value.errno == errno.EXDEV
+        assert os.listdir(os.path.dirname(path)) == []
+
+    def test_atomic_write_never_deletes_a_rival_complete_table(
+            self, spark, tmp_path, monkeypatch):
+        """A rival writer publishes its complete table between our
+        ``_SUCCESS`` check (which saw a crashed writer's partial dir) and
+        our teardown of that partial dir: the rival's part files must
+        survive, and ``path`` must end up complete."""
+        import os
+        import shutil
+
+        from ragflow_core16_spark.pipeline import snapshot_cache as SC
+        monkeypatch.setenv("RAG_CURATION_DIR", str(tmp_path / "cur"))
+        path = SC.table_path("t_rival", SF)
+        os.makedirs(path)
+        open(os.path.join(path, "part-junk.parquet"), "w").write("junk")
+        rival = str(tmp_path / "rival")
+        spark.range(7).toDF("doc_id").coalesce(1).write.parquet(rival)
+        rival_parts = sorted(n for n in os.listdir(rival)
+                             if n.endswith(".parquet"))
+
+        success = os.path.join(path, "_SUCCESS")
+        real_exists = os.path.exists
+        fired = []
+
+        def exists(p):
+            seen = real_exists(p)
+            if p == success and not seen and not fired:
+                # the rival clears the partial dir and renames its
+                # finished table into place — after our check answered
+                fired.append(p)
+                shutil.rmtree(path)
+                os.rename(rival, path)
+            return seen
+        monkeypatch.setattr(os.path, "exists", exists)
+        SC.atomic_write(spark.range(5).toDF("doc_id"), path)
+        monkeypatch.setattr(os.path, "exists", real_exists)
+
+        assert fired
+        assert real_exists(success)
+        assert sorted(n for n in os.listdir(path)
+                      if n.endswith(".parquet")) == rival_parts
+        assert spark.read.parquet(path).count() == 7
+        parent = os.path.dirname(path)
+        assert sorted(os.listdir(parent)) == [os.path.basename(path)]

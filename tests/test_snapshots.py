@@ -309,6 +309,55 @@ class TestRowLevelDelete:
         with pytest.raises(CommitConflict, match="re-run"):
             t.commit_delete("doc_id = 0")
 
+    def test_upsert_replaces_keys_and_keeps_the_rest(self, spark,
+                                                     tmp_path):
+        """``commit_upsert`` is one commit: rows of the upserted keys are
+        replaced (copy-on-write, only the file holding them rewritten),
+        new keys append, a new column evolves the schema."""
+        t = SnapshotTable(spark, str(tmp_path / "t"))
+        t.commit_append(_docs(spark, 0, 5).coalesce(1))
+        t.commit_append(_docs(spark, 5, 10).coalesce(1))
+        before = set(t.manifest()["files"])
+        t.commit_upsert(_docs(spark, 3, 5).withColumn("lang", F.lit("zz"))
+                        .withColumn("q", F.lit(1)), "doc_id")
+        m = t.manifest()
+        assert m["op"] == "upsert" and m["rewrote_files"] == 1
+        assert len(before & set(m["files"])) == 1
+        df = t.read()
+        assert df.columns == ["doc_id", "lang", "q"]
+        assert _ids(df) == list(range(10))
+        assert _ids(df.filter("lang = 'zz' AND q = 1")) == [3, 4]
+        t.commit_upsert(_docs(spark, 9, 12), "doc_id")
+        assert _ids(t.read()) == list(range(12))
+        assert _ids(t.read(2)) == list(range(10))   # time travel
+
+    def test_upsert_composes_with_concurrent_append(self, spark, tmp_path,
+                                                    monkeypatch):
+        """A rival APPEND that lands between the upsert's scan and its
+        commit survives: only the files the upsert rewrote are replaced."""
+        t = SnapshotTable(spark, str(tmp_path / "t"))
+        t.commit_append(_docs(spark, 0, 3))
+        frozen = t.manifest()
+        real_manifest = t.manifest
+        t.commit_append(_docs(spark, 3, 6))
+        monkeypatch.setattr(
+            t, "manifest",
+            lambda version=None: (frozen if version is None
+                                  else real_manifest(version)))
+        t.commit_upsert(_docs(spark, 0, 2), "doc_id")
+        monkeypatch.undo()
+        assert _ids(t.read()) == list(range(6))
+
+    def test_uri_paths_are_refused_before_any_write(self, spark, tmp_path,
+                                                     monkeypatch):
+        """The commit is local-filesystem calls, so a URI path fails at
+        construction instead of leaving a stray local ``s3:`` dir."""
+        monkeypatch.chdir(tmp_path)
+        for uri in ("s3://bucket/t", "hdfs://nn/t", "file:///tmp/t"):
+            with pytest.raises(ValueError, match="POSIX path"):
+                SnapshotTable(spark, uri)
+        assert os.listdir(tmp_path) == []
+
     def test_compact_composes_with_concurrent_append(self, spark,
                                                      tmp_path,
                                                      monkeypatch):

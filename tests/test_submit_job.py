@@ -1,5 +1,5 @@
 """Deployment-path test: spark-submit --py-files zip + jobs/extract_job.py
-(the north rule's run mode), including lineage resume on rerun."""
+(the north rule's run mode), including snapshot resume on rerun."""
 
 import json
 import os
@@ -45,9 +45,13 @@ def test_spark_submit_pyfiles_and_resume(tmp_path, spark):
     assert first["rows"] == 60 and first["ok"] == 60
     assert first["chunks"] > 0
 
-    # rerun resumes from lineage: nothing left to extract
+    # rerun resumes from the committed snapshot: nothing left to extract
     second = submit()
     assert second["rows"] == 0
+    from ragflow_core16_spark.pipeline.snapshots import SnapshotTable
+    t = SnapshotTable(spark, str(tmp_path / "out"))
+    assert t.current_version() >= 1
+    assert t.read().count() == 60
 
 
 @pytest.mark.slow
@@ -133,6 +137,8 @@ def test_spark_submit_warc_in_wet_out(tmp_path, spark):
     assert summary["rows"] == 40 and summary["ok"] == 40
     assert summary["wet"]["files"] == 8
     assert summary["wet"]["records"] == 40
+    from ragflow_core16_spark.pipeline.snapshots import SnapshotTable
+    assert SnapshotTable(spark, str(tmp_path / "out")).current_version() == 1
     conv = 0
     for p in sorted((tmp_path / "wet").glob("*.warc.wet.gz")):
         recs = list(iter_warc_records(p.read_bytes()))
@@ -168,6 +174,27 @@ def test_spark_submit_warc_in_wet_out(tmp_path, spark):
         got |= {r["url"] for r in iter_warc_records(p.read_bytes())
                 if r["type"] == "conversion"}
     assert got == want
+
+
+def test_extract_job_refuses_uri_output_before_spark(tmp_path, monkeypatch,
+                                                     capsys):
+    """``--output`` is a snapshot table, whose commit is local-filesystem
+    calls: an object-store or HDFS URI is refused at argument parsing —
+    before a session starts or a page is extracted — and leaves no stray
+    local ``s3:`` directory behind."""
+    sys.path.insert(0, os.path.join(REPO, "jobs"))
+    try:
+        import extract_job
+    finally:
+        sys.path.pop(0)
+    monkeypatch.chdir(tmp_path)
+    for uri in ("s3://bucket/warehouse", "hdfs://nn/warehouse"):
+        with pytest.raises(SystemExit) as exc:
+            extract_job.main(["--input", str(tmp_path / "pages"),
+                              "--output", uri])
+        assert exc.value.code == 2
+        assert "invalid local_path value" in capsys.readouterr().err
+    assert os.listdir(tmp_path) == []
 
 
 def test_maintenance_job_delete_compact_vacuum(tmp_path, spark, capsys):
