@@ -11,7 +11,9 @@ Scale design (100 TB / 10^12 rows):
     the extraction stage itself.  The only shuffles in the full pipeline are
     the optional size-targeted repartition before it (see
     ``pipeline/partitioning.py``) and the ``metrics_table`` rollup over
-    the committed rows.
+    the committed rows.  The repartition is not free on its input side:
+    its size pre-pass is an extra job that reads the html bytes and, on
+    resume, re-runs the anti-join against the committed urls.
   * Oversize guard (reference DOC_MAXIMUM_SIZE=128 MB,
     ``rag/svr/task_executor.py:218-220`` / ``rag/settings.py:55``) is a
     JVM-side ``length(html)`` predicate evaluated before any Python sees the

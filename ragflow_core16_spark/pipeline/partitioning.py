@@ -7,14 +7,17 @@ skew that matters is *byte-size* skew (a few giant pages / hot hosts
 serializing into one task), not key skew in a join (SURVEY.md §4.2).
 
 Strategy:
-  * ``repartition_by_size``: one cheap JVM-side pre-pass
-    ``agg(count, sum(length(html)))`` — column-pruned to the html length,
-    no Python — then ``repartition(n, xxhash64(url), warc_ts)`` with
+  * ``repartition_by_size``: one JVM-side pre-pass
+    ``agg(count, sum(length(html)))`` — no Python, but it reads the html
+    bytes to measure them and re-runs whatever plan feeds ``pages`` (on
+    resume, the anti-join against the committed urls) — then
+    ``repartition(n, xxhash64(url), warc_ts)`` with
     ``n = clamp(total_bytes / target_partition_bytes)``.  Hashing on
     (url, warc_ts) spreads any single hot host across partitions because
     url already contains the per-doc path; adding warc_ts guards against
     url-duplicate hot keys (recrawls of one url land in different
-    partitions).
+    partitions).  An empty input comes back as the same object, so a
+    caller can skip its downstream work without counting again.
   * At 100 TB with 128 MB targets this yields ~800k partitions — beyond
     the default scheduler comfort zone, so the clamp caps at ``max_partitions``
     and AQE coalescing handles the low end.
@@ -30,7 +33,8 @@ def repartition_by_size(pages: DataFrame,
                         target_partition_bytes: int = 64 * 1024 * 1024,
                         min_partitions: int = 1,
                         max_partitions: int = 1 << 20) -> DataFrame:
-    """Repartition so each partition carries ≈target bytes of html payload."""
+    """Repartition so each partition carries ≈target bytes of html
+    payload; returns ``pages`` itself when the pre-pass counts no rows."""
     stats = pages.select(
         F.count(F.lit(1)).alias("n"),
         F.coalesce(F.sum(F.length("html")), F.lit(0)).alias("total_bytes"),

@@ -16,8 +16,9 @@ rows:
 
 Each run is ONE atomic manifest commit, and that commit is the resume
 marker: a rerun with ``resume=True`` anti-joins the input against the
-committed urls, so only not-yet-extracted pages are processed.  A crash
-before the commit leaves the table at its previous snapshot plus
+committed urls, so only not-yet-extracted pages are processed, and a
+rerun over a committed table with none left publishes no version.  A
+crash before the commit leaves the table at its previous snapshot plus
 vacuumable orphan files; the rerun re-extracts exactly the uncommitted
 pages (deterministic bytes, same chunk ids).  ``resume=False``
 re-extracts every input page as one ``commit_upsert`` on url: no url is
@@ -51,8 +52,16 @@ def run_extraction_snapshotted(spark: SparkSession, pages: DataFrame,
     table = SnapshotTable(spark, table_dir)
     if resume and table.current_version() > 0:
         pages = pages.join(table.read().select("url"), "url", "left_anti")
-    pages = repartition_by_size(pages, target_partition_bytes)
-    extracted = (extract_pages(pages, chunk_token_num, delimiter)
+    sized = repartition_by_size(pages, target_partition_bytes)
+    if sized is pages and table.current_version() > 0:
+        # the size prepass counted no rows and a snapshot is committed:
+        # nothing left to extract, so publish no version (a no-op resume
+        # leaves the table as it was; a new table still gets its first,
+        # empty, readable version)
+        return {"run_id": run_id, "version": table.current_version(),
+                "wall_sec": time.time() - t0, "rows": 0, "ok": 0,
+                "error": 0, "bytes_in": 0, "chunks": 0}
+    extracted = (extract_pages(sized, chunk_token_num, delimiter)
                  .withColumn("run_id", F.lit(run_id))
                  .withColumn("part_id", F.spark_partition_id()))
     version = (table.commit_append(extracted) if resume

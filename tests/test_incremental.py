@@ -253,6 +253,25 @@ class TestNoDay1Rescan:
         assert self._reads_day1_docs(frames["dedup_pairs"], corpora)
         assert "PushedFilters: [In(doc_id" in plan
 
+    def test_candidates_above_collect_guard_prune_by_semi_join(
+            self, spark, delta_state, corpora, monkeypatch):
+        """More day-1 candidates than ``DAY1_IDS_COLLECT_MAX``: the driver
+        collects only guard+1 ids, the day-1 scan is pruned by a
+        left-semi join, and the merged pairs and labels are still
+        row-identical to the full rebuild."""
+        from ragflow_core16_spark.pipeline import incremental
+        monkeypatch.setattr(incremental, "DAY1_IDS_COLLECT_MAX", 1)
+        _deep_clean(spark)
+        frames = incremental.dedup_index_delta_frames(
+            spark, corpora["day1"], corpora["batch"])
+        plan = formatted_plan(frames["dedup_pairs"])
+        assert self._reads_day1_docs(frames["dedup_pairs"], corpora)
+        assert "PushedFilters: [In(doc_id" not in plan
+        assert "LeftSemi" in plan
+        for kind in ("dedup_pairs", "dedup_labels"):
+            got = sorted(map(tuple, frames[kind].collect()))
+            assert got == sorted(map(tuple, delta_state["oracle"][kind]))
+
 
 class TestBridgeSemantics:
     def test_batch_bridge_fuses_two_day1_clusters(self, spark):

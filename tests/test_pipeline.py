@@ -1,6 +1,7 @@
 """Spark pipeline tests: extraction, chunk table, snapshot resume, metrics,
 oversize, determinism across partitionings."""
 
+import os
 import tempfile
 
 import pytest
@@ -146,6 +147,33 @@ class TestRunPipeline:
         assert t.read().select("url").distinct().count() == 40
         assert t.read().count() == 40
         assert chunks_table(t.read()).count() > 0
+
+    def test_noop_resume_publishes_nothing(self, spark, tmp_path):
+        """A resume over fully committed input commits no version: no
+        manifest, no data dir, and a summary of zeros (not nulls) at the
+        current version."""
+        out = str(tmp_path / "noop")
+        pages = pages_df(spark, 12)
+        s1 = run_extraction_snapshotted(spark, pages, out, run_id="r1")
+        table = SnapshotTable(spark, out)
+        data_dirs = os.listdir(os.path.join(out, "data"))
+        s2 = run_extraction_snapshotted(spark, pages, out, run_id="r2")
+        assert table.current_version() == s1["version"] == s2["version"]
+        assert os.listdir(os.path.join(out, "data")) == data_dirs
+        assert [s2[k] for k in ("rows", "ok", "error", "bytes_in",
+                                "chunks")] == [0] * 5
+        assert table.read().count() == 12
+
+    def test_empty_input_into_new_table_is_readable(self, spark, tmp_path):
+        """Empty input into a new table still commits a first version, so
+        readers get an empty frame, not an error."""
+        out = str(tmp_path / "empty")
+        s = run_extraction_snapshotted(spark, pages_df(spark, 5).limit(0),
+                                       out, run_id="r1")
+        table = SnapshotTable(spark, out)
+        assert s["version"] == table.current_version() == 1
+        assert s["rows"] == 0
+        assert table.read().count() == 0
 
     def test_metrics_shape(self, spark, tmp_path):
         out = str(tmp_path / "m")
