@@ -34,7 +34,7 @@ Thresholds:
   (nav/footer/related blocks are link-dominated, not merely short).
 
 Scale note: the whole module is per-document pure Python invoked inside
-the one Arrow-batched ``mapInPandas`` extraction stage — no shuffles, no
+the one Arrow-batched ``mapInArrow`` extraction stage — no shuffles, no
 driver participation; strategy choice is a per-row branch.
 """
 

@@ -29,11 +29,15 @@ test in ``tests/test_html.py::TestReadability081Checklist``):
       section by the 0.8.1 counts rules (img vs p, li vs p outside lists,
       input density, short-content, link-density by weight band, embeds).
 
-Pure Python, runs only inside Arrow-batched UDFs.
+One annotated post-order walk records every element's normalized text
+length, comma count and anchor text length (``_annotate``); scoring, the
+sibling rules and sanitize read those instead of re-deriving subtree
+text per candidate.  Pure Python, runs only inside Arrow-batched UDFs.
 """
 
 from __future__ import annotations
 
+import functools
 import re
 
 from .dom import Node, parse_html, inner_html
@@ -62,32 +66,72 @@ DIV_TO_P_RE = re.compile(r"<(a|blockquote|dl|div|img|ol|p|pre|table|ul)",
 # tag → does DIV_TO_P_RE match "<tag"?  The tag vocabulary of a corpus is
 # tiny, so memoizing keeps the exact 0.8.1 PREFIX semantics ("<address"
 # matches the "a" alternative) without re-running the regex per descendant.
-_DIV_TO_P_CACHE: dict[str, bool] = {}
-
-
+@functools.lru_cache(maxsize=None)
 def _is_div_to_p_blocker(tag: str) -> bool:
-    v = _DIV_TO_P_CACHE.get(tag)
-    if v is None:
-        v = _DIV_TO_P_CACHE[tag] = DIV_TO_P_RE.match("<" + tag) is not None
-    return v
+    return DIV_TO_P_RE.match("<" + tag) is not None
+
 
 MIN_TEXT_LEN = 25
 
 
-def _norm_text(n: Node, memo: dict | None = None) -> str:
+def _norm_text(n: Node) -> str:
     # ' '.join(s.split()) ≡ re.sub(r'\s+', ' ', s).strip() — verified
     # exhaustively over all codepoints (str.split's whitespace set equals
-    # \s) — and the regex-free form is ~2× faster on this hot path
-    # (~50k calls per 1500 pages through scoring + link density).
-    # ``memo`` (id(node) → str) is only valid while the tree is immutable:
-    # scoring + sibling-join share one; sanitize mutates and gets none.
-    if memo is None:
-        return " ".join(n.text_content().split())
-    key = id(n)
-    v = memo.get(key)
-    if v is None:
-        v = memo[key] = " ".join(n.text_content().split())
-    return v
+    # \s), and the regex-free form is ~2× faster
+    return " ".join(n.text_content().split())
+
+
+def _annotate(n: Node, ann: dict) -> None:
+    """``ann[n]`` = (non-whitespace chars, words, starts / ends with
+    non-whitespace, commas, anchor text length) of ``n.text_content()``,
+    from its children's entries.  Two pieces meeting without whitespace
+    share a word, so ``len(_norm_text(n)) == _text_len(ann[n])`` without
+    building strings; the edge flags are ``None`` for empty text."""
+    nws = words = commas = alen = 0
+    first = last = None
+    for c in n.children:
+        if type(c) is str:
+            if not c:
+                continue
+            cc = ca = 0
+            if c.isspace():
+                cn = cw = 0
+                cf = cl = False
+            else:
+                parts = c.split()
+                cn, cw = len("".join(parts)), len(parts)
+                cf, cl = not c[0].isspace(), not c[-1].isspace()
+                cc = c.count(",")
+        else:
+            cn, cw, cf, cl, cc, ca = ann[c]
+            if cf is None:
+                continue
+        if last and cf:
+            words -= 1
+        if first is None:
+            first = cf
+        last = cl
+        nws += cn
+        words += cw
+        commas += cc
+        alen += ca
+    if n.tag == "a":
+        # 0.8.1 sums every <a> in the subtree, self included, so nested
+        # anchors count once per enclosing anchor
+        alen += nws + words - 1 if words else 0
+    ann[n] = (nws, words, first, last, commas, alen)
+
+
+def _text_len(a: tuple) -> int:
+    """``len(_norm_text(n))`` from ``n``'s annotation."""
+    return a[0] + a[1] - 1 if a[1] else 0
+
+
+def _density(a: tuple) -> float:
+    """0.8.1 link density from ``n``'s annotation: anchor text over the
+    normalized text length, capped at 1."""
+    total = _text_len(a)
+    return min(a[5] / total, 1.0) if total else 0.0
 
 
 def _leading_text(n: Node) -> str:
@@ -125,48 +169,6 @@ def _score_node(n: Node) -> float:
     elif t in ("h1", "h2", "h3", "h4", "h5", "h6", "th"):
         score -= 5
     return score
-
-
-def _link_density(n: Node, memo: dict | None = None,
-                  total: int | None = None) -> float:
-    # Semantics identical to readability 0.8.1: total = len(norm_text(n)),
-    # link_len = Σ len(norm_text(a)) over EVERY <a> in the subtree, self
-    # included, nested anchors double-counted — but total-text collection
-    # and anchor discovery share ONE traversal instead of two, and callers
-    # that already hold len(norm_text(n)) pass it as ``total``.
-    anchors = []
-    if total is None and memo is not None:
-        cached = memo.get(id(n))
-        if cached is not None:
-            total = len(cached)
-    if total is None:
-        parts = []
-        stack = [n]
-        while stack:
-            x = stack.pop()
-            if type(x) is str:
-                parts.append(x)
-            else:
-                if x.tag == "a":
-                    anchors.append(x)
-                stack.extend(reversed(x.children))
-        norm = " ".join("".join(parts).split())
-        if memo is not None:
-            memo[id(n)] = norm
-        total = len(norm)
-    else:
-        stack = [n]
-        while stack:
-            x = stack.pop()
-            if x.tag == "a":
-                anchors.append(x)
-            for c in reversed(x.children):
-                if type(c) is Node:
-                    stack.append(c)
-    if total == 0:
-        return 0.0
-    link_len = sum(len(_norm_text(a, memo)) for a in anchors)
-    return min(link_len / total, 1.0)
 
 
 class Document:
@@ -233,66 +235,54 @@ class Document:
             n.drop()
         for n in unlikely:
             n.drop()
-        self._divs_to_paragraphs(root)
-        # the tree is immutable from here until _join_siblings' final move
-        # loop, so one norm-text memo serves scoring AND the sibling rules;
-        # _sanitize mutates progressively and must not see it
-        memo: dict[int, str] = {}
-        candidates = self._score_paragraphs(root, memo)
+        ann = self._divs_to_paragraphs(root)
+        candidates = self._score_paragraphs(root, ann)
         if not candidates:
             return root.find("body") or root
         best = max(candidates.items(), key=lambda kv: kv[1])
         best_node, best_score = best
         article = self._join_siblings(best_node, best_score, candidates,
-                                      memo)
-        self._sanitize(article, candidates)
+                                      ann)
+        self._sanitize(article, candidates, ann)
         return article
 
     # ------------------------------------------------------------------
-    def _remove_unlikely(self, root: Node):
-        # 0.8.1 remove_unlikely_candidates: "<class> <id>", html/body exempt
-        for n in list(root.iter()):
-            if n.tag in ("#document", "html", "body"):
-                continue
-            attrs = f"{n.get('class', '')} {n.get('id', '')}"
-            if len(attrs) < 2:
-                continue
-            if UNLIKELY_RE.search(attrs) and not MAYBE_RE.search(attrs):
-                n.drop()
+    def _divs_to_paragraphs(self, root: Node) -> dict:
+        """The two 0.8.1 div→p passes; returns every element node's text
+        annotation (``_annotate``), taken in the same post-order walk.
 
-    def _divs_to_paragraphs(self, root: Node):
-        # pass 1 (0.8.1): a div whose SERIALIZED subtree markup contains no
-        # block tag becomes a <p> — the test is over tostring(children),
-        # so a block element at ANY depth keeps the div.  Equivalent to
-        # searching tostring(children): text/tails cannot contain a literal
-        # '<' post-parse, so the descendant tag openings are exactly what
-        # the regex can match.  Computed bottom-up in ONE traversal (the
-        # per-div subtree scan was quadratic on div-heavy pages): a node
-        # "has a block" if any element child is a blocker tag or itself
-        # has one.  Reversed preorder visits every child before its parent.
-        divs = root.find_all("div")
-        if len(divs) <= 12:
-            # few divs: the early-exit subtree scan beats building flags
-            # for the whole tree (typical article pages)
-            for n in divs:
-                if not any(_is_div_to_p_blocker(c.tag)
-                           for c in n.iter() if c is not n):
-                    n.tag = "p"
-        else:
-            has_block: dict[int, bool] = {}
-            for n in reversed(list(root.iter())):
-                hb = False
-                for c in n.children:
-                    if type(c) is Node and (_is_div_to_p_blocker(c.tag)
-                                            or has_block[id(c)]):
-                        hb = True
-                        break
-                has_block[id(n)] = hb
-            for n in divs:
-                if not has_block[id(n)]:
-                    n.tag = "p"
-        # pass 2 (0.8.1): wrap stray div text/tails into <p>, drop <br>s
-        for n in root.find_all("div"):
+        Pass 1: a div whose SERIALIZED subtree markup contains no block
+        tag becomes a <p> — the test is over tostring(children), so a
+        block element at ANY depth keeps the div.  Equivalent to
+        searching tostring(children): text/tails cannot contain a literal
+        '<' post-parse, so the descendant tag openings are exactly what
+        the regex can match.  A node "has a block" if any element child
+        is a blocker tag or itself has one.  Pass 2 wraps stray div
+        text/tails into <p> and drops <br>s.  Neither pass changes any
+        subtree's text, so only the new <p> wrappers need entries."""
+        order = []
+        stack = [root]
+        while stack:
+            n = stack.pop()
+            order.append(n)
+            for c in n.children:
+                if type(c) is Node:
+                    stack.append(c)
+        ann: dict[Node, tuple] = {}
+        has_block = set()
+        for n in reversed(order):       # every child before its parent
+            for c in n.children:
+                if type(c) is Node and (_is_div_to_p_blocker(c.tag)
+                                        or c in has_block):
+                    has_block.add(n)
+                    break
+            _annotate(n, ann)
+        for n in order:
+            if n.tag != "div":
+                continue
+            if n not in has_block:
+                n.tag = "p"             # pass 1
+                continue
             new_children = []
             for c in n.children:
                 if isinstance(c, str):
@@ -300,6 +290,7 @@ class Document:
                         p = Node("p", {})
                         p.append(c)
                         p.parent = n
+                        _annotate(p, ann)
                         new_children.append(p)
                     # whitespace-only stray text is dropped with its wrap
                     else:
@@ -309,8 +300,9 @@ class Document:
                 else:
                     new_children.append(c)
             n.children[:] = new_children
+        return ann
 
-    def _score_paragraphs(self, root: Node, memo: dict | None = None) -> dict:
+    def _score_paragraphs(self, root: Node, ann: dict) -> dict:
         candidates: dict[Node, float] = {}
         ordered: list[Node] = []
         for p in root.find_all("p", "pre", "td"):
@@ -318,13 +310,13 @@ class Document:
             if parent is None:
                 continue
             grand = parent.parent
-            text = _norm_text(p, memo)
-            if len(text) < MIN_TEXT_LEN:
+            a = ann[p]
+            length = _text_len(a)
+            if length < MIN_TEXT_LEN:
                 continue
             # 0.8.1: 1 + len(split(',')) + min(len/100, 3) — the split
             # yields pieces (commas+1), so a comma-less paragraph adds 2+
-            score = (1.0 + len(text.split(","))
-                     + min(len(text) / 100.0, 3.0))
+            score = 2.0 + a[4] + min(length / 100.0, 3.0)
             for node, share in ((parent, 1.0), (grand, 0.5)):
                 if node is None or node.tag in ("#document", "html"):
                     continue
@@ -333,11 +325,11 @@ class Document:
                     ordered.append(node)
                 candidates[node] += score * share
         for node in ordered:
-            candidates[node] *= (1.0 - _link_density(node, memo))
+            candidates[node] *= (1.0 - _density(ann[node]))
         return candidates
 
     def _join_siblings(self, best: Node, best_score: float,
-                       candidates: dict, memo: dict | None = None) -> Node:
+                       candidates: dict, ann: dict) -> Node:
         article = Node("div", {})
         threshold = max(10.0, best_score * 0.2)
         parent = best.parent
@@ -356,7 +348,7 @@ class Document:
                 # the full text_content, for these two rules
                 node_content = _leading_text(sib)
                 node_length = len(node_content)
-                ld = _link_density(sib, memo)
+                ld = _density(ann[sib])
                 if node_length > 80 and ld < 0.25:
                     keep = True
                 elif node_length <= 80 and ld == 0 \
@@ -374,16 +366,24 @@ class Document:
             article.append(sib)
         return article
 
-    def _sanitize(self, article: Node, candidates: dict):
+    def _sanitize(self, article: Node, candidates: dict, ann: dict):
+        def drop(n):
+            # a drop changes the text of every ancestor up to the article
+            up = n.parent
+            n.drop()
+            while up is not None and up is not article:
+                _annotate(up, ann)
+                up = up.parent
+
         # 0.8.1: headers go when negatively classed or link-dense
         for h in list(article.find_all("h1", "h2", "h3", "h4", "h5", "h6")):
-            if _class_weight(h) < 0 or _link_density(h) > 0.33:
-                h.drop()
+            if _class_weight(h) < 0 or _density(ann[h]) > 0.33:
+                drop(h)
         # 0.8.1 drops whole form/textarea trees here — AFTER scoring (they
         # contributed to candidate scores) and BEFORE conditional cleanup
         # (so input counts below come only from bare inputs outside forms)
         for n in list(article.find_all("form", "textarea")):
-            n.drop()
+            drop(n)
         # conditional cleaning (0.8.1 clean_conditionally), deepest-first
         targets = [n for n in article.iter()
                    if n is not article and n.tag in (
@@ -401,16 +401,16 @@ class Document:
                 continue        # already dropped with an ancestor
             weight = _class_weight(n)
             if weight + candidates.get(n, 0.0) < 0:
-                n.drop()
+                drop(n)
                 continue
-            text = _norm_text(n)
-            if text.count(",") >= 10:
+            a = ann[n]
+            if a[4] >= 10:
                 continue
             counts = n.count_tags(
                 {"p": 0, "img": 0, "li": 0, "input": 0, "embed": 0})
             counts["li"] -= 100
-            content_length = len(text)
-            ld = _link_density(n, total=content_length)
+            content_length = _text_len(a)
+            ld = _density(a)
             remove = False
             if counts["img"] > 1 + counts["p"] * 1.3:
                 remove = True           # too many images
@@ -430,5 +430,5 @@ class Document:
                     or counts["embed"] > 1:
                 remove = True
             if remove:
-                n.drop()
+                drop(n)
 

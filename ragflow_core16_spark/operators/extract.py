@@ -2,7 +2,7 @@
 
 Spark-first re-expression of the reference ingestion path
 (``rag/svr/task_executor.py:217-376`` build_chunks → naive chunker HTML route
-``rag/app/naive.py:435-476``): one Arrow-batched ``mapInPandas`` pass per
+``rag/app/naive.py:435-476``): one Arrow-batched ``mapInArrow`` pass per
 page performing decode → boilerplate-strip → sections → naive_merge →
 chunk ids, emitting the extracted text plus a ``chunks`` array column.
 
@@ -21,16 +21,22 @@ Scale design (100 TB / 10^12 rows):
     the Arrow boundary with their payload.
   * Per-row try/except: parse failures yield status='error' rows, never task
     aborts (a single bad page must not kill a 10-hour job).
+  * Arrow-native framing (``mapInArrow``): ``url``, ``warc_ts`` and
+    ``lang`` go back out as the input arrays, only ``url``, ``html``,
+    ``lang`` and ``nbytes`` become Python objects, and the other columns
+    are built per batch from the schema's Arrow form — no pandas frame
+    on either side.  Chunk ids are hashed once per batch.
   * Arrow batches are capped via spark.sql.execution.arrow.maxRecordsPerBatch
     (set in session.py) so a run of multi-MB pages can't balloon one batch.
 """
 
 from __future__ import annotations
 
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (ArrayType, IntegerType, LongType, StringType,
                                StructField, StructType, TimestampType)
 
@@ -146,22 +152,24 @@ def extract_pages(pages: DataFrame, chunk_token_num: int = 128,
          .alias("html"),
         F.coalesce(F.length("html"), F.lit(0)).cast("long").alias("nbytes"))
 
+    schema = to_arrow_schema(EXTRACTED_SCHEMA)
+    passed = schema.names[:3]       # url, warc_ts, lang: the input arrays
+    computed = list(schema)[3:]     # the rest: built from the rows
+
     def run(batches):
-        for pdf in batches:
+        for batch in batches:
             rows = []
             pending = []  # (chunk dict, id payload) — batch-hashed below
-            for u, t, h, l, nb in zip(pdf["url"], pdf["warc_ts"],
-                                      pdf["html"], pdf["lang"],
-                                      pdf["nbytes"]):
-                nb = int(nb)
+            # lang only reaches a section template; url keys the chunk ids
+            for u, h, l, nb in zip(*(batch.column(name).to_pylist() for name
+                                     in ("url", "html", "lang", "nbytes"))):
                 if h is None and nb > max_bytes:
                     rows.append(dict(
-                        url=u, warc_ts=t, lang=l, status="oversize",
-                        error=None, title=None, extracted_text=None,
-                        codec=None, n_sections=0, n_chunks=0, n_tokens=0,
-                        bytes_in=nb, chunks=None))
+                        status="oversize", error=None, title=None,
+                        extracted_text=None, codec=None, n_sections=0,
+                        n_chunks=0, n_tokens=0, bytes_in=nb, chunks=None))
                 else:
-                    r = _extract_one(u, t, h, l, chunk_token_num,
+                    r = _extract_one(u, None, h, l, chunk_token_num,
                                      delimiter, template, defer_ids=True,
                                      strategy=strategy)
                     for c in r["chunks"] or ():
@@ -172,9 +180,12 @@ def extract_pages(pages: DataFrame, chunk_token_num: int = 128,
                 hexes = xxh64_hex_batch([p[1] for p in pending])
                 for (c, _payload), hx in zip(pending, hexes):
                     c["chunk_id"] = hx
-            yield pd.DataFrame(rows, columns=[f.name for f in EXTRACTED_SCHEMA])
+            cols = [batch.column(name) for name in passed]
+            cols += [pa.array([r[f.name] for r in rows], type=f.type)
+                     for f in computed]
+            yield pa.RecordBatch.from_arrays(cols, names=schema.names)
 
-    return guarded.mapInPandas(run, EXTRACTED_SCHEMA)
+    return guarded.mapInArrow(run, EXTRACTED_SCHEMA)
 
 
 def chunks_table(extracted: DataFrame) -> DataFrame:

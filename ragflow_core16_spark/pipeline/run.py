@@ -6,7 +6,8 @@ one transactional output table (SURVEY.md §3.1 Spark equivalent): a
 ``SnapshotTable`` (``pipeline/snapshots.py``) holding one row per page
 (EXTRACTED_SCHEMA, incl. the chunks array, plus ``run_id`` and
 ``part_id``).  Everything else is derived on read from the committed
-rows:
+rows (the run summary alone is observed on the write itself, not read
+back):
 
   * the flat chunk table — ``operators.extract.chunks_table``;
   * per-(run, spark-partition) counters — ``operators.extract.metrics_table``,
@@ -30,7 +31,7 @@ from __future__ import annotations
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.extract import extract_pages, rollup_columns
@@ -61,13 +62,20 @@ def run_extraction_snapshotted(spark: SparkSession, pages: DataFrame,
         return {"run_id": run_id, "version": table.current_version(),
                 "wall_sec": time.time() - t0, "rows": 0, "ok": 0,
                 "error": 0, "bytes_in": 0, "chunks": 0}
+    # the summary is observed on the write itself (the first action on
+    # ``extracted``): the observe node runs in the write's result stage,
+    # after the size repartition's exchange, and only successful task
+    # attempts are merged, so a retried task counts once.  ``obs.get``
+    # is read only once the commit returned: a write that raised
+    # publishes no metrics, and ``get`` would wait for them.
+    obs = Observation()
     extracted = (extract_pages(sized, chunk_token_num, delimiter)
                  .withColumn("run_id", F.lit(run_id))
-                 .withColumn("part_id", F.spark_partition_id()))
+                 .withColumn("part_id", F.spark_partition_id())
+                 .observe(obs, *rollup_columns()))
     version = (table.commit_append(extracted) if resume
                else table.commit_upsert(extracted, "url"))
-    committed = table.read(version).filter(F.col("run_id") == run_id)
-    row = committed.agg(*rollup_columns()).collect()[0]
+    row = obs.get
     return {"run_id": run_id, "version": version,
             "wall_sec": time.time() - t0, "rows": row["n_rows"],
             "ok": row["n_ok"], "error": row["n_error"],

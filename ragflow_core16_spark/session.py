@@ -17,7 +17,9 @@ DEFAULT_CONF = {
     "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     # pages are large rows: keep Arrow batches small so one batch of multi-MB
-    # html payloads can't balloon executor memory (SURVEY.md §7.3 skew note)
+    # html payloads can't balloon executor memory (SURVEY.md §7.3 skew note).
+    # This is also the extraction mapInArrow's batch: the unit its output
+    # columns are built in and its chunk ids are hashed in
     "spark.sql.execution.arrow.maxRecordsPerBatch": "64",
     "spark.sql.files.maxPartitionBytes": "134217728",
     "spark.sql.session.timeZone": "UTC",

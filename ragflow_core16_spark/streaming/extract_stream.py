@@ -4,7 +4,7 @@ unbounded pages stream.
 The reference is a batch queue consumer (Redis stream + ack,
 ``rag/svr/task_executor.py:172-210``); its streaming-equivalent in Spark is
 ``readStream`` over a landing zone of parquet page files → the identical
-``mapInPandas`` extraction (operators/extract.py is stream-safe: stateless
+``mapInArrow`` extraction (operators/extract.py is stream-safe: stateless
 per row) → ``writeStream`` with checkpointing.  Checkpoint + exactly-once
 file sink replaces the queue's ack/unacked-replay machinery; the watermark
 demo shows late-data handling on the metrics rollup.

@@ -177,15 +177,13 @@ class TestReadability081Checklist:
         # 'nav'/'advert' are NOT in 0.8.1's unlikelyCandidatesRe — such
         # nodes SURVIVE the unlikely pass (they can still lose on score);
         # 'sidebar' IS in the set and is removed outright
-        from ragflow_core16_spark.html.dom import parse_html
-        from ragflow_core16_spark.html.readability import Document
-        html = (f'<html><body><div class="nav"><p>nav words.</p></div>'
-                f'<div class="sidebar"><p>side words.</p></div>'
-                f'<div class="advert"><p>ad words.</p></div></body></html>')
-        d = Document(html)
-        root = parse_html(html)
-        d._remove_unlikely(root)
-        txt = root.text_content()
+        # (the three short divs become <p>s under the scored article div,
+        # so nothing but the unlikely pass can take their text out)
+        html = (f'<div id="m"><p>{self.BODY}</p><p>{self.BODY}</p>'
+                f'<div class="nav">nav words.</div>'
+                f'<div class="sidebar">side words.</div>'
+                f'<div class="advert">ad words.</div></div>')
+        txt = self._doc(html).summary_node().text_content()
         assert "nav words" in txt and "ad words" in txt
         assert "side words" not in txt
 
@@ -248,8 +246,7 @@ class TestReadability081Checklist:
         d = Document(f"<html><body><div id='par'><p>{text}</p></div>"
                      "</body></html>")
         root = parse_html(d._raw)
-        d._divs_to_paragraphs(root)
-        cands = d._score_paragraphs(root)
+        cands = d._score_paragraphs(root, d._divs_to_paragraphs(root))
         par = next(n for n in cands if n.get("id") == "par")
         # div prior +5, paragraph 1 + 1 piece + 0.5 = 2.5, no links
         assert abs(cands[par] - 7.5) < 1e-9
@@ -257,8 +254,7 @@ class TestReadability081Checklist:
         d2 = Document(f"<html><body><div id='par'><p>{'y'*24},{'y'*13},"
                       f"{'y'*11}</p></div></body></html>")
         root2 = parse_html(d2._raw)
-        d2._divs_to_paragraphs(root2)
-        cands2 = d2._score_paragraphs(root2)
+        cands2 = d2._score_paragraphs(root2, d2._divs_to_paragraphs(root2))
         par2 = next(n for n in cands2 if n.get("id") == "par")
         assert abs(cands2[par2] - 9.5) < 1e-9
 
@@ -275,7 +271,7 @@ class TestReadability081Checklist:
         body = root.find("body")
         body.append(weak)
         body.append(strong)
-        art = d._join_siblings(best, 20.0, {weak: 9.9, strong: 10.1})
+        art = d._join_siblings(best, 20.0, {weak: 9.9, strong: 10.1}, {})
         ids = [c.get("id") for c in art.children if not isinstance(c, str)]
         assert "s" in ids and "w" not in ids
 
@@ -515,3 +511,161 @@ class TestFastParserDifferential:
         monkeypatch.setenv("RAG_HTML_PARSER", "stdlib")
         dom.parse_html("<p>x</p>")
         assert calls
+
+
+class TestAnnotatedWalkDifferential:
+    """readability's one annotated walk (``_divs_to_paragraphs`` →
+    ``_annotate``) against the string formulas it replaced, kept here as
+    the oracle: per-node normalized text length, comma count and 0.8.1
+    anchor sum; candidate scores (same nodes, same insertion order — it
+    sets ``max()``'s tie-break — equal floats); and the nodes ``_sanitize``
+    drops, with every surviving entry still current afterwards."""
+
+    @staticmethod
+    def _norm(n):
+        return " ".join(n.text_content().split())
+
+    @classmethod
+    def _anchor_sum(cls, n):
+        # every <a> in the subtree, self included; nested anchors twice
+        return sum(len(cls._norm(a)) for a in n.find_all("a"))
+
+    @classmethod
+    def _density(cls, n):
+        total = len(cls._norm(n))
+        return 0.0 if total == 0 else min(cls._anchor_sum(n) / total, 1.0)
+
+    @classmethod
+    def _old_score(cls, root):
+        from ragflow_core16_spark.html.readability import _score_node
+        candidates, ordered = {}, []
+        for p in root.find_all("p", "pre", "td"):
+            parent = p.parent
+            if parent is None:
+                continue
+            grand = parent.parent
+            text = cls._norm(p)
+            if len(text) < 25:
+                continue
+            score = (1.0 + len(text.split(","))
+                     + min(len(text) / 100.0, 3.0))
+            for node, share in ((parent, 1.0), (grand, 0.5)):
+                if node is None or node.tag in ("#document", "html"):
+                    continue
+                if node not in candidates:
+                    candidates[node] = _score_node(node)
+                    ordered.append(node)
+                candidates[node] += score * share
+        for node in ordered:
+            candidates[node] *= (1.0 - cls._density(node))
+        return candidates
+
+    @classmethod
+    def _old_sanitize(cls, article, candidates):
+        from ragflow_core16_spark.html.readability import _class_weight
+        for h in list(article.find_all("h1", "h2", "h3", "h4", "h5", "h6")):
+            if _class_weight(h) < 0 or cls._density(h) > 0.33:
+                h.drop()
+        for n in list(article.find_all("form", "textarea")):
+            n.drop()
+        targets = [n for n in article.iter()
+                   if n is not article and n.tag in (
+                       "table", "ul", "div", "aside", "header", "footer",
+                       "section")]
+
+        def attached(n):
+            while n is not None:
+                if n is article:
+                    return True
+                n = n.parent
+            return False
+
+        for n in reversed(targets):
+            if not attached(n):
+                continue
+            weight = _class_weight(n)
+            if weight + candidates.get(n, 0.0) < 0:
+                n.drop()
+                continue
+            text = cls._norm(n)
+            if text.count(",") >= 10:
+                continue
+            counts = n.count_tags(
+                {"p": 0, "img": 0, "li": 0, "input": 0, "embed": 0})
+            counts["li"] -= 100
+            content_length = len(text)
+            ld = cls._density(n)
+            if (counts["img"] > 1 + counts["p"] * 1.3
+                    or (counts["li"] > counts["p"]
+                        and n.tag not in ("ol", "ul"))
+                    or counts["input"] > counts["p"] / 3
+                    or (content_length < 25 and counts["img"] == 0)
+                    or (content_length < 25 and counts["img"] > 2)
+                    or (weight < 25 and ld > 0.2)
+                    or (weight >= 25 and ld > 0.5)
+                    or (counts["embed"] == 1 and content_length < 75)
+                    or counts["embed"] > 1):
+                n.drop()
+
+    @staticmethod
+    def _pages():
+        import glob
+        import os
+        from ragflow_core16_spark.datagen.pages import generate_page
+        from ragflow_core16_spark.textnorm.codec import find_codec
+        here = os.path.join(os.path.dirname(__file__), "fixtures")
+        out = []
+        for p in sorted(glob.glob(os.path.join(here, "html", "*.html"))
+                        + glob.glob(os.path.join(here, "html_real",
+                                                 "*.html"))):
+            raw = open(p, "rb").read()
+            out.append(raw.decode(find_codec(raw), errors="ignore"))
+        for d in range(200):
+            # the last few as a hot host's 12x pages
+            h = (generate_page(d, 1, size_mult=12, force_host=0) if d >= 195
+                 else generate_page(d, 1))[2]
+            out.append(h.decode(find_codec(h), errors="ignore"))
+        return out
+
+    def _check_entries(self, top, ann, skip=None):
+        from ragflow_core16_spark.html.readability import _text_len
+        for n in top.iter():
+            if n is skip:
+                continue
+            a = ann[n]
+            assert _text_len(a) == len(self._norm(n)), n
+            assert a[4] == n.text_content().count(","), n
+            assert a[5] == self._anchor_sum(n), n
+
+    def test_annotations_scores_and_drops_match_string_formulas(self):
+        from ragflow_core16_spark.html.dom import inner_html, parse_html
+        from ragflow_core16_spark.html.readability import Document
+        pages = self._pages()
+        assert len(pages) >= 215
+        for text in pages:
+            d = Document(text)
+            new, old = parse_html(text), parse_html(text)
+            ann = d._divs_to_paragraphs(new)
+            ann_old = d._divs_to_paragraphs(old)
+            self._check_entries(new, ann)
+            got = d._score_paragraphs(new, ann)
+            want = self._old_score(old)
+            # same nodes (by document position), same order, equal floats
+            pos_new = {n: i for i, n in enumerate(new.iter())}
+            pos_old = {n: i for i, n in enumerate(old.iter())}
+            assert [(pos_new[n], s) for n, s in got.items()] == \
+                [(pos_old[n], s) for n, s in want.items()]
+            if not got:
+                continue
+            arts = []
+            for cands, entries in ((got, ann), (want, ann_old)):
+                best, score = max(cands.items(), key=lambda kv: kv[1])
+                arts.append(d._join_siblings(best, score, cands, entries))
+            before = [{n: i for i, n in enumerate(a.iter())} for a in arts]
+            d._sanitize(arts[0], got, ann)
+            self._old_sanitize(arts[1], want)
+            kept = [sorted(b[n] for n in a.iter())
+                    for a, b in zip(arts, before)]
+            assert kept[0] == kept[1]
+            assert inner_html(arts[0]) == inner_html(arts[1])
+            self._check_entries(arts[0], ann, skip=arts[0])

@@ -129,6 +129,62 @@ class TestExtract:
         assert extract_pages(df).first()["status"] == "empty"
 
 
+class TestArrowFraming:
+    """The extraction stage's Arrow framing: url, warc_ts and lang pass
+    through as arrays, every other column is built from ``_extract_one``'s
+    rows — so each row must equal driver-side ``_extract_one`` (scalar
+    chunk ids) field by field, for every framing edge."""
+
+    DELIM = "\n!?。；！？"
+
+    def _rows(self):
+        import datetime
+        a, b = generate_page(3)[2], generate_page(4)[2]
+        big = b"<p>" + b"x" * (max(len(a), len(b)) + 100) + b"</p>"
+        ts = datetime.datetime
+        return len(big) - 1, [
+            ("https://f.example/ok", ts(2024, 3, 9, 17, 45, 12, 345678),
+             bytearray(a), "en"),
+            ("https://f.example/nolang", ts(2023, 12, 31, 23, 59, 59, 1),
+             bytearray(b), None),
+            ("https://f.example/big", ts(2024, 1, 1, 0, 0, 0, 1),
+             bytearray(big), "en"),
+            ("https://f.example/empty", ts(2022, 6, 30, 5, 4, 3),
+             bytearray(b""), "zh"),
+            ("https://f.example/null", None, None, None),
+        ]
+
+    @pytest.mark.parametrize("template", ["naive", "one", "no_such"])
+    def test_rows_equal_driver_side_extract_one(self, spark, template):
+        from ragflow_core16_spark.operators.extract import (
+            EXTRACTED_SCHEMA, _extract_one)
+        max_bytes, rows = self._rows()
+        df = spark.createDataFrame(
+            rows, "url string, warc_ts timestamp, html binary, lang string")
+        got = {r["url"]: r.asDict(recursive=True) for r in
+               extract_pages(df, max_bytes=max_bytes,
+                             template=template).collect()}
+        assert len(got) == len(rows)
+        statuses = set()
+        for url, ts, html, lang in rows:
+            if html is not None and len(html) > max_bytes:
+                want = dict(url=url, warc_ts=ts, lang=lang,
+                            status="oversize", error=None, title=None,
+                            extracted_text=None, codec=None, n_sections=0,
+                            n_chunks=0, n_tokens=0, bytes_in=len(html),
+                            chunks=None)
+            else:
+                want = _extract_one(url, ts, html, lang, 128, self.DELIM,
+                                    template)
+            for f in EXTRACTED_SCHEMA.names:
+                assert got[url][f] == want[f], (url, f)
+            statuses.add(want["status"])
+        # an unknown template turns every non-empty page into an error row
+        assert statuses == ({"oversize", "empty", "error"}
+                            if template == "no_such" else
+                            {"oversize", "empty", "ok"})
+
+
 class TestRunPipeline:
     def test_run_and_resume(self, spark, tmp_path):
         out = str(tmp_path / "out")
@@ -226,3 +282,47 @@ class TestRunPipeline:
                   for r in cur.groupBy("run_id").count().collect()}
         assert by_run == {"r1": 15, "r2": 5}
         assert SnapshotTable(spark, out).manifest()["op"] == "upsert"
+
+    def test_summary_is_observed_on_the_write(self, spark, tmp_path,
+                                              monkeypatch):
+        """The run summary comes from the write itself: it equals the
+        committed ``metrics_table`` totals of its run on append, on a
+        ``resume=False`` upsert and on empty input into a new table, and
+        a first pass into a new table reads nothing back."""
+        def totals(path, s):
+            t = SnapshotTable(spark, path)
+            m = (metrics_table(t.read(s["version"]))
+                 .filter(F.col("run_id") == s["run_id"])
+                 .agg(*[F.sum(c).alias(c) for c in (
+                     "n_rows", "n_ok", "n_error", "bytes_in",
+                     "chunks_out")]).collect()[0])
+            return [m[c] or 0 for c in ("n_rows", "n_ok", "n_error",
+                                        "bytes_in", "chunks_out")]
+
+        def summary(s):
+            return [s[k] or 0 for k in ("rows", "ok", "error", "bytes_in",
+                                        "chunks")]
+
+        reads = []
+        read = SnapshotTable.read
+        monkeypatch.setattr(SnapshotTable, "read",
+                            lambda self, *a: reads.append(a) or read(self,
+                                                                     *a))
+        out = str(tmp_path / "obs")
+        pages = pages_df(spark, 24)
+        first = run_extraction_snapshotted(
+            spark, pages.orderBy("url").limit(16), out, run_id="r1")
+        assert reads == []
+        monkeypatch.undo()
+        appended = run_extraction_snapshotted(spark, pages, out, run_id="r2")
+        upserted = run_extraction_snapshotted(
+            spark, pages.orderBy(F.col("url").desc()).limit(7), out,
+            run_id="r3", resume=False)
+        assert first["rows"] == 16 and appended["rows"] == 8
+        assert upserted["rows"] == 7
+        for s in (first, appended, upserted):
+            assert summary(s) == totals(out, s), s
+        empty = str(tmp_path / "obs-empty")
+        s = run_extraction_snapshotted(spark, pages.limit(0), empty,
+                                       run_id="r1")
+        assert summary(s) == totals(empty, s) == [0] * 5

@@ -468,12 +468,22 @@ def test_corpus_drift_two_keyed_aggs_no_python(spark):
 
 
 def test_extract_density_is_shuffle_free(spark):
-    """The density strategy rides the SAME single-pass mapInPandas stage
+    """The density strategy rides the SAME single-pass mapInArrow stage
     as the readability strategy: per-row strategy branch, zero Exchange
-    before the Python stage."""
+    before the Python stage.  (The page generator under it is a
+    MapInPandas node of its own, so the extraction node is found by
+    name.)"""
     from ragflow_core16_spark.datagen.pages import pages_from_documents
     from ragflow_core16_spark.operators.extract import extract_pages
     ext = extract_pages(pages_from_documents(spark, SF), strategy="density")
-    plan = _formatted(ext)
-    assert ") Exchange" not in plan
-    assert plan.count("MapInPandas") >= 1
+    tree = _formatted(ext).split("\n\n")[0].splitlines()
+    at = [i for i, ln in enumerate(tree) if "MapInArrow" in ln]
+    assert len(at) == 1, tree
+    indent = len(tree[at[0]]) - len(tree[at[0]].lstrip(" +-:"))
+    below = []
+    for ln in tree[at[0] + 1:]:
+        if len(ln) - len(ln.lstrip(" +-:")) <= indent:
+            break
+        below.append(ln)
+    assert below, tree
+    assert not [ln for ln in below if "Exchange" in ln], tree
