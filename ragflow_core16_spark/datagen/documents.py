@@ -13,8 +13,9 @@ parallelism, on one core or a thousand executors (the ``pages_df``
 contract).  A deterministic ~1.5% of docs are NEAR-DUPLICATES of an
 earlier doc in their 1000-id window (copy + 2 word substitutions), so
 the dedup operator field has realistic work whose volume grows LINEARLY
-with corpus size — the property the shuffle-byte growth measurements
-(bench.py --sf1-operators) assert."""
+with corpus size — the property the recorded shuffle-byte growth
+measurements assert (BENCH/BASELINE.md, "Operator-field scale
+evidence")."""
 
 from __future__ import annotations
 

@@ -178,9 +178,9 @@ def skewed_pages_df(spark: SparkSession, n_rows: int, seed: int = 42,
     giant pages land together in the LEADING partitions: exactly the
     byte-skewed input layout a per-host crawl dump (or a host-sorted
     parquet write) hands the extraction stage.  Deterministic given
-    (seed, n_rows) like ``pages_df``; the skew A/B in ``bench.py
-    --sf1-skew`` runs extraction over this layout with and without
-    ``pipeline.partitioning.repartition_by_size``."""
+    (seed, n_rows) like ``pages_df``; the skew A/B in
+    ``tools/scaling.py skew`` runs extraction over this layout with and
+    without ``pipeline.partitioning.repartition_by_size``."""
     n_hot = max(1, int(n_rows * hot_doc_frac))
     base = spark.range(0, n_rows, 1,
                        partitions or spark.sparkContext.defaultParallelism)

@@ -16,10 +16,10 @@ def pytest_configure(config):
 def _isolated_curation_warehouse(tmp_path_factory):
     """Point the snapshot-table cache at a fresh per-session directory.
 
-    A prior `bench.py` run in this checkout materializes snapshot tables
-    under ./spark-warehouse/curation; without isolation, plan-audit tests
-    that pin the COMPUTE path would silently flip to the scan path
-    depending on bench history.  Tests that want the scan path
+    A job run in this checkout (curate_job, index_job) materializes
+    snapshot tables under ./spark-warehouse/curation; without isolation,
+    plan-audit tests that pin the COMPUTE path would silently flip to the
+    scan path depending on what ran here before.  Tests that want the scan path
     materialize into their own monkeypatched dir."""
     import os
     prev = os.environ.get("RAG_CURATION_DIR")

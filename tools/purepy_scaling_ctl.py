@@ -1,17 +1,17 @@
 """No-Spark control: per-process docs/s of the pure-Python extraction
 loop at 1 vs N concurrent processes pinned to disjoint cores.
 
-The process ladder is derived from the host (``os.cpu_count()``), so the
-control runs unchanged on smaller VMs — rungs that exceed the available
-cores are skipped rather than crashing taskset.  Paths come from the
-same env vars the bench uses (``SPARK_GRAFT_SF_DIR``)."""
+The process ladder and the cores each process is pinned to come from the
+cores this process may run on (its affinity mask), so the control runs
+unchanged on smaller VMs and inside cpusets.  Processes run through
+``scaling.run_children``: a failed one raises with its rc and stderr, and
+none outlives the run.  The corpus is ``$SPARK_GRAFT_SF_DIR`` (default
+/root/testdata/sf0.1)."""
 import json
 import os
-import subprocess
 import sys
-import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from scaling import core_sets, run_children
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -37,25 +37,13 @@ print(n / (time.time() - t0))
 
 
 def run(n_procs):
-    procs = []
-    for i in range(n_procs):
-        p = subprocess.Popen(
-            ["taskset", "-c", str(i), sys.executable, "-c", WORKER],
-            stdout=subprocess.PIPE, text=True)
-        procs.append(p)
-    rates = []
-    for p in procs:
-        out = p.communicate()[0].strip().splitlines()
-        if p.returncode != 0 or not out:
-            raise RuntimeError(
-                f"control worker failed (rc={p.returncode}); "
-                f"stdout={out!r}")
-        rates.append(float(out[-1]))
-    return rates
+    outs = run_children([["taskset", "-c", str(core), sys.executable, "-c",
+                          WORKER] for [core] in core_sets([1] * n_procs)])
+    return [float(o.strip().splitlines()[-1]) for o in outs]
 
 
 def main():
-    ncpu = os.cpu_count() or 1
+    ncpu = len(os.sched_getaffinity(0))
     ladder = sorted({1, min(8, ncpu), min(16, ncpu), ncpu})
     for n in ladder:
         r = run(n)

@@ -32,7 +32,8 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 sys.path.insert(0, os.path.join(REPO, "tests"))
-# worker-side importability from any cwd (see bench.py)
+# Python workers import the package from PYTHONPATH, which the JVM
+# inherits from this process: set it before the first session starts
 if REPO not in os.environ.get("PYTHONPATH", "").split(os.pathsep):
     os.environ["PYTHONPATH"] = (REPO + os.pathsep + os.environ["PYTHONPATH"]
                                 if os.environ.get("PYTHONPATH") else REPO)
