@@ -22,9 +22,9 @@ and the run's decision table:
 Master/executor topology comes from spark-submit, like the extraction
 job; the same invocation runs at N and 4N executors.  The write order is
 transactional in the same sense as the extraction pipeline: the snapshot
-tables publish first (atomic temp+rename), then the kept corpus, and the
-run's decision table (the thing downstream reads to trust a run) lands
-LAST, so a crashed run leaves no authoritative decision table and a
+tables publish first (one snapshot commit each), then the kept corpus,
+and the run's decision table (the thing downstream reads to trust a run)
+lands LAST, so a crashed run leaves no authoritative decision table and a
 rerun simply overwrites.
 
 Prints ONE JSON line: mode, rows, kept, kept_pct, tables, wall_sec.
@@ -69,6 +69,8 @@ def main(argv=None) -> int:
 
     from pyspark.sql import functions as F
 
+    from ragflow_core16_spark.pipeline.snapshot_cache import (
+        FAMILIES, materialize_families, read_table)
     from ragflow_core16_spark.session import get_spark
     spark = get_spark(app_name="ragflow_core16_spark.curate")
 
@@ -89,11 +91,9 @@ def main(argv=None) -> int:
         # family order is dependency order: the decision table's
         # dedup_kept column scans the just-written dedup labels, so the
         # signature + connected-components jobs run once per snapshot
-        from ragflow_core16_spark.pipeline.snapshot_cache import (
-            FAMILIES, materialize_families)
         paths = materialize_families(
             spark, sf_dir, [f for f in FAMILIES if f.job == "curate"])
-    dec = spark.read.parquet(paths["web_decisions"])
+    dec = read_table(spark, "web_decisions", sf_dir)
     if not args.no_corpus:
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
         kept = docs.join(dec.filter(F.col("corpus_keep")).select("doc_id"),

@@ -17,9 +17,10 @@ retrieval index — turning those queries into scans:
         --input <dir containing documents.parquet> [--run-id r42]
 
 Master/executor topology comes from spark-submit; the same invocation
-runs at N and 4N executors.  Each table is written idempotently (an
-existing complete table is left alone) and a crashed write never serves
-(no ``_SUCCESS``), so reruns are always safe.
+runs at N and 4N executors.  Each table is a snapshot table committed
+idempotently (a table with a published version is left alone) and a
+crashed write never serves (it publishes no version), so reruns are
+always safe.
 
 Prints ONE JSON line: the table paths plus wall_sec.
 """

@@ -1266,9 +1266,8 @@ def materialize_web_decisions(spark: SparkSession, sf_dir: str) -> str:
 
 
 def _web_decisions_scan(spark: SparkSession, sf_dir: str):
-    """The written decision table for ``sf_dir``, or None if no complete
-    table exists (the _SUCCESS marker is the completeness certificate —
-    a crashed write never serves)."""
+    """The written decision table for ``sf_dir``, or None if no version
+    of it is published (a crashed write never serves)."""
     from ..pipeline.snapshot_cache import read_table
     return read_table(spark, "web_decisions", sf_dir)
 

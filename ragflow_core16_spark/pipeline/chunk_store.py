@@ -14,8 +14,9 @@ test_chunk_management_within_dataset/`` and exercised by
   * update chunk   — same id recompute when content changes
   * delete chunks  — by chunk id set
 
-Store = a parquet directory (the same ``chunks/`` table ``pipeline/run.py``
-writes; Iceberg ``MERGE INTO``/``DELETE FROM`` replace the rewrite in a
+Store = a parquet directory holding the flat chunk rows that
+``operators.extract.chunks_table`` derives from an extraction snapshot
+table (Iceberg ``MERGE INTO``/``DELETE FROM`` replace the rewrite in a
 real deployment — the logical ops are identical).  Deletes/updates rewrite
 via LEFT ANTI join — the only scalable shape without a table format.
 """

@@ -389,14 +389,15 @@ def incremental_update(spark: SparkSession, base_dir: str, batch_dir: str,
     ``DELTA_FAMILIES`` in order — the dedup index, then the
     decontamination index, then the decision table (it reads the merged
     labels + decon postings), then the retrieval index — writing each
-    table under the COMBINED corpus fingerprint (idempotent + atomic via
-    ``materialize``).  Returns kind → table path.  An empty batch is a
-    valid no-op day (tables under the combined fingerprint equal the
-    base content).  A batch doc_id already present in the base is a
-    RE-CRAWL: rejected by default, or — with ``allow_recrawl`` — handled
-    as retire-then-append (the stored tables drop the stale rows, the
-    batch supplies the new versions; ``combined_dir`` must hold the
-    correspondingly compacted documents table)."""
+    table under the COMBINED corpus fingerprint (idempotent, one snapshot
+    commit each via ``materialize``) with its lineage sidecar.  Returns
+    kind → table path.  An empty batch is a valid no-op day (tables under
+    the combined fingerprint equal the base content).  A batch doc_id
+    already present in the base is a RE-CRAWL: rejected by default, or —
+    with ``allow_recrawl`` — handled as retire-then-append (the stored
+    tables drop the stale rows, the batch supplies the new versions;
+    ``combined_dir`` must hold the correspondingly compacted documents
+    table)."""
     recrawl = _recrawl_ids(spark, base_dir, batch_dir, allow_recrawl)
     paths: dict[str, str] = {}
     for fam in DELTA_FAMILIES:
@@ -404,7 +405,5 @@ def incremental_update(spark: SparkSession, base_dir: str, batch_dir: str,
         for kind in fam.delta_kinds:
             paths[kind] = materialize(spark, kind, combined_dir,
                                       lambda f=frames[kind]: f)
-    for p in paths.values():
-        if os.path.exists(os.path.join(p, "_SUCCESS")):
-            _write_lineage(p, base_dir, batch_dir, combined_dir)
+            _write_lineage(paths[kind], base_dir, batch_dir, combined_dir)
     return paths

@@ -11,30 +11,26 @@ the table when it exists and recomputing when it doesn't (so a fresh
 session with no warehouse — the driver's oracle run — still exercises
 the full compute path).
 
+Each table is a ``pipeline/snapshots.py`` ``SnapshotTable``: a build is
+one manifest commit, so a crashed write (no published version) never
+serves, and ``jobs/maintenance_job.py --table`` maintains it like any
+other snapshot table.
+
 Staleness is structural, not temporal: the path embeds
 (relative path, size, mtime) of EVERY file backing ``documents.parquet``
 (recursively — a partitioned dataset's part files live in subdirectories
 whose own mtime does not change on in-place rewrite), so a regenerated
-fixture under an unchanged sf_dir misses the cache and a crashed write
-(no ``_SUCCESS``) never serves.
-
-Writes are atomic at the directory level: ``materialize`` builds into a
-unique temp sibling and renames into place, so two concurrent writers
-(a spark-submit job racing the bench session on the same corpus) never
-interleave part files in one directory — the loser's rename simply
-yields to the complete table the winner published.
+fixture under an unchanged sf_dir misses the cache.
 """
 
 from __future__ import annotations
 
-import contextlib
-import errno
 import hashlib
 import importlib
 import os
-import shutil
-import uuid
 from typing import NamedTuple
+
+from .snapshots import SnapshotTable
 
 
 class Family(NamedTuple):
@@ -181,58 +177,20 @@ def table_path(kind: str, sf_dir: str) -> str:
 
 
 def read_table(spark, kind: str, sf_dir: str):
-    """The written table for this (kind, corpus snapshot), or None if no
-    COMPLETE table exists (the _SUCCESS marker is the certificate)."""
-    path = table_path(kind, sf_dir)
-    if os.path.exists(os.path.join(path, "_SUCCESS")):
-        return spark.read.parquet(path)
-    return None
-
-
-def atomic_write(df, path: str) -> None:
-    """Write ``df`` as parquet to ``path`` via a unique temp sibling +
-    rename: concurrent writers each build in isolation and the publish is
-    one directory move, so a reader (keyed on _SUCCESS inside the final
-    path) never observes interleaved part files from two jobs.  If a
-    complete table appeared while we were building, ours is discarded —
-    both builds are per-snapshot deterministic, so either is correct.
-
-    A directory holding ``_SUCCESS`` is never removed: the rename is
-    tried first, and a PARTIAL directory (crashed writer) blocking it is
-    moved aside to a unique sibling — a rival table published after our
-    check is then moved back, not deleted — before one retry."""
-    tmp = f"{path}.tmp-{uuid.uuid4().hex[:12]}"
-    df.write.mode("overwrite").parquet(tmp)
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    success = os.path.join(path, "_SUCCESS")
-    try:
-        for last_try in (False, True):
-            try:
-                return os.rename(tmp, path)
-            except OSError as e:    # only a non-empty path is a race
-                if (e.errno not in (errno.ENOTEMPTY, errno.EEXIST)
-                        or last_try and not os.path.exists(success)):
-                    raise
-            if os.path.exists(success):
-                return
-            aside = f"{path}.partial-{uuid.uuid4().hex[:12]}"
-            with contextlib.suppress(FileNotFoundError):
-                os.rename(path, aside)
-            if os.path.exists(os.path.join(aside, "_SUCCESS")):
-                # restore a rival's table; if yet another landed since,
-                # path is complete and this copy goes
-                with contextlib.suppress(OSError):
-                    os.rename(aside, path)
-            shutil.rmtree(aside, ignore_errors=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)      # a no-op once renamed
+    """The table for this (kind, corpus snapshot), or None if no version
+    of it is published."""
+    t = SnapshotTable(spark, table_path(kind, sf_dir))
+    return t.read() if t.current_version() else None
 
 
 def materialize(spark, kind: str, sf_dir: str, build) -> str:
-    """Write ``build()`` for this (kind, snapshot) if not already present
-    (idempotent, atomic — see ``atomic_write``).  Returns the table
-    path."""
+    """Commit ``build()`` for this (kind, snapshot) unless a version is
+    already published.  Returns the table path.  Builds are per-snapshot
+    deterministic, so two racing writers each publish a complete,
+    identical version; the earlier one's files are superseded, left for
+    ``SnapshotTable.vacuum``, never deleted under a reader."""
     path = table_path(kind, sf_dir)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        atomic_write(build(), path)
+    t = SnapshotTable(spark, path)
+    if not t.current_version():
+        t.commit_overwrite(build())
     return path

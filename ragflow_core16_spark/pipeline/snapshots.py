@@ -21,11 +21,14 @@ re-reads the new latest manifest and retries on the next version
 latest-manifest → explicit file list, so a concurrent commit can never
 give them a torn view: snapshot isolation.
 
-Why this matters for the extraction pipeline: ``run.py`` commits each
-run as ONE snapshot, and that commit is the resume marker — a resumed
-run reads the last committed snapshot (never a half-written append)
-while time travel keeps every prior corpus state addressable for
-reproducing a training-data cut.
+Why this matters: every table the engine publishes is one of these.
+The extraction job (``run.py``) commits each run as ONE snapshot, and
+that commit is the resume marker — a resumed run reads the last
+committed snapshot (never a half-written append) while time travel keeps
+every prior corpus state addressable for reproducing a training-data
+cut.  Each curation/index table (``snapshot_cache.materialize``) is
+served only once its first version is published, and a crashed build
+leaves only an unreferenced ``data/<uuid>`` directory for ``vacuum``.
 """
 
 from __future__ import annotations
@@ -109,18 +112,20 @@ class SnapshotTable:
         self.spark = spark
         self.path = local_path(path).rstrip("/")
         self._snap_dir = os.path.join(self.path, "_snapshots")
-        os.makedirs(self._snap_dir, exist_ok=True)
 
     # ------------------------------------------------------------ reads
     def current_version(self) -> int:
         """Largest published manifest.  Publication is atomic (hard link
         of a complete file), so the max over a directory listing is a
         consistent commit point — no separate pointer file to get stuck
-        between 'claimed' and 'current'."""
-        vs = [int(m.group(1)) for m in
-              (_MANIFEST_RE.match(n) for n in os.listdir(self._snap_dir))
-              if m]
-        return max(vs, default=0)
+        between 'claimed' and 'current'.  0 for a table never committed
+        to (its directory need not exist)."""
+        try:
+            names = os.listdir(self._snap_dir)
+        except FileNotFoundError:
+            return 0
+        return max((int(m.group(1)) for m in map(_MANIFEST_RE.match, names)
+                    if m), default=0)
 
     def manifest(self, version: int | None = None) -> dict:
         v = self.current_version() if version is None else version
@@ -135,7 +140,7 @@ class SnapshotTable:
         if not m["files"]:
             raise ValueError(f"{self.path}: empty table at version "
                              f"{m['version']}")
-        return self._read_files(m["files"], m.get("schema"))
+        return self._read_files(m["files"], m["schema"])
 
     def versions(self) -> list[dict]:
         out = []
@@ -161,7 +166,7 @@ class SnapshotTable:
           * columns the table has but ``df`` lacks → written as typed
             NULLs (so every data file stays individually well-formed);
           * columns ``df`` adds → appended to the table schema; READS of
-            older files surface them as NULLs via mergeSchema;
+            older files surface them as NULLs via the manifest schema;
           * ``df`` column NARROWER than the table's (int vs long, float
             vs double) → cast up at write time;
           * ``df`` column WIDER than the table's → raises ValueError
@@ -229,7 +234,7 @@ class SnapshotTable:
         the rest carried by reference, and ``add_files`` (table schema
         ``merged``) join the snapshot."""
         m = self.manifest()
-        schema_json = m.get("schema")
+        schema_json = m.get("schema")    # None only for the empty table
         affected = set()
         if match is not None and m["files"]:
             full = self._read_files(m["files"], schema_json)
@@ -248,7 +253,7 @@ class SnapshotTable:
                 raise CommitConflict(
                     f"{self.path}: files scanned for {op} were unpinned "
                     f"by a concurrent commit — re-run the {op}")
-            schema = parent.get("schema") or schema_json
+            schema = parent.get("schema")
             if merged is not None:
                 # a rival append may have evolved the schema since our
                 # read — union against the PARENT's recorded schema so
@@ -299,7 +304,7 @@ class SnapshotTable:
             total = sum(s for f, s in sized if s < tgt)
             n_out = max(1, -(-total // tgt))
             n_out = int(n_out)
-        rows = self._read_files(candidates, cur.get("schema"))
+        rows = self._read_files(candidates, cur["schema"])
         files = self._write_data(rows.coalesce(n_out))
         cand = set(candidates)
 
@@ -312,7 +317,7 @@ class SnapshotTable:
                     f"unpinned by a concurrent commit — re-run")
             return {"files": [f for f in parent["files"]
                               if f not in cand] + files,
-                    "schema": cur.get("schema"),
+                    "schema": cur["schema"],
                     "rewrote_files": len(cand)}
         return self._commit(build, "compact", retries)
 
@@ -342,33 +347,23 @@ class SnapshotTable:
         return removed
 
     # --------------------------------------------------------- internals
-    def _read_files(self, files: list[str], schema_json) -> DataFrame:
-        if schema_json is None:
-            # pre-evolution manifest: all files share one schema
-            return self.spark.read.parquet(*files)
-        # schema-evolved table: the manifest schema IS the table schema
-        # (Iceberg reads from metadata, never from data-file footers), so
-        # read with it explicitly — the parquet reader null-fills columns
-        # absent from older files, and no mergeSchema footer scan over
-        # O(files) is ever needed.  Types in every file match the
-        # manifest exactly because appends cast up BEFORE writing, so no
-        # per-file type resolution arises.  A column absent from every
-        # listed file (possible after delete rewrites) comes back as
-        # typed NULLs the same way.
+    def _read_files(self, files: list[str], schema_json: dict) -> DataFrame:
+        # the manifest schema IS the table schema (Iceberg reads from
+        # metadata, never from data-file footers), so read with it
+        # explicitly — the parquet reader null-fills columns absent from
+        # older files, and no mergeSchema footer scan over O(files) is
+        # ever needed.  Types in every file match the manifest exactly
+        # because appends cast up BEFORE writing, so no per-file type
+        # resolution arises.  A column absent from every listed file
+        # (possible after delete rewrites) comes back as typed NULLs the
+        # same way.
         want = StructType.fromJson(schema_json)
         return self.spark.read.schema(want).parquet(*files)
 
     def _table_schema(self) -> StructType | None:
-        """Current table schema: the manifest's if recorded, else (legacy
-        pre-evolution table) the parquet footer union, else None for an
-        empty table."""
-        m = self.manifest()
-        if m.get("schema") is not None:
-            return StructType.fromJson(m["schema"])
-        if m["files"]:
-            return (self.spark.read.option("mergeSchema", "true")
-                    .parquet(*m["files"]).schema)
-        return None
+        """Current table schema, or None for a never-committed table."""
+        schema = self.manifest().get("schema")
+        return None if schema is None else StructType.fromJson(schema)
 
     def _align(self, df: DataFrame,
                table: StructType | None) -> tuple[DataFrame, StructType]:
@@ -425,8 +420,8 @@ class SnapshotTable:
     def _commit(self, build_fn, op: str, retries: int) -> int:
         """``build_fn(parent_manifest) -> dict`` supplies at least
         ``files`` (it may raise CommitConflict to abort); fields valued
-        None are dropped so legacy (schema-less) manifests stay
-        schema-less."""
+        None (an append's ``rewrote_files``) are dropped."""
+        os.makedirs(self._snap_dir, exist_ok=True)
         for _ in range(retries):
             parent_v = self.current_version()
             parent = self.manifest(parent_v)

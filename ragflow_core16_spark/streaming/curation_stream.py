@@ -20,14 +20,14 @@ Exactly-once design (the ``run_warc_to_cdx_stream`` contract):
   * Batch application is idempotent per batch_id: the batch's document
     copy is written once (skipped when its ``_SUCCESS`` exists — a
     rewrite would change mtimes and orphan the fingerprint-keyed
-    tables), every table write goes through the atomic
-    ``materialize`` (complete tables are never rebuilt), and a version
-    is published by writing its ``_complete`` marker LAST, so a crash
-    mid-apply replays into the identical end state.
-  * ``LATEST`` (written by temp+rename, re-published at stream start
-    when a crash left it behind) names the serving version; a query
-    session points ``RAG_CURATION_DIR``-routed operators at it by
-    reading the version's corpus dir like any sf_dir.
+    tables), every table write is a ``materialize`` snapshot commit
+    (published tables are never rebuilt), and a version is published by
+    writing its ``_complete`` marker LAST, so a crash mid-apply replays
+    into the identical end state.
+  * The serving version is the newest complete one
+    (``latest_version``); a query session points
+    ``RAG_CURATION_DIR``-routed operators at it by reading the version's
+    corpus dir like any sf_dir.
   * A micro-batch that RE-DELIVERS ids already in the corpus (a re-crawl
     feed) becomes an upsert day: the surviving previous rows are
     rewritten once into a compacted corpus (hard links cannot drop rows
@@ -76,8 +76,7 @@ def _apply_batch(spark: SparkSession, batch_df: DataFrame, batch_id: int,
     from ..pipeline.snapshot_cache import (DELTA_FAMILIES,
                                            materialize_families, read_table)
     vdir = os.path.join(state_dir, "versions", f"v{batch_id:05d}")
-    # a replayed batch is applied already (a stale LATEST is repaired
-    # when the stream starts)
+    # a replayed batch whose version is complete is applied already
     if (os.path.exists(os.path.join(vdir, "_complete"))
             or batch_df.isEmpty()):
         return
@@ -119,18 +118,8 @@ def _apply_batch(spark: SparkSession, batch_df: DataFrame, batch_id: int,
             _link_tree(bdocs, vdocs)
             _link_tree(os.path.join(prev, "documents.parquet"), vdocs)
             incremental_update(spark, prev, bdir, vdir)
-    # 3. publish: marker LAST, then the serving pointer
+    # 3. publish: the marker LAST
     open(os.path.join(vdir, "_complete"), "w").close()
-    _publish(state_dir, vdir)
-
-
-def _publish(state_dir: str, vdir: str) -> None:
-    """Point ``LATEST`` at ``vdir`` (temp + rename: readers see the old
-    or the new pointer, never a torn one)."""
-    tmp = os.path.join(state_dir, ".LATEST.tmp")
-    with open(tmp, "w") as f:
-        f.write(vdir)
-    os.replace(tmp, os.path.join(state_dir, "LATEST"))
 
 
 def _latest_complete(state_dir: str, before: int | None = None
@@ -150,11 +139,9 @@ def _latest_complete(state_dir: str, before: int | None = None
 
 
 def latest_version(state_dir: str) -> str | None:
-    """The serving corpus-version dir (usable as an sf_dir), or None."""
-    p = os.path.join(state_dir, "LATEST")
-    if os.path.exists(p):
-        return open(p).read().strip()
-    return None
+    """The serving corpus-version dir (usable as an sf_dir): the newest
+    complete version, or None."""
+    return _latest_complete(state_dir)
 
 
 def run_curation_index_stream(spark: SparkSession, input_dir: str,
@@ -163,15 +150,7 @@ def run_curation_index_stream(spark: SparkSession, input_dir: str,
                               max_files_per_trigger: int = 8):
     """Documents landing zone → versioned snapshot-table chain.  With
     ``once`` (availableNow) this drains the zone and stops — the cron
-    shape; a live deployment runs it continuously.
-
-    A crash between a version's ``_complete`` marker and the pointer
-    swap leaves ``LATEST`` stale; the restart re-publishes the newest
-    complete version before any batch runs, whether or not the
-    checkpoint has a batch to replay."""
-    newest = _latest_complete(state_dir)
-    if newest is not None and latest_version(state_dir) != newest:
-        _publish(state_dir, newest)
+    shape; a live deployment runs it continuously."""
     docs = (spark.readStream
             .schema(DOCUMENTS_SCHEMA)
             .option("maxFilesPerTrigger", max_files_per_trigger)

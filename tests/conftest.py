@@ -32,6 +32,19 @@ def _isolated_curation_warehouse(tmp_path_factory):
         os.environ["RAG_CURATION_DIR"] = prev
 
 
+@pytest.fixture(autouse=True)
+def _stop_leftover_streams():
+    """Stop every streaming query a test left running (a drain that
+    outlived its ``awaitTermination`` timeout), so none runs on into the
+    next test or past the session."""
+    yield
+    from pyspark.sql import SparkSession
+    active = SparkSession.getActiveSession()
+    if active is not None:
+        for q in active.streams.active:
+            q.stop()
+
+
 @pytest.fixture(scope="session")
 def spark():
     from ragflow_core16_spark.session import get_spark

@@ -73,12 +73,11 @@ class TestCurationIndexStream:
         drain()  # replay: nothing new in the zone
         assert latest_version(state) == v2
 
-        from ragflow_core16_spark.pipeline.snapshot_cache import read_table
+        from ragflow_core16_spark.pipeline.snapshot_cache import (
+            read_table, table_path)
         # delta lineage on the v2 tables: built by the incremental path
         assert os.path.exists(os.path.join(
-            read_table(spark, "dedup_pairs", v2)
-            .inputFiles()[0].rsplit("/", 1)[0].replace("file:", ""),
-            "_delta_lineage.json"))
+            table_path("dedup_pairs", v2), "_delta_lineage.json"))
         for kind in KINDS:
             t = read_table(spark, kind, v2)
             assert t is not None, kind
@@ -88,8 +87,8 @@ class TestCurationIndexStream:
                                                    monkeypatch):
         """Kill between the version's table writes and its ``_complete``
         marker: the next drain re-applies the batch and converges (the
-        materialize layer skips the complete tables, the marker lands,
-        LATEST advances)."""
+        materialize layer skips the published tables, the marker lands
+        and the version serves again)."""
         from ragflow_core16_spark.streaming.curation_stream import (
             latest_version, run_curation_index_stream)
         monkeypatch.setenv("RAG_CURATION_DIR", str(tmp_path / "cur"))
@@ -103,9 +102,9 @@ class TestCurationIndexStream:
                                       str(tmp_path / "ckpt"))
         q.awaitTermination(300)
         v = latest_version(state)
-        # simulate the crash: yank the completion marker and the pointer
+        # simulate the crash: yank the completion marker
         os.remove(os.path.join(v, "_complete"))
-        os.remove(os.path.join(state, "LATEST"))
+        assert latest_version(state) is None
         # a NEW drain (fresh checkpoint — the old one considers the files
         # consumed) over the same zone must re-apply batch 0 idempotently
         _deep_clean(spark)
@@ -117,56 +116,21 @@ class TestCurationIndexStream:
         from ragflow_core16_spark.pipeline.snapshot_cache import read_table
         assert read_table(spark, "web_decisions", v) is not None
 
-    def test_crash_before_pointer_swap_repairs_latest(self, spark, tmp_path,
-                                                      monkeypatch):
-        """Kill after the ``_complete`` marker but before ``LATEST`` moves:
-        the replay finds the version complete and must still re-publish
-        the pointer, or the stream serves a stale (here: no) version
-        for good."""
-        from ragflow_core16_spark.streaming.curation_stream import (
-            latest_version, run_curation_index_stream)
-        monkeypatch.setenv("RAG_CURATION_DIR", str(tmp_path / "cur"))
-        landing = str(tmp_path / "landing")
-        state = str(tmp_path / "state")
-        docs = spark.read.parquet(f"{SF}/documents.parquet")
-        docs.filter(F.col("doc_id") < 200).coalesce(1) \
-            .write.mode("append").parquet(landing)
-        _deep_clean(spark)
-        q = run_curation_index_stream(spark, landing, state,
-                                      str(tmp_path / "ckpt"))
-        q.awaitTermination(300)
-        v = latest_version(state)
-        assert v is not None
-        os.remove(os.path.join(state, "LATEST"))
-        _deep_clean(spark)
-        q = run_curation_index_stream(spark, landing, state,
-                                      str(tmp_path / "ckpt2"))
-        q.awaitTermination(300)
-        assert latest_version(state) == v
 
-    def test_restart_without_replay_repairs_latest(self, spark, tmp_path,
-                                                   monkeypatch):
-        """A stale ``LATEST`` with nothing left to replay (same
-        checkpoint, no new landing files) is repaired when the stream
-        starts, not left stale until the next batch."""
-        from ragflow_core16_spark.streaming.curation_stream import (
-            latest_version, run_curation_index_stream)
-        monkeypatch.setenv("RAG_CURATION_DIR", str(tmp_path / "cur"))
-        landing = str(tmp_path / "landing")
-        state = str(tmp_path / "state")
-        ckpt = str(tmp_path / "ckpt")
-        docs = spark.read.parquet(f"{SF}/documents.parquet")
-        docs.filter(F.col("doc_id") < 200).coalesce(1) \
-            .write.mode("append").parquet(landing)
-        _deep_clean(spark)
-        run_curation_index_stream(spark, landing, state, ckpt) \
-            .awaitTermination(300)
-        v = latest_version(state)
-        assert v is not None
-        os.remove(os.path.join(state, "LATEST"))
-        run_curation_index_stream(spark, landing, state, ckpt) \
-            .awaitTermination(300)
-        assert latest_version(state) == v
+def test_serving_version_is_newest_complete(tmp_path):
+    """The serving version is the newest version holding its
+    ``_complete`` marker: a crash after a version's tables but before its
+    marker leaves the previous version serving, with no pointer file to
+    fall out of step."""
+    from ragflow_core16_spark.streaming.curation_stream import (
+        latest_version)
+    assert latest_version(str(tmp_path)) is None
+    vroot = tmp_path / "versions"
+    for v in ("v00000", "v00001"):
+        (vroot / v / "documents.parquet").mkdir(parents=True)
+    (vroot / "v00000" / "_complete").touch()     # v00001: crashed
+    assert latest_version(str(tmp_path)) == str(vroot / "v00000")
+    assert sorted(os.listdir(tmp_path)) == ["versions"]
 
 
 def test_latest_complete_orders_ids_as_integers(tmp_path):

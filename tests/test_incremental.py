@@ -15,6 +15,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from conftest import formatted_plan
+from ragflow_core16_spark.pipeline.snapshots import SnapshotTable
 
 SF = "/root/testdata/sf0.001"
 
@@ -138,8 +139,8 @@ class TestDeltaEqualsFullRecompute:
     @pytest.mark.parametrize("kind", KINDS)
     def test_table_row_identical(self, spark, delta_state, kind):
         got = sorted(map(tuple,
-                         spark.read.parquet(delta_state["paths"][kind])
-                         .collect()))
+                         SnapshotTable(spark, delta_state["paths"][kind])
+                         .read().collect()))
         want = sorted(map(tuple, delta_state["oracle"][kind]))
         assert got == want
 
@@ -202,14 +203,14 @@ class TestDeltaEqualsFullRecompute:
             self, spark, delta_state, corpora):
         from ragflow_core16_spark.pipeline.incremental import (
             incremental_update)
-        marks = {k: os.stat(os.path.join(p, "_SUCCESS")).st_mtime_ns
-                 for k, p in delta_state["paths"].items()}
+        versions = {k: SnapshotTable(spark, p).current_version()
+                    for k, p in delta_state["paths"].items()}
         again = incremental_update(spark, corpora["day1"],
                                    corpora["batch"], corpora["combined"])
         assert again == delta_state["paths"]
         for k, p in again.items():
-            assert os.stat(os.path.join(p, "_SUCCESS")).st_mtime_ns == \
-                marks[k], k
+            assert SnapshotTable(spark, p).current_version() == \
+                versions[k], k
 
 
 class TestNoDay1Rescan:
@@ -481,8 +482,8 @@ class TestRecrawlUpsert:
         paths = incremental_update(spark, base_d, batch_d, comb_d,
                                    allow_recrawl=True)
         for kind, want in oracle.items():
-            got = sorted(map(tuple,
-                             spark.read.parquet(paths[kind]).collect()))
+            got = sorted(map(tuple, SnapshotTable(spark, paths[kind])
+                             .read().collect()))
             assert got == sorted(map(tuple, want)), kind
         # the re-crawled rows really are the new versions
         dec = read_table(spark, "web_decisions", comb_d)

@@ -10,6 +10,7 @@ full compute path.
 """
 
 import gc
+import os
 
 import pytest
 
@@ -282,8 +283,8 @@ class TestRetrievalIndexScanParity:
 
 class TestCacheHardening:
     """Round-5 hardening of the snapshot cache itself (ADVICE r4):
-    recursive fingerprints over partitioned datasets, atomic
-    temp-dir+rename publishes, and a cwd-independent warehouse anchor."""
+    recursive fingerprints over partitioned datasets, snapshot-commit
+    publishes, and a cwd-independent warehouse anchor."""
 
     def test_fingerprint_sees_nested_part_files(self, tmp_path):
         """A partitioned dataset (lang=xx/ subdirs) must change its
@@ -336,100 +337,136 @@ class TestCacheHardening:
             ragflow_core16_spark.__file__))
         assert root.startswith(pkg_root)
 
-    def test_atomic_write_publishes_complete_dir_only(
+    def test_crash_debris_is_not_served_then_materialize_commits(
             self, spark, tmp_path, monkeypatch):
-        """materialize never exposes a directory without _SUCCESS: the
-        build lands in a temp sibling and renames into place.  A
-        pre-existing PARTIAL table (crashed writer) is replaced; a
-        pre-existing COMPLETE table short-circuits and the temp build is
-        discarded."""
-        import os
-
+        """A crashed writer leaves a ``data/<uuid>`` dir and no manifest:
+        the table does not serve, and ``materialize`` then commits the
+        build as version 1 without ever listing the debris."""
         from ragflow_core16_spark.pipeline import snapshot_cache as SC
+        from ragflow_core16_spark.pipeline.snapshots import SnapshotTable
         monkeypatch.setenv("RAG_CURATION_DIR", str(tmp_path / "cur"))
-        sf = SF
-        path = SC.table_path("t_atomic", sf)
-        # crashed-writer debris: partial dir, no _SUCCESS
-        os.makedirs(path)
-        open(os.path.join(path, "part-junk.parquet"), "w").write("junk")
-        assert SC.read_table(spark, "t_atomic", sf) is None
-        got = SC.materialize(spark, "t_atomic", sf,
+        path = SC.table_path("t_debris", SF)
+        junk = os.path.join(path, "data", "crashed", "part-junk.parquet")
+        os.makedirs(os.path.dirname(junk))
+        open(junk, "w").write("junk")
+        assert SC.read_table(spark, "t_debris", SF) is None
+        got = SC.materialize(spark, "t_debris", SF,
                              lambda: spark.range(5).toDF("doc_id"))
         assert got == path
-        assert os.path.exists(os.path.join(path, "_SUCCESS"))
-        assert not os.path.exists(os.path.join(path, "part-junk.parquet"))
-        assert SC.read_table(spark, "t_atomic", sf).count() == 5
-        # no leftover temp siblings
-        parent = os.path.dirname(path)
-        assert [d for d in os.listdir(parent) if ".tmp-" in d] == []
-        # idempotent second call leaves the table untouched
-        mtime = os.stat(os.path.join(path, "_SUCCESS")).st_mtime_ns
-        SC.materialize(spark, "t_atomic", sf,
-                       lambda: spark.range(99).toDF("doc_id"))
-        assert os.stat(os.path.join(path, "_SUCCESS")).st_mtime_ns == mtime
-        assert SC.read_table(spark, "t_atomic", sf).count() == 5
+        t = SnapshotTable(spark, path)
+        assert t.current_version() == 1
+        assert junk not in t.manifest()["files"]
+        assert SC.read_table(spark, "t_debris", SF).count() == 5
 
-    def test_atomic_write_raises_other_rename_errors_unchanged(
+    def test_second_materialize_publishes_no_new_version(
             self, spark, tmp_path, monkeypatch):
-        """Only a non-empty ``path`` is a publish race; any other rename
-        failure (EXDEV, EACCES, ENOSPC, ...) surfaces as itself, and the
-        build is cleaned up."""
-        import errno
-        import os
-
+        """A table with a published version is left alone: the second
+        call neither builds nor commits."""
         from ragflow_core16_spark.pipeline import snapshot_cache as SC
+        from ragflow_core16_spark.pipeline.snapshots import SnapshotTable
         monkeypatch.setenv("RAG_CURATION_DIR", str(tmp_path / "cur"))
-        path = SC.table_path("t_exdev", SF)
+        path = SC.materialize(spark, "t_once", SF,
+                              lambda: spark.range(5).toDF("doc_id"))
+        built = []
 
-        def rename(src, dst):
-            raise OSError(errno.EXDEV, "cross-device link", src)
-        monkeypatch.setattr(os, "rename", rename)
-        with pytest.raises(OSError) as exc:
-            SC.atomic_write(spark.range(5).toDF("doc_id"), path)
-        monkeypatch.undo()
-        assert exc.value.errno == errno.EXDEV
-        assert os.listdir(os.path.dirname(path)) == []
+        def build():
+            built.append(1)
+            return spark.range(99).toDF("doc_id")
+        assert SC.materialize(spark, "t_once", SF, build) == path
+        assert built == []
+        assert SnapshotTable(spark, path).current_version() == 1
+        assert SC.read_table(spark, "t_once", SF).count() == 5
 
-    def test_atomic_write_never_deletes_a_rival_complete_table(
+    def test_rival_commit_between_check_and_commit_leaves_rows_once(
             self, spark, tmp_path, monkeypatch):
-        """A rival writer publishes its complete table between our
-        ``_SUCCESS`` check (which saw a crashed writer's partial dir) and
-        our teardown of that partial dir: the rival's part files must
-        survive, and ``path`` must end up complete."""
-        import os
-        import shutil
-
+        """A rival writer publishes its (identical) build after our
+        version check and before our commit: ours lands as an overwrite
+        on top, so the table holds the build's rows once, not twice, and
+        the rival's superseded files are left on disk, not deleted."""
         from ragflow_core16_spark.pipeline import snapshot_cache as SC
+        from ragflow_core16_spark.pipeline.snapshots import SnapshotTable
         monkeypatch.setenv("RAG_CURATION_DIR", str(tmp_path / "cur"))
         path = SC.table_path("t_rival", SF)
-        os.makedirs(path)
-        open(os.path.join(path, "part-junk.parquet"), "w").write("junk")
-        rival = str(tmp_path / "rival")
-        spark.range(7).toDF("doc_id").coalesce(1).write.parquet(rival)
-        rival_parts = sorted(n for n in os.listdir(rival)
-                             if n.endswith(".parquet"))
+        rival_files = []
 
-        success = os.path.join(path, "_SUCCESS")
-        real_exists = os.path.exists
-        fired = []
+        def build():            # runs after materialize's version check
+            df = spark.range(5).toDF("doc_id")
+            rival = SnapshotTable(spark, path)
+            rival.commit_overwrite(df)
+            rival_files.extend(rival.manifest()["files"])
+            return df
+        assert SC.materialize(spark, "t_rival", SF, build) == path
+        t = SnapshotTable(spark, path)
+        assert t.current_version() == 2
+        assert sorted(r.doc_id for r in SC.read_table(
+            spark, "t_rival", SF).collect()) == list(range(5))
+        assert rival_files and all(map(os.path.exists, rival_files))
+        assert not set(rival_files) & set(t.manifest()["files"])
 
-        def exists(p):
-            seen = real_exists(p)
-            if p == success and not seen and not fired:
-                # the rival clears the partial dir and renames its
-                # finished table into place — after our check answered
-                fired.append(p)
-                shutil.rmtree(path)
-                os.rename(rival, path)
-            return seen
-        monkeypatch.setattr(os.path, "exists", exists)
-        SC.atomic_write(spark.range(5).toDF("doc_id"), path)
-        monkeypatch.setattr(os.path, "exists", real_exists)
+    def test_empty_build_commits_readable_empty_table(
+            self, spark, tmp_path, monkeypatch):
+        """A build with no rows is still a published version: it serves
+        an empty table with the build's schema, not a recompute."""
+        from ragflow_core16_spark.pipeline import snapshot_cache as SC
+        from ragflow_core16_spark.pipeline.snapshots import SnapshotTable
+        monkeypatch.setenv("RAG_CURATION_DIR", str(tmp_path / "cur"))
+        path = SC.materialize(spark, "t_empty", SF,
+                              lambda: spark.range(0).toDF("doc_id"))
+        assert SnapshotTable(spark, path).current_version() == 1
+        t = SC.read_table(spark, "t_empty", SF)
+        assert t is not None
+        assert t.columns == ["doc_id"] and t.count() == 0
 
-        assert fired
-        assert real_exists(success)
-        assert sorted(n for n in os.listdir(path)
-                      if n.endswith(".parquet")) == rival_parts
-        assert spark.read.parquet(path).count() == 7
-        parent = os.path.dirname(path)
-        assert sorted(os.listdir(parent)) == [os.path.basename(path)]
+    def test_read_table_miss_creates_no_directory(
+            self, spark, tmp_path, monkeypatch):
+        """Every scan-or-compute query probes its table; a miss (a fresh
+        session's oracle run) must leave the warehouse untouched."""
+        from ragflow_core16_spark.pipeline import snapshot_cache as SC
+        from ragflow_core16_spark.pipeline.snapshots import SnapshotTable
+        root = tmp_path / "cur"
+        monkeypatch.setenv("RAG_CURATION_DIR", str(root))
+        assert SC.read_table(spark, "t_missing", SF) is None
+        t = SnapshotTable(spark, SC.table_path("t_missing", SF))
+        assert t.current_version() == 0
+        assert not root.exists()
+
+    def test_maintenance_vacuum_reclaims_crashed_build(
+            self, spark, tmp_path, monkeypatch, capsys):
+        """A build killed before its manifest commit leaves an orphan
+        ``data/<uuid>`` dir inside the warehouse table; the rerun commits
+        beside it, and ``maintenance_job --table <table> --vacuum``
+        reclaims it while the table still reads."""
+        import json
+        import sys
+
+        from ragflow_core16_spark.pipeline import snapshot_cache as SC
+        from ragflow_core16_spark.pipeline.snapshots import SnapshotTable
+        sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(
+            os.path.abspath(__file__))), "jobs"))
+        try:
+            import maintenance_job
+        finally:
+            sys.path.pop(0)
+        monkeypatch.setenv("RAG_CURATION_DIR", str(tmp_path / "cur"))
+
+        def killed(self, *args):
+            raise RuntimeError("killed before the manifest commit")
+        with monkeypatch.context() as m:
+            m.setattr(SnapshotTable, "_commit", killed)
+            with pytest.raises(RuntimeError, match="killed"):
+                SC.materialize(spark, "t_vac", SF,
+                               lambda: spark.range(3).toDF("doc_id"))
+        assert SC.read_table(spark, "t_vac", SF) is None
+        path = SC.materialize(spark, "t_vac", SF,
+                              lambda: spark.range(5).toDF("doc_id"))
+        data = os.path.join(path, "data")
+        assert len(os.listdir(data)) == 2
+        capsys.readouterr()
+        assert maintenance_job.main(["--table", path, "--vacuum"],
+                                    stop=False) == 0
+        out = json.loads([ln for ln in capsys.readouterr().out.splitlines()
+                          if ln.startswith("{")][-1])
+        assert out["vacuum"]["removed_files"] >= 1
+        assert out["version_after"] == out["version_before"] == 1
+        assert len(os.listdir(data)) == 1
+        assert SC.read_table(spark, "t_vac", SF).count() == 5

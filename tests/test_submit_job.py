@@ -273,8 +273,9 @@ def test_spark_submit_index_job(tmp_path, spark):
     # bigram LM, per-language unigram LM, DSIR histogram) + 2 retrieval
     # index tables (term postings, doc stats)
     assert len(summary["tables"]) == 16
+    from ragflow_core16_spark.pipeline.snapshots import SnapshotTable
     for p in summary["tables"]:
-        assert os.path.exists(os.path.join(p, "_SUCCESS")), p
+        assert SnapshotTable(spark, p).current_version() == 1, p
 
     # a separate session (the test fixture's) scans the job's tables and
     # must agree with its own compute path
@@ -380,15 +381,16 @@ def test_curate_job_crash_consistency(tmp_path, spark, monkeypatch):
        queries refuse the missing table and recompute correctly; a job
        rerun converges to the same fingerprint-complete state as a clean
        run.
-    2. crash MID-WRITE of a dedup table (_SUCCESS absent) → that table
-       never serves, routed queries recompute, and the rerun replaces the
-       partial directory atomically.
+    2. crash MID-WRITE of a dedup table (data files written, manifest
+       never published) → that table never serves, routed queries
+       recompute, and the rerun publishes a complete version.
     """
     from ragflow_core16_spark.operators.dedup import (
         dedup_clusters, materialize_dedup_index, reset_shared_cache)
     from ragflow_core16_spark.operators.webclean import web_keep
     from ragflow_core16_spark.pipeline.snapshot_cache import (
         read_table, table_path)
+    from ragflow_core16_spark.pipeline.snapshots import SnapshotTable
     zip_path = _zip_pkg(tmp_path)
     sf = "/root/testdata/sf0.001"
     wh = str(tmp_path / "cur")
@@ -408,9 +410,9 @@ def test_curate_job_crash_consistency(tmp_path, spark, monkeypatch):
     assert {tuple(r) for r in web_keep(spark, sf).collect()} == \
         baseline_keep
 
-    # --- crash 2: mid-write of dedup_labels (partial dir, no _SUCCESS)
+    # --- crash 2: mid-write of dedup_labels (data files, no manifest)
     labels_path = table_path("dedup_labels", sf)
-    os.remove(os.path.join(labels_path, "_SUCCESS"))
+    os.remove(os.path.join(labels_path, "_snapshots", "v00001.json"))
     assert read_table(spark, "dedup_labels", sf) is None
     reset_shared_cache()
     assert {tuple(r) for r in dedup_clusters(spark, sf).collect()} == \
@@ -427,7 +429,7 @@ def test_curate_job_crash_consistency(tmp_path, spark, monkeypatch):
         capture_output=True, text=True, cwd=str(tmp_path), timeout=420,
         env={**os.environ, "RAG_CURATION_DIR": wh})
     assert out.returncode == 0, out.stderr[-2000:]
-    assert os.path.exists(os.path.join(labels_path, "_SUCCESS"))
+    assert SnapshotTable(spark, labels_path).current_version() == 1
     assert read_table(spark, "web_decisions", sf) is not None
     reset_shared_cache()
     assert {tuple(r) for r in web_keep(spark, sf).collect()} == \

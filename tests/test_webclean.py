@@ -678,15 +678,17 @@ class TestDecisionTable:
 
     def test_incomplete_table_never_serves(self, spark, tmp_path,
                                            monkeypatch):
-        # a crashed write (no _SUCCESS) must be invisible: the query
-        # falls back to the compute path instead of reading partial data
+        # a crashed write (data files, no published manifest) must be
+        # invisible: the query falls back to the compute path instead of
+        # reading partial data
         import os
 
         from ragflow_core16_spark.operators.webclean import (
             _web_decisions_scan, web_decisions_path)
         monkeypatch.setenv("RAG_CURATION_DIR", str(tmp_path / "cur"))
         path = web_decisions_path(SF)
-        os.makedirs(path, exist_ok=True)  # dir exists, no _SUCCESS
+        spark.range(3).toDF("doc_id").write.parquet(
+            os.path.join(path, "data", "crashed"))
         assert _web_decisions_scan(spark, SF) is None
 
     def test_fingerprint_tracks_input_bytes(self, tmp_path, monkeypatch):
@@ -706,15 +708,15 @@ class TestDecisionTable:
         assert web_decisions_path(str(sf2)) != p1
 
     def test_materialize_is_idempotent(self, spark, tmp_path, monkeypatch):
-        import os
-
         from ragflow_core16_spark.operators.webclean import (
             materialize_web_decisions)
+        from ragflow_core16_spark.pipeline.snapshots import SnapshotTable
         monkeypatch.setenv("RAG_CURATION_DIR", str(tmp_path / "cur"))
         p = materialize_web_decisions(spark, SF)
-        m1 = os.path.getmtime(os.path.join(p, "_SUCCESS"))
+        t = SnapshotTable(spark, p)
+        assert t.current_version() == 1
         assert materialize_web_decisions(spark, SF) == p
-        assert os.path.getmtime(os.path.join(p, "_SUCCESS")) == m1
+        assert t.current_version() == 1
 
 
 class TestCurationFunnel:
