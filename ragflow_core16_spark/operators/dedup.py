@@ -26,12 +26,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import read_documents
+
 _NORM = r"\s+"
-
-
-def _docs(spark, sf_dir):
-    from ..session import spread
-    return spread(spark.read.parquet(f"{sf_dir}/documents.parquet"))
 
 
 def _norm_text():
@@ -46,7 +43,8 @@ def _md5_bigint(col):
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate groups by exact normalized content: one row per group with
     >1 member; canonical = min doc_id (deterministic survivor pick)."""
-    d = _docs(spark, sf_dir).select("doc_id", _norm_text().alias("norm"))
+    d = read_documents(spark, sf_dir).select("doc_id",
+                                             _norm_text().alias("norm"))
     return (d.groupBy(F.md5("norm").alias("content_md5"))
             .agg(F.count(F.lit(1)).alias("n_dups"),
                  F.min("doc_id").alias("canonical_doc_id"))
@@ -140,7 +138,7 @@ def _shingles(spark, sf_dir, k: int = 3) -> DataFrame:
     shingle derivation is the final ``distinct``.  At 10^12 docs the old
     window formulation sorts every token; this one stays narrow until the
     dedup agg."""
-    return _shingles_of(_docs(spark, sf_dir))
+    return _shingles_of(read_documents(spark, sf_dir))
 
 
 def _shingles_of(docs: DataFrame) -> DataFrame:
@@ -267,16 +265,6 @@ def _lsh_candidates(wide: DataFrame) -> DataFrame:
             .distinct())
 
 
-def _pairs_scan(spark, sf_dir):
-    """The written candidate-pair table (doc_a, doc_b, est_jaccard,
-    n_inter, jaccard) for this corpus snapshot, or None.  Written once by
-    ``materialize_dedup_index`` — the deployment shape at 100 TB, where
-    LSH banding + exact verify run once per snapshot and both pair
-    queries are scans of the stored result."""
-    from ..pipeline.snapshot_cache import read_table
-    return read_table(spark, "dedup_pairs", sf_dir)
-
-
 def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH candidate pairs with estimated jaccard (fraction of agreeing
     minhashes).  The signature rides as ONE array column per side, so the
@@ -286,7 +274,8 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     With a written pair table (``materialize_dedup_index``) this is a
     pure scan + presentation sort."""
-    scan = _pairs_scan(spark, sf_dir)
+    from ..pipeline.snapshot_cache import read_table
+    scan = read_table(spark, "dedup_pairs", sf_dir)
     if scan is not None:
         return (scan.select("doc_a", "doc_b", "est_jaccard")
                 .orderBy("doc_a", "doc_b"))
@@ -358,7 +347,8 @@ def ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     With a written pair table (``materialize_dedup_index``) this is a
     pure scan + presentation sort — the verify join ran once at snapshot
     time."""
-    scan = _pairs_scan(spark, sf_dir)
+    from ..pipeline.snapshot_cache import read_table
+    scan = read_table(spark, "dedup_pairs", sf_dir)
     if scan is not None:
         # the pair table keeps EVERY LSH candidate (est side); this query
         # returns only pairs with ≥1 shared shingle, so drop the
@@ -469,7 +459,7 @@ def _simhash_unordered(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan = read_table(spark, "simhash_fp", sf_dir)
     if scan is not None:
         return scan.select("doc_id", "simhash")
-    d = _docs(spark, sf_dir)
+    d = read_documents(spark, sf_dir)
     toks = F.split(F.regexp_replace(F.lower(F.trim("text")), _NORM, " "), " ")
     t = d.select("doc_id", F.explode(toks).alias("tok"))
     t = t.withColumn("h", _md5_bigint(F.col("tok")))
@@ -578,7 +568,7 @@ def _cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan = read_table(spark, "dedup_labels", sf_dir)
     if scan is not None:
         return scan.select("node", "label")
-    pscan = _pairs_scan(spark, sf_dir)
+    pscan = read_table(spark, "dedup_pairs", sf_dir)
     pairs = (pscan.select("doc_a", "doc_b") if pscan is not None
              else _lsh_candidates(_signature_wide(spark, sf_dir)))
     return _propagate_min_labels(pairs)
@@ -701,7 +691,7 @@ def dedup_keep_decisions(spark: SparkSession, sf_dir: str) -> DataFrame:
     would add a full range exchange the join immediately re-partitions
     away."""
     labels = _cluster_labels(spark, sf_dir)
-    docs = _docs(spark, sf_dir).select("doc_id")
+    docs = read_documents(spark, sf_dir).select("doc_id")
     lab = labels.select(F.col("node").alias("doc_id"),
                         F.col("label").alias("cl"))
     cluster_id = F.coalesce(F.col("cl"), F.col("doc_id"))
@@ -740,24 +730,10 @@ def _pairs_index_unordered(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def materialize_dedup_index(spark: SparkSession, sf_dir: str) -> list[str]:
-    """Write the dedup index tables for this corpus snapshot (idempotent).
-
-    Build order is the dependency order, so each later table scans the
-    earlier ones through the routed operators: pairs reuse the persisted
-    signature relation, labels seed from the just-written pair table.
-    Returns the table paths."""
-    from ..pipeline.snapshot_cache import materialize
-    paths = [materialize(spark, "minhash_sigwide", sf_dir,
-                         lambda: _signature_wide(spark, sf_dir)),
-             materialize(spark, "dedup_pairs", sf_dir,
-                         lambda: _pairs_index_unordered(spark, sf_dir)),
-             materialize(spark, "dedup_labels", sf_dir,
-                         lambda: _cluster_labels(spark, sf_dir)),
-             materialize(spark, "simhash_fp", sf_dir,
-                         lambda: _simhash_unordered(spark, sf_dir)),
-             materialize(spark, "substring_spans", sf_dir,
-                         lambda: _substring_spans_unordered(spark, sf_dir))]
-    return paths
+    """Write the dedup index tables for this corpus snapshot
+    (idempotent).  Returns the table paths."""
+    from ..pipeline.snapshot_cache import BY_NAME
+    return BY_NAME["dedup_index"].build(spark, sf_dir)
 
 
 # --------------------------------------------------- stratified sampling
@@ -774,7 +750,7 @@ def stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines and cluster sizes (no RNG state, no sort).  This is how a
     100 TB training-mix rebalance actually ships: the sample decision
     must be a function of the ROW, not of partition iteration order."""
-    d = _docs(spark, sf_dir).select("doc_id", "lang")
+    d = read_documents(spark, sf_dir).select("doc_id", "lang")
     bucket = F.pmod(_md5_bigint(F.concat_ws(":", "doc_id", "lang")),
                     F.lit(1000))
     rate = F.coalesce(
@@ -841,7 +817,7 @@ def substring_dedup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _substring_spans_unordered(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
     n = SPAN_GRAM
-    d = (_docs(spark, sf_dir)
+    d = (read_documents(spark, sf_dir)
          .filter(F.length(F.trim("text")) > 0)
          .select("doc_id", F.split("text", " ").alias("w")))
     grams = (d.filter(F.size("w") >= n)
@@ -962,7 +938,7 @@ def incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                .groupBy("batch_id")
                .agg(F.min("corpus_id").alias("dup_of"),
                     F.count(F.lit(1)).alias("n_matches")))
-    batch_ids = (_docs(spark, sf_dir).filter(_incr_split_expr() == 0)
+    batch_ids = (read_documents(spark, sf_dir).filter(_incr_split_expr() == 0)
                  .select("doc_id"))
     return (batch_ids.join(matches.withColumnRenamed("batch_id", "doc_id"),
                            "doc_id", "left")
@@ -1038,7 +1014,7 @@ def winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output per doc: k-gram count, fingerprint count, min fingerprint and
     the xor-fold (the order-insensitive sketch checksum a downstream
     bucket-join would key on)."""
-    d = _docs(spark, sf_dir)
+    d = read_documents(spark, sf_dir)
     toks = F.split(F.regexp_replace(F.lower(F.trim("text")), _NORM, " "),
                    " ")
     kmin = _WINNOW_K + _WINNOW_W - 1

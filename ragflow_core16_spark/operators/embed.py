@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import read_documents
+
 DIM = 64
 TITLE_W = 0.1  # filename_embd_weight default (task_executor.py:400-409)
 
@@ -89,13 +91,13 @@ def _doc_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly this per chunk at INDEX time (``q_{dim}_vec`` written by the
     task executor's embedding step, rag/svr/task_executor.py:387ff) and
     every search reads the stored column.  With a written vector table
-    (``materialize_doc_embeddings``) this is a scan; the compute path is
+    (``doc_embeddings``) this is a scan; the compute path is
     the single-pass weighted-union hash."""
     from ..pipeline.snapshot_cache import read_table
     scan = read_table(spark, "doc_embeddings", sf_dir)
     if scan is not None:
         return scan.select("doc_id", "q_vec")
-    d = _docs(spark, sf_dir)
+    d = read_documents(spark, sf_dir)
     # single pass: 0.1·hash(title) + 0.9·hash(content) = hash of the
     # weighted token union (hashing is linear in token votes)
     streams = (d.select("doc_id", F.col("text").alias("t"),
@@ -104,19 +106,6 @@ def _doc_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
                                      F.lit(TITLE_W).alias("w"))))
     return (_hash_embed(streams, "doc_id", "t", "w")
             .select("doc_id", F.col("vec").alias("q_vec")))
-
-
-def materialize_doc_embeddings(spark: SparkSession, sf_dir: str) -> str:
-    """Write the per-snapshot document-vector table (idempotent) — the
-    engine's analogue of the reference's stored ``q_{dim}_vec`` column."""
-    from ..pipeline.snapshot_cache import materialize
-    return materialize(spark, "doc_embeddings", sf_dir,
-                       lambda: _doc_vectors(spark, sf_dir))
-
-
-def _docs(spark, sf_dir):
-    from ..session import spread
-    return spread(spark.read.parquet(f"{sf_dir}/documents.parquet"))
 
 
 def _embed_sql() -> str:

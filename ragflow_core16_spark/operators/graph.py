@@ -28,15 +28,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import read_documents
+
 N_ITER = 3
 DAMP_NUM = 850_000          # 0.85 in ppm
 BASE_NUM = 150_000          # (1 - 0.85) in ppm
 PPM = 1_000_000
-
-
-def _docs(spark, sf_dir):
-    from ..session import spread
-    return spread(spark.read.parquet(f"{sf_dir}/documents.parquet"))
 
 
 def _edges(d: DataFrame, n_docs_col) -> DataFrame:
@@ -56,12 +53,13 @@ def _edges(d: DataFrame, n_docs_col) -> DataFrame:
 
 def pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-50 by rank.  With a written rank table
-    (``materialize_webgraph_ranks``) this is a scan + top-k — the
+    (``webgraph_ranks``) this is a scan + top-k — the
     deployment shape: the reference's rerank stage CONSUMES a
     precomputed ``pagerank_fea`` column (rag/nlp/search.py:247-272), it
     never computes ranks per query, and Common-Crawl-style pipelines
     publish rank files once per crawl snapshot."""
-    scan = _ranks_scan(spark, sf_dir)
+    from ..pipeline.snapshot_cache import read_table
+    scan = read_table(spark, "webgraph_ranks", sf_dir)
     ranks = (scan.select("doc_id", "rank_ppm") if scan is not None
              else _pagerank_full(spark, sf_dir))
     return (ranks.orderBy(F.desc("rank_ppm"), "doc_id")
@@ -72,7 +70,7 @@ def pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _pagerank_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-node rank after N_ITER sweeps (compute path; also the rank
     half of the materialized table)."""
-    d = _docs(spark, sf_dir).select("doc_id")
+    d = read_documents(spark, sf_dir).select("doc_id")
     n = d.count()  # scalar corpus size (one cheap count; a literal at scale)
     edges = _edges(d, F.lit(n))
     ranks = d.select("doc_id", F.lit(PPM).cast("bigint").alias("rank_ppm"))
@@ -151,9 +149,10 @@ def hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     one row per linked node — node-table sized, executor-local storage,
     fine at any scale.
 
-    With a written rank table (``materialize_webgraph_ranks``) this is a
+    With a written rank table (``webgraph_ranks``) this is a
     scan + top-k, same contract as ``pagerank``."""
-    scan = _ranks_scan(spark, sf_dir)
+    from ..pipeline.snapshot_cache import read_table
+    scan = read_table(spark, "webgraph_ranks", sf_dir)
     if scan is not None:
         return (scan.select("doc_id", "h_ppm", "a_ppm")
                 .orderBy(F.desc("a_ppm"), F.desc("h_ppm"), "doc_id")
@@ -168,7 +167,7 @@ def hits(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _hits_full(spark: SparkSession, sf_dir: str):
     """(hubs, auths) per-node relations after N_ITER sweeps (compute
     path; also the hub/authority half of the materialized table)."""
-    d = _docs(spark, sf_dir).select("doc_id")
+    d = read_documents(spark, sf_dir).select("doc_id")
     n = d.count()
     edges = _edges(d, F.lit(n)).select("src", "dst")
     hubs = d.select("doc_id", F.lit(PPM).cast("bigint").alias("h_ppm"))
@@ -196,11 +195,6 @@ def _hits_full(spark: SparkSession, sf_dir: str):
 
 
 # --------------------------------------------- rank-table materialization
-def _ranks_scan(spark, sf_dir):
-    from ..pipeline.snapshot_cache import read_table
-    return read_table(spark, "webgraph_ranks", sf_dir)
-
-
 def _ranks_unordered(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One row per node with all three link-quality priors: pagerank +
     HITS hub/authority (the columns the reference's rerank stage reads
@@ -208,15 +202,6 @@ def _ranks_unordered(spark: SparkSession, sf_dir: str) -> DataFrame:
     pr = _pagerank_full(spark, sf_dir)
     hubs, auths = _hits_full(spark, sf_dir)
     return pr.join(hubs, "doc_id").join(auths, "doc_id")
-
-
-def materialize_webgraph_ranks(spark: SparkSession, sf_dir: str) -> str:
-    """Write the per-snapshot rank table (idempotent) — the webgraph
-    analogue of the curation decision table: rank jobs run once per
-    crawl snapshot, rank queries scan the stored scores."""
-    from ..pipeline.snapshot_cache import materialize
-    return materialize(spark, "webgraph_ranks", sf_dir,
-                       lambda: _ranks_unordered(spark, sf_dir))
 
 
 def _hits_sql() -> str:

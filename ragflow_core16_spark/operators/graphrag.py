@@ -51,6 +51,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..session import read_documents
 from .dedup import _memo
 
 DF_MIN = 3          # entity gate: appears in >= 3 documents
@@ -63,22 +64,17 @@ PPM = 1_000_000
 
 
 # ---------------------------------------------------------------- inputs
-def _docs(spark, sf_dir):
-    from ..session import spread
-    return spread(spark.read.parquet(f"{sf_dir}/documents.parquet"))
-
-
 def _mentions(spark, sf_dir) -> DataFrame:
     """(doc_id, entity, mentions) over df-gated bigram entities; memoized
     (temp-table semantics) because all five graph queries re-read it.
     When the ingest-time snapshot table exists
-    (``materialize_graph_index``), the build is a scan of it."""
+    (``graphrag_mentions``), the build is a scan of it."""
     def build():
         from ..pipeline.snapshot_cache import read_table
         scan = read_table(spark, "graphrag_mentions", sf_dir)
         if scan is not None:
             return scan
-        d = _docs(spark, sf_dir).filter(F.length(F.trim("text")) > 0)
+        d = read_documents(spark, sf_dir).filter(F.length(F.trim("text")) > 0)
         ws = F.split(F.regexp_replace(F.lower(F.trim(F.col("text"))),
                                       r"\s+", " "), " ")
         bg = (d.withColumn("ws", ws)
@@ -254,7 +250,7 @@ def _graph_edges(spark, sf_dir) -> DataFrame:
     """Merged entity graph: co-occurrence of top-K entities within a
     document, support- and lift-gated.  Memoized — communities and reports
     both iterate over it.  Scans the ingest-time snapshot table when it
-    exists (``materialize_graph_index``)."""
+    exists (``graphrag_edges``)."""
     def build():
         from ..pipeline.snapshot_cache import read_table
         scan = read_table(spark, "graphrag_edges", sf_dir)
@@ -354,24 +350,6 @@ def _labels(spark, sf_dir) -> DataFrame:
         if changed == 0:
             break
     return labels.select("node", F.col("label").alias("community"))
-
-
-def materialize_graph_index(spark, sf_dir: str) -> list[str]:
-    """Write the GraphRAG index tables (gated mentions, merged entity
-    graph, community labels) for this corpus snapshot — the ingest-time
-    build the reference runs once (`graphrag/general/index.py`), after
-    which every graph query is a scan.  Idempotent; returns the paths.
-    Build order matters: mentions lands first so the edge build reuses
-    it, edges land before labels so the propagation reads the scan."""
-    from ..pipeline.snapshot_cache import materialize
-    p1 = materialize(spark, "graphrag_mentions", sf_dir,
-                     lambda: _mentions(spark, sf_dir))
-    p2 = materialize(spark, "graphrag_edges", sf_dir,
-                     lambda: _graph_edges(spark, sf_dir))
-    p3 = materialize(spark, "graphrag_labels", sf_dir,
-                     lambda: _labels(spark, sf_dir)
-                     .select("node", "community"))
-    return [p1, p2, p3]
 
 
 def graph_communities(spark: SparkSession, sf_dir: str) -> DataFrame:

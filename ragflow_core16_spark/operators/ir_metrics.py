@@ -38,6 +38,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..session import read_documents
+
 # term vocabulary is QUERY_TERMS from retrieval.py — known present in the
 # synthetic documents text at every SF
 BENCH_QUERIES: dict[str, list[str]] = {
@@ -61,8 +63,8 @@ def _query_terms_df(spark: SparkSession) -> DataFrame:
 def _scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(query, doc_id, score, rel): weighted-boolean score + graded rel
     in ONE pass over the (doc, term) tf aggregate."""
-    from .retrieval import _docs, _term_tf
-    n_docs = _docs(spark, sf_dir).count()
+    from .retrieval import _term_tf
+    n_docs = read_documents(spark, sf_dir).count()
     vocab = sorted({t for ts in BENCH_QUERIES.values() for t in ts})
     terms = spark.createDataFrame([(w,) for w in vocab], ["term"])
     tf = _term_tf(spark, sf_dir, terms)

@@ -27,18 +27,13 @@ from pyspark.sql.types import (IntegerType, LongType, StringType, StructField,
                                StructType)
 
 from ..session import ordered as _ordered
+from ..session import read_documents
 
 CHUNKS_SCHEMA = StructType([
     StructField("doc_id", LongType(), False),
     StructField("chunk_seq", IntegerType(), False),
     StructField("chunk_text", StringType(), False),
 ])
-
-
-def _docs(spark, sf_dir):
-    from ..session import spread
-    return spread(spark.read.parquet(f"{sf_dir}/documents.parquet")
-                  .select("doc_id", "text"))
 
 
 # ------------------------------------------------------------------- docx
@@ -83,7 +78,8 @@ def docx_template(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame(out, columns=["doc_id", "chunk_seq",
                                              "chunk_text"])
 
-    return (_docs(spark, sf_dir).mapInPandas(run, CHUNKS_SCHEMA)
+    return (read_documents(spark, sf_dir).select("doc_id", "text")
+            .mapInPandas(run, CHUNKS_SCHEMA)
             .transform(_ordered("doc_id", "chunk_seq")))
 
 
@@ -101,7 +97,8 @@ def xlsx_template(spark: SparkSession, sf_dir: str) -> DataFrame:
     (excel_parser.py:106-128).  Oracle-checked: the line assembly is
     reproduced relationally in DuckDB."""
     from ..parsers.ooxml import build_xlsx, excel_lines
-    d = _docs(spark, sf_dir).filter(F.length(F.trim("text")) > 0)
+    d = (read_documents(spark, sf_dir).select("doc_id", "text")
+         .filter(F.length(F.trim("text")) > 0))
 
     def run(batches):
         for pdf in batches:
@@ -163,7 +160,8 @@ def qa_xlsx_template(spark: SparkSession, sf_dir: str) -> DataFrame:
     reproduced relationally in DuckDB."""
     from ..chunkers.qa import qa_from_xlsx
     from ..parsers.ooxml import build_xlsx
-    d = _docs(spark, sf_dir).filter(F.length(F.trim("text")) > 0)
+    d = (read_documents(spark, sf_dir).select("doc_id", "text")
+         .filter(F.length(F.trim("text")) > 0))
 
     def run(batches):
         for pdf in batches:
@@ -262,7 +260,7 @@ def pptx_template(spark: SparkSession, sf_dir: str) -> DataFrame:
     extraction → one chunk per slide (presentation mode,
     rag/app/presentation.py:110-126)."""
     from ..parsers.ooxml import build_pptx, pptx_slides
-    d = _docs(spark, sf_dir)
+    d = read_documents(spark, sf_dir).select("doc_id", "text")
 
     def run(batches):
         for pdf in batches:
@@ -333,7 +331,8 @@ def manual_template(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame(out, columns=["doc_id", "chunk_seq",
                                              "chunk_text"])
 
-    return (_docs(spark, sf_dir).mapInPandas(run, CHUNKS_SCHEMA)
+    return (read_documents(spark, sf_dir).select("doc_id", "text")
+            .mapInPandas(run, CHUNKS_SCHEMA)
             .transform(_ordered("doc_id", "chunk_seq")))
 
 
@@ -369,7 +368,8 @@ def laws_docx_template(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame(out, columns=["doc_id", "chunk_seq",
                                              "chunk_text"])
 
-    return (_docs(spark, sf_dir).mapInPandas(run, CHUNKS_SCHEMA)
+    return (read_documents(spark, sf_dir).select("doc_id", "text")
+            .mapInPandas(run, CHUNKS_SCHEMA)
             .transform(_ordered("doc_id", "chunk_seq")))
 
 
@@ -379,7 +379,8 @@ def xlsx_html_template(spark: SparkSession, sf_dir: str) -> DataFrame:
     (excel_parser.py:73-104): <table> chunks of ≤chunk_rows data rows with
     the header row repeated and the sheet name as <caption>."""
     from ..parsers.ooxml import build_xlsx, excel_html
-    d = _docs(spark, sf_dir).filter(F.length(F.trim("text")) > 0)
+    d = (read_documents(spark, sf_dir).select("doc_id", "text")
+         .filter(F.length(F.trim("text")) > 0))
 
     def run(batches):
         for pdf in batches:
@@ -437,7 +438,8 @@ def qa_docx_template(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame(out, columns=["doc_id", "chunk_seq",
                                              "chunk_text"])
 
-    return (_docs(spark, sf_dir).mapInPandas(run, CHUNKS_SCHEMA)
+    return (read_documents(spark, sf_dir).select("doc_id", "text")
+            .mapInPandas(run, CHUNKS_SCHEMA)
             .transform(_ordered("doc_id", "chunk_seq")))
 
 
@@ -660,7 +662,8 @@ def doc_template(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame(out, columns=["doc_id", "chunk_seq",
                                              "chunk_text"])
 
-    return (_docs(spark, sf_dir).mapInPandas(run, CHUNKS_SCHEMA)
+    return (read_documents(spark, sf_dir).select("doc_id", "text")
+            .mapInPandas(run, CHUNKS_SCHEMA)
             .transform(_ordered("doc_id", "chunk_seq")))
 
 

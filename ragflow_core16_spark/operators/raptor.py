@@ -169,9 +169,9 @@ def _tree(spark, sf_dir):
         return _TreeCache.value[1], _TreeCache.value[2]
     # ingest-time materialization (the reference builds the RAPTOR tree
     # once per corpus in the task executor and stores the summary chunks;
-    # `materialize_raptor_tree` is that step here): when the snapshot
-    # tables exist, every query is a scan — no clustering loop, no
-    # persisted frames to track
+    # the ``raptor_tree`` family's build is that step here): when the
+    # snapshot tables exist, every query is a scan — no clustering loop,
+    # no persisted frames to track
     from ..pipeline.snapshot_cache import read_table
     ns = read_table(spark, "raptor_nodes", sf_dir)
     es = read_table(spark, "raptor_edges", sf_dir)
@@ -217,13 +217,14 @@ def _tree(spark, sf_dir):
     return nodes, edges
 
 
-def materialize_raptor_tree(spark, sf_dir: str) -> list[str]:
-    """Write the tree's node and edge tables for this corpus snapshot
-    (idempotent) — the ingest-time RAPTOR build.  Returns the paths."""
-    from ..pipeline.snapshot_cache import materialize
-    nodes, edges = _tree(spark, sf_dir)
-    return [materialize(spark, "raptor_nodes", sf_dir, lambda: nodes),
-            materialize(spark, "raptor_edges", sf_dir, lambda: edges)]
+def _tree_nodes(spark, sf_dir: str) -> DataFrame:
+    """The tree's node table (the ``raptor_nodes`` snapshot kind)."""
+    return _tree(spark, sf_dir)[0]
+
+
+def _tree_edges(spark, sf_dir: str) -> DataFrame:
+    """The tree's edge table (the ``raptor_edges`` snapshot kind)."""
+    return _tree(spark, sf_dir)[1]
 
 
 # ------------------------------------------------------------- queries

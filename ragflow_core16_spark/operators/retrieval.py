@@ -21,19 +21,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import read_documents
+
 QUERY_TERMS = ["spark", "query", "data", "merge", "window"]
 TOP_N = 20
 
 
-def _docs(spark, sf_dir):
-    # spread the single-split scan so the token explode parallelizes
-    # (one row-group parquet file = one scan task otherwise)
-    from ..session import spread
-    return spread(spark.read.parquet(f"{sf_dir}/documents.parquet"))
-
-
 def _tokens(spark, sf_dir) -> DataFrame:
-    d = _docs(spark, sf_dir)
+    d = read_documents(spark, sf_dir)
     toks = F.split(F.regexp_replace(F.lower(F.trim("text")), r"\s+", " "), " ")
     return d.select("doc_id", F.explode(toks).alias("tok"))
 
@@ -47,14 +42,10 @@ def _tokens(spark, sf_dir) -> DataFrame:
 # fall back to the token-explode compute path when absent (the driver's
 # oracle run).
 
-def _postings_scan(spark, sf_dir):
-    from ..pipeline.snapshot_cache import read_table
-    return read_table(spark, "term_postings", sf_dir)
-
-
 def _per_doc_tf(spark, sf_dir) -> DataFrame:
     """(tok, doc_id, tf) — the inverted-index content relation."""
-    scan = _postings_scan(spark, sf_dir)
+    from ..pipeline.snapshot_cache import read_table
+    scan = read_table(spark, "term_postings", sf_dir)
     if scan is not None:
         return scan.select("tok", "doc_id", "tf")
     return (_tokens(spark, sf_dir).groupBy("tok", "doc_id")
@@ -66,7 +57,8 @@ def _term_tf(spark, sf_dir, terms: DataFrame) -> DataFrame:
     a postings scan joined on the term key (no explode).  Without: the
     query-time shape — broadcast the terms INTO the token stream first,
     so only matching tokens reach the aggregation."""
-    scan = _postings_scan(spark, sf_dir)
+    from ..pipeline.snapshot_cache import read_table
+    scan = read_table(spark, "term_postings", sf_dir)
     if scan is not None:
         return (scan.join(F.broadcast(terms), scan.tok == terms.term)
                 .select("doc_id", "term", "tf"))
@@ -81,7 +73,7 @@ def _dl_rel(spark, sf_dir) -> DataFrame:
     scan = read_table(spark, "doc_stats", sf_dir)
     if scan is not None:
         return scan.select("doc_id", "dl")
-    return _docs(spark, sf_dir).select(
+    return read_documents(spark, sf_dir).select(
         "doc_id",
         F.size(F.split(F.regexp_replace(F.lower(F.trim("text")),
                                         r"\s+", " "), " ")).alias("dl"))
@@ -89,11 +81,8 @@ def _dl_rel(spark, sf_dir) -> DataFrame:
 
 def materialize_retrieval_index(spark, sf_dir: str) -> list[str]:
     """Write the per-snapshot retrieval index tables (idempotent)."""
-    from ..pipeline.snapshot_cache import materialize
-    return [materialize(spark, "term_postings", sf_dir,
-                        lambda: _per_doc_tf(spark, sf_dir)),
-            materialize(spark, "doc_stats", sf_dir,
-                        lambda: _dl_rel(spark, sf_dir))]
+    from ..pipeline.snapshot_cache import BY_NAME
+    return BY_NAME["retrieval_index"].build(spark, sf_dir)
 
 
 def term_idf_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -101,7 +90,8 @@ def term_idf_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     the reference's term_weight idf form (rag/nlp/term_weight.py:184-186)."""
     # N as a broadcast 1-row relation, not a driver .count(): the scalar
     # collect would run a separate eager job per invocation (ADVICE r2)
-    n_docs_rel = _docs(spark, sf_dir).agg(F.count(F.lit(1)).alias("n_docs"))
+    n_docs_rel = read_documents(spark, sf_dir).agg(
+        F.count(F.lit(1)).alias("n_docs"))
     terms = spark.createDataFrame([(w,) for w in QUERY_TERMS], ["term"])
     # one row per (doc, term) in the tf relation ⇒ df = row count per term
     df_ = (_term_tf(spark, sf_dir, terms)
@@ -135,7 +125,8 @@ def fulltext_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     the ES scripted_sim of conf/mapping.json:8-15 — top N docs."""
     from pyspark.sql import Window
     # N as a broadcast 1-row relation, not a driver .count() (ADVICE r2)
-    n_docs_rel = _docs(spark, sf_dir).agg(F.count(F.lit(1)).alias("n_docs"))
+    n_docs_rel = read_documents(spark, sf_dir).agg(
+        F.count(F.lit(1)).alias("n_docs"))
     terms = spark.createDataFrame([(w,) for w in QUERY_TERMS], ["term"])
     tf = _term_tf(spark, sf_dir, terms)
     # df(term) = row count per term over the aggregated tf (one row per
@@ -201,7 +192,8 @@ def bm25_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     between engines.  The corpus count is a broadcast 1-row agg (no extra
     eager job per invocation)."""
     from pyspark.sql import Window
-    n_docs_rel = _docs(spark, sf_dir).agg(F.count(F.lit(1)).alias("n_docs"))
+    n_docs_rel = read_documents(spark, sf_dir).agg(
+        F.count(F.lit(1)).alias("n_docs"))
     dl_rel = _dl_rel(spark, sf_dir)
     avgdl = dl_rel.agg(F.avg("dl").alias("avgdl"))
     terms = spark.createDataFrame([(w,) for w in QUERY_TERMS], ["term"])
@@ -330,7 +322,7 @@ def doc_agg_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     terms = spark.createDataFrame([(w,) for w in QUERY_TERMS], ["term"])
     hits = (t.join(F.broadcast(terms), t.tok == terms.term)
             .select("doc_id").distinct())
-    d = _docs(spark, sf_dir)
+    d = read_documents(spark, sf_dir)
     return (d.join(hits, "doc_id")
             .groupBy("source")
             .agg(F.count(F.lit(1)).alias("n_hit_docs"))
@@ -368,7 +360,8 @@ def _hybrid_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     tdf = spark.createDataFrame(terms, ["term", "w"])
     # distinct (doc, tok) pairs ARE the posting keys — scan the index
     # when it exists instead of re-exploding + distincting the corpus
-    pscan = _postings_scan(spark, sf_dir)
+    from ..pipeline.snapshot_cache import read_table
+    pscan = read_table(spark, "term_postings", sf_dir)
     toks = (pscan.select("doc_id", "tok") if pscan is not None
             else _tokens(spark, sf_dir).distinct())
     tok_sim = (toks.join(F.broadcast(tdf), toks.tok == tdf.term)
@@ -535,7 +528,7 @@ def rerank_rank_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     column of conf/mapping.json:141-155 re-expressed relationally."""
     import math
     q_denor = math.sqrt(sum(s * s for s in Q_RFEA.values()))
-    d = _docs(spark, sf_dir).select("doc_id", "source", "lang")
+    d = read_documents(spark, sf_dir).select("doc_id", "source", "lang")
     sc1 = (F.col("doc_id") % 5 + 1).cast("double")   # weight of tag=source
     sc2 = (F.col("doc_id") % 3 + 1).cast("double")   # weight of tag=lang
     pagerank = (F.col("doc_id") % 7).cast("double") / 10.0
@@ -665,7 +658,7 @@ def insert_citations_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-piece token-overlap sim as a LITERAL expression over the doc's
     # token array — piece terms are driver constants, so the whole token
     # side is array_contains folds: no explode, no re-join, one scan
-    d = (_docs(spark, sf_dir).filter(F.col("doc_id") < CITE_N_DOCS)
+    d = (read_documents(spark, sf_dir).filter(F.col("doc_id") < CITE_N_DOCS)
          .select("doc_id",
                  F.split(F.regexp_replace(F.lower(F.trim("text")),
                                           r"\s+", " "), " ").alias("toks")))
@@ -782,7 +775,7 @@ def sql_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     the ES-SQL endpoint): the engine accepts the SQL text verbatim; here
     Spark SQL executes it natively against the registered tables.  The
     oracle runs the IDENTICAL string."""
-    _docs(spark, sf_dir).createOrReplaceTempView("documents")
+    read_documents(spark, sf_dir).createOrReplaceTempView("documents")
     return spark.sql(SQL_RETRIEVAL_TEXT)
 
 

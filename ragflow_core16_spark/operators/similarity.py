@@ -457,7 +457,7 @@ def semantic_dedup(spark: SparkSession, sf_dir: str,
     the cluster sizes, never |docs|².  Keep decisions are a semi-join
     aggregate, no driver-side state.  Deterministic → DuckDB oracle.
 
-    With a written label table (``materialize_semantic_labels``) this is
+    With a written label table (``semantic_labels``) this is
     a scan + presentation sort — SemDeDup's verdict is computed once per
     corpus snapshot, like every other curation decision."""
     from ..pipeline.snapshot_cache import read_table
@@ -503,13 +503,6 @@ def _semantic_labels_unordered(spark: SparkSession, sf_dir: str,
                     F.col("ccos").alias("centroid_cos"),
                     F.when(F.col("is_dropped").isNull(), True)
                     .otherwise(False).alias("keep")))
-
-
-def materialize_semantic_labels(spark: SparkSession, sf_dir: str) -> str:
-    """Write the per-snapshot SemDeDup label table (idempotent)."""
-    from ..pipeline.snapshot_cache import materialize
-    return materialize(spark, "semantic_labels", sf_dir,
-                       lambda: _semantic_labels_unordered(spark, sf_dir))
 
 
 SEMANTIC_DEDUP_SQL = f"""

@@ -47,17 +47,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..session import read_documents
+
 S = 1000           # smoothing — search.py:446,458 default
 TOPN_TAGS = 3      # search.py:458 topn_tags
 SCALE = 10         # the 0.1 factor, folded into the integer denominator
 UNIT = 1000        # per-mille readout (see module docstring)
-
-
-def _docs(spark, sf_dir):
-    # spread: the tag-token explode + per-(doc, tag) scoring would
-    # otherwise run on the single scan split a small parquet file yields
-    from ..session import spread
-    return spread(spark.read.parquet(f"{sf_dir}/documents.parquet"))
 
 
 def _tags(spark, sf_dir) -> DataFrame:
@@ -67,7 +62,7 @@ def _tags(spark, sf_dir) -> DataFrame:
 
     def build():
         from .textstats import _tfidf_ranked
-        d = _docs(spark, sf_dir)
+        d = read_documents(spark, sf_dir)
         kw = (_tfidf_ranked(spark, sf_dir)
               .filter(F.col("rank") == 1)
               .select("doc_id", F.concat(F.lit("kw:"), "term").alias("tag")))
@@ -206,23 +201,12 @@ def _tag_content_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "tag", "score_pm"))
 
 
-def materialize_tag_features(spark, sf_dir: str) -> str:
-    """Write the per-document tag_feas relation for this corpus snapshot
-    (idempotent) — the ingest-time tagging step: the reference computes
-    TAG_FLD once per chunk in the task executor and stores it in the doc
-    (`rag/svr/task_executor.py`, tagging phase), it is never recomputed
-    per query."""
-    from ..pipeline.snapshot_cache import materialize
-    return materialize(spark, "tag_features", sf_dir,
-                       lambda: _tag_content_scored(spark, sf_dir))
-
-
 def tag_content(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document tag_feas — ``tag_content`` (search.py:458-469): match
     the corpus with the doc's own top keywords, aggregate the matched
     docs' tags, score vs the corpus prior, keep the top-3 with
     score > 0.  Scans the ingest-time snapshot table when it exists
-    (``materialize_tag_features``)."""
+    (``tag_features``)."""
     from ..pipeline.snapshot_cache import read_table
     from ..session import ordered_once
     scan = read_table(spark, "tag_features", sf_dir)
@@ -266,7 +250,7 @@ def tag_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-3."""
     from .retrieval import _question_terms
     terms = [t for t, _w in _question_terms()]
-    d = _docs(spark, sf_dir)
+    d = read_documents(spark, sf_dir)
     toks = (d.filter(F.length(F.trim("text")) > 0)
             .select("doc_id",
                     F.explode(F.split(F.regexp_replace(

@@ -31,6 +31,7 @@ from pyspark.sql.types import (IntegerType, LongType, StringType, StructField,
                                StructType)
 
 from ..session import ordered as _ordered
+from ..session import read_documents
 
 CHUNKS_SCHEMA = StructType([
     StructField("doc_id", LongType(), False),
@@ -43,14 +44,9 @@ from .sql_shared import RM_PREFIX_SQL as _RM_PREFIX_SQL
 from .sql_shared import cost_sql as _cost_shared
 
 
-def _docs(spark, sf_dir):
-    from ..session import spread
-    return spread(spark.read.parquet(f"{sf_dir}/documents.parquet"))
-
-
 def _template_query(template_fn):
     def make(spark: SparkSession, sf_dir: str, to_text) -> DataFrame:
-        d = _docs(spark, sf_dir).select("doc_id", "text", "lang")
+        d = read_documents(spark, sf_dir).select("doc_id", "text", "lang")
 
         def run(batches):
             for pdf in batches:
@@ -216,7 +212,7 @@ def email_template(spark: SparkSession, sf_dir: str) -> DataFrame:
     + text/html alternative parts) → MIME parse → TxtParser + HtmlParser
     sections → naive_merge chunks (reference rag/app/email.py:29-88)."""
     from ..chunkers.email_t import chunk_email
-    d = _docs(spark, sf_dir).select("doc_id", "text")
+    d = read_documents(spark, sf_dir).select("doc_id", "text")
 
     def run(batches):
         for pdf in batches:
@@ -268,7 +264,7 @@ def tag_template(spark: SparkSession, sf_dir: str) -> DataFrame:
     normalization; reference rag/app/tag.py:62-91).  Every synthetic line is
     well-formed under TAB, so the oracle reproduces the rows in SQL."""
     from ..chunkers.tag import chunk_tag_txt
-    d = _docs(spark, sf_dir).select("doc_id", "text") \
+    d = read_documents(spark, sf_dir).select("doc_id", "text") \
         .filter(F.length(F.trim("text")) > 0)
 
     def run(batches):
@@ -332,7 +328,7 @@ def paper_template(spark: SparkSession, sf_dir: str) -> DataFrame:
             secs.append(p)
         return secs
 
-    d = _docs(spark, sf_dir).select("doc_id", "text")
+    d = read_documents(spark, sf_dir).select("doc_id", "text")
 
     def run(batches):
         for pdf in batches:
@@ -358,7 +354,7 @@ def resume_template(spark: SparkSession, sf_dir: str) -> DataFrame:
     row per resume with the assembled content block."""
     import json as _json
     from ..chunkers.resume_t import parse_resume, resume_to_doc
-    d = _docs(spark, sf_dir).select("doc_id", "text", "lang")
+    d = read_documents(spark, sf_dir).select("doc_id", "text", "lang")
 
     schema = StructType([
         StructField("doc_id", LongType(), False),

@@ -18,16 +18,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..session import spread
-    return spread(spark.read.parquet(f"{sf_dir}/documents.parquet"))
+from ..session import read_documents
 
 
 # ---------------------------------------------------------------- doc_stats
 def doc_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-language corpus rollup (metrics analogue, task_executor.py:556)."""
-    return (_docs(spark, sf_dir)
+    return (read_documents(spark, sf_dir)
             .groupBy("lang")
             .agg(F.count(F.lit(1)).alias("n_docs"),
                  F.sum("n_chars").alias("total_chars"),
@@ -49,7 +46,7 @@ FROM documents GROUP BY lang ORDER BY lang
 # ------------------------------------------------------------- token_count
 def token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Whitespace token count per document (JVM split, no UDF)."""
-    return (_docs(spark, sf_dir)
+    return (read_documents(spark, sf_dir)
             .select("doc_id",
                     F.size(F.split(F.trim("text"), r"\s+")).alias("n_tokens"),
                     F.length("text").alias("n_chars_actual"))
@@ -71,7 +68,7 @@ _STOPWORDS = "the a an and or of to in is are was for on with as by at"
 
 
 def doc_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs(spark, sf_dir)
+    d = read_documents(spark, sf_dir)
     n_tok = F.size(F.split(F.trim("text"), r"\s+"))
     n_punct = F.regexp_count("text", F.lit(r"[\.,;:!\?]"))
     n_digit = F.regexp_count("text", F.lit(r"[0-9]"))
@@ -132,7 +129,7 @@ def lang_pred_expr(text_col) -> "F.Column":
 
 
 def lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs(spark, sf_dir)
+    d = read_documents(spark, sf_dir)
     return (d.select("doc_id", F.col("lang").alias("lang_declared"),
                      lang_pred_expr(F.col("text")).alias("lang_pred"))
             .orderBy("doc_id"))
@@ -165,7 +162,7 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     the whitespace-normalized text (rolling-hash analogue, portable to the
     DuckDB oracle — Spark's xxhash64 seed/serialization is Spark-private)."""
     norm = F.regexp_replace(F.lower(F.trim("text")), r"\s+", " ")
-    return (_docs(spark, sf_dir)
+    return (read_documents(spark, sf_dir)
             .select("doc_id",
                     F.md5(norm).alias("content_md5"),
                     F.conv(F.substring(F.md5(norm), 1, 15), 16, 10)
@@ -192,7 +189,7 @@ def url_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     column expressions (regexp chain, no UDF).  Input: deterministic messy
     URLs derived from doc_id (odd docs carry tracking params + fragment +
     explicit :443, even docs are plain http with a trailing slash)."""
-    d = _docs(spark, sf_dir).select("doc_id")
+    d = read_documents(spark, sf_dir).select("doc_id")
     url = F.when(
         F.col("doc_id") % 2 == 1,
         F.concat(F.lit("HTTPS://Host"), (F.col("doc_id") % 50).cast("string"),
@@ -280,7 +277,7 @@ def unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _tokens_df(spark, sf_dir):
-    d = _docs(spark, sf_dir)
+    d = read_documents(spark, sf_dir)
     toks = F.split(F.regexp_replace(F.lower(F.trim("text")), r"\s+", " "),
                    " ")
     return d.select("doc_id", F.explode(toks).alias("tok"))
@@ -309,23 +306,16 @@ def _lang_unigram_freqs(spark: SparkSession, sf_dir: str) -> DataFrame:
     LM behind ``ccnet_bucket`` (and, lang-summed, ``unigram_logprob``).
     CCNet ships its per-language KenLM models as frozen files trained
     once (Wenzek et al. 2020); with a written table
-    (``materialize_lang_unigram_lm``) this is a scan."""
+    (``lang_unigram_lm``) this is a scan."""
     from ..pipeline.snapshot_cache import read_table
     scan = read_table(spark, "lang_unigram_lm", sf_dir)
     if scan is not None:
         return scan.select("lang", "tok", "cnt")
-    d = _docs(spark, sf_dir)
+    d = read_documents(spark, sf_dir)
     toks = F.split(F.regexp_replace(F.lower(F.trim("text")), r"\s+", " "),
                    " ")
     return (d.select("lang", F.explode(toks).alias("tok"))
             .groupBy("lang", "tok").agg(F.count(F.lit(1)).alias("cnt")))
-
-
-def materialize_lang_unigram_lm(spark: SparkSession, sf_dir: str) -> str:
-    """Write the per-snapshot per-language unigram LM table (idempotent)."""
-    from ..pipeline.snapshot_cache import materialize
-    return materialize(spark, "lang_unigram_lm", sf_dir,
-                       lambda: _lang_unigram_freqs(spark, sf_dir))
 
 
 # ---------------------------------------------------- ccnet_bucket
@@ -354,7 +344,7 @@ def ccnet_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     from a mergeable quantile sketch (see ``quantile_sketch``) computed
     on the score relation, and bucket assignment stays in-row."""
     from pyspark.sql import Window
-    d = _docs(spark, sf_dir)
+    d = read_documents(spark, sf_dir)
     toks = F.split(F.regexp_replace(F.lower(F.trim("text")), r"\s+", " "),
                    " ")
     t = d.select("doc_id", "lang", F.explode(toks).alias("tok"))
@@ -466,7 +456,7 @@ def readability_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     correction term counts vowel-less words — numerals, initialisms).
     Entirely scan-side column expressions: zero shuffles beyond the
     presentation sort, a free rider on any corpus pass."""
-    d = _docs(spark, sf_dir)
+    d = read_documents(spark, sf_dir)
     lowered = F.lower(F.trim("text"))
     words_arr = F.split(lowered, r"\s+")
     n_words = F.greatest(F.size(words_arr), F.lit(1))
@@ -537,7 +527,7 @@ def _tfidf_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``tfidf_keywords`` is driver-compare presentation only).  Memoized
     (temp-table semantics): the tagging operators read it both as the
     match-keyword relation and as the kw: tag family.  When the
-    ingest-time snapshot table exists (``materialize_keywords`` — the
+    ingest-time snapshot table exists (``tfidf_keywords`` — the
     reference computes per-doc keywords at indexing,
     `rag/svr/task_executor.py` keyword step), the build is a scan."""
     from .dedup import _memo
@@ -551,17 +541,9 @@ def _tfidf_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _memo("tfidf_ranked", spark, sf_dir, build)
 
 
-def materialize_keywords(spark, sf_dir: str) -> str:
-    """Write the per-document keyword relation for this corpus snapshot
-    (idempotent) — the ingest-time keyword extraction."""
-    from ..pipeline.snapshot_cache import materialize
-    return materialize(spark, "tfidf_keywords", sf_dir,
-                       lambda: _tfidf_ranked(spark, sf_dir))
-
-
 def _tfidf_ranked_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
-    d = (_docs(spark, sf_dir)
+    d = (read_documents(spark, sf_dir)
          .filter(F.length(F.trim("text")) > 0)
          .select("doc_id",
                  F.explode(F.split(F.regexp_replace(
@@ -705,7 +687,7 @@ def _doc_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, w1, w2): in-row bigram construction — the token array is
     zipped with its own tail JVM-side before the explode, so pairing
     costs zero shuffles."""
-    d = _docs(spark, sf_dir)
+    d = read_documents(spark, sf_dir)
     toks = F.split(F.regexp_replace(F.lower(F.trim("text")), r"\s+", " "),
                    " ")
     pairs = F.expr(
@@ -722,7 +704,7 @@ def _kn_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(w1, w2, lp_ppm): the trained Kneser-Ney bigram model — the LM
     analogue of CCNet's shipped KenLM binary, which is trained once and
     distributed as a model FILE, never re-estimated per scoring run.
-    With a written model table (``materialize_kn_bigram_lm``) this is a
+    With a written model table (``kn_bigram_lm``) this is a
     scan; the compute path re-estimates the counts from the corpus."""
     from ..pipeline.snapshot_cache import read_table
     scan = read_table(spark, "kn_bigram_lm", sf_dir)
@@ -745,13 +727,6 @@ def _kn_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("w1", "w2",
                     F.round(F.log(p) * 1e6, 0).cast("long")
                     .alias("lp_ppm")))
-
-
-def materialize_kn_bigram_lm(spark: SparkSession, sf_dir: str) -> str:
-    """Write the per-snapshot bigram LM table (idempotent)."""
-    from ..pipeline.snapshot_cache import materialize
-    return materialize(spark, "kn_bigram_lm", sf_dir,
-                       lambda: _kn_bigram_lm(spark, sf_dir))
 
 
 KN_BIGRAM_SQL = r"""

@@ -18,16 +18,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..session import read_documents
+
 SEQ_LEN = 512
-
-
-def _docs(spark, sf_dir):
-    # spread: a single-row-group parquet file is ONE scan split, which
-    # would serialize the n-gram explodes (decontaminate, DSIR, the BPE
-    # word histogram) onto one core; at real scale the scan already has
-    # thousands of splits and this is a no-op (session.spread docstring)
-    from ..session import spread
-    return spread(spark.read.parquet(f"{sf_dir}/documents.parquet"))
 
 
 # per-document token count as a pure column expression: first word costs
@@ -48,7 +41,7 @@ aggregate(
 def sequence_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     """→ (lang, seq_id, doc_id, tok_in_seq): which training sequences each
     document contributes to, and how many of its tokens land in each."""
-    d = (_docs(spark, sf_dir)
+    d = (read_documents(spark, sf_dir)
          .select("doc_id", "lang", F.expr(_TOK_EXPR).alias("tok")))
     w = (Window.partitionBy("lang").orderBy("doc_id")
          .rowsBetween(Window.unboundedPreceding, 0))
@@ -114,7 +107,7 @@ def repetition_quality_decisions(spark: SparkSession,
                                  sf_dir: str) -> DataFrame:
     """``repetition_quality`` before presentation ordering (composition
     inputs join this — see ``webclean.corpus_keep``)."""
-    d = (_docs(spark, sf_dir)
+    d = (read_documents(spark, sf_dir)
          .filter(F.length(F.trim("text")) > 0)
          .select("doc_id", F.split("text", " ").alias("w"),
                  F.length("text").alias("nchars")))
@@ -231,7 +224,7 @@ def decon_gram_rel(docs: DataFrame) -> DataFrame:
 def decontaminate_decisions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``decontaminate`` before presentation ordering (composition inputs
     join this — see ``webclean.corpus_keep``)."""
-    grams = decon_gram_rel(_docs(spark, sf_dir))
+    grams = decon_gram_rel(read_documents(spark, sf_dir))
     bench = (grams.filter(F.col("doc_id") % _BENCH_MOD == 0)
              .select("gram").distinct())
     train = (grams.filter(F.col("doc_id") % _BENCH_MOD != 0)
@@ -241,28 +234,37 @@ def decontaminate_decisions(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("n_shared_grams")))
 
 
-def materialize_decon_index(spark: SparkSession, sf_dir: str) -> list[str]:
-    """Write the decontamination index for this corpus snapshot: the
-    benchmark gram posting (grams of the eval split, WITH the owning
-    doc_id so a re-crawled eval doc's stale grams can be retired) and
-    the per-train-doc gram posting.  This is what makes decontamination
-    incrementally maintainable (pipeline/incremental.py): the ``clean``
-    verdict for every document is derivable as one gram-key join of the
-    two postings — no document text is ever re-grammed at maintenance
-    time.  Both postings are the same scale class as ``term_postings``
-    (∝ corpus tokens); a 100 TB deployment stores xxhash64(gram) on both
+def decon_postings(spark: SparkSession,
+                   sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """The decontamination index of a corpus: (bench, train) postings of
+    (doc_id, gram) — the eval split's grams, WITH the owning doc_id so a
+    re-crawled eval doc's stale grams can be retired, and every other
+    document's.  This is what makes decontamination incrementally
+    maintainable (pipeline/incremental.py): the ``clean`` verdict for
+    every document is derivable as one gram-key join of the two
+    postings — no document text is ever re-grammed at maintenance time.
+    Both postings are the same scale class as ``term_postings`` (∝
+    corpus tokens); a 100 TB deployment stores xxhash64(gram) on both
     sides instead of the string — the string here keeps the DuckDB
     oracle byte-comparable."""
-    from ..pipeline.snapshot_cache import materialize
-    grams = decon_gram_rel(_docs(spark, sf_dir))
-    return [
-        materialize(spark, "decon_bench_grams", sf_dir,
-                    lambda: grams.filter(F.col("doc_id") % _BENCH_MOD == 0)
-                    .select("doc_id", "gram").distinct()),
-        materialize(spark, "decon_train_grams", sf_dir,
-                    lambda: grams.filter(F.col("doc_id") % _BENCH_MOD != 0)
-                    .select("doc_id", "gram").distinct()),
-    ]
+    grams = decon_gram_rel(read_documents(spark, sf_dir))
+    return tuple(grams.filter(split).select("doc_id", "gram").distinct()
+                 for split in (F.col("doc_id") % _BENCH_MOD == 0,
+                               F.col("doc_id") % _BENCH_MOD != 0))
+
+
+def _decon_bench_grams(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return decon_postings(spark, sf_dir)[0]
+
+
+def _decon_train_grams(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return decon_postings(spark, sf_dir)[1]
+
+
+def materialize_decon_index(spark: SparkSession, sf_dir: str) -> list[str]:
+    """Write the decontamination index tables (idempotent)."""
+    from ..pipeline.snapshot_cache import BY_NAME
+    return BY_NAME["decon_index"].build(spark, sf_dir)
 
 
 DECONTAMINATE_SQL = rf"""
@@ -388,7 +390,7 @@ def _bpe_merge_expr(left: str, right: str) -> str:
 
 def bpe_train(spark: SparkSession, sf_dir: str,
               rounds: int = BPE_MERGES) -> DataFrame:
-    words = (_docs(spark, sf_dir)
+    words = (read_documents(spark, sf_dir)
              .filter(F.length(F.trim("text")) > 0)
              .select(F.explode(F.split("text", " ")).alias("word"))
              .filter(F.length("word") > 0)
@@ -421,7 +423,7 @@ def bpe_train(spark: SparkSession, sf_dir: str,
 
 def bpe_train_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registered-query wrapper.  With a written merge table
-    (``materialize_bpe_merges``) this is a scan + rank sort — a tokenizer
+    (``bpe_merges``) this is a scan + rank sort — a tokenizer
     is trained ONCE per corpus snapshot and shipped as a ranks file (the
     repo's own ``textnorm/assets/webspark_bpe.tiktoken`` is exactly such
     an artifact); nobody re-runs the merge loop per query."""
@@ -431,13 +433,6 @@ def bpe_train_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         return (scan.select("rank", "left", "right", "merged", "pair_freq")
                 .orderBy("rank"))
     return bpe_train(spark, sf_dir)
-
-
-def materialize_bpe_merges(spark: SparkSession, sf_dir: str) -> str:
-    """Write the per-snapshot learned BPE merge table (idempotent)."""
-    from ..pipeline.snapshot_cache import materialize
-    return materialize(spark, "bpe_merges", sf_dir,
-                       lambda: bpe_train(spark, sf_dir))
 
 
 # ------------------------------------------------------------- dsir
@@ -464,7 +459,7 @@ _DSIR_B = 1024
 
 
 def _dsir_feats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = (_docs(spark, sf_dir)
+    d = (read_documents(spark, sf_dir)
          .filter(F.length(F.trim("text")) > 0)
          .select("doc_id", F.split("text", " ").alias("w")))
     from .dedup import _md5_bigint
@@ -484,7 +479,7 @@ def _dsir_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The B-bucket target/raw histogram — DSIR's trained importance
     model (B rows).  The paper fits it once over the target + raw
     corpora and scores everything with the frozen table; with a written
-    table (``materialize_dsir_hist``) this is a scan."""
+    table (``dsir_hist``) this is a scan."""
     from ..pipeline.snapshot_cache import read_table
     scan = read_table(spark, "dsir_hist", sf_dir)
     if scan is not None:
@@ -492,13 +487,6 @@ def _dsir_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (_dsir_feats(spark, sf_dir).groupBy("b")
             .agg(F.sum(F.col("is_t").cast("long")).alias("cnt_t"),
                  F.sum((~F.col("is_t")).cast("long")).alias("cnt_r")))
-
-
-def materialize_dsir_hist(spark: SparkSession, sf_dir: str) -> str:
-    """Write the per-snapshot DSIR bucket histogram (idempotent)."""
-    from ..pipeline.snapshot_cache import materialize
-    return materialize(spark, "dsir_hist", sf_dir,
-                       lambda: _dsir_hist(spark, sf_dir))
 
 
 def dsir_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -588,7 +576,7 @@ def _drift_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unsorted drift relation — shared by ``capture_drift`` and the
     ``recrawl_schedule`` consumer."""
     md5i = _md5i_col
-    d = _docs(spark, sf_dir)
+    d = read_documents(spark, sf_dir)
     did = F.col("doc_id").cast("string")
     words = F.split(F.regexp_replace(F.lower(F.trim("text")), r"\s+", " "),
                     " ")
@@ -747,7 +735,7 @@ _MIX_PPM = 1_000_000
 
 
 def mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs(spark, sf_dir)
+    d = read_documents(spark, sf_dir)
     ntok = F.size(F.split(F.regexp_replace(F.lower(F.trim("text")),
                                            r"\s+", " "), " "))
     w = F.element_at(
@@ -967,7 +955,7 @@ _TBM_BUDGET = 30_000  # total mixture budget in whitespace tokens
 
 def token_budget_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
-    d = _docs(spark, sf_dir)
+    d = read_documents(spark, sf_dir)
     ntok = F.size(F.split(F.regexp_replace(F.lower(F.trim("text")),
                                            r"\s+", " "), " "))
     w = F.element_at(

@@ -44,6 +44,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import read_documents
+
 LINE_WORDS = 10
 _BOILER = "subscribe to our newsletter follow us on social media"
 _LOREM = "lorem ipsum dolor sit amet "
@@ -56,16 +58,11 @@ RE_IP = r"\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}"
 RE_PHONE = r"555-\d{4}"
 
 
-def _docs(spark, sf_dir):
-    from ..session import spread
-    return spread(spark.read.parquet(f"{sf_dir}/documents.parquet"))
-
-
 def weblines(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, nlines, line_no, raw, line): the deterministic web-shaped
     line view.  ``raw`` is the post-boilerplate pre-decoration line (the
     dedup target); ``line`` is fully decorated."""
-    d = (_docs(spark, sf_dir)
+    d = (read_documents(spark, sf_dir)
          .filter(F.length(F.trim("text")) > 0)
          .select("doc_id", F.split("text", " ").alias("w")))
     d = d.withColumn("nlines",
@@ -319,7 +316,8 @@ def corpus_keep_decisions(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``corpus_keep``) reuses the persisted relation instead of re-running
     the LSH chain — the local-mode analogue of writing the decision
     columns once and scanning them thereafter."""
-    scan = _web_decisions_scan(spark, sf_dir)
+    from ..pipeline.snapshot_cache import read_table
+    scan = read_table(spark, "web_decisions", sf_dir)
     if scan is not None:
         return scan.select("doc_id", "gopher_pass", "c4_pass",
                            "dedup_kept", "clean", "corpus_keep")
@@ -733,7 +731,7 @@ def mojibake_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..textnorm.mojibake import fix_mojibake, sloppy_cp1252_decode
 
-    d = _docs(spark, sf_dir)
+    d = read_documents(spark, sf_dir)
     words = F.split("text", " ")
     enriched = F.concat_ws(" ", F.transform(
         words, lambda w, i: F.when(
@@ -829,7 +827,7 @@ def nfc_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.types import (IntegerType, LongType, StringType,
                                    StructField, StructType)
 
-    d = _docs(spark, sf_dir)
+    d = read_documents(spark, sf_dir)
     markers = F.array(*[F.lit(m) for m in _NFC_MARKERS])
     words = F.split("text", " ")
     enriched = F.concat_ws(" ", F.transform(
@@ -891,7 +889,7 @@ ORDER BY doc_id
 # (count / count distinct host / min url) — no window, so a mega-mirrored
 # page (millions of captures at 100 TB) is absorbed by combiners.
 def _mirror_captures(spark, sf_dir):
-    d = _docs(spark, sf_dir).select("doc_id", "text")
+    d = read_documents(spark, sf_dir).select("doc_id", "text")
     base = d.select(
         "doc_id", "text", _host_col().alias("host"),
         F.lit("primary").alias("kind"))
@@ -1155,7 +1153,8 @@ def web_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     snapshot time), the whole query is a SCAN of it: the deployment
     shape at 100 TB, where the dedup chain is computed once per snapshot,
     never per query."""
-    scan = _web_decisions_scan(spark, sf_dir)
+    from ..pipeline.snapshot_cache import read_table
+    scan = read_table(spark, "web_decisions", sf_dir)
     if scan is not None:
         return (scan.select(
                     "doc_id",
@@ -1241,7 +1240,7 @@ def gate_columns_unordered(spark: SparkSession, sf_dir: str) -> DataFrame:
     a gate that filtered a doc out left-joins to NULL and coalesces to a
     failing gate)."""
     from .training import _BENCH_MOD, repetition_quality_decisions
-    anchor = _docs(spark, sf_dir).select("doc_id")
+    anchor = read_documents(spark, sf_dir).select("doc_id")
     gopher = repetition_quality_decisions(spark, sf_dir).select(
         "doc_id", "gopher_pass")
     c4 = c4_line_decisions(spark, sf_dir).select("doc_id", "c4_pass")
@@ -1260,16 +1259,8 @@ def gate_columns_unordered(spark: SparkSession, sf_dir: str) -> DataFrame:
 def materialize_web_decisions(spark: SparkSession, sf_dir: str) -> str:
     """Write the decision table for this corpus snapshot (idempotent: an
     existing complete table is left alone).  Returns the table path."""
-    from ..pipeline.snapshot_cache import materialize
-    return materialize(spark, "web_decisions", sf_dir,
-                       lambda: web_decisions_unordered(spark, sf_dir))
-
-
-def _web_decisions_scan(spark: SparkSession, sf_dir: str):
-    """The written decision table for ``sf_dir``, or None if no version
-    of it is published (a crashed write never serves)."""
-    from ..pipeline.snapshot_cache import read_table
-    return read_table(spark, "web_decisions", sf_dir)
+    from ..pipeline.snapshot_cache import BY_NAME
+    return BY_NAME["web_decisions"].build(spark, sf_dir)[0]
 
 
 _FUNNEL_GATES = ("gopher", "c4", "dedup", "decontam", "robots",
@@ -1284,7 +1275,8 @@ def curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     composition up to and including it.  One scan (or one decision
     computation), ONE aggregation, then a 7-row ``stack`` unpivot — no
     joins, no second pass, any corpus size."""
-    scan = _web_decisions_scan(spark, sf_dir)
+    from ..pipeline.snapshot_cache import read_table
+    scan = read_table(spark, "web_decisions", sf_dir)
     d = scan if scan is not None else web_decisions_unordered(spark, sf_dir)
     conds = {
         "gopher": F.col("gopher_pass"), "c4": F.col("c4_pass"),
@@ -1368,7 +1360,7 @@ _BP_FRAC_NUM, _BP_FRAC_DEN = 3, 10   # strip at ≥ 30% site frequency
 def _bp_base(spark, sf_dir):
     """Doc-level relation with the paragraph-struct array still in-row
     (one row per document — the site doc counts aggregate this)."""
-    d = (_docs(spark, sf_dir)
+    d = (read_documents(spark, sf_dir)
          .filter(F.length(F.trim("text")) > 0)
          .select("doc_id",
                  F.split(F.regexp_replace(F.lower(F.trim("text")),
@@ -1411,7 +1403,7 @@ def _site_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-level boilerplate lexicon.  A curation deployment fits this
     once per snapshot (it is a pure function of the corpus) and strips
     against the frozen table; with a written table
-    (``materialize_site_boilerplate``) this is a scan."""
+    (``site_boilerplate``) this is a scan."""
     from ..pipeline.snapshot_cache import read_table
     scan = read_table(spark, "site_boilerplate", sf_dir)
     if scan is not None:
@@ -1428,13 +1420,6 @@ def _site_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("c") * _BP_FRAC_DEN
                     >= F.col("n_docs") * _BP_FRAC_NUM)
             .select("site", "ptext"))
-
-
-def materialize_site_boilerplate(spark: SparkSession, sf_dir: str) -> str:
-    """Write the per-snapshot site-boilerplate lexicon (idempotent)."""
-    from ..pipeline.snapshot_cache import materialize
-    return materialize(spark, "site_boilerplate", sf_dir,
-                       lambda: _site_boilerplate(spark, sf_dir))
 
 
 def boilerplate_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1526,7 +1511,7 @@ _HEX_RUN_RE = ("(?:[a-f][0-9a-f]{7}"
 
 def url_templates(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..session import ordered as _ordered
-    d = _docs(spark, sf_dir).select("doc_id")
+    d = read_documents(spark, sf_dir).select("doc_id")
     did = F.col("doc_id").cast("string")
     md5i = _md5i_col
     sec = F.element_at(F.array(F.lit("news"), F.lit("blog"),

@@ -14,21 +14,22 @@ test_chunk_management_within_dataset/`` and exercised by
   * update chunk   — same id recompute when content changes
   * delete chunks  — by chunk id set
 
-Store = a parquet directory holding the flat chunk rows that
-``operators.extract.chunks_table`` derives from an extraction snapshot
-table (Iceberg ``MERGE INTO``/``DELETE FROM`` replace the rewrite in a
-real deployment — the logical ops are identical).  Deletes/updates rewrite
-via LEFT ANTI join — the only scalable shape without a table format.
+Store = a ``pipeline/snapshots.py`` ``SnapshotTable`` holding the flat
+chunk rows that ``operators.extract.chunks_table`` derives from an
+extraction snapshot table.  Add is ``commit_append``, delete is the
+copy-on-write ``commit_delete`` (Iceberg's ``DELETE FROM``): each is one
+atomic commit, so a failed write leaves the store at its last version.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..textnorm.rag_tokenizer import fine_grained_tokenize, tokenize
 from ..textnorm.tokens import num_tokens_from_string
 from ..textnorm.xxh64 import xxh64_hexdigest
+from .snapshots import SnapshotTable
 
 
 def chunk_row(url: str, chunk_text: str, chunk_seq: int = 0,
@@ -58,7 +59,7 @@ def list_chunks(spark: SparkSession, store: str, url: str | None = None,
     """Paginated chunk listing with optional content keyword filter —
     deterministic order (url, chunk_seq, chunk_id)."""
     from pyspark.sql import Window
-    df = spark.read.parquet(store)
+    df = SnapshotTable(spark, store).read()
     if url is not None:
         df = df.filter(F.col("url") == url)
     if keywords:
@@ -72,43 +73,37 @@ def list_chunks(spark: SparkSession, store: str, url: str | None = None,
 
 def add_chunks(spark: SparkSession, store: str, rows: list) -> None:
     """Append chunk records (list of dicts from ``chunk_row``)."""
-    base = spark.read.parquet(store)
-    data = [tuple(r.get(c) for c in base.columns) for r in rows]
-    spark.createDataFrame(data, schema=base.schema) \
-        .write.mode("append").parquet(store)
+    t = SnapshotTable(spark, store)
+    schema = t.read().schema
+    data = [tuple(r.get(c) for c in schema.names) for r in rows]
+    t.commit_append(spark.createDataFrame(data, schema=schema))
 
 
 def delete_chunks(spark: SparkSession, store: str, chunk_ids: list) -> int:
-    """Delete by id set (LEFT ANTI rewrite; DELETE FROM under Iceberg).
-    Returns rows removed."""
+    """Delete by id set (one ``commit_delete``).  Returns rows removed."""
     if not chunk_ids:
         return 0
-    df = spark.read.parquet(store)
-    ids = spark.createDataFrame([(i,) for i in chunk_ids],
-                                "chunk_id string")
-    removed = df.join(F.broadcast(ids), "chunk_id", "left_semi").count()
-    if removed == 0:
-        return 0
-    kept = df.join(F.broadcast(ids), "chunk_id", "left_anti")
-    tmp = store + ".tmp"
-    kept.write.mode("overwrite").parquet(tmp)
-    spark.read.parquet(tmp).write.mode("overwrite").parquet(store)
-    import shutil
-    shutil.rmtree(tmp, ignore_errors=True)
+    t = SnapshotTable(spark, store)
+    hit = F.col("chunk_id").isin(list(chunk_ids))
+    removed = t.read().filter(hit).count()
+    if removed:
+        t.commit_delete(hit)
     return removed
 
 
 def update_chunk(spark: SparkSession, store: str, chunk_id: str,
                  new_text: str) -> str:
     """Replace a chunk's content: recompute id/tokens like the reference's
-    update path; returns the new chunk id."""
-    df = spark.read.parquet(store)
+    update path; returns the new chunk id.  The new row lands before the
+    old one goes, so a crash in between leaves both, never neither."""
+    df = SnapshotTable(spark, store).read()
     old = df.filter(F.col("chunk_id") == chunk_id).collect()
     if not old:
         raise KeyError(chunk_id)
     o = old[0].asDict()
     new = chunk_row(o["url"], new_text, o["chunk_seq"], o.get("warc_ts"),
                     o.get("lang"))
-    delete_chunks(spark, store, [chunk_id])
-    add_chunks(spark, store, [new])
+    if new["chunk_id"] != chunk_id:     # else the content is unchanged
+        add_chunks(spark, store, [new])
+        delete_chunks(spark, store, [chunk_id])
     return new["chunk_id"]

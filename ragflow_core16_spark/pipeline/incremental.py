@@ -68,6 +68,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import read_documents
 from .snapshot_cache import (DELTA_FAMILIES, FAMILIES, corpus_fingerprint,
                              materialize, read_table)
 
@@ -117,7 +118,7 @@ def dedup_index_delta_frames(spark: SparkSession, base_dir: str,
     their fresh versions arrive with the batch, so new pairs (including
     re-derived ones for the re-crawls) come out of the same
     batch ⋈ merged bucket join."""
-    from ..operators.dedup import (N_HASHES, _band_rel, _docs,
+    from ..operators.dedup import (N_HASHES, _band_rel,
                                    _jaccard_exact_for, _lsh_est_for,
                                    _propagate_min_labels, _shingles_of,
                                    _signature_wide, _simhash_unordered)
@@ -158,14 +159,14 @@ def dedup_index_delta_frames(spark: SparkSession, base_dir: str,
     # into a pushed In filter; a larger set is never collected and prunes
     # through a left-semi join (broadcast by AQE only while it is under
     # the broadcast threshold, shuffled above it).
-    batch_ids = _docs(spark, batch_dir).select("doc_id")
+    batch_ids = read_documents(spark, batch_dir).select("doc_id")
     cand_ids = (cand.select(F.col("doc_a").alias("doc_id"))
                 .unionByName(cand.select(F.col("doc_b").alias("doc_id")))
                 .distinct())
     day1 = cand_ids.join(batch_ids, "doc_id", "anti")
     day1_ids = [r.doc_id for r in
                 day1.limit(DAY1_IDS_COLLECT_MAX + 1).collect()]
-    sh = _shingles_of(_docs(spark, batch_dir))
+    sh = _shingles_of(read_documents(spark, batch_dir))
     if day1_ids:
         base_docs = (spark.read
                      .parquet(f"{base_dir.rstrip('/')}/documents.parquet")
@@ -221,14 +222,9 @@ def decon_delta_frames(spark: SparkSession, base_dir: str, batch_dir: str,
     docs' stale rows are retired from the stored side first — including
     a re-crawled EVAL doc's old bench grams, which is why the bench
     posting carries doc_id."""
-    from ..operators.dedup import _docs
-    from ..operators.training import _BENCH_MOD, decon_gram_rel
+    from ..operators.training import decon_postings
     base = _require_base(spark, DECON_KINDS, base_dir)
-    bg = decon_gram_rel(_docs(spark, batch_dir))
-    batch_bench = (bg.filter(F.col("doc_id") % _BENCH_MOD == 0)
-                   .select("doc_id", "gram").distinct())
-    batch_train = (bg.filter(F.col("doc_id") % _BENCH_MOD != 0)
-                   .select("doc_id", "gram").distinct())
+    batch_bench, batch_train = decon_postings(spark, batch_dir)
     return {"decon_bench_grams": _anti_ids(
                 base["decon_bench_grams"].select("doc_id", "gram"),
                 recrawl_ids).unionByName(batch_bench),
@@ -351,7 +347,6 @@ def _recrawl_ids(spark, base_dir: str, batch_dir: str,
     the batch is genuinely disjoint (the appends stay pure).  A doc_id
     twice WITHIN the batch is always an error: no merge can tell which
     row is the latest capture."""
-    from ..operators.dedup import _docs
     guidance = ("collapse re-crawls to one row per doc_id upstream "
                 "(latest-capture semantics)")
     base_ids = read_table(spark, "doc_stats", base_dir)
@@ -359,7 +354,7 @@ def _recrawl_ids(spark, base_dir: str, batch_dir: str,
         raise ValueError(
             f"incremental update needs the base doc_stats table for "
             f"{base_dir} (run the full curate/index job first)")
-    batch_ids = _docs(spark, batch_dir).select("doc_id")
+    batch_ids = read_documents(spark, batch_dir).select("doc_id")
     base_ids = base_ids.select("doc_id")
     c = (batch_ids.join(base_ids.withColumn("in_base", F.lit(True)),
                         "doc_id", "left")

@@ -1,10 +1,13 @@
-"""Size-targeted repartitioning + host-skew salting.
+"""Size-targeted repartitioning of the extraction input.
 
 North-rule requirement: "explicit partition / shuffle / skew handling …
 size-targeted repartitioning by (url-hash, warc_ts), salting of skewed
 hosts".  The extraction stage is embarrassingly parallel per row, so the
 skew that matters is *byte-size* skew (a few giant pages / hot hosts
 serializing into one task), not key skew in a join (SURVEY.md §4.2).
+Key skew in a host- or source-keyed aggregation is salted where it
+arises: ``webclean.domain_cap``'s two-stage top-K and
+``relational.salted_source_agg``'s 16-way fan-out.
 
 Strategy:
   * ``repartition_by_size``: one JVM-side pre-pass
@@ -19,8 +22,8 @@ Strategy:
     partitions).  An empty input comes back as the same object, so a
     caller can skip its downstream work without counting again.
   * At 100 TB with 128 MB targets this yields ~800k partitions — beyond
-    the default scheduler comfort zone, so the clamp caps at ``max_partitions``
-    and AQE coalescing handles the low end.
+    the default scheduler comfort zone, so the clamp caps at
+    ``MAX_PARTITIONS`` and AQE coalescing handles the low end.
 """
 
 from __future__ import annotations
@@ -28,11 +31,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+MAX_PARTITIONS = 1 << 20
+
 
 def repartition_by_size(pages: DataFrame,
-                        target_partition_bytes: int = 64 * 1024 * 1024,
-                        min_partitions: int = 1,
-                        max_partitions: int = 1 << 20) -> DataFrame:
+                        target_partition_bytes: int = 64 * 1024 * 1024
+                        ) -> DataFrame:
     """Repartition so each partition carries ≈target bytes of html
     payload; returns ``pages`` itself when the pre-pass counts no rows."""
     stats = pages.select(
@@ -41,41 +45,10 @@ def repartition_by_size(pages: DataFrame,
     ).collect()[0]
     if stats["n"] == 0:
         return pages
-    n_parts = int(max(min_partitions,
-                      min(max_partitions,
-                          (stats["total_bytes"] + target_partition_bytes - 1)
-                          // target_partition_bytes)))
+    n_parts = int(max(1, min(MAX_PARTITIONS,
+                             (stats["total_bytes"] + target_partition_bytes
+                              - 1) // target_partition_bytes)))
     # default parallelism floor so small inputs still use the whole cluster
     sc_default = pages.sparkSession.sparkContext.defaultParallelism
     n_parts = max(n_parts, min(sc_default, int(stats["n"]) or 1))
     return pages.repartition(n_parts, F.xxhash64("url"), F.col("warc_ts"))
-
-
-def host_of(url_col):
-    """Extract host from url (pure column expr, codegen-friendly)."""
-    return F.regexp_extract(url_col, r"^[a-z]+://([^/]+)/", 1)
-
-
-def salted_host_key(pages: DataFrame, skew_bytes_threshold: int,
-                    salt_buckets: int = 16) -> DataFrame:
-    """Attach a ``host_key`` column for host-level aggregations: hosts whose
-    cumulative html bytes exceed the threshold get a salt suffix so a
-    downstream groupBy(host_key) cannot concentrate a hot host in one task.
-    (Used by host-level metrics rollups, not by the extraction map itself.)
-    """
-    host = host_of(F.col("url"))
-    hot = (pages
-           .groupBy(host.alias("host"))
-           .agg(F.sum(F.length("html")).alias("b"))
-           .filter(F.col("b") > skew_bytes_threshold)
-           .select("host", F.lit(True).alias("is_hot")))
-    return (pages
-            .withColumn("host", host)
-            .join(F.broadcast(hot), "host", "left")
-            .withColumn(
-                "host_key",
-                F.when(F.col("is_hot"),
-                       F.concat_ws("#", F.col("host"),
-                                   (F.xxhash64("url") % salt_buckets).cast("string")))
-                .otherwise(F.col("host")))
-            .drop("is_hot"))

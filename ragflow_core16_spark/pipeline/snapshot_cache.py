@@ -25,6 +25,7 @@ fixture under an unchanged sf_dir misses the cache.
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import importlib
 import os
@@ -34,23 +35,28 @@ from .snapshots import SnapshotTable
 
 
 class Family(NamedTuple):
-    """The snapshot tables one public ``materialize_*`` builder writes.
+    """A group of snapshot tables built together, in ``kinds`` order.
 
-    ``builder`` and ``delta`` are dotted names under the package,
-    resolved on first call: the builders import this module, so it
-    cannot import them.  ``delta`` names the day-2 merge in
+    ``kinds`` maps each kind to the ``(spark, sf_dir) -> DataFrame``
+    function that computes it, and ``delta`` names the day-2 merge in
     ``pipeline/incremental.py`` — ``(spark, base_dir, batch_dir,
     combined_dir, recrawl_ids) -> {kind: DataFrame}`` for the kinds in
-    ``delta_kinds`` — or is None when the family only rebuilds."""
+    ``delta_kinds`` — or is None when the family only rebuilds.  Both
+    are dotted names under the package, resolved on first call: the
+    operators import this module, so it cannot import them."""
     name: str
     job: str                    # the job that builds it: curate | index
-    kinds: tuple[str, ...]
-    builder: str
+    kinds: dict[str, str]
     delta: str | None = None
     delta_kinds: tuple[str, ...] = ()
 
-    def build(self, spark, sf_dir: str):
-        return _resolve(self.builder)(spark, sf_dir)
+    def build(self, spark, sf_dir: str) -> list[str]:
+        """Materialize each kind in order (a published one is skipped),
+        so a later kind's compute scans the earlier kinds' tables.
+        Returns the table paths."""
+        return [materialize(spark, kind, sf_dir,
+                            functools.partial(_resolve(ref), spark, sf_dir))
+                for kind, ref in self.kinds.items()]
 
     def merge(self, *args):
         return _resolve(self.delta)(*args)
@@ -61,58 +67,66 @@ def _resolve(ref: str):
     return getattr(importlib.import_module(f"..{mod}", __package__), attr)
 
 
-#: every snapshot-table family, in build order: a later family's builder
+#: every snapshot-table family, in build order: a later family's compute
 #: may scan an earlier family's tables (the decision table's dedup_kept
 #: reads the dedup labels), and a later delta may read an earlier delta's
 #: merged tables (the decision-table merge reads the merged labels and
 #: decontamination postings)
 FAMILIES = (
     Family("dedup_index", "curate",
-           ("minhash_sigwide", "dedup_pairs", "dedup_labels", "simhash_fp",
-            "substring_spans"),
-           "operators.dedup.materialize_dedup_index",
+           {"minhash_sigwide": "operators.dedup._signature_wide",
+            "dedup_pairs": "operators.dedup._pairs_index_unordered",
+            "dedup_labels": "operators.dedup._cluster_labels",
+            "simhash_fp": "operators.dedup._simhash_unordered",
+            "substring_spans": "operators.dedup._substring_spans_unordered"},
            "pipeline.incremental.dedup_index_delta_frames",
            ("minhash_sigwide", "dedup_pairs", "dedup_labels",
             "simhash_fp")),
-    Family("site_boilerplate", "curate", ("site_boilerplate",),
-           "operators.webclean.materialize_site_boilerplate"),
+    Family("site_boilerplate", "curate",
+           {"site_boilerplate": "operators.webclean._site_boilerplate"}),
     Family("decon_index", "curate",
-           ("decon_bench_grams", "decon_train_grams"),
-           "operators.training.materialize_decon_index",
+           {"decon_bench_grams": "operators.training._decon_bench_grams",
+            "decon_train_grams": "operators.training._decon_train_grams"},
            "pipeline.incremental.decon_delta_frames",
            ("decon_bench_grams", "decon_train_grams")),
-    Family("web_decisions", "curate", ("web_decisions",),
-           "operators.webclean.materialize_web_decisions",
+    Family("web_decisions", "curate",
+           {"web_decisions": "operators.webclean.web_decisions_unordered"},
            "pipeline.incremental.web_decisions_delta_frames",
            ("web_decisions",)),
     Family("graph_index", "index",
-           ("graphrag_mentions", "graphrag_edges", "graphrag_labels"),
-           "operators.graphrag.materialize_graph_index"),
-    Family("raptor_tree", "index", ("raptor_nodes", "raptor_edges"),
-           "operators.raptor.materialize_raptor_tree"),
-    Family("keywords", "index", ("tfidf_keywords",),
-           "operators.textstats.materialize_keywords"),
-    Family("tag_features", "index", ("tag_features",),
-           "operators.tagging.materialize_tag_features"),
-    Family("doc_embeddings", "index", ("doc_embeddings",),
-           "operators.embed.materialize_doc_embeddings"),
-    Family("webgraph_ranks", "index", ("webgraph_ranks",),
-           "operators.graph.materialize_webgraph_ranks"),
-    Family("semantic_labels", "index", ("semantic_labels",),
-           "operators.similarity.materialize_semantic_labels"),
-    Family("bpe_merges", "index", ("bpe_merges",),
-           "operators.training.materialize_bpe_merges"),
-    Family("kn_bigram_lm", "index", ("kn_bigram_lm",),
-           "operators.textstats.materialize_kn_bigram_lm"),
-    Family("lang_unigram_lm", "index", ("lang_unigram_lm",),
-           "operators.textstats.materialize_lang_unigram_lm"),
-    Family("dsir_hist", "index", ("dsir_hist",),
-           "operators.training.materialize_dsir_hist"),
-    Family("retrieval_index", "index", ("term_postings", "doc_stats"),
-           "operators.retrieval.materialize_retrieval_index",
+           {"graphrag_mentions": "operators.graphrag._mentions",
+            "graphrag_edges": "operators.graphrag._graph_edges",
+            "graphrag_labels": "operators.graphrag._labels"}),
+    Family("raptor_tree", "index",
+           {"raptor_nodes": "operators.raptor._tree_nodes",
+            "raptor_edges": "operators.raptor._tree_edges"}),
+    Family("keywords", "index",
+           {"tfidf_keywords": "operators.textstats._tfidf_ranked"}),
+    Family("tag_features", "index",
+           {"tag_features": "operators.tagging._tag_content_scored"}),
+    Family("doc_embeddings", "index",
+           {"doc_embeddings": "operators.embed._doc_vectors"}),
+    Family("webgraph_ranks", "index",
+           {"webgraph_ranks": "operators.graph._ranks_unordered"}),
+    Family("semantic_labels", "index",
+           {"semantic_labels":
+            "operators.similarity._semantic_labels_unordered"}),
+    Family("bpe_merges", "index",
+           {"bpe_merges": "operators.training.bpe_train"}),
+    Family("kn_bigram_lm", "index",
+           {"kn_bigram_lm": "operators.textstats._kn_bigram_lm"}),
+    Family("lang_unigram_lm", "index",
+           {"lang_unigram_lm": "operators.textstats._lang_unigram_freqs"}),
+    Family("dsir_hist", "index",
+           {"dsir_hist": "operators.training._dsir_hist"}),
+    Family("retrieval_index", "index",
+           {"term_postings": "operators.retrieval._per_doc_tf",
+            "doc_stats": "operators.retrieval._dl_rel"},
            "pipeline.incremental.retrieval_index_delta_frames",
            ("term_postings", "doc_stats")),
 )
+#: family name → family
+BY_NAME = {f.name: f for f in FAMILIES}
 #: the families a day-2 batch merges into: the day-1 base a delta needs
 DELTA_FAMILIES = tuple(f for f in FAMILIES if f.delta)
 #: kinds a delta leaves behind: queries over a delta-built corpus fall
@@ -126,8 +140,7 @@ def materialize_families(spark, sf_dir: str, families) -> dict[str, str]:
     is idempotent).  Returns kind → table path."""
     paths = {}
     for fam in families:
-        fam.build(spark, sf_dir)
-        paths.update((k, table_path(k, sf_dir)) for k in fam.kinds)
+        paths.update(zip(fam.kinds, fam.build(spark, sf_dir)))
     return paths
 
 

@@ -229,10 +229,10 @@ class SnapshotTable:
     def _rewrite(self, match, keep, op: str, retries: int,
                  add_files: list[str] = (),
                  merged: StructType | None = None) -> int:
-        """The one commit core.  Copy-on-write: files holding a ``match``
-        row (if ``match`` is given) are rewritten to their ``keep`` rows,
-        the rest carried by reference, and ``add_files`` (table schema
-        ``merged``) join the snapshot."""
+        """Copy-on-write: files holding a ``match`` row (if ``match`` is
+        given) are rewritten to their ``keep`` rows, the rest carried by
+        reference, and ``add_files`` (table schema ``merged``) join the
+        snapshot."""
         m = self.manifest()
         schema_json = m.get("schema")    # None only for the empty table
         affected = set()
@@ -247,11 +247,20 @@ class SnapshotTable:
         if affected:
             new_files += self._write_data(keep(self._read_files(
                 sorted(affected), schema_json)))
+        return self._replace(affected, new_files, op, retries, merged)
 
+    def _replace(self, affected: set, new_files: list[str], op: str,
+                 retries: int, merged: StructType | None = None) -> int:
+        """The one commit core: the parent's files minus ``affected``
+        plus ``new_files``, under the PARENT's schema (unioned with
+        ``merged`` when the commit adds columns).  Every ``affected``
+        file must still be pinned by the parent, else a concurrent
+        compact/delete/overwrite unpinned it and publishing would
+        duplicate or resurrect rows: CommitConflict."""
         def build(parent: dict) -> dict:
             if not affected <= set(parent["files"]):
                 raise CommitConflict(
-                    f"{self.path}: files scanned for {op} were unpinned "
+                    f"{self.path}: files rewritten by {op} were unpinned "
                     f"by a concurrent commit — re-run the {op}")
             schema = parent.get("schema")
             if merged is not None:
@@ -305,21 +314,9 @@ class SnapshotTable:
             n_out = max(1, -(-total // tgt))
             n_out = int(n_out)
         rows = self._read_files(candidates, cur["schema"])
-        files = self._write_data(rows.coalesce(n_out))
-        cand = set(candidates)
-
-        def build(parent: dict) -> dict:
-            if not cand <= set(parent["files"]):
-                # a rival compact/delete/overwrite unpinned a file we
-                # rewrote — publishing would duplicate or resurrect rows
-                raise CommitConflict(
-                    f"{self.path}: files rewritten by compact were "
-                    f"unpinned by a concurrent commit — re-run")
-            return {"files": [f for f in parent["files"]
-                              if f not in cand] + files,
-                    "schema": cur["schema"],
-                    "rewrote_files": len(cand)}
-        return self._commit(build, "compact", retries)
+        return self._replace(set(candidates),
+                             self._write_data(rows.coalesce(n_out)),
+                             "compact", retries)
 
     def vacuum(self, keep_versions: int = 1) -> list[str]:
         """Delete data files unreachable from the kept trailing versions;

@@ -84,6 +84,13 @@ def spread(df, partitions: int | None = None):
     return df.repartition(n) if splits < n else df
 
 
+def read_documents(spark, sf_dir: str):
+    """A corpus snapshot's ``documents.parquet``, ``spread`` so the
+    operators' explodes and Python stages do not all run on the one scan
+    split a small single-row-group file yields (a no-op at real scale)."""
+    return spread(spark.read.parquet(f"{sf_dir}/documents.parquet"))
+
+
 def ordered_once(df, *cols):
     """``orderBy`` for presentation without re-executing the upstream
     Python stage.

@@ -85,7 +85,8 @@ class TestBucketedJoin:
 class TestAqeSkewJoin:
     def test_skewed_join_partitions_are_split(self, spark):
         """A hot join key must trigger AQE's skew-join split (the runtime
-        complement to the write-time salting in pipeline/partitioning.py).
+        complement to the salted two-stage aggregations, ``domain_cap``
+        and ``salted_source_agg``).
         Thresholds are forced low so the sf0.001 fixture exhibits 'skew'
         the way one hot host does at 100 TB."""
         confs = {

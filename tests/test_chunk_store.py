@@ -1,11 +1,16 @@
 """Chunk CRUD surface (reference sdk t_chunk.py / chunk management API)."""
 
+import os
+
 import pytest
+from pyspark.sql import DataFrameWriter
+from pyspark.sql import functions as F
 
 from ragflow_core16_spark.pipeline.chunk_store import (add_chunks, chunk_row,
                                                        delete_chunks,
                                                        list_chunks,
                                                        update_chunk)
+from ragflow_core16_spark.pipeline.snapshots import SnapshotTable
 
 
 @pytest.fixture(scope="module")
@@ -15,7 +20,8 @@ def store(spark, tmp_path_factory):
                                                         extract_pages)
     p = str(tmp_path_factory.mktemp("store") / "chunks")
     pages = pages_from_documents(spark, "/root/testdata/sf0.001").limit(40)
-    chunks_table(extract_pages(pages)).write.parquet(p)
+    SnapshotTable(spark, p).commit_overwrite(
+        chunks_table(extract_pages(pages)))
     return p
 
 
@@ -68,5 +74,36 @@ class TestChunkStore:
     def test_delete_empty_and_missing_ids(self, spark, store):
         assert delete_chunks(spark, store, []) == 0
         assert delete_chunks(spark, store, ["nonexistent-id"]) == 0
-        import os
         assert not os.path.exists(store + ".tmp")
+
+    def test_failing_rewrite_keeps_every_chunk(self, spark, store,
+                                               monkeypatch):
+        """A delete whose rewrite of the store fails while its job runs
+        must leave every chunk listable: nothing of the store is removed
+        before the new rows are safely written."""
+        before = sorted(r.chunk_id for r in list_chunks(
+            spark, store, page_size=10_000).collect())
+        real_mode, real_parquet = DataFrameWriter.mode, DataFrameWriter.parquet
+
+        def mode(self, save_mode):
+            self._mode_name = save_mode
+            return real_mode(self, save_mode)
+
+        def parquet(self, path, *args, **kwargs):
+            if path == store or path.startswith(store + os.sep):
+                # the same write, failing in its tasks
+                bad = DataFrameWriter(self._df.withColumn(
+                    "chunk_id", F.raise_error(F.lit("injected"))
+                    .cast("string")))
+                if getattr(self, "_mode_name", None):
+                    real_mode(bad, self._mode_name)
+                return real_parquet(bad, path, *args, **kwargs)
+            return real_parquet(self, path, *args, **kwargs)
+        monkeypatch.setattr(DataFrameWriter, "mode", mode)
+        monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+        with pytest.raises(Exception, match="injected"):
+            delete_chunks(spark, store, before[::2])
+        monkeypatch.undo()
+        after = sorted(r.chunk_id for r in list_chunks(
+            spark, store, page_size=10_000).collect())
+        assert after == before

@@ -152,14 +152,15 @@ def test_latest_complete_orders_ids_as_integers(tmp_path):
 
 def _compute_relations(spark, sf_dir):
     from ragflow_core16_spark.operators.dedup import (
-        _cluster_labels, _docs, _jaccard_exact_unordered,
+        _cluster_labels, _jaccard_exact_unordered,
         _lsh_est_unordered, _signature_wide, _simhash_unordered)
     from ragflow_core16_spark.operators.retrieval import _dl_rel, _per_doc_tf
     from ragflow_core16_spark.operators.training import (_BENCH_MOD,
                                                          decon_gram_rel)
     from ragflow_core16_spark.operators.webclean import (
         web_decisions_unordered)
-    grams = decon_gram_rel(_docs(spark, sf_dir))
+    from ragflow_core16_spark.session import read_documents
+    grams = decon_gram_rel(read_documents(spark, sf_dir))
     est = _lsh_est_unordered(spark, sf_dir)
     exact = _jaccard_exact_unordered(spark, sf_dir)
     return {

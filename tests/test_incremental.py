@@ -78,7 +78,7 @@ def delta_state(spark, corpora):
     run the incremental update.  Shared by the equality / routing /
     idempotence tests."""
     from ragflow_core16_spark.operators.dedup import (
-        _docs, _lsh_est_unordered, _jaccard_exact_unordered,
+        _lsh_est_unordered, _jaccard_exact_unordered,
         _cluster_labels, _signature_wide, _simhash_unordered)
     from ragflow_core16_spark.operators.retrieval import (
         _per_doc_tf, _dl_rel)
@@ -87,6 +87,7 @@ def delta_state(spark, corpora):
     from ragflow_core16_spark.operators.webclean import (
         web_decisions_unordered)
     from ragflow_core16_spark.pipeline.incremental import incremental_update
+    from ragflow_core16_spark.session import read_documents
 
     prev = os.environ.get("RAG_CURATION_DIR")
     os.environ["RAG_CURATION_DIR"] = corpora["warehouse"]
@@ -97,7 +98,7 @@ def delta_state(spark, corpora):
         comb = corpora["combined"]
         est = _lsh_est_unordered(spark, comb)
         exact = _jaccard_exact_unordered(spark, comb)
-        comb_grams = decon_gram_rel(_docs(spark, comb))
+        comb_grams = decon_gram_rel(read_documents(spark, comb))
         oracle = {
             "minhash_sigwide": _signature_wide(spark, comb).collect(),
             "dedup_pairs": est.join(exact, ["doc_a", "doc_b"], "left")

@@ -4,7 +4,8 @@ The reference computes its derived structures once at indexing — the
 GraphRAG entity graph/communities (`graphrag/general/index.py`), the
 RAPTOR tree and per-chunk keywords/tag_feas (`rag/svr/task_executor.py`)
 — and queries read the stored result.  These tests pin the Spark
-analogue: ``materialize_*`` writes per corpus snapshot, query functions
+analogue: each ``snapshot_cache.FAMILIES`` family's build writes per
+corpus snapshot, query functions
 scan when the table exists, and the scan path is byte-identical to the
 full compute path.
 """
@@ -28,6 +29,13 @@ def _deep_clean(spark):
     gc.collect()
 
 
+def _build(spark, *families):
+    """Build the named ``snapshot_cache.FAMILIES`` families over SF."""
+    from ragflow_core16_spark.pipeline.snapshot_cache import BY_NAME
+    for name in families:
+        BY_NAME[name].build(spark, SF)
+
+
 class TestGraphRaptorScanParity:
     def test_all_index_backed_queries_scan_equals_compute(
             self, spark, tmp_path, monkeypatch):
@@ -43,10 +51,8 @@ class TestGraphRaptorScanParity:
         compute = [fn(spark, SF).collect() for fn in qs]
         monkeypatch.setenv("RAG_CURATION_DIR", str(tmp_path / "cur"))
         _deep_clean(spark)
-        G.materialize_graph_index(spark, SF)
-        R.materialize_raptor_tree(spark, SF)
-        X.materialize_keywords(spark, SF)
-        T.materialize_tag_features(spark, SF)
+        _build(spark, "graph_index", "raptor_tree", "keywords",
+               "tag_features")
         _deep_clean(spark)
         for fn, want in zip(qs, compute):
             assert fn(spark, SF).collect() == want, fn.__name__
@@ -61,10 +67,8 @@ class TestGraphRaptorScanParity:
         from ragflow_core16_spark.operators import textstats as X
         monkeypatch.setenv("RAG_CURATION_DIR", str(tmp_path / "cur"))
         _deep_clean(spark)
-        G.materialize_graph_index(spark, SF)
-        R.materialize_raptor_tree(spark, SF)
-        X.materialize_keywords(spark, SF)
-        T.materialize_tag_features(spark, SF)
+        _build(spark, "graph_index", "raptor_tree", "keywords",
+               "tag_features")
         _deep_clean(spark)
         for fn in (G.entity_graph, R.raptor_tree, X.tfidf_keywords,
                    T.tag_content):
@@ -105,7 +109,7 @@ class TestBoundedLineage:
 
 
 class TestDedupIndexScanParity:
-    """materialize_dedup_index writes the signature / verified-pair /
+    """The dedup_index family writes the signature / verified-pair /
     cluster-label / simhash tables once per corpus snapshot; every dedup
     query must return byte-identical rows whether it scans the index or
     recomputes the chain, and the routed pair/cluster queries must be
@@ -182,30 +186,9 @@ class TestFeatureTableScanParity:
                 X.ccnet_bucket, X.unigram_logprob, W.boilerplate_strip]
 
     def _materialize_all(self, spark):
-        from ragflow_core16_spark.operators.embed import (
-            materialize_doc_embeddings)
-        from ragflow_core16_spark.operators.graph import (
-            materialize_webgraph_ranks)
-        from ragflow_core16_spark.operators.similarity import (
-            materialize_semantic_labels)
-        from ragflow_core16_spark.operators.textstats import (
-            materialize_kn_bigram_lm)
-        from ragflow_core16_spark.operators.training import (
-            materialize_bpe_merges)
-        from ragflow_core16_spark.operators.textstats import (
-            materialize_lang_unigram_lm)
-        from ragflow_core16_spark.operators.training import (
-            materialize_dsir_hist)
-        from ragflow_core16_spark.operators.webclean import (
-            materialize_site_boilerplate)
-        materialize_webgraph_ranks(spark, SF)
-        materialize_doc_embeddings(spark, SF)
-        materialize_semantic_labels(spark, SF)
-        materialize_bpe_merges(spark, SF)
-        materialize_kn_bigram_lm(spark, SF)
-        materialize_lang_unigram_lm(spark, SF)
-        materialize_dsir_hist(spark, SF)
-        materialize_site_boilerplate(spark, SF)
+        _build(spark, "webgraph_ranks", "doc_embeddings", "semantic_labels",
+               "bpe_merges", "kn_bigram_lm", "lang_unigram_lm", "dsir_hist",
+               "site_boilerplate")
 
     def test_scan_equals_compute(self, spark, tmp_path, monkeypatch):
         _deep_clean(spark)
@@ -235,14 +218,14 @@ class TestFeatureTableScanParity:
         from ragflow_core16_spark.operators import similarity as S
         monkeypatch.setenv("RAG_CURATION_DIR", str(tmp_path / "cur"))
         _deep_clean(spark)
-        S.materialize_semantic_labels(spark, SF)
+        _build(spark, "semantic_labels")
         _deep_clean(spark)
         plan = formatted_plan(S.semantic_dedup(spark, SF, threshold=0.5))
         assert "Join" in plan  # recomputed, not the join-free scan
 
 
 class TestRetrievalIndexScanParity:
-    """materialize_retrieval_index writes the (tok, doc_id, tf) posting
+    """The retrieval_index family writes the (tok, doc_id, tf) posting
     relation + per-doc lengths — the engine's analogue of the reference's
     ingest-time ES index (conf/mapping.json; the task executor bulk-
     inserts once, every search reads the index).  Every retrieval query

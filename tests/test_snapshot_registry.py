@@ -1,6 +1,7 @@
 """The snapshot-table family registry (``snapshot_cache.FAMILIES``) is the
-one declaration of which tables exist, who builds them and which a day-2
-delta maintains.  These checks read the package source — no Spark."""
+one declaration of which tables exist, which function computes each and
+which a day-2 delta maintains.  These checks read the package source —
+no Spark."""
 
 import os
 import re
@@ -11,9 +12,8 @@ PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(
     __file__))), "ragflow_core16_spark")
 
 
-def _sources(sub=""):
-    root = os.path.join(PKG, sub)
-    for dirpath, _dirs, files in os.walk(root):
+def _sources():
+    for dirpath, _dirs, files in os.walk(PKG):
         for f in sorted(files):
             if f.endswith(".py"):
                 with open(os.path.join(dirpath, f)) as fh:
@@ -25,20 +25,16 @@ def _owner(kind):
 
 
 def test_every_table_literal_belongs_to_exactly_one_family():
-    call = re.compile(r'\b(?:materialize|read_table)\(\s*spark,\s*"(\w+)"')
+    every = [k for f in SC.FAMILIES for k in f.kinds]
+    assert len(every) == len(set(every)) == 25
+    for f in SC.FAMILIES:
+        for ref in f.kinds.values():
+            assert callable(SC._resolve(ref)), ref
+    call = re.compile(r'\bread_table\(\s*spark,\s*"(\w+)"')
     kinds = {k for src in _sources() for k in call.findall(src)}
-    assert len(kinds) == 25
+    assert kinds
     for kind in sorted(kinds):
         assert len(_owner(kind)) == 1, (kind, _owner(kind))
-
-
-def test_every_operator_builder_is_registered_once():
-    defined = {name for src in _sources("operators")
-               for name in re.findall(r"^def (materialize_\w+)\(", src,
-                                      re.M)}
-    registered = [f.builder.rsplit(".", 1)[1] for f in SC.FAMILIES]
-    assert len(defined) == 16
-    assert sorted(registered) == sorted(defined)
 
 
 def test_curate_and_index_jobs_partition_all_kinds():
@@ -53,7 +49,8 @@ def test_curate_and_index_jobs_partition_all_kinds():
 
 def test_names_resolve_to_the_declared_functions():
     for f in SC.FAMILIES:
-        assert SC._resolve(f.builder).__name__ == f.builder.rsplit(".", 1)[1]
+        for ref in f.kinds.values():
+            assert SC._resolve(ref).__name__ == ref.rsplit(".", 1)[1]
         if f.delta:
             assert SC._resolve(f.delta).__name__ == f.delta.rsplit(".", 1)[1]
             assert f.delta_kinds and set(f.delta_kinds) <= set(f.kinds)

@@ -379,6 +379,26 @@ class TestRowLevelDelete:
         assert rival_files <= set(t.manifest()["files"])
         assert _ids(t.read()) == list(range(6))
 
+    def test_compact_keeps_a_racing_append_column(self, spark, tmp_path,
+                                                  monkeypatch):
+        """A rival append that adds a column while a compact writes its
+        data must keep that column: the compact commits under the
+        parent's schema, not the one it read at the start."""
+        t = SnapshotTable(spark, str(tmp_path / "t"))
+        t.commit_append(_docs(spark, 0, 3))
+        frozen = t.manifest()
+        real_manifest = t.manifest
+        t.commit_append(_docs(spark, 3, 6).withColumn("b", F.lit("x")))
+        monkeypatch.setattr(
+            t, "manifest",
+            lambda version=None: (frozen if version is None
+                                  else real_manifest(version)))
+        t.compact()
+        monkeypatch.undo()
+        assert t.manifest()["op"] == "compact"
+        got = {r.doc_id: r.b for r in t.read().collect()}
+        assert got == {0: None, 1: None, 2: None, 3: "x", 4: "x", 5: "x"}
+
     def test_compact_conflicts_with_concurrent_compact(self, spark,
                                                        tmp_path,
                                                        monkeypatch):

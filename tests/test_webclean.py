@@ -684,12 +684,13 @@ class TestDecisionTable:
         import os
 
         from ragflow_core16_spark.operators.webclean import (
-            _web_decisions_scan, web_decisions_path)
+            web_decisions_path)
+        from ragflow_core16_spark.pipeline.snapshot_cache import read_table
         monkeypatch.setenv("RAG_CURATION_DIR", str(tmp_path / "cur"))
         path = web_decisions_path(SF)
         spark.range(3).toDF("doc_id").write.parquet(
             os.path.join(path, "data", "crashed"))
-        assert _web_decisions_scan(spark, SF) is None
+        assert read_table(spark, "web_decisions", SF) is None
 
     def test_fingerprint_tracks_input_bytes(self, tmp_path, monkeypatch):
         # a regenerated documents file under the SAME sf_dir must map to
