@@ -73,13 +73,20 @@ def main(argv=None) -> int:
                     help="re-extract every page and publish it as one "
                          "upsert commit: its rows replace the committed "
                          "rows of the same urls")
-    ap.add_argument("--target-partition-mb", type=int, default=64)
+    ap.add_argument("--target-partition-mb", type=int, default=64,
+                    help="target extraction partition size: sets "
+                         "spark.sql.adaptive.advisoryPartitionSizeInBytes,"
+                         " toward which AQE's rebalance of the input "
+                         "coalesces small partitions and splits large ones")
     args = ap.parse_args(argv)
 
     from pyspark.sql import functions as F
 
     from ragflow_core16_spark.session import get_spark
-    spark = get_spark(app_name="ragflow_core16_spark.extract")
+    spark = get_spark(
+        app_name="ragflow_core16_spark.extract",
+        extra_conf={"spark.sql.adaptive.advisoryPartitionSizeInBytes":
+                    str(args.target_partition_mb * 1024 * 1024)})
 
     from ragflow_core16_spark.pipeline.run import run_extraction_snapshotted
 
@@ -105,8 +112,7 @@ def main(argv=None) -> int:
         run_id=args.run_id,
         resume=not args.no_resume,
         chunk_token_num=args.chunk_tokens,
-        delimiter=args.delimiter,
-        target_partition_bytes=args.target_partition_mb * 1024 * 1024)
+        delimiter=args.delimiter)
     summary["docs_per_sec"] = round(
         summary["rows"] / summary["wall_sec"], 1) if summary["wall_sec"] else 0.0
 

@@ -9,11 +9,10 @@ chunk ids, emitting the extracted text plus a ``chunks`` array column.
 Scale design (100 TB / 10^12 rows):
   * The operator is embarrassingly parallel per row — no shuffle at all in
     the extraction stage itself.  The only shuffles in the full pipeline are
-    the optional size-targeted repartition before it (see
-    ``pipeline/partitioning.py``) and the ``metrics_table`` rollup over
-    the committed rows.  The repartition is not free on its input side:
-    its size pre-pass is an extra job that reads the html bytes and, on
-    resume, re-runs the anti-join against the committed urls.
+    the size rebalance before it (``pipeline/partitioning.py``: an AQE
+    rebalance that sizes its partitions from its own map statistics, in
+    the same query as the extraction write, so the input is read once)
+    and the ``metrics_table`` rollup over the committed rows.
   * Oversize guard (reference DOC_MAXIMUM_SIZE=128 MB,
     ``rag/svr/task_executor.py:218-220`` / ``rag/settings.py:55``) is a
     JVM-side ``length(html)`` predicate evaluated before any Python sees the

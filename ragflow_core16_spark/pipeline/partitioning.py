@@ -9,21 +9,33 @@ Key skew in a host- or source-keyed aggregation is salted where it
 arises: ``webclean.domain_cap``'s two-stage top-K and
 ``relational.salted_source_agg``'s 16-way fan-out.
 
-Strategy:
-  * ``repartition_by_size``: one JVM-side pre-pass
-    ``agg(count, sum(length(html)))`` — no Python, but it reads the html
-    bytes to measure them and re-runs whatever plan feeds ``pages`` (on
-    resume, the anti-join against the committed urls) — then
-    ``repartition(n, xxhash64(url), warc_ts)`` with
-    ``n = clamp(total_bytes / target_partition_bytes)``.  Hashing on
-    (url, warc_ts) spreads any single hot host across partitions because
-    url already contains the per-doc path; adding warc_ts guards against
-    url-duplicate hot keys (recrawls of one url land in different
-    partitions).  An empty input comes back as the same object, so a
-    caller can skip its downstream work without counting again.
-  * At 100 TB with 128 MB targets this yields ~800k partitions — beyond
-    the default scheduler comfort zone, so the clamp caps at
-    ``MAX_PARTITIONS`` and AQE coalescing handles the low end.
+Strategy: ``repartition_by_size`` is an adaptive (AQE) rebalance on
+(xxhash64(url), warc_ts).  It adds no job of its own: the shuffle's map
+side runs inside the consuming query, and AQE sizes the reduce side from
+that shuffle's own map statistics — what the input actually produced,
+after any filter or resume anti-join upstream, not an estimate made
+before it.
+
+  * Hashing on (url, warc_ts) spreads any single hot host across
+    partitions because url already contains the per-doc path; adding
+    warc_ts guards against url-duplicate hot keys (recrawls of one url
+    land in different partitions).  The rebalance hint takes column
+    names only, so the url hash is projected as a key column and dropped
+    after the exchange.
+  * Partition size follows ``spark.sql.adaptive.advisoryPartitionSizeInBytes``
+    (default 64 MB; ``extract_job --target-partition-mb`` sets it).  At
+    scale a partition over it is split along its map outputs by the
+    rebalance skew rule (``OptimizeSkewInRebalancePartitions``), so no
+    partition count is computed or clamped here.  Small partitions are
+    coalesced toward the smaller of the advisory size and total shuffle
+    bytes / default parallelism (never below
+    ``coalescePartitions.minPartitionSize``), by compressed bytes: a small
+    input can run on fewer partitions than cores.  The shuffle starts
+    from ``spark.sql.shuffle.partitions`` reducers; a deployment sets that
+    (or ``coalescePartitions.initialPartitionNum``) to its cluster.
+  * All of this needs AQE, which ``session.DEFAULT_CONF`` turns on;
+    without it the hint is a plain hash repartition into
+    ``spark.sql.shuffle.partitions`` partitions.
 """
 
 from __future__ import annotations
@@ -31,24 +43,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-MAX_PARTITIONS = 1 << 20
+_URL_HASH = "_url_hash"
 
 
-def repartition_by_size(pages: DataFrame,
-                        target_partition_bytes: int = 64 * 1024 * 1024
-                        ) -> DataFrame:
-    """Repartition so each partition carries ≈target bytes of html
-    payload; returns ``pages`` itself when the pre-pass counts no rows."""
-    stats = pages.select(
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(F.sum(F.length("html")), F.lit(0)).alias("total_bytes"),
-    ).collect()[0]
-    if stats["n"] == 0:
-        return pages
-    n_parts = int(max(1, min(MAX_PARTITIONS,
-                             (stats["total_bytes"] + target_partition_bytes
-                              - 1) // target_partition_bytes)))
-    # default parallelism floor so small inputs still use the whole cluster
-    sc_default = pages.sparkSession.sparkContext.defaultParallelism
-    n_parts = max(n_parts, min(sc_default, int(stats["n"]) or 1))
-    return pages.repartition(n_parts, F.xxhash64("url"), F.col("warc_ts"))
+def repartition_by_size(pages: DataFrame) -> DataFrame:
+    """``pages`` rebalanced by (xxhash64(url), warc_ts) into partitions of
+    about the advisory partition size; lazy, runs no job."""
+    return (pages.withColumn(_URL_HASH, F.xxhash64("url"))
+            .hint("rebalance", _URL_HASH, "warc_ts")
+            .drop(_URL_HASH))

@@ -15,15 +15,21 @@ back):
   * provenance — each committed row's ``run_id``/``part_id`` plus the
     manifest chain (``SnapshotTable.versions`` / ``as_of``).
 
-Each run is ONE atomic manifest commit, and that commit is the resume
-marker: a rerun with ``resume=True`` anti-joins the input against the
-committed urls, so only not-yet-extracted pages are processed, and a
-rerun over a committed table with none left publishes no version.  A
-crash before the commit leaves the table at its previous snapshot plus
-vacuumable orphan files; the rerun re-extracts exactly the uncommitted
-pages (deterministic bytes, same chunk ids).  ``resume=False``
-re-extracts every input page as one ``commit_upsert`` on url: no url is
-held twice, and committed urls outside the input stay.
+Each run is ONE Spark query and ONE atomic manifest commit.  The query
+is the write: input (anti-joined on resume) → size rebalance
+(``pipeline/partitioning.py``, an AQE rebalance that needs the
+``session.DEFAULT_CONF`` AQE settings) → extraction → parquet files, with
+the run summary observed on it; no job runs before it, so the input
+lineage (at scale a WARC parse) executes once.  The commit is the
+resume marker: a rerun with ``resume=True`` anti-joins the input against
+the committed urls, so only not-yet-extracted pages are processed, and a
+rerun over a committed table with none left publishes no version — the
+write observed no rows, so its empty files are deleted before the
+commit.  A crash before the commit leaves the table at its previous
+snapshot plus vacuumable orphan files; the rerun re-extracts exactly the
+uncommitted pages (deterministic bytes, same chunk ids).
+``resume=False`` re-extracts every input page as one ``commit_upsert``
+on url: no url is held twice, and committed urls outside the input stay.
 """
 
 from __future__ import annotations
@@ -43,9 +49,7 @@ def run_extraction_snapshotted(spark: SparkSession, pages: DataFrame,
                                table_dir: str, run_id: str | None = None,
                                resume: bool = True,
                                chunk_token_num: int = 128,
-                               delimiter: str = "\n!?。；！？",
-                               target_partition_bytes: int = 64 * 1024 * 1024
-                               ) -> dict:
+                               delimiter: str = "\n!?。；！？") -> dict:
     """Run (or resume) extraction into the snapshot table at
     ``table_dir``; returns the run summary."""
     run_id = run_id or uuid.uuid4().hex[:12]
@@ -53,29 +57,30 @@ def run_extraction_snapshotted(spark: SparkSession, pages: DataFrame,
     table = SnapshotTable(spark, table_dir)
     if resume and table.current_version() > 0:
         pages = pages.join(table.read().select("url"), "url", "left_anti")
-    sized = repartition_by_size(pages, target_partition_bytes)
-    if sized is pages and table.current_version() > 0:
-        # the size prepass counted no rows and a snapshot is committed:
-        # nothing left to extract, so publish no version (a no-op resume
-        # leaves the table as it was; a new table still gets its first,
-        # empty, readable version)
-        return {"run_id": run_id, "version": table.current_version(),
-                "wall_sec": time.time() - t0, "rows": 0, "ok": 0,
-                "error": 0, "bytes_in": 0, "chunks": 0}
-    # the summary is observed on the write itself (the first action on
-    # ``extracted``): the observe node runs in the write's result stage,
-    # after the size repartition's exchange, and only successful task
-    # attempts are merged, so a retried task counts once.  ``obs.get``
-    # is read only once the commit returned: a write that raised
-    # publishes no metrics, and ``get`` would wait for them.
+    # the summary is observed on the write itself, the pass's one query:
+    # the observe node runs in the write's result stage, after the size
+    # rebalance's exchange, and only successful task attempts are merged,
+    # so a retried task counts once.  ``obs.get`` is read only once the
+    # write returned: a write that raised publishes no metrics, and
+    # ``get`` would wait for them.
     obs = Observation()
-    extracted = (extract_pages(sized, chunk_token_num, delimiter)
+    extracted = (extract_pages(repartition_by_size(pages), chunk_token_num,
+                               delimiter)
                  .withColumn("run_id", F.lit(run_id))
                  .withColumn("part_id", F.spark_partition_id())
                  .observe(obs, *rollup_columns()))
-    version = (table.commit_append(extracted) if resume
-               else table.commit_upsert(extracted, "url"))
-    row = obs.get
+
+    def nothing_new() -> bool:
+        # the write saw no rows and a snapshot is committed: publish no
+        # version (a no-op resume leaves the table as it was; a new table
+        # still gets its first, empty, readable version)
+        return obs.get["n_rows"] == 0 and table.current_version() > 0
+
+    version = (table.commit_append(extracted, discard_if=nothing_new)
+               if resume else
+               table.commit_upsert(extracted, "url", discard_if=nothing_new))
+    # sums over no rows are NULL: an empty pass reports zeros
+    row = {k: v or 0 for k, v in obs.get.items()}
     return {"run_id": run_id, "version": version,
             "wall_sec": time.time() - t0, "rows": row["n_rows"],
             "ok": row["n_ok"], "error": row["n_error"],

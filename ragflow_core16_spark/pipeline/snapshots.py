@@ -36,8 +36,10 @@ from __future__ import annotations
 import json
 import os
 import re
+import shutil
 import time
 import uuid
+from collections.abc import Callable
 from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
@@ -159,7 +161,8 @@ class SnapshotTable:
         return best
 
     # ----------------------------------------------------------- writes
-    def commit_append(self, df: DataFrame, retries: int = 10) -> int:
+    def commit_append(self, df: DataFrame, retries: int = 10,
+                      discard_if: Callable[[], bool] | None = None) -> int:
         """Append ``df`` as one atomic snapshot; returns the new version.
 
         Schema evolution (Iceberg add-column / null-fill semantics):
@@ -174,10 +177,18 @@ class SnapshotTable:
             parquet reader; do an explicit ``commit_overwrite`` of the
             re-cast table instead — one rewrite, as Iceberg's migration
             tooling does without its per-file schema resolution layer).
+
+        ``discard_if``, when given, is called once ``df`` is written and
+        before the commit; if it returns True the written files are
+        deleted and nothing is published: the current version is
+        returned.  It lets a caller decide from what the write itself
+        observed (an ``Observation`` on ``df``) without a job before it.
         """
         aligned, merged = self._align(df, self._table_schema())
-        return self._rewrite(None, None, "append", retries,
-                             self._write_data(aligned), merged)
+        files = self._write_data(aligned, discard_if)
+        if files is None:
+            return self.current_version()
+        return self._rewrite(None, None, "append", retries, files, merged)
 
     def commit_overwrite(self, df: DataFrame, retries: int = 10) -> int:
         files = self._write_data(df)
@@ -214,13 +225,17 @@ class SnapshotTable:
                              lambda d: d.filter(~hit), "delete", retries)
 
     def commit_upsert(self, df: DataFrame, key: str,
-                      retries: int = 10) -> int:
+                      retries: int = 10,
+                      discard_if: Callable[[], bool] | None = None) -> int:
         """Replace the rows whose ``key`` occurs in ``df`` by ``df``'s rows,
-        as ONE atomic snapshot: ``df`` is aligned as in ``commit_append``
-        (and evaluated once — its keys are read back from its files); the
-        replaced rows get ``commit_delete``'s copy-on-write and isolation."""
+        as ONE atomic snapshot: ``df`` is aligned (and ``discard_if``
+        applied) as in ``commit_append``, and evaluated once — its keys
+        are read back from its files; the replaced rows get
+        ``commit_delete``'s copy-on-write and isolation."""
         aligned, merged = self._align(df, self._table_schema())
-        files = self._write_data(aligned)
+        files = self._write_data(aligned, discard_if)
+        if files is None:
+            return self.current_version()
         keys = self._read_files(files, merged.jsonValue()).select(key)
         return self._rewrite(lambda d: d.join(keys, key, "left_semi"),
                              lambda d: d.join(keys, key, "left_anti"),
@@ -408,9 +423,15 @@ class SnapshotTable:
     def _manifest_path(self, v: int) -> str:
         return os.path.join(self._snap_dir, f"v{v:05d}.json")
 
-    def _write_data(self, df: DataFrame) -> list[str]:
+    def _write_data(self, df: DataFrame, discard_if=None) -> list[str] | None:
+        """``df`` written to a new ``data/<uuid>`` directory: its parquet
+        files, or None (the directory deleted) if ``discard_if()`` holds
+        once the write returned."""
         d = os.path.join(self.path, "data", uuid.uuid4().hex)
         df.write.parquet(d)
+        if discard_if is not None and discard_if():
+            shutil.rmtree(d)
+            return None
         return sorted(os.path.join(d, f) for f in os.listdir(d)
                       if f.endswith(".parquet"))
 

@@ -42,6 +42,21 @@ _PRETOK = re.compile(
     re.UNICODE,
 )
 
+# the same seven alternatives for text.isascii() input, with the letter
+# and digit classes written out: each piece is identical to _PRETOK's on
+# ASCII text, and the scan is faster.  \s stays Unicode-aware (no
+# re.ASCII): \x1c-\x1f are Unicode whitespace, and the ASCII flag would
+# split text holding them differently.
+_PRETOK_ASCII = re.compile(
+    r"'(?i:[sdmt]|ll|ve|re)"
+    r"|[^A-Za-z0-9\r\n]?[A-Za-z]+"
+    r"|[0-9]{1,3}"
+    r"| ?[^\sA-Za-z0-9]+[\r\n]*"
+    r"|\s*[\r\n]+"
+    r"|\s+(?!\S)"
+    r"|\s+",
+)
+
 
 def load_vocab(path: str) -> dict[bytes, int]:
     """Parse the standard ``.tiktoken`` dump: ``base64(bytes) rank``."""
@@ -56,30 +71,35 @@ def load_vocab(path: str) -> dict[bytes, int]:
     return ranks
 
 
+class _PieceCounts(dict):
+    """piece -> token count memo: corpus text is Zipf-distributed, so the
+    hot path of ``BpeEncoder.count`` is a dict hit per pre-tokenizer
+    piece; a miss encodes the piece.  Bounded: reset rather than evict
+    when full, which keeps the common pieces that immediately repopulate
+    it."""
+
+    def __init__(self, encode_piece):
+        super().__init__()
+        self._encode_piece = encode_piece
+
+    def __missing__(self, piece: str) -> int:
+        v = len(self._encode_piece(piece.encode("utf-8")))
+        if len(self) >= 200_000:
+            self.clear()
+        self[piece] = v
+        return v
+
+
 class BpeEncoder:
     def __init__(self, ranks: dict[bytes, int]):
         self.ranks = ranks
-        # piece -> token count memo: corpus text is Zipf-distributed, so
-        # the hot path of count() is a dict hit per pre-tokenizer piece
-        # (bounded — reset rather than evict when full, which keeps the
-        # common pieces that immediately repopulate it)
-        self._cache: dict[str, int] = {}
+        self._counts = _PieceCounts(self.encode_piece)
 
     def count(self, text: str) -> int:
-        cache = self._cache
-        get = cache.get
-        n = 0
-        # findall: no match objects allocated (pattern has no capture
-        # groups, so it yields the full pieces directly)
-        for p in _PRETOK.findall(text):
-            v = get(p)
-            if v is None:
-                v = len(self.encode_piece(p.encode("utf-8")))
-                if len(cache) >= 200_000:
-                    cache.clear()
-                cache[p] = v
-            n += v
-        return n
+        # findall: no match objects allocated (the patterns have no
+        # capture groups, so it yields the full pieces directly)
+        pat = _PRETOK_ASCII if text.isascii() else _PRETOK
+        return sum(map(self._counts.__getitem__, pat.findall(text)))
 
     def encode_piece(self, piece: bytes) -> list[bytes]:
         """Token byte-sequences for one pre-tokenized piece (for tests)."""

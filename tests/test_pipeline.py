@@ -81,6 +81,38 @@ class TestSkewedDatagen:
         assert shared and all(a[u] == b[u] for u in shared if u in b)
 
 
+def test_size_rebalance_follows_the_advisory_size(spark):
+    """``repartition_by_size`` takes its partition size from AQE's
+    advisory size alone: partitions over it are split along the map
+    outputs (8 map partitions into 2 shuffle partitions come back as
+    more than 2), under a large one they coalesce, and no row is lost
+    or repeated either way."""
+    from ragflow_core16_spark.datagen.pages import skewed_pages_df
+    from ragflow_core16_spark.pipeline.partitioning import \
+        repartition_by_size
+    confs = ("spark.sql.adaptive.advisoryPartitionSizeInBytes",
+             "spark.sql.shuffle.partitions")
+    old = {k: spark.conf.get(k) for k in confs}
+    counts = {}
+    try:
+        for advisory in ("64KB", "64MB"):
+            spark.conf.set(confs[0], advisory)
+            spark.conf.set(confs[1], "2")
+            pages = skewed_pages_df(spark, 200, partitions=8)
+            # the html sum keeps the payload in the shuffle (a bare
+            # count would prune it to the url columns)
+            counts[advisory] = [r["n"] for r in repartition_by_size(pages)
+                                .groupBy(F.spark_partition_id())
+                                .agg(F.count(F.lit(1)).alias("n"),
+                                     F.sum(F.length("html")))
+                                .collect()]
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
+    assert sum(counts["64KB"]) == sum(counts["64MB"]) == 200
+    assert len(counts["64KB"]) > 2 >= len(counts["64MB"])
+
+
 class TestExtract:
     def test_all_rows_accounted(self, spark, extracted):
         assert extracted.count() == N
@@ -204,6 +236,26 @@ class TestRunPipeline:
         assert t.read().count() == 40
         assert chunks_table(t.read()).count() > 0
 
+    def test_pass_executes_its_input_once(self, spark, tmp_path):
+        """A pass runs its input lineage once, on a first pass and on a
+        resume (whose lineage holds the anti-join): the uncached page
+        source counts every row it emits into an accumulator."""
+        emitted = spark.sparkContext.accumulator(0)
+
+        def counted(n):
+            def gen(batches):
+                for pdf in batches:
+                    emitted.add(len(pdf))
+                    yield pdf
+            pages = pages_df(spark, n)
+            return pages.mapInPandas(gen, pages.schema)
+
+        out = str(tmp_path / "once")
+        s1 = run_extraction_snapshotted(spark, counted(16), out)
+        assert s1["rows"] == 16 and emitted.value == 16
+        s2 = run_extraction_snapshotted(spark, counted(24), out)
+        assert s2["rows"] == 8 and emitted.value == 16 + 24
+
     def test_noop_resume_publishes_nothing(self, spark, tmp_path):
         """A resume over fully committed input commits no version: no
         manifest, no data dir, and a summary of zeros (not nulls) at the
@@ -219,6 +271,20 @@ class TestRunPipeline:
         assert [s2[k] for k in ("rows", "ok", "error", "bytes_in",
                                 "chunks")] == [0] * 5
         assert table.read().count() == 12
+
+    def test_empty_no_resume_rerun_publishes_nothing(self, spark, tmp_path):
+        """A ``resume=False`` rerun whose write sees no rows commits no
+        upsert version and leaves no data dir behind."""
+        out = str(tmp_path / "noop-upsert")
+        pages = pages_df(spark, 6)
+        s1 = run_extraction_snapshotted(spark, pages, out, run_id="r1")
+        data_dirs = os.listdir(os.path.join(out, "data"))
+        s2 = run_extraction_snapshotted(spark, pages.limit(0), out,
+                                        run_id="r2", resume=False)
+        assert s2["version"] == s1["version"]
+        assert SnapshotTable(spark, out).current_version() == s1["version"]
+        assert os.listdir(os.path.join(out, "data")) == data_dirs
+        assert s2["rows"] == 0
 
     def test_empty_input_into_new_table_is_readable(self, spark, tmp_path):
         """Empty input into a new table still commits a first version, so

@@ -487,3 +487,53 @@ def test_extract_density_is_shuffle_free(spark):
         below.append(ln)
     assert below, tree
     assert not [ln for ln in below if "Exchange" in ln], tree
+
+
+def test_extraction_pass_is_one_query_with_one_rebalance(spark, tmp_path,
+                                                         monkeypatch):
+    """An extraction pass is ONE Spark query: the write's plan holds
+    exactly one Exchange, the AQE rebalance on (url hash, warc_ts), and
+    no job of the pass runs before the write — neither on a first pass
+    nor on a resume, whose input carries the anti-join.  Jobs are counted
+    per job group: the pass starts under one group, and the write
+    switches to another as it begins."""
+    import re
+    import uuid
+
+    from ragflow_core16_spark.datagen.pages import pages_df
+    from ragflow_core16_spark.pipeline.run import run_extraction_snapshotted
+    from ragflow_core16_spark.pipeline.snapshots import SnapshotTable
+    sc = spark.sparkContext
+    tag = uuid.uuid4().hex[:8]
+    plans = []
+    write = SnapshotTable._write_data
+
+    def grouped_write(self, df, *args, **kwargs):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        sc.setJobGroup(f"write-{tag}-{len(plans)}", "extraction write")
+        return write(self, df, *args, **kwargs)
+
+    monkeypatch.setattr(SnapshotTable, "_write_data", grouped_write)
+    out = str(tmp_path / "t")
+    try:
+        for i, (n, fresh) in enumerate(((16, 16), (24, 8)), 1):
+            sc.setJobGroup(f"before-{tag}-{i}", "extraction pass")
+            s = run_extraction_snapshotted(spark, pages_df(spark, n), out)
+            assert s["rows"] == fresh
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description",
+                     "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+    assert len(plans) == 2
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    for i in (1, 2):
+        assert list(tracker.getJobIdsForGroup(f"before-{tag}-{i}")) == []
+        assert list(tracker.getJobIdsForGroup(f"write-{tag}-{i}"))
+    exchanges = [ln for ln in plans[0].splitlines() if "Exchange" in ln]
+    assert len(exchanges) == 1, plans[0]
+    assert re.search(r"Exchange hashpartitioning\(_url_hash#\d+L, "
+                     r"warc_ts#\d+, \d+\), REBALANCE_PARTITIONS_BY_COL",
+                     exchanges[0]), exchanges
+    assert re.search(r"xxhash64\(url#\d+, 42\) AS _url_hash#\d+L",
+                     plans[0]), plans[0]

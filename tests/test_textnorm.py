@@ -1,5 +1,7 @@
 """Unit tests for codec detection, token counting, and xxh64."""
 
+from hypothesis import given, settings, strategies as st
+
 from ragflow_core16_spark.textnorm.codec import find_codec, decode_bytes
 from ragflow_core16_spark.textnorm.tokens import num_tokens_from_string
 from ragflow_core16_spark.textnorm.xxh64 import xxh64_int, xxh64_hexdigest, chunk_id
@@ -176,6 +178,45 @@ class TestBpe:
         assert toks("I'LL go") == ["I", "'LL", " go"]
         assert toks("x 123") == ["x", " ", "123"]
         assert toks("a\n\nb") == ["a", "\n\n", "b"]
+
+    @given(st.lists(st.one_of(
+        st.text(st.characters(max_codepoint=127), max_size=12),
+        st.sampled_from(["'s", "'T", "'ll", "'VE", "'re", "'d", "'x",
+                         "\r\n", " \r\n", "\x1c", "\x1d", "\x1e", "\x1f",
+                         "\v", "\f", " \t ", "7", "1234567", "0042",
+                         "_", " _a", "a'"])), max_size=24).map("".join))
+    @settings(max_examples=2000, deadline=None)
+    def test_ascii_pretokenizer_splits_like_the_unicode_one(self, text):
+        from ragflow_core16_spark.textnorm.bpe import _PRETOK, _PRETOK_ASCII
+        assert _PRETOK_ASCII.findall(text) == _PRETOK.findall(text)
+
+    def test_count_equals_unicode_pretokenizer_on_fixture_sections(self):
+        """On the sections of every HTML fixture, ``count`` (ASCII pattern
+        where the section is ASCII) sums the same pieces as ``_PRETOK``."""
+        import os
+        from ragflow_core16_spark.html.parser import html_sections
+        from ragflow_core16_spark.textnorm.bpe import (_PRETOK,
+                                                       _PRETOK_ASCII,
+                                                       default_encoder)
+        enc = default_encoder()
+        fixtures = os.path.join(os.path.dirname(__file__), "fixtures")
+        paths = [os.path.join(fixtures, d, f)
+                 for d in ("html", "html_real")
+                 for f in sorted(os.listdir(os.path.join(fixtures, d)))
+                 if f.endswith(".html")]
+        assert len(paths) == 16
+        n_ascii = 0
+        for path in paths:
+            with open(path, "rb") as f:
+                sections = html_sections(f.read())
+            for s in sections:
+                if s.isascii():
+                    n_ascii += 1
+                    assert _PRETOK_ASCII.findall(s) == _PRETOK.findall(s)
+                assert enc.count(s) == sum(
+                    len(enc.encode_piece(p.encode("utf-8")))
+                    for p in _PRETOK.findall(s)), (path, s)
+        assert n_ascii > 100
 
 
 class TestShippedVocab:
