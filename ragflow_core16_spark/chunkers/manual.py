@@ -12,7 +12,7 @@ Reference: ``rag/app/manual.py``.  Two routes:
     (manual.py:152-170).
   * pdf (manual.py:173-250): boxes → bullets_category/title_frequency →
     most-level pivot merge — the ``paper_merge`` algorithm (chunkers/
-    paper.py), which this module reuses for the model-free PDF route.
+    paper.py); no manual operator wires a PDF route.
 """
 
 from __future__ import annotations
@@ -133,10 +133,3 @@ def laws_docx_sections(paragraphs: list[tuple[str, str]]) -> list[str]:
         sec.insert(0, lines[s][1])
         sections.append("\n".join(sec))
     return [s for s in sections if s]
-
-
-def manual_pdf_chunks(sections: list) -> list[str]:
-    """Model-free PDF route: most-frequent-title pivot merge
-    (manual.py:215-250 ≡ paper.py:186-208)."""
-    from .paper import paper_merge
-    return paper_merge(sections)

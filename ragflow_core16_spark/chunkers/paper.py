@@ -26,15 +26,6 @@ import re
 
 from .hierarchy import bullets_category, title_frequency
 
-_BEGIN_RE = re.compile(
-    r"[0-9. 一、i]*(introduction|abstract|摘要|引言|keywords|key words|关键词|"
-    r"background|背景|目录|前言|contents)")
-
-
-def paper_begin(txt: str) -> bool:
-    """Front-matter boundary test (reference paper.py:75-78)."""
-    return bool(_BEGIN_RE.match(txt.lower().strip()))
-
 
 def paper_merge(sections: list) -> list[str]:
     """Pivot-merge sections (reference paper.py:186-208).

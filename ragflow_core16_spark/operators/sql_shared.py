@@ -54,14 +54,6 @@ def bpe_count(text: str) -> int:
     return default_encoder().count(text)
 
 
-def word_cost_values(words, alias: str = "wc") -> str:
-    """VALUES relation ``alias(w, bare_c, sp_c)``: per word, the exact BPE
-    cost as a bare piece and as a space-prefixed piece."""
-    rows = ", ".join(f"('{w}', {bpe_cost(w)}, {bpe_cost(' ' + w)})"
-                     for w in words)
-    return f"(VALUES {rows}) AS {alias}(w, bare_c, sp_c)"
-
-
 def cost_sql(expr: str) -> str:
     """Token cost of a piece whose char length is ``expr`` — the explicit
     chars/token APPROXIMATION (RAG_TOKEN_APPROX=1 path), kept for the few

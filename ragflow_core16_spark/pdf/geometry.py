@@ -160,17 +160,3 @@ def find_overlapped_with_threashold(box, boxes, thr=0.3):
             continue
         max_i, max_ov, _max_ov = i, ov, _ov
     return max_i
-
-
-def find_horizontally_tightest_fit(box, boxes):
-    if not boxes:
-        return None
-    min_dis, min_i = 1000000, None
-    for i, b in enumerate(boxes):
-        if box.get("layoutno", "0") != b.get("layoutno", "0"):
-            continue
-        dis = min(abs(box["x0"] - b["x0"]), abs(box["x1"] - b["x1"]),
-                  abs(box["x0"] + box["x1"] - b["x1"] - b["x0"]) / 2)
-        if dis < min_dis:
-            min_i, min_dis = i, dis
-    return min_i

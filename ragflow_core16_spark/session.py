@@ -23,6 +23,14 @@ DEFAULT_CONF = {
     "spark.sql.execution.arrow.maxRecordsPerBatch": "64",
     "spark.sql.files.maxPartitionBytes": "134217728",
     "spark.sql.session.timeZone": "UTC",
+    # the JVM-wide cache of generated classes (Spark's default: 100).  A
+    # long-lived session reruns the same plans: one day-2 curation cycle
+    # (full build, delta update, serve) uses about 600 classes, and an
+    # LRU smaller than a repeating working set never hits, so every
+    # cycle compiled them all again.  4096 leaves headroom over the
+    # largest working set measured (BENCH/BASELINE.md, "Generated-code
+    # cache").  Static: it takes effect only in a JVM get_spark starts.
+    "spark.sql.codegen.cache.maxEntries": "4096",
     # local mode: the driver JVM IS the executor.  8g starved a 32-thread
     # session late in a long query run (storage + execution + broadcast
     # remnants share old-gen; G1 thrash inflated late queries 3x — bench
@@ -117,7 +125,10 @@ def get_spark(master: str | None = None, app_name: str = "ragflow_core16_spark",
     ``extra_conf``.  ``master=None`` leaves the master (and the executor
     topology) to spark-submit.  When a session already exists it is
     returned with the runtime-modifiable settings applied — so a setting
-    the caller tuned survives only if neither dict names it."""
+    the caller tuned survives only if neither dict names it.  Static
+    settings (``spark.driver.memory``,
+    ``spark.sql.codegen.cache.maxEntries``) apply only when this call
+    starts the JVM; on an existing session they keep their values."""
     builder = SparkSession.builder.appName(app_name)
     if master is not None:
         builder = builder.master(master)

@@ -30,20 +30,6 @@ from pyspark.sql import functions as F
 from ..operators.sketches import hll_estimate_from_registers, hll_registers
 
 
-def hll_register_stream(events_stream: DataFrame,
-                        watermark: str = "1 hour",
-                        window: str = "1 hour") -> DataFrame:
-    """Mergeable register state per (event-time window, event_type).
-
-    The groupBy-max is exactly the batch ``hll_registers`` with the window
-    as an extra group column; under a watermark Spark ages register groups
-    out of the state store once their window closes."""
-    windowed = (events_stream
-                .withWatermark("ts", watermark)
-                .withColumn("w", F.window("ts", window)))
-    return hll_registers(windowed, "user_id", ["w", "event_type"])
-
-
 def finalize_register_sink(spark: SparkSession, sink_dir: str) -> DataFrame:
     """Estimate per (window, event_type) from a register sink.
 

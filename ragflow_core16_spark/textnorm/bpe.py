@@ -120,14 +120,6 @@ class BpeEncoder:
         return parts
 
 
-def encoder_from_env() -> BpeEncoder | None:
-    import os
-    path = os.environ.get("RAG_TIKTOKEN_VOCAB")
-    if not path:
-        return None
-    return BpeEncoder(load_vocab(path))
-
-
 # the shipped default vocabulary (trained by tools/train_vocab.py on the
 # repo's committed documentation: class-pure letter merges + all 1-3-digit
 # tokens, cl100k's structural design).  RAG_TIKTOKEN_VOCAB overrides it

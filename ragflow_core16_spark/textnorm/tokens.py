@@ -104,12 +104,6 @@ def _default_counter():
 _counter = None
 
 
-def set_counter(fn) -> None:
-    """Swap the token counter (e.g. for real tiktoken at deployment)."""
-    global _counter
-    _counter = fn
-
-
 def num_tokens_from_string(s: str) -> int:
     """Mirror of rag/utils/__init__.py:83-88 (returns 0 on error)."""
     global _counter

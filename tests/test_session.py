@@ -5,11 +5,14 @@ The r3 bench regression in ``paragraph_dedup`` (1.95 → 6.12 s) traced to
 query to an RDD just to read one number costs ~0.3-1 s of driver work per
 invocation, and every query that touches ``_docs`` paid it on every call.
 The estimate now comes from the scan's file index + sizes.
+
+``TestCodegenCache`` pins that the session's generated-code cache outlives
+a working set larger than Spark's 100-entry default.
 """
 
 import pytest
 
-from ragflow_core16_spark.session import _scan_splits, spread
+from ragflow_core16_spark.session import DEFAULT_CONF, _scan_splits, spread
 
 SF = "/root/testdata/sf0.001"
 
@@ -55,3 +58,29 @@ class TestSpread:
     def test_rows_preserved(self, spark):
         df = spark.read.parquet(f"{SF}/documents.parquet")
         assert spread(df).count() == df.count()
+
+
+class TestCodegenCache:
+    def test_rerun_after_150_other_plans_compiles_nothing(self, spark):
+        """A plan compiled once is not compiled again after 150 distinct
+        generated classes.  Spark's default cache holds 100 classes, so
+        an LRU that small evicts the first plan long before it repeats."""
+        key = "spark.sql.codegen.cache.maxEntries"
+        assert spark.sparkContext.getConf().get(key) == DEFAULT_CONF[key]
+        metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+        def compiled() -> int:
+            # one event per class this JVM's CodeGenerator compiled
+            return metrics.METRIC_COMPILATION_TIME().getCount()
+
+        def first():
+            return spark.range(3).selectExpr("id * 7919 + 104729 AS x") \
+                .collect()
+
+        want = first()
+        for i in range(150):
+            # a distinct literal is a distinct generated class
+            spark.range(1).selectExpr(f"id * {i} + {i + 3} AS x").collect()
+        before = compiled()
+        assert first() == want
+        assert compiled() == before

@@ -1,6 +1,8 @@
 """Tokenizer tests: Porter stemmer (published pairs), lemmatizer,
 bidirectional max-match, fine-grained split, Q2B."""
 
+from hypothesis import given, settings, strategies as st
+
 from ragflow_core16_spark.textnorm.morphy import lemmatize, morphy
 from ragflow_core16_spark.textnorm.porter import stem
 from ragflow_core16_spark.textnorm.rag_tokenizer import (
@@ -119,6 +121,19 @@ class TestFineGrained:
     def test_short_tokens_kept(self):
         assert fine_grained_tokenize("数据 处理 引擎 on") == \
             fine_grained_tokenize("数据 处理 引擎 on")
+
+    @given(st.lists(st.one_of(
+        st.text(st.characters(max_codepoint=127), max_size=8),
+        st.sampled_from([" ", "  ", "/", "a/b", "//", "\t", "\n", "\v",
+                         "\f", "\r", "\x1c", "\x1d", "\x1e", "\x1f",
+                         "word", " lead", "trail ", "\x00", "\x7f"])),
+        max_size=16).map("".join))
+    @settings(max_examples=2000, deadline=None)
+    def test_ascii_input_is_the_whitespace_rejoin(self, tks):
+        """ASCII input comes back as its whitespace-split tokens, each
+        split again on "/", joined by single spaces."""
+        want = " ".join(p for t in tks.split() for p in t.split("/"))
+        assert fine_grained_tokenize(tks) == want
 
 
 class TestCustomDict:
