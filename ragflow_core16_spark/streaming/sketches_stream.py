@@ -5,18 +5,18 @@ The batch sketch (``operators/sketches.py``) documents that register maxes
 merge losslessly; this module is that claim made executable.  Topology:
 
   readStream (events parquet drops)
-    → watermark on event time
-    → groupBy(window, group, register) max(rho)     [the mergeable state]
-    → sink (update/append)                          [register table]
-  … and a FINALIZE pass over the sink re-merges registers (max of maxes)
+    → foreachBatch: window(ts) → groupBy(window, group, register) max(rho)
+    → append to a parquet sink                       [register PARTIALS]
+  … and a FINALIZE pass over the sink re-merges the partials (max of maxes)
   and applies the integer estimate — identical arithmetic to batch, so a
   stream ingested in any micro-batch partitioning produces byte-identical
   estimates to one batch pass over the same rows (asserted in
   ``tests/test_streaming.py::TestHllStream``).
 
-Why this shape at 100 TB: the state store carries ≤ 64 registers per
-(window, group) — constant per group, independent of ingest rate — where
-a streaming ``approx_count_distinct`` per window would be opaque and a
+Why this shape at 100 TB: there is no watermark and no state store.  Each
+micro-batch appends at most 64 partial registers per (window, group), and
+mergeability does the cross-batch work at finalize time, where a
+streaming ``approx_count_distinct`` per window would be opaque and a
 ``dropDuplicates`` dedup-count would hold every distinct key in state.
 Restart/replay safety is the same property as mergeability: re-ingesting
 a file can only re-max the same registers.

@@ -561,12 +561,6 @@ class RagTokenizer:
         # branch is the identity re-join (skip 2 Python-level scans/token)
         if tks.isascii():
             if "/" not in tks:
-                # printable ASCII holds no whitespace but " ", so with no
-                # doubled, leading or trailing space the re-join is the
-                # input itself, as rag_tokenize's output usually is
-                if (tks.isprintable() and "  " not in tks
-                        and tks[:1] != " " and tks[-1:] != " "):
-                    return tks
                 return " ".join(tks.split())
             parts = [p for t in tks.split() for p in t.split("/")]
             return " ".join(parts)
