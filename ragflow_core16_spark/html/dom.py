@@ -221,8 +221,7 @@ def parse_html_stdlib(text: str) -> Node:
 # pinned by a differential test over every adversarial fixture, generator
 # page, and a malformed-snippet fuzz corpus
 # (tests/test_html.py::TestFastParserDifferential); any internal surprise
-# falls back to the stdlib builder wholesale.  RAG_HTML_PARSER=stdlib
-# forces the fallback.
+# falls back to the stdlib builder wholesale.
 
 import re as _re
 
@@ -466,12 +465,9 @@ def _fast_parse(text: str) -> Node:
 def parse_html(text: str) -> Node:
     """Parse (possibly malformed) HTML into a DOM; never raises on bad
     markup — worst case the content lands as text under a wrong parent,
-    mirroring lenient browser behavior.  Fast batch tokenizer by default
-    (differential-tested against the stdlib builder), stdlib on
-    RAG_HTML_PARSER=stdlib or on any fast-path surprise."""
-    import os
-    if os.environ.get("RAG_HTML_PARSER") == "stdlib":
-        return parse_html_stdlib(text)
+    mirroring lenient browser behavior.  Fast batch tokenizer
+    (differential-tested against the stdlib builder), stdlib on any
+    fast-path surprise."""
     try:
         return _fast_parse(text)
     except Exception:

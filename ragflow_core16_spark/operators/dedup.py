@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..pipeline.snapshot_cache import relation
 from ..session import read_documents
 
 _NORM = r"\s+"
@@ -183,20 +184,9 @@ def _signature_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     K column expressions over each shingle row, min-combined in a single
     groupBy(doc_id) with map-side partial agg.  No seed cross join (K×
     row multiplication), no (doc, seed) shuffle key — the shuffle moves
-    |docs| rows of K longs, independent of shingle count.
-
-    When a written signature table exists for this corpus snapshot
-    (``materialize_dedup_index``), the relation is a SCAN of it: at
-    100 TB the signature job runs once per snapshot and every dedup
-    query — LSH pairs, jaccard verify, incremental daily-batch — reads
-    the stored signatures instead of re-shingling the corpus."""
-    def build():
-        from ..pipeline.snapshot_cache import read_table
-        scan = read_table(spark, "minhash_sigwide", sf_dir)
-        if scan is not None:
-            return scan.select("doc_id", *[f"h{s}" for s in range(N_HASHES)])
-        return _sigwide_of(_shingles_cached(spark, sf_dir))
-    return _memo("sigwide", spark, sf_dir, build)
+    |docs| rows of K longs, independent of shingle count."""
+    return _memo("sigwide", spark, sf_dir,
+                 lambda: _sigwide_of(_shingles_cached(spark, sf_dir)))
 
 
 def _sigwide_of(shingles: DataFrame) -> DataFrame:
@@ -211,7 +201,7 @@ def _sigwide_of(shingles: DataFrame) -> DataFrame:
 def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, seed, minhash) rows — the wide signature unpivoted via
     ``stack`` (pure projection, no extra shuffle)."""
-    wide = _signature_wide(spark, sf_dir)
+    wide = relation(spark, "minhash_sigwide", sf_dir)
     stack = ", ".join(f"{s}, h{s}" for s in range(N_HASHES))
     return (wide.selectExpr(
         "doc_id", f"stack({N_HASHES}, {stack}) as (seed, minhash)")
@@ -285,7 +275,7 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _lsh_est_unordered(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``minhash_lsh_pairs`` before presentation ordering (compute path;
     also the est half of the materialized pair table)."""
-    wide = _signature_wide(spark, sf_dir)
+    wide = relation(spark, "minhash_sigwide", sf_dir)
     return _lsh_est_for(wide, _lsh_candidates(wide))
 
 
@@ -363,7 +353,7 @@ def _jaccard_exact_unordered(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``ngram_jaccard`` before presentation ordering (compute path; also
     the exact-verify half of the materialized pair table)."""
     sh = _shingles_cached(spark, sf_dir)
-    cand = (_lsh_candidates(_signature_wide(spark, sf_dir))
+    cand = (_lsh_candidates(relation(spark, "minhash_sigwide", sf_dir))
             .localCheckpoint(eager=False))
     return _jaccard_exact_for(cand, sh)
 
@@ -448,17 +438,13 @@ def simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     One explode + one groupBy(doc_id) — single shuffle, map-side combine.
     With a written fingerprint table (``materialize_dedup_index``) this
     is a scan + presentation sort."""
-    return _simhash_unordered(spark, sf_dir).orderBy("doc_id")
+    return relation(spark, "simhash_fp", sf_dir).orderBy("doc_id")
 
 
 def _simhash_unordered(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``simhash`` before presentation ordering — ``simhash_pairs`` bands
     this relation directly (its bucket join repartitions anyway, so a
     sort here would be a wasted range exchange)."""
-    from ..pipeline.snapshot_cache import read_table
-    scan = read_table(spark, "simhash_fp", sf_dir)
-    if scan is not None:
-        return scan.select("doc_id", "simhash")
     d = read_documents(spark, sf_dir)
     toks = F.split(F.regexp_replace(F.lower(F.trim("text")), _NORM, " "), " ")
     t = d.select("doc_id", F.explode(toks).alias("tok"))
@@ -513,7 +499,7 @@ def simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     come from a self-join keyed on (band_idx, band_bits) and only they
     pay the bit_count verify.  Shuffle ∝ band collisions, never |docs|²
     (the classic scalable simhash search layout)."""
-    fp = _simhash_unordered(spark, sf_dir)     # (doc_id, simhash)
+    fp = relation(spark, "simhash_fp", sf_dir)     # (doc_id, simhash)
     band_bits = N_SIMHASH_BITS // 4
     mask = (1 << band_bits) - 1
     bands = fp.select(
@@ -558,19 +544,15 @@ def _cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(node, label) after min-label propagation over the LSH pair edges;
     shared by ``dedup_clusters`` and ``dedup_keep``.
 
-    With a written label table (``materialize_dedup_index``) this is a
-    scan — connected components run once per corpus snapshot, exactly
-    like the decision table.  The compute path seeds from the raw LSH
-    candidates (``_lsh_candidates``), not the est-jaccard pair query:
-    the propagation only needs the pair KEYS, so the signature-array
-    joins that decorate the pairs with est_jaccard would be dead work."""
+    Without a written pair table this seeds from the raw LSH candidates
+    (``_lsh_candidates``), not the est-jaccard pair query: the
+    propagation only needs the pair KEYS, so the signature-array joins
+    that decorate the pairs with est_jaccard would be dead work."""
     from ..pipeline.snapshot_cache import read_table
-    scan = read_table(spark, "dedup_labels", sf_dir)
-    if scan is not None:
-        return scan.select("node", "label")
     pscan = read_table(spark, "dedup_pairs", sf_dir)
     pairs = (pscan.select("doc_a", "doc_b") if pscan is not None
-             else _lsh_candidates(_signature_wide(spark, sf_dir)))
+             else _lsh_candidates(relation(spark, "minhash_sigwide",
+                                           sf_dir)))
     return _propagate_min_labels(pairs)
 
 
@@ -628,7 +610,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     changed-count scalar per round — no data ever collects.  Dup pairs are
     a vanishing fraction of a 100 TB corpus, so the iterated relation is
     tiny relative to the scan that produced it."""
-    labels = _cluster_labels(spark, sf_dir)
+    labels = relation(spark, "dedup_labels", sf_dir)
     return (labels.groupBy(F.col("label").alias("cluster_id"))
             .agg(F.count(F.lit(1)).alias("size"),
                  F.sort_array(F.collect_list("node")).alias("members"))
@@ -690,7 +672,7 @@ def dedup_keep_decisions(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``corpus_keep``/``web_keep``) join this relation; sorting it first
     would add a full range exchange the join immediately re-partitions
     away."""
-    labels = _cluster_labels(spark, sf_dir)
+    labels = relation(spark, "dedup_labels", sf_dir)
     docs = read_documents(spark, sf_dir).select("doc_id")
     lab = labels.select(F.col("node").alias("doc_id"),
                         F.col("label").alias("cl"))
@@ -804,13 +786,7 @@ def substring_dedup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan + presentation sort — the span-marking pass (Lee et al. 2022
     style) runs once per snapshot alongside the rest of the dedup
     index."""
-    from ..pipeline.snapshot_cache import read_table
-    scan = read_table(spark, "substring_spans", sf_dir)
-    if scan is not None:
-        return (scan.select("doc_id", "span_start", "span_end",
-                            "span_tokens", "n_grams")
-                .orderBy("doc_id", "span_start"))
-    return _substring_spans_unordered(spark, sf_dir) \
+    return relation(spark, "substring_spans", sf_dir) \
         .orderBy("doc_id", "span_start")
 
 
@@ -903,7 +879,7 @@ def _incr_split_expr():
 def incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per batch doc: is_new + the canonical corpus duplicate (min doc_id
     among corpus docs agreeing on ≥ 8/16 minhashes) + the match count."""
-    wide = _signature_wide(spark, sf_dir)
+    wide = relation(spark, "minhash_sigwide", sf_dir)
     split = _incr_split_expr()
     batch_w = wide.filter(split == 0)
     corpus_w = wide.filter(split != 0)

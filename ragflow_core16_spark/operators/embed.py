@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..pipeline.snapshot_cache import relation
 from ..session import read_documents
 
 DIM = 64
@@ -74,7 +75,7 @@ def embed_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output: (doc_id, dim0..dim3 sample + vec_norm) — the leading
     components and the L2 norm keep the oracle compact while pinning every
     blend coefficient."""
-    blended = _doc_vectors(spark, sf_dir)
+    blended = relation(spark, "doc_embeddings", sf_dir)
     norm = F.sqrt(F.aggregate("q_vec", F.lit(0.0), lambda a, v: a + v * v))
     return (blended.select(
         "doc_id",
@@ -90,13 +91,8 @@ def _doc_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, q_vec): the full blended vector — the reference stores
     exactly this per chunk at INDEX time (``q_{dim}_vec`` written by the
     task executor's embedding step, rag/svr/task_executor.py:387ff) and
-    every search reads the stored column.  With a written vector table
-    (``doc_embeddings``) this is a scan; the compute path is
-    the single-pass weighted-union hash."""
-    from ..pipeline.snapshot_cache import read_table
-    scan = read_table(spark, "doc_embeddings", sf_dir)
-    if scan is not None:
-        return scan.select("doc_id", "q_vec")
+    every search reads the stored column (the ``doc_embeddings`` table).
+    This is the single-pass weighted-union hash."""
     d = read_documents(spark, sf_dir)
     # single pass: 0.1·hash(title) + 0.9·hash(content) = hash of the
     # weighted token union (hashing is linear in token votes)

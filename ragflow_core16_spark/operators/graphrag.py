@@ -51,6 +51,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..pipeline.snapshot_cache import relation
 from ..session import read_documents
 from .dedup import _memo
 
@@ -66,14 +67,8 @@ PPM = 1_000_000
 # ---------------------------------------------------------------- inputs
 def _mentions(spark, sf_dir) -> DataFrame:
     """(doc_id, entity, mentions) over df-gated bigram entities; memoized
-    (temp-table semantics) because all five graph queries re-read it.
-    When the ingest-time snapshot table exists
-    (``graphrag_mentions``), the build is a scan of it."""
+    (temp-table semantics) because all five graph queries re-read it."""
     def build():
-        from ..pipeline.snapshot_cache import read_table
-        scan = read_table(spark, "graphrag_mentions", sf_dir)
-        if scan is not None:
-            return scan
         d = read_documents(spark, sf_dir).filter(F.length(F.trim("text")) > 0)
         ws = F.split(F.regexp_replace(F.lower(F.trim(F.col("text"))),
                                       r"\s+", " "), " ")
@@ -102,7 +97,8 @@ def _n_docs(spark, sf_dir) -> int:
     hit = _N_CACHE.get(key)
     if hit is not None and hit[0] is spark:
         return hit[1]
-    n = _mentions(spark, sf_dir).select("doc_id").distinct().count()
+    n = (relation(spark, "graphrag_mentions", sf_dir)
+         .select("doc_id").distinct().count())
     _N_CACHE[key] = (spark, n)
     return n
 
@@ -113,7 +109,7 @@ _N_CACHE: dict = {}
 def _tops(spark, sf_dir) -> DataFrame:
     """Top-K entities per document by (mentions desc, entity asc) — the
     per-chunk entity list the reference's extractor emits."""
-    m = _mentions(spark, sf_dir)
+    m = relation(spark, "graphrag_mentions", sf_dir)
     w = Window.partitionBy("doc_id").orderBy(
         F.desc("mentions"), F.asc("entity"))
     return (m.withColumn("rank", F.row_number().over(w))
@@ -193,7 +189,8 @@ def entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     edits (suffix variation).  Pairing is banded by shared head OR tail
     word, so the search is a keyed self-join over tiny bands — never
     |V|²."""
-    v = (_mentions(spark, sf_dir).select("entity").distinct()
+    v = (relation(spark, "graphrag_mentions", sf_dir)
+         .select("entity").distinct()
          .withColumn("head", F.split("entity", " ")[0])
          .withColumn("tail", F.split("entity", " ")[1]))
     pairs = None
@@ -249,13 +246,8 @@ FROM cand ORDER BY entity_a, entity_b
 def _graph_edges(spark, sf_dir) -> DataFrame:
     """Merged entity graph: co-occurrence of top-K entities within a
     document, support- and lift-gated.  Memoized — communities and reports
-    both iterate over it.  Scans the ingest-time snapshot table when it
-    exists (``graphrag_edges``)."""
+    both iterate over it."""
     def build():
-        from ..pipeline.snapshot_cache import read_table
-        scan = read_table(spark, "graphrag_edges", sf_dir)
-        if scan is not None:
-            return scan
         n = _n_docs(spark, sf_dir)
         t = _tops(spark, sf_dir).select("doc_id", "entity", "df")
         a = t.select("doc_id", F.col("entity").alias("src"),
@@ -286,7 +278,8 @@ def entity_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`graphrag/general/extractor.py`); here the merge IS the groupBy and
     the LLM's 1-10 relationship strength is an integer lift score."""
     from ..session import ordered
-    return _graph_edges(spark, sf_dir).transform(ordered("src", "dst"))
+    return (relation(spark, "graphrag_edges", sf_dir)
+            .transform(ordered("src", "dst")))
 
 
 _EDGES_CTE = f"""
@@ -321,15 +314,11 @@ def _labels(spark, sf_dir) -> DataFrame:
     same fixpoint machinery as ``dedup_clusters``
     (`operators/dedup.py:_cluster_labels`), here with STRING labels (the
     lexicographic min entity names the component).  Converges in
-    O(component diameter) keyed shuffles over the edge list.  Scans the
-    ingest-time community table when it exists — the deployment shape:
-    the reference computes Leiden communities once at index time
-    (`graphrag/general/index.py`) and stores them."""
-    from ..pipeline.snapshot_cache import read_table
-    scan = read_table(spark, "graphrag_labels", sf_dir)
-    if scan is not None:
-        return scan.select("node", "community")
-    e = _graph_edges(spark, sf_dir).select("src", "dst")
+    O(component diameter) keyed shuffles over the edge list.  The
+    reference computes Leiden communities once at index time
+    (`graphrag/general/index.py`) and stores them: the
+    ``graphrag_labels`` table."""
+    e = relation(spark, "graphrag_edges", sf_dir).select("src", "dst")
     edges = (e.union(e.select(F.col("dst").alias("src"),
                               F.col("src").alias("dst")))
              .distinct().localCheckpoint())
@@ -357,7 +346,7 @@ def graph_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`graphrag/general/leiden.py:run`).  Stand-in: connected components by
     min-label propagation (community id = lexicographically smallest
     member), sizes + member lists."""
-    lab = _labels(spark, sf_dir)
+    lab = relation(spark, "graphrag_labels", sf_dir)
     from ..session import ordered_once
     return ordered_once(
         lab.groupBy(F.col("community").alias("community_id"))
@@ -399,8 +388,8 @@ def community_reports(spark: SparkSession, sf_dir: str) -> DataFrame:
     weighted-degree members, findings from the strongest edges, and a 0-10
     size-ladder rating in place of the IMPACT score.  One groupBy over the
     (tiny) labeled edge relation."""
-    lab = _labels(spark, sf_dir)
-    e = _graph_edges(spark, sf_dir)
+    lab = relation(spark, "graphrag_labels", sf_dir)
+    e = relation(spark, "graphrag_edges", sf_dir)
     # weighted degree per node (both endpoints), then community rollups
     deg = (e.select(F.col("src").alias("node"), "weight")
            .union(e.select(F.col("dst").alias("node"), "weight"))

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..pipeline.snapshot_cache import relation
 from ..session import read_documents
 
 QUERY_TERMS = ["spark", "query", "data", "merge", "window"]
@@ -44,10 +45,6 @@ def _tokens(spark, sf_dir) -> DataFrame:
 
 def _per_doc_tf(spark, sf_dir) -> DataFrame:
     """(tok, doc_id, tf) — the inverted-index content relation."""
-    from ..pipeline.snapshot_cache import read_table
-    scan = read_table(spark, "term_postings", sf_dir)
-    if scan is not None:
-        return scan.select("tok", "doc_id", "tf")
     return (_tokens(spark, sf_dir).groupBy("tok", "doc_id")
             .agg(F.count(F.lit(1)).alias("tf")))
 
@@ -69,10 +66,6 @@ def _term_tf(spark, sf_dir, terms: DataFrame) -> DataFrame:
 
 def _dl_rel(spark, sf_dir) -> DataFrame:
     """(doc_id, dl): per-doc token counts (BM25's length normalizer)."""
-    from ..pipeline.snapshot_cache import read_table
-    scan = read_table(spark, "doc_stats", sf_dir)
-    if scan is not None:
-        return scan.select("doc_id", "dl")
     return read_documents(spark, sf_dir).select(
         "doc_id",
         F.size(F.split(F.regexp_replace(F.lower(F.trim("text")),
@@ -194,7 +187,7 @@ def bm25_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
     n_docs_rel = read_documents(spark, sf_dir).agg(
         F.count(F.lit(1)).alias("n_docs"))
-    dl_rel = _dl_rel(spark, sf_dir)
+    dl_rel = relation(spark, "doc_stats", sf_dir)
     avgdl = dl_rel.agg(F.avg("dl").alias("avgdl"))
     terms = spark.createDataFrame([(w,) for w in QUERY_TERMS], ["term"])
     tf = _term_tf(spark, sf_dir, terms)
@@ -790,7 +783,7 @@ def build_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     build job; skewed stop-words are exactly what AQE skew-split handles.
     With a written posting relation (``materialize_retrieval_index``)
     the per-doc tf stage is a scan of it."""
-    per_doc = _per_doc_tf(spark, sf_dir)
+    per_doc = relation(spark, "term_postings", sf_dir)
     from pyspark.sql import Window
     rk = F.row_number().over(
         Window.partitionBy("tok").orderBy(F.desc("tf"), "doc_id"))

@@ -52,11 +52,3 @@ def bpe_count(text: str) -> int:
     """Exact token count of a full string under the default encoder."""
     from ..textnorm.bpe import default_encoder
     return default_encoder().count(text)
-
-
-def cost_sql(expr: str) -> str:
-    """Token cost of a piece whose char length is ``expr`` — the explicit
-    chars/token APPROXIMATION (RAG_TOKEN_APPROX=1 path), kept for the few
-    oracles whose generators produce unbounded word material."""
-    return (f"CASE WHEN {expr} <= 5 THEN 1 "
-            f"ELSE CAST(ceil(({expr})/4.4) AS BIGINT) END")

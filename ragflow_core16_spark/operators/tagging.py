@@ -47,6 +47,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..pipeline.snapshot_cache import relation
 from ..session import read_documents
 
 S = 1000           # smoothing — search.py:446,458 default
@@ -61,9 +62,8 @@ def _tags(spark, sf_dir) -> DataFrame:
     from .dedup import _memo
 
     def build():
-        from .textstats import _tfidf_ranked
         d = read_documents(spark, sf_dir)
-        kw = (_tfidf_ranked(spark, sf_dir)
+        kw = (relation(spark, "tfidf_keywords", sf_dir)
               .filter(F.col("rank") == 1)
               .select("doc_id", F.concat(F.lit("kw:"), "term").alias("tag")))
         return (d.select("doc_id",
@@ -151,8 +151,7 @@ def _tag_content_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     combinable groupBys plus broadcast joins — no wide distinct, no
     pair shuffle.  The DuckDB oracle keeps the naive pair formulation;
     both are exact, so the hashes agree."""
-    from .textstats import _tfidf_ranked
-    kw = (_tfidf_ranked(spark, sf_dir).select("doc_id", "term")
+    kw = (relation(spark, "tfidf_keywords", sf_dir).select("doc_id", "term")
           .localCheckpoint())  # tiny (3 rows/doc); reused by 4 joins
     tags = _tags(spark, sf_dir)
     # n1: per (term, tag), docs having the term in top-3 and the tag
@@ -207,11 +206,9 @@ def tag_content(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs' tags, score vs the corpus prior, keep the top-3 with
     score > 0.  Scans the ingest-time snapshot table when it exists
     (``tag_features``)."""
-    from ..pipeline.snapshot_cache import read_table
     from ..session import ordered_once
-    scan = read_table(spark, "tag_features", sf_dir)
-    rel = scan if scan is not None else _tag_content_scored(spark, sf_dir)
-    return ordered_once(rel, "doc_id", "rank")
+    return ordered_once(relation(spark, "tag_features", sf_dir),
+                        "doc_id", "rank")
 
 
 def _tag_content_sql() -> str:

@@ -41,7 +41,6 @@ CHUNKS_SCHEMA = StructType([
 
 
 from .sql_shared import RM_PREFIX_SQL as _RM_PREFIX_SQL
-from .sql_shared import cost_sql as _cost_shared
 
 
 def _template_query(template_fn):
@@ -405,10 +404,10 @@ def resume_template(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------- oracles
 #
 # The synthetic corpus (documents.text = single-space-separated lowercase
-# ASCII words, max length 8) makes the approximate-cl100k token counter
-# (textnorm/tokens.py) exact SQL arithmetic: a word piece costs 1 token when
-# its char length (incl. the leading space for non-first words) is <= 5,
-# else ceil(len/4.4); a trailing '.' costs 1.  The greedy close-late packer
+# ASCII words from a fixed pool) makes the BPE token counter
+# (textnorm/tokens.py) exact SQL arithmetic: each word piece costs its
+# bare or space-prefixed count (the ``wc`` relation below) and a trailing
+# '.' costs 1.  The greedy close-late packer
 # (naive_merge, rag/nlp/__init__.py:510-541) is a linear scan with
 # reset-on-threshold — expressed as a recursive CTE that advances every
 # document one section per iteration.

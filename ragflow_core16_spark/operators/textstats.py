@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..pipeline.snapshot_cache import relation
 from ..session import read_documents
 
 
@@ -261,7 +262,7 @@ def unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     # a token's corpus count is the sum of its per-language counts, so
     # the materialized per-language LM serves this query too (the re-agg
     # runs over the vocab-sized table, not the token stream)
-    freqs = (_lang_unigram_freqs(spark, sf_dir)
+    freqs = (relation(spark, "lang_unigram_lm", sf_dir)
              .groupBy("tok").agg(F.sum("cnt").alias("cnt")))
     totals = freqs.agg(F.sum("cnt").alias("total"),
                        F.count(F.lit(1)).alias("vocab"))
@@ -305,12 +306,7 @@ def _lang_unigram_freqs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(lang, tok, cnt): the per-language unigram frequency table — the
     LM behind ``ccnet_bucket`` (and, lang-summed, ``unigram_logprob``).
     CCNet ships its per-language KenLM models as frozen files trained
-    once (Wenzek et al. 2020); with a written table
-    (``lang_unigram_lm``) this is a scan."""
-    from ..pipeline.snapshot_cache import read_table
-    scan = read_table(spark, "lang_unigram_lm", sf_dir)
-    if scan is not None:
-        return scan.select("lang", "tok", "cnt")
+    once (Wenzek et al. 2020): the ``lang_unigram_lm`` table."""
     d = read_documents(spark, sf_dir)
     toks = F.split(F.regexp_replace(F.lower(F.trim("text")), r"\s+", " "),
                    " ")
@@ -348,7 +344,7 @@ def ccnet_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = F.split(F.regexp_replace(F.lower(F.trim("text")), r"\s+", " "),
                    " ")
     t = d.select("doc_id", "lang", F.explode(toks).alias("tok"))
-    freqs = _lang_unigram_freqs(spark, sf_dir)
+    freqs = relation(spark, "lang_unigram_lm", sf_dir)
     totals = freqs.groupBy("lang").agg(F.sum("cnt").alias("total"),
                                        F.count(F.lit(1)).alias("vocab"))
     lp = F.log((F.col("cnt") + 1.0) / (F.col("total") + F.col("vocab")))
@@ -526,19 +522,12 @@ def _tfidf_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unsorted keyword relation (production shape; the sort in
     ``tfidf_keywords`` is driver-compare presentation only).  Memoized
     (temp-table semantics): the tagging operators read it both as the
-    match-keyword relation and as the kw: tag family.  When the
-    ingest-time snapshot table exists (``tfidf_keywords`` — the
-    reference computes per-doc keywords at indexing,
-    `rag/svr/task_executor.py` keyword step), the build is a scan."""
+    match-keyword relation and as the kw: tag family.  The reference
+    computes per-doc keywords at indexing (`rag/svr/task_executor.py`
+    keyword step): the ``tfidf_keywords`` table."""
     from .dedup import _memo
-
-    def build():
-        from ..pipeline.snapshot_cache import read_table
-        scan = read_table(spark, "tfidf_keywords", sf_dir)
-        if scan is not None:
-            return scan
-        return _tfidf_ranked_build(spark, sf_dir)
-    return _memo("tfidf_ranked", spark, sf_dir, build)
+    return _memo("tfidf_ranked", spark, sf_dir,
+                 lambda: _tfidf_ranked_build(spark, sf_dir))
 
 
 def _tfidf_ranked_build(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -570,7 +559,8 @@ def _tfidf_ranked_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def tfidf_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..session import ordered as _ordered
-    return _tfidf_ranked(spark, sf_dir).transform(_ordered("doc_id", "rank"))
+    return (relation(spark, "tfidf_keywords", sf_dir)
+            .transform(_ordered("doc_id", "rank")))
 
 
 TFIDF_KEYWORDS_SQL = f"""
@@ -615,7 +605,7 @@ def auto_questions(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines compute it as a column expression."""
     q = F.concat(F.lit("what is "), F.col("term"), F.lit("?"))
     qtks = F.concat(F.lit("what is "), F.col("term"))
-    out = (_tfidf_ranked(spark, sf_dir)
+    out = (relation(spark, "tfidf_keywords", sf_dir)
            .filter(F.col("rank") <= 2)
            .select("doc_id", F.col("rank").cast("int").alias("rank"),
                    q.alias("question"), qtks.alias("question_tks")))
@@ -667,7 +657,7 @@ def kn_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     is integer DIV, so cross-engine aggregation order cannot flip a
     digit."""
     big = _doc_bigrams(spark, sf_dir)
-    scored = _kn_bigram_lm(spark, sf_dir)
+    scored = relation(spark, "kn_bigram_lm", sf_dir)
     return (big.join(F.broadcast(scored), ["w1", "w2"])
             .groupBy("doc_id")
             .agg(F.sum("lp_ppm").alias("sum_ppm"),
@@ -703,13 +693,9 @@ def _doc_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _kn_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(w1, w2, lp_ppm): the trained Kneser-Ney bigram model — the LM
     analogue of CCNet's shipped KenLM binary, which is trained once and
-    distributed as a model FILE, never re-estimated per scoring run.
-    With a written model table (``kn_bigram_lm``) this is a
-    scan; the compute path re-estimates the counts from the corpus."""
-    from ..pipeline.snapshot_cache import read_table
-    scan = read_table(spark, "kn_bigram_lm", sf_dir)
-    if scan is not None:
-        return scan.select("w1", "w2", "lp_ppm")
+    distributed as a model FILE, never re-estimated per scoring run:
+    the ``kn_bigram_lm`` table.  This estimates the counts from the
+    corpus."""
     bg = (_doc_bigrams(spark, sf_dir)
           .groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("cnt")))
     ctx = bg.groupBy("w1").agg(F.sum("cnt").alias("ctx_cnt"),

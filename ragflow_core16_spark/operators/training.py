@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..pipeline.snapshot_cache import relation
 from ..session import read_documents
 
 SEQ_LEN = 512
@@ -25,7 +26,7 @@ SEQ_LEN = 512
 
 # per-document token count as a pure column expression: first word costs
 # cost(len), subsequent words cost(len+1) — cost(p) = 1 if p<=5 else
-# ceil(p/4.4)  (textnorm/tokens.py piece arithmetic, exact on this corpus)
+# ceil(p/4.4), a chars/token estimate (~4.4 chars per cl100k token)
 _TOK_EXPR = """
 aggregate(
   transform(split(text, ' '),
@@ -427,12 +428,7 @@ def bpe_train_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     is trained ONCE per corpus snapshot and shipped as a ranks file (the
     repo's own ``textnorm/assets/webspark_bpe.tiktoken`` is exactly such
     an artifact); nobody re-runs the merge loop per query."""
-    from ..pipeline.snapshot_cache import read_table
-    scan = read_table(spark, "bpe_merges", sf_dir)
-    if scan is not None:
-        return (scan.select("rank", "left", "right", "merged", "pair_freq")
-                .orderBy("rank"))
-    return bpe_train(spark, sf_dir)
+    return relation(spark, "bpe_merges", sf_dir).orderBy("rank")
 
 
 # ------------------------------------------------------------- dsir
@@ -478,12 +474,7 @@ def _dsir_feats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _dsir_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The B-bucket target/raw histogram — DSIR's trained importance
     model (B rows).  The paper fits it once over the target + raw
-    corpora and scores everything with the frozen table; with a written
-    table (``dsir_hist``) this is a scan."""
-    from ..pipeline.snapshot_cache import read_table
-    scan = read_table(spark, "dsir_hist", sf_dir)
-    if scan is not None:
-        return scan.select("b", "cnt_t", "cnt_r")
+    corpora and scores everything with the frozen table."""
     return (_dsir_feats(spark, sf_dir).groupBy("b")
             .agg(F.sum(F.col("is_t").cast("long")).alias("cnt_t"),
                  F.sum((~F.col("is_t")).cast("long")).alias("cnt_r")))
@@ -491,7 +482,7 @@ def _dsir_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def dsir_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
     feats = _dsir_feats(spark, sf_dir)
-    hist = _dsir_hist(spark, sf_dir)
+    hist = relation(spark, "dsir_hist", sf_dir)
     totals = hist.agg(F.sum("cnt_t").alias("n_t"),
                       F.sum("cnt_r").alias("n_r"))
     scored = (feats.filter(~F.col("is_t"))

@@ -44,6 +44,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..pipeline.snapshot_cache import relation
 from ..session import read_documents
 
 LINE_WORDS = 10
@@ -306,7 +307,19 @@ def corpus_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def corpus_keep_decisions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``corpus_keep`` before presentation ordering.  Composes the
+    """``corpus_keep`` before presentation ordering: the content-gate
+    columns of the written decision table (``web_decisions``) when one
+    is published, else ``_corpus_keep_computed``."""
+    from ..pipeline.snapshot_cache import read_table
+    scan = read_table(spark, "web_decisions", sf_dir)
+    if scan is not None:
+        return scan.select("doc_id", "gopher_pass", "c4_pass",
+                           "dedup_kept", "clean", "corpus_keep")
+    return _corpus_keep_computed(spark, sf_dir)
+
+
+def _corpus_keep_computed(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The content-gate decisions, computed.  Composes the
     UNORDERED component relations (composing the presentation versions
     would run a full range-exchange sort per component that the very next
     join re-partitions away — the round-2 bench showed ``web_keep`` at
@@ -316,11 +329,6 @@ def corpus_keep_decisions(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``corpus_keep``) reuses the persisted relation instead of re-running
     the LSH chain — the local-mode analogue of writing the decision
     columns once and scanning them thereafter."""
-    from ..pipeline.snapshot_cache import read_table
-    scan = read_table(spark, "web_decisions", sf_dir)
-    if scan is not None:
-        return scan.select("doc_id", "gopher_pass", "c4_pass",
-                           "dedup_kept", "clean", "corpus_keep")
     from .dedup import _memo, dedup_keep_decisions
     from .training import (_BENCH_MOD, decontaminate_decisions,
                            repetition_quality_decisions)
@@ -1144,7 +1152,7 @@ def web_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Composes the UNORDERED decision relations, with the content gate
     routed through the shared per-(session, sf_dir) memo (see
-    ``corpus_keep_decisions``): no component pays a presentation sort
+    ``_corpus_keep_computed``): no component pays a presentation sort
     inside the composition, and a prior ``corpus_keep`` materialization
     in the same run is reused instead of recomputed.
 
@@ -1153,16 +1161,7 @@ def web_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     snapshot time), the whole query is a SCAN of it: the deployment
     shape at 100 TB, where the dedup chain is computed once per snapshot,
     never per query."""
-    from ..pipeline.snapshot_cache import read_table
-    scan = read_table(spark, "web_decisions", sf_dir)
-    if scan is not None:
-        return (scan.select(
-                    "doc_id",
-                    F.col("corpus_keep").alias("content_keep"), "allowed",
-                    (~F.col("blocked")).alias("unblocked"), "indexable",
-                    "web_keep")
-                .orderBy("doc_id"))
-    return (web_decisions_unordered(spark, sf_dir)
+    return (relation(spark, "web_decisions", sf_dir)
             .select("doc_id",
                     F.col("corpus_keep").alias("content_keep"), "allowed",
                     (~F.col("blocked")).alias("unblocked"), "indexable",
@@ -1209,13 +1208,13 @@ def web_decisions_path(sf_dir: str) -> str:
 
 def web_decisions_unordered(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full per-document decision relation, computed: content gates
-    (``corpus_keep_decisions``) joined with the crawl-metadata gates.
+    (``_corpus_keep_computed``) joined with the crawl-metadata gates.
     One row per non-eval document; every component column raw (blocked,
     not unblocked) so both ``web_keep`` and ``corpus_keep`` project from
     it."""
     from .dedup import _memo
     ck = _memo("corpus_keep_decisions", spark, sf_dir,
-               lambda: corpus_keep_decisions(spark, sf_dir))
+               lambda: _corpus_keep_computed(spark, sf_dir))
     rb = robots_decisions(spark, sf_dir).select("doc_id", "allowed")
     bl = url_blocklist_decisions(spark, sf_dir).select("doc_id", "blocked")
     mr = meta_robots_decisions(spark, sf_dir).select("doc_id", "indexable")
@@ -1236,7 +1235,7 @@ def gate_columns_unordered(spark: SparkSession, sf_dir: str) -> DataFrame:
     (pipeline/incremental.py) computes these for the daily batch ONLY
     and recombines them with the merged dedup labels and decontamination
     postings; the coalesce/anchor semantics here must stay exactly those
-    of ``corpus_keep_decisions`` (anchor covers every non-eval document;
+    of ``_corpus_keep_computed`` (anchor covers every non-eval document;
     a gate that filtered a doc out left-joins to NULL and coalesces to a
     failing gate)."""
     from .training import _BENCH_MOD, repetition_quality_decisions
@@ -1275,9 +1274,7 @@ def curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     composition up to and including it.  One scan (or one decision
     computation), ONE aggregation, then a 7-row ``stack`` unpivot — no
     joins, no second pass, any corpus size."""
-    from ..pipeline.snapshot_cache import read_table
-    scan = read_table(spark, "web_decisions", sf_dir)
-    d = scan if scan is not None else web_decisions_unordered(spark, sf_dir)
+    d = relation(spark, "web_decisions", sf_dir)
     conds = {
         "gopher": F.col("gopher_pass"), "c4": F.col("c4_pass"),
         "dedup": F.col("dedup_kept"), "decontam": F.col("clean"),
@@ -1402,12 +1399,7 @@ def _site_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(site, ptext): paragraphs above the 30% site-frequency gate — the
     corpus-level boilerplate lexicon.  A curation deployment fits this
     once per snapshot (it is a pure function of the corpus) and strips
-    against the frozen table; with a written table
-    (``site_boilerplate``) this is a scan."""
-    from ..pipeline.snapshot_cache import read_table
-    scan = read_table(spark, "site_boilerplate", sf_dir)
-    if scan is not None:
-        return scan.select("site", "ptext")
+    against the frozen table."""
     base = _bp_base(spark, sf_dir)
     paras = _bp_explode(base)
     # DISTINCT documents per (site, paragraph) — a doc whose two body
@@ -1425,7 +1417,7 @@ def _site_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
 def boilerplate_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..session import ordered as _ordered
     paras = _bp_explode(_bp_base(spark, sf_dir))
-    bp = _site_boilerplate(spark, sf_dir)
+    bp = relation(spark, "site_boilerplate", sf_dir)
     kept = paras.join(bp, ["site", "ptext"], "left_anti")
     return (kept.groupBy("doc_id", "site")
             .agg(F.count(F.lit(1)).cast("int").alias("n_kept"),

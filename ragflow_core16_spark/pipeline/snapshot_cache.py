@@ -6,10 +6,16 @@ the GraphRAG entity graph and community structure
 task executor), the curation verdicts — and every query reads the stored
 result.  This module is that contract for the Spark engine: an explicit
 ``materialize(kind, ...)`` write per corpus snapshot, keyed by a
-fingerprint of the backing documents files, with query operators scanning
-the table when it exists and recomputing when it doesn't (so a fresh
-session with no warehouse — the driver's oracle run — still exercises
-the full compute path).
+fingerprint of the backing documents files.
+
+One rule decides scan or compute: ``relation(spark, kind, sf_dir)`` scans
+the kind's published table and otherwise calls the compute ``FAMILIES``
+registers for it (so a fresh session with no warehouse, such as an
+oracle-parity run, still exercises the full compute path).  The registered
+computes never look for their own table; a query, or a compute that reads
+a kind built before its own, asks ``relation`` for that kind.  A caller
+whose fallback is cheaper than the kind's full compute (a query that
+needs only part of it) calls ``read_table`` itself.
 
 Each table is a ``pipeline/snapshots.py`` ``SnapshotTable``: a build is
 one manifest commit, so a crashed write (no published version) never
@@ -52,8 +58,8 @@ class Family(NamedTuple):
 
     def build(self, spark, sf_dir: str) -> list[str]:
         """Materialize each kind in order (a published one is skipped),
-        so a later kind's compute scans the earlier kinds' tables.
-        Returns the table paths."""
+        so a later kind's compute, reading an earlier kind through
+        ``relation``, scans its table.  Returns the table paths."""
         return [materialize(spark, kind, sf_dir,
                             functools.partial(_resolve(ref), spark, sf_dir))
                 for kind, ref in self.kinds.items()]
@@ -127,6 +133,8 @@ FAMILIES = (
 )
 #: family name → family
 BY_NAME = {f.name: f for f in FAMILIES}
+#: kind → dotted name of its compute
+COMPUTE = {k: ref for f in FAMILIES for k, ref in f.kinds.items()}
 #: the families a day-2 batch merges into: the day-1 base a delta needs
 DELTA_FAMILIES = tuple(f for f in FAMILIES if f.delta)
 #: kinds a delta leaves behind: queries over a delta-built corpus fall
@@ -194,6 +202,15 @@ def read_table(spark, kind: str, sf_dir: str):
     of it is published."""
     t = SnapshotTable(spark, table_path(kind, sf_dir))
     return t.read() if t.current_version() else None
+
+
+def relation(spark, kind: str, sf_dir: str):
+    """Kind ``kind`` of this corpus snapshot: a scan of its table when a
+    version is published, else its registered compute."""
+    scan = read_table(spark, kind, sf_dir)
+    if scan is not None:
+        return scan
+    return _resolve(COMPUTE[kind])(spark, sf_dir)
 
 
 def materialize(spark, kind: str, sf_dir: str, build) -> str:

@@ -30,12 +30,6 @@ def read_pages_stream(spark: SparkSession, input_dir: str,
             .parquet(input_dir))
 
 
-def extract_stream(pages_stream: DataFrame,
-                   chunk_token_num: int = 128) -> DataFrame:
-    """Identical operator as batch — extraction is stateless per row."""
-    return extract_pages(pages_stream, chunk_token_num)
-
-
 def windowed_metrics_stream(extracted: DataFrame,
                             watermark: str = "1 hour",
                             window: str = "1 hour") -> DataFrame:
@@ -73,7 +67,7 @@ def run_extract_stream(spark: SparkSession, input_dir: str, out_dir: str,
     """Start the streaming extraction job (availableNow → drain-and-stop,
     used by tests; drop once=True for a continuous job)."""
     stream = read_pages_stream(spark, input_dir)
-    ext = extract_stream(stream).drop("chunks")
+    ext = extract_pages(stream).drop("chunks")
     writer = (ext.writeStream
               .format("parquet")
               .option("path", out_dir)

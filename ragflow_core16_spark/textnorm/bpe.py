@@ -10,11 +10,11 @@ becomes a data-file drop-in:
 
     export RAG_TIKTOKEN_VOCAB=/path/to/cl100k_base.tiktoken
 
-(the standard dump format: ``base64(token_bytes) rank`` per line).  When
-the env var is set, ``textnorm/tokens.py`` routes
-``num_tokens_from_string`` through this encoder and chunk-boundary counts
-match tiktoken byte-for-byte; without it the documented approximation
-stays in force.
+(the standard dump format: ``base64(token_bytes) rank`` per line).
+``textnorm/tokens.py`` routes ``num_tokens_from_string`` through this
+encoder: over that file chunk-boundary counts match tiktoken
+byte-for-byte; without the env var it encodes with the shipped ranks
+file.
 
 The merge loop mirrors tiktoken's ``byte_pair_merge``: repeatedly merge
 the adjacent pair with the lowest rank until no merge applies.  Pinned by
@@ -60,14 +60,18 @@ _PRETOK_ASCII = re.compile(
 
 def load_vocab(path: str) -> dict[bytes, int]:
     """Parse the standard ``.tiktoken`` dump: ``base64(bytes) rank``."""
-    ranks: dict[bytes, int] = {}
     with open(path, "rb") as f:
-        for line in f:
-            line = line.strip()
-            if not line:
-                continue
-            tok_b64, rank = line.split()
-            ranks[base64.b64decode(tok_b64)] = int(rank)
+        return _parse_vocab(f.read())
+
+
+def _parse_vocab(data: bytes) -> dict[bytes, int]:
+    ranks: dict[bytes, int] = {}
+    for line in data.splitlines():
+        line = line.strip()
+        if not line:
+            continue
+        tok_b64, rank = line.split()
+        ranks[base64.b64decode(tok_b64)] = int(rank)
     return ranks
 
 
@@ -124,21 +128,24 @@ class BpeEncoder:
 # repo's committed documentation: class-pure letter merges + all 1-3-digit
 # tokens, cl100k's structural design).  RAG_TIKTOKEN_VOCAB overrides it
 # with a real cl100k_base.tiktoken dump at deployment.
-_default: tuple[str, BpeEncoder] | None = None
+_default: tuple[str | None, BpeEncoder] | None = None
 
 
 def default_encoder() -> BpeEncoder:
     """Process-wide encoder over RAG_TIKTOKEN_VOCAB if set, else the
     shipped ranks file.  Cached per resolved path, so flipping the env
-    var mid-process re-routes.  Raises (FileNotFoundError/ValueError)
-    only if the resolved file is unreadable — the caller decides the
-    fallback."""
+    var mid-process re-routes.  Raises (OSError/ValueError) if the
+    resolved file is unreadable."""
     global _default
     import os
-    path = os.environ.get("RAG_TIKTOKEN_VOCAB") or os.path.join(
-        os.path.dirname(__file__), "assets", "webspark_bpe.tiktoken")
+    import pkgutil
+    path = os.environ.get("RAG_TIKTOKEN_VOCAB")
     if _default is None or _default[0] != path:
-        _default = (path, BpeEncoder(load_vocab(path)))
+        # the shipped file is read through the package's loader, so it
+        # also loads when the package is deployed as a --py-files zip
+        ranks = (load_vocab(path) if path else _parse_vocab(pkgutil.get_data(
+            __package__, "assets/webspark_bpe.tiktoken")))
+        _default = (path, BpeEncoder(ranks))
     return _default[1]
 
 

@@ -502,15 +502,18 @@ class TestFastParserDifferential:
             s = "".join(rng.choice(a2) for _ in range(rng.randint(1, 80)))
             assert self._same(s), repr(s)
 
-    def test_env_forces_stdlib(self, monkeypatch):
+    def test_raising_fast_parse_falls_back_to_stdlib(self, monkeypatch):
         from ragflow_core16_spark.html import dom
-        calls = []
-        orig = dom.parse_html_stdlib
-        monkeypatch.setattr(dom, "parse_html_stdlib",
-                            lambda t: calls.append(1) or orig(t))
-        monkeypatch.setenv("RAG_HTML_PARSER", "stdlib")
-        dom.parse_html("<p>x</p>")
-        assert calls
+        text = "<div class=a><p>x &amp; y<br>z</div><!-- c -->tail"
+        want = []
+        self._ser(dom.parse_html_stdlib(text), want)
+
+        def surprise(_text):
+            raise IndexError("fast-path surprise")
+        monkeypatch.setattr(dom, "_fast_parse", surprise)
+        got = []
+        self._ser(dom.parse_html(text), got)
+        assert got == want
 
 
 class TestAnnotatedWalkDifferential:

@@ -6,9 +6,9 @@ import time
 from pyspark.sql import functions as F
 
 from ragflow_core16_spark.datagen.pages import pages_df
+from ragflow_core16_spark.operators.extract import extract_pages
 from ragflow_core16_spark.streaming.extract_stream import (
-    run_extract_stream, read_pages_stream, extract_stream,
-    windowed_metrics_stream)
+    run_extract_stream, read_pages_stream, windowed_metrics_stream)
 
 
 def _write_pages(spark, n, path, partitions=2, offset=0):
@@ -48,7 +48,7 @@ class TestExtractStream:
         inp = str(tmp_path / "in")
         pages_df(spark, 4, partitions=1).write.parquet(inp)
         stream = read_pages_stream(spark, inp)
-        m = windowed_metrics_stream(extract_stream(stream))
+        m = windowed_metrics_stream(extract_pages(stream))
         assert m.isStreaming
         q = (m.writeStream.format("memory").queryName("mstream")
              .outputMode("append").trigger(availableNow=True).start())
@@ -116,7 +116,7 @@ class TestDedupStream:
         import pandas as pd
         from ragflow_core16_spark.datagen.pages import PAGES_SCHEMA
         from ragflow_core16_spark.streaming.extract_stream import (
-            dedup_stream, extract_stream)
+            dedup_stream)
 
         inp = str(tmp_path / "in")
         ckpt = str(tmp_path / "ck")
@@ -135,7 +135,7 @@ class TestDedupStream:
             stream = (spark.readStream.schema(PAGES_SCHEMA)
                       .option("maxFilesPerTrigger", 100)
                       .parquet(f"{inp}/{name}"))
-            ded = dedup_stream(extract_stream(stream)).drop("chunks")
+            ded = dedup_stream(extract_pages(stream)).drop("chunks")
             q = (ded.writeStream.format("parquet")
                  .option("path", outp).option("checkpointLocation", ckpt)
                  .outputMode("append").trigger(availableNow=True).start())

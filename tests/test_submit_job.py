@@ -14,15 +14,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 @pytest.mark.slow
 def test_spark_submit_pyfiles_and_resume(tmp_path, spark):
-    # package the library exactly as a cluster deploy would
-    zip_path = tmp_path / "ragflow_core16_spark.zip"
-    pkg = os.path.join(REPO, "ragflow_core16_spark")
-    with zipfile.ZipFile(zip_path, "w", zipfile.ZIP_DEFLATED) as zf:
-        for root, _dirs, files in os.walk(pkg):
-            for f in files:
-                if f.endswith(".py"):
-                    full = os.path.join(root, f)
-                    zf.write(full, os.path.relpath(full, REPO))
+    zip_path = _zip_pkg(tmp_path)
 
     from ragflow_core16_spark.datagen.pages import pages_df
     pages_path = str(tmp_path / "pages")
@@ -44,11 +36,23 @@ def test_spark_submit_pyfiles_and_resume(tmp_path, spark):
     first = submit()
     assert first["rows"] == 60 and first["ok"] == 60
     assert first["chunks"] > 0
+    # the zip-deployed workers count tokens with the shipped BPE ranks
+    # file, like a local run: same chunk boundaries and token counts
+    from ragflow_core16_spark.operators.extract import extract_pages
+    from ragflow_core16_spark.pipeline.snapshots import SnapshotTable
+
+    def chunking(df):
+        return sorted((r.url, r.n_tokens,
+                       tuple((c.chunk_text, c.token_cnt)
+                             for c in r.chunks or ()))
+                      for r in df.select("url", "n_tokens",
+                                         "chunks").collect())
+    assert chunking(SnapshotTable(spark, str(tmp_path / "out")).read()) \
+        == chunking(extract_pages(spark.read.parquet(pages_path)))
 
     # rerun resumes from the committed snapshot: nothing left to extract
     second = submit()
     assert second["rows"] == 0
-    from ragflow_core16_spark.pipeline.snapshots import SnapshotTable
     t = SnapshotTable(spark, str(tmp_path / "out"))
     assert t.current_version() >= 1
     assert t.read().count() == 60
@@ -59,14 +63,7 @@ def test_spark_submit_curate_job(tmp_path, spark):
     """Deployment path for the curation pipeline: spark-submit --py-files
     + jobs/curate_job.py over a documents dir; the kept corpus must equal
     the decision table's keep set."""
-    zip_path = tmp_path / "ragflow_core16_spark.zip"
-    pkg = os.path.join(REPO, "ragflow_core16_spark")
-    with zipfile.ZipFile(zip_path, "w", zipfile.ZIP_DEFLATED) as zf:
-        for root, _dirs, files in os.walk(pkg):
-            for f in files:
-                if f.endswith(".py"):
-                    full = os.path.join(root, f)
-                    zf.write(full, os.path.relpath(full, REPO))
+    zip_path = _zip_pkg(tmp_path)
 
     out = subprocess.run(
         ["spark-submit", "--master", "local[2]",
@@ -99,14 +96,7 @@ def test_spark_submit_warc_in_wet_out(tmp_path, spark):
     """Crawl-shaped deployment: --input-format warc over a dir of
     *.warc.gz, --wet-output materializing *.warc.wet.gz shards; every
     record must survive the full container loop."""
-    zip_path = tmp_path / "ragflow_core16_spark.zip"
-    pkg = os.path.join(REPO, "ragflow_core16_spark")
-    with zipfile.ZipFile(zip_path, "w", zipfile.ZIP_DEFLATED) as zf:
-        for root, _dirs, files in os.walk(pkg):
-            for f in files:
-                if f.endswith(".py"):
-                    full = os.path.join(root, f)
-                    zf.write(full, os.path.relpath(full, REPO))
+    zip_path = _zip_pkg(tmp_path)
 
     from ragflow_core16_spark.datagen.pages import generate_page
     from ragflow_core16_spark.sources.warc import (build_response_record,
@@ -248,14 +238,7 @@ def test_spark_submit_index_job(tmp_path, spark):
     --py-files + jobs/index_job.py writes the GraphRAG and RAPTOR
     snapshot tables; queries in a LATER session scan them and return the
     same rows the compute path produces."""
-    zip_path = tmp_path / "ragflow_core16_spark.zip"
-    pkg = os.path.join(REPO, "ragflow_core16_spark")
-    with zipfile.ZipFile(zip_path, "w", zipfile.ZIP_DEFLATED) as zf:
-        for root, _dirs, files in os.walk(pkg):
-            for f in files:
-                if f.endswith(".py"):
-                    full = os.path.join(root, f)
-                    zf.write(full, os.path.relpath(full, REPO))
+    zip_path = _zip_pkg(tmp_path)
 
     env = {**os.environ, "RAG_CURATION_DIR": str(tmp_path / "cur")}
     out = subprocess.run(
@@ -302,14 +285,17 @@ def test_spark_submit_index_job(tmp_path, spark):
 
 
 def _zip_pkg(tmp_path):
+    """The package as the documented deploy ships it (``zip -r
+    ragflow_core16_spark.zip ragflow_core16_spark``): every file, the
+    shipped BPE ranks file included, minus bytecode caches."""
     zip_path = tmp_path / "ragflow_core16_spark.zip"
     pkg = os.path.join(REPO, "ragflow_core16_spark")
     with zipfile.ZipFile(zip_path, "w", zipfile.ZIP_DEFLATED) as zf:
-        for root, _dirs, files in os.walk(pkg):
+        for root, dirs, files in os.walk(pkg):
+            dirs[:] = [d for d in dirs if d != "__pycache__"]
             for f in files:
-                if f.endswith(".py"):
-                    full = os.path.join(root, f)
-                    zf.write(full, os.path.relpath(full, REPO))
+                full = os.path.join(root, f)
+                zf.write(full, os.path.relpath(full, REPO))
     return zip_path
 
 

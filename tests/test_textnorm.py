@@ -159,12 +159,6 @@ class TestBpe:
         # shipped ranks file ("hi" is not a merged token there)
         from ragflow_core16_spark.textnorm.bpe import default_encoder
         assert tokens._default_counter() == default_encoder().count
-        # the approximation only on explicit request
-        monkeypatch.setenv("RAG_TOKEN_APPROX", "1")
-        try:
-            assert tokens._default_counter() is tokens._count_native
-        finally:
-            monkeypatch.delenv("RAG_TOKEN_APPROX")
 
     def test_pretokenizer_cl100k_shapes(self):
         # regression (r2 review): the word branch carries one optional
