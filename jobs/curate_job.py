@@ -71,7 +71,7 @@ def main(argv=None) -> int:
 
     from ragflow_core16_spark.pipeline.snapshot_cache import (
         FAMILIES, materialize_families, read_table)
-    from ragflow_core16_spark.session import get_spark
+    from ragflow_core16_spark.session import documents_scan, get_spark
     spark = get_spark(app_name="ragflow_core16_spark.curate")
 
     t0 = time.time()
@@ -95,7 +95,7 @@ def main(argv=None) -> int:
             spark, sf_dir, [f for f in FAMILIES if f.job == "curate"])
     dec = read_table(spark, "web_decisions", sf_dir)
     if not args.no_corpus:
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+        docs = documents_scan(spark, sf_dir)
         kept = docs.join(dec.filter(F.col("corpus_keep")).select("doc_id"),
                          "doc_id")
         kept.write.mode("overwrite").parquet(f"{args.output}/corpus")

@@ -30,6 +30,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import (BinaryType, LongType, StringType, StructField,
                                StructType, TimestampType)
 
+from ..session import documents_scan
+
 PAGES_SCHEMA = StructType([
     StructField("url", StringType(), False),
     StructField("warc_ts", TimestampType(), False),
@@ -293,7 +295,7 @@ def pages_from_documents(spark: SparkSession, sf_dir: str,
     extraction e2e queries are DuckDB-oracle-checkable; ~10% of pages get a
     malformed-HTML mutation (unclosed tags / unquoted attrs) that the
     extractor must survive without changing the extracted text."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = documents_scan(spark, sf_dir)
 
     def gen(batches):
         for pdf in batches:
@@ -375,7 +377,7 @@ def hostile_pages_from_documents(spark: SparkSession, sf_dir: str,
     """Adversarial-markup pages keyed 1:1 to documents.parquet — the
     extraction output must be byte-identical to ``pages_from_documents``'s
     (see ``hostile_page``)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = documents_scan(spark, sf_dir)
 
     def gen(batches):
         for pdf in batches:
@@ -402,7 +404,7 @@ def captures_from_documents(spark: SparkSession, sf_dir: str,
     counts and hashes.  Capture counts are md5-derived so oracles can
     replay them."""
     real = pages_from_documents(spark, sf_dir, seed)
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = documents_scan(spark, sf_dir)
 
     def gen(batches):
         for pdf in batches:

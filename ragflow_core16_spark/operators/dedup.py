@@ -27,7 +27,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..pipeline.snapshot_cache import relation
-from ..session import read_documents
+from ..session import memo, read_documents
+# perfbench and the tests reset the memo through this module
+from ..session import reset_shared_cache  # noqa: F401
 
 _NORM = r"\s+"
 
@@ -66,69 +68,13 @@ FROM d GROUP BY content_md5 HAVING count(*) > 1 ORDER BY content_md5
 #
 # The shingle relation and the wide minhash signature feed three queries
 # (signatures, LSH pairs, jaccard verify) and the jaccard verify uses the
-# shingles twice more internally.  Memoize them per (session, sf_dir) with
-# a MEMORY_AND_DISK persist — the local-mode analogue of materializing the
-# intermediate to a temp table, which is what a 100 TB run would do between
-# the signature job and the verify job (recomputing a 10^12-row shingle
-# derivation three times is the single biggest avoidable cost in the whole
-# dedup suite).
-_MEMO: dict = {}
-
-
-def _memo(name: str, spark, sf_dir: str, build):
-    """Per-(session, sf_dir) memo.  The cached value carries the session
-    OBJECT: a different session (even one reusing the same CPython id after
-    GC) rebuilds instead of serving a DataFrame bound to a dead context,
-    and entries of replaced sessions are evicted as they are encountered.
-    Regenerating fixture parquet under an unchanged sf_dir within one
-    session is NOT detected — that is the temp-table semantics this memo
-    models."""
-    key = (name, sf_dir)
-    hit = _MEMO.get(key)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
-    from pyspark import StorageLevel
-    df = build().persist(StorageLevel.MEMORY_AND_DISK)
-    _MEMO[key] = (spark, df)
-    return df
-
-
-def reset_shared_cache() -> None:
-    """Unpersist and forget ALL shared cached relations (bench hygiene: lets
-    a harness measure each query hermetically — every run pays its own
-    materialization instead of inheriting a neighbor's, and storage memory
-    doesn't accumulate across an N-query session)."""
-    for _sess, df in _MEMO.values():
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-    _MEMO.clear()
-    # sibling module caches that also hold persisted/checkpointed frames:
-    # a stale cached tree whose localCheckpoint blocks a harness has since
-    # unpersisted fails with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND on reuse,
-    # so the reset must forget it too
-    from . import raptor
-    raptor.release_tree_cache()
-    # final sweep: presentation checkpoints (session.ordered_once) and any
-    # other lazy localCheckpoint pin RDD-level blocks that never appear in
-    # the CacheManager, so DataFrame.unpersist can't reach them.  Every
-    # module cache is forgotten above, so no cached plan can legally
-    # reference an old checkpoint block — anything still listed in
-    # sc.getPersistentRDDs is orphaned storage this reset owns.
-    try:
-        from pyspark.sql import SparkSession
-        spark = SparkSession.getActiveSession()
-        if spark is not None:
-            jsc = spark.sparkContext._jsc
-            for rdd in list(jsc.getPersistentRDDs().values()):
-                rdd.unpersist()
-    except Exception:
-        pass
+# shingles twice more internally: both are session ``memo`` entries
+# (recomputing a 10^12-row shingle derivation three times is the single
+# biggest avoidable cost in the whole dedup suite).
 
 
 def _shingles_cached(spark, sf_dir) -> DataFrame:
-    return _memo("shingles", spark, sf_dir,
+    return memo("shingles", spark, sf_dir,
                  lambda: _shingles(spark, sf_dir))
 
 
@@ -185,7 +131,7 @@ def _signature_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBy(doc_id) with map-side partial agg.  No seed cross join (K×
     row multiplication), no (doc, seed) shuffle key — the shuffle moves
     |docs| rows of K longs, independent of shingle count."""
-    return _memo("sigwide", spark, sf_dir,
+    return memo("sigwide", spark, sf_dir,
                  lambda: _sigwide_of(_shingles_cached(spark, sf_dir)))
 
 

@@ -52,8 +52,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..pipeline.snapshot_cache import relation
-from ..session import read_documents
-from .dedup import _memo
+from ..session import memo, read_documents
 
 DF_MIN = 3          # entity gate: appears in >= 3 documents
 TOP_K = 6           # entities kept per document (caps co-occurrence fanout)
@@ -87,23 +86,15 @@ def _mentions(spark, sf_dir) -> DataFrame:
         # vocabulary is tiny vs the corpus: broadcast the gate
         return m.join(F.broadcast(gated), "entity").select(
             "doc_id", "entity", "mentions", "df")
-    return _memo("graphrag_mentions", spark, sf_dir, build)
+    return memo("graphrag_mentions", spark, sf_dir, build)
 
 
 def _n_docs(spark, sf_dir) -> int:
     """Corpus size = documents contributing >= 1 bigram (one cheap count
     per session; a literal from the lineage table at deployment)."""
-    key = ("graphrag_n", sf_dir)
-    hit = _N_CACHE.get(key)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
-    n = (relation(spark, "graphrag_mentions", sf_dir)
-         .select("doc_id").distinct().count())
-    _N_CACHE[key] = (spark, n)
-    return n
-
-
-_N_CACHE: dict = {}
+    return memo("graphrag_n", spark, sf_dir,
+                lambda: relation(spark, "graphrag_mentions", sf_dir)
+                .select("doc_id").distinct().count())
 
 
 def _tops(spark, sf_dir) -> DataFrame:
@@ -269,7 +260,7 @@ def _graph_edges(spark, sf_dir) -> DataFrame:
             "src", "dst", "weight",
             F.expr(f"weight * {n} * {PPM} div (df_a * df_b)")
             .cast("bigint").alias("lift_ppm"))
-    return _memo("graphrag_edges", spark, sf_dir, build)
+    return memo("graphrag_edges", spark, sf_dir, build)
 
 
 def entity_graph(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -26,6 +26,7 @@ from pyspark.sql.types import (IntegerType, LongType, StringType, StructField,
                                StructType)
 
 from ..session import ordered as _ordered
+from ..session import read_documents
 
 from ..chunkers.naive import naive_merge_with_counts
 from ..pdf.boxops import filter_forpages, naive_vertical_merge
@@ -34,9 +35,7 @@ from ..textnorm.xxh64 import xxh64_hexdigest
 
 
 def _spread_docs(spark, sf_dir):
-    from ..session import spread
-    return spread(spark.read.parquet(f"{sf_dir}/documents.parquet")
-                  .select("doc_id", "text"))
+    return read_documents(spark, sf_dir).select("doc_id", "text")
 
 
 PDF_CHUNKS_SCHEMA = StructType([

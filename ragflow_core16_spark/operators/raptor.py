@@ -50,6 +50,9 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..pipeline.snapshot_cache import relation
+from ..session import documents_scan, memo, spread
+
 FAN = 8            # target members per cluster
 MAX_CLUSTER = 64   # reference's max_cluster bound on the component count
 MAX_LEVELS = 5     # depth cap (8^5 = 32k leaves collapse within 5 levels)
@@ -74,13 +77,12 @@ def _cos(a, b):
 def _leaves(spark, sf_dir) -> DataFrame:
     """Level-0 nodes: documents joined to their embeddings, vectors in
     integer micro-units."""
-    from ..session import spread
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
         F.col("vec_id").alias("node_id"),
         F.expr("transform(embedding, x -> "
                f"cast(round(cast(x as double) * {MICRO}) as bigint))")
         .alias("iemb"))
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = documents_scan(spark, sf_dir).select(
         F.col("doc_id").alias("node_id"), "text")
     return spread(docs.join(emb, "node_id"))
 
@@ -139,47 +141,19 @@ def _level_up(nodes: DataFrame, n: int):
     return nxt, edges
 
 
-class _TreeCache:
-    key = None
-    value = None
-
-
-def release_tree_cache():
-    """Unpersist EVERY block the cached tree pinned: the nodes/edges/leaves
-    DataFrames AND the per-level localCheckpoint RDDs (which live in
-    ``sc.getPersistentRDDs``, not the CacheManager, so DataFrame.unpersist
-    never reaches them).  Called by ``dedup.reset_shared_cache``."""
-    if _TreeCache.value is None:
-        _TreeCache.key = None
-        return
-    for h in _TreeCache.value[1:]:
-        try:
-            h.unpersist()
-        except Exception:
-            pass
-    _TreeCache.key = _TreeCache.value = None
-
-
 def _tree(spark, sf_dir):
-    """Build the full tree once per (session, sf_dir): returns
-    (all_nodes(level, node_id, n_members, text, iemb), edges(child_level,
-    child_id, parent_id)).  Levels above 0 total ~n/7 rows."""
-    key = (sf_dir,)
-    if _TreeCache.key == key and _TreeCache.value[0] is spark:
-        return _TreeCache.value[1], _TreeCache.value[2]
-    # ingest-time materialization (the reference builds the RAPTOR tree
-    # once per corpus in the task executor and stores the summary chunks;
-    # the ``raptor_tree`` family's build is that step here): when the
-    # snapshot tables exist, every query is a scan — no clustering loop,
-    # no persisted frames to track
-    from ..pipeline.snapshot_cache import read_table
-    ns = read_table(spark, "raptor_nodes", sf_dir)
-    es = read_table(spark, "raptor_edges", sf_dir)
-    if ns is not None and es is not None:
-        return ns, es
+    """The full tree, built once per (session, sf_dir): (all_nodes(level,
+    node_id, n_members, text, iemb), edges(child_level, child_id,
+    parent_id)).  Levels above 0 total ~n/7 rows.  The ``memo`` entry
+    also holds the leaves frame the nodes' level-0 rows read through, so
+    ``reset_shared_cache`` frees it with the tree; each level's
+    localCheckpoint goes with that reset's RDD sweep."""
+    return memo("raptor_tree", spark, sf_dir,
+                lambda: _build_tree(spark, sf_dir))[:2]
+
+
+def _build_tree(spark, sf_dir):
     from pyspark import StorageLevel
-    jsc = spark.sparkContext._jsc
-    pre_ids = set(jsc.getPersistentRDDs().keys())
     leaves = (_leaves(spark, sf_dir)
               .withColumn("n_members", F.lit(1).cast("bigint"))
               .persist(StorageLevel.MEMORY_AND_DISK))
@@ -202,19 +176,13 @@ def _tree(spark, sf_dir):
         all_edges = e if all_edges is None else all_edges.unionByName(e)
         cur = nxt
         n = cur.count()
-    nodes = all_nodes.persist(StorageLevel.MEMORY_AND_DISK)
-    edges = all_edges.persist(StorageLevel.MEMORY_AND_DISK)
-    # every block this build pinned rides in the cache tuple so
-    # release_tree_cache can free it: the leaves frame (nodes' level-0
-    # rows read through it) plus the per-level localCheckpoint RDDs,
-    # which only surface in sc.getPersistentRDDs (diffed against the
-    # pre-build snapshot — the build is single-threaded, so the diff is
-    # exactly this tree's checkpoints)
-    ckpt_rdds = [rdd for rid, rdd in jsc.getPersistentRDDs().items()
-                 if rid not in pre_ids]
-    _TreeCache.key, _TreeCache.value = key, (
-        spark, nodes, edges, leaves, *ckpt_rdds)
-    return nodes, edges
+    if all_edges is None:
+        # at most one embedded document: no level above 0, no edges
+        all_edges = leaves.select(F.lit(0).alias("child_level"),
+                                  F.col("node_id").alias("child_id"),
+                                  F.col("node_id").alias("parent_id")
+                                  ).limit(0)
+    return all_nodes, all_edges, leaves
 
 
 def _tree_nodes(spark, sf_dir: str) -> DataFrame:
@@ -231,10 +199,9 @@ def _tree_edges(spark, sf_dir: str) -> DataFrame:
 def raptor_tree(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Summary nodes of the RAPTOR tree (levels >= 1): the chunks the
     reference appends per cluster (`raptor.py:119-125`)."""
-    nodes, _ = _tree(spark, sf_dir)
     from ..session import ordered_once
     return ordered_once(
-        nodes.filter(F.col("level") >= 1)
+        relation(spark, "raptor_nodes", sf_dir).filter(F.col("level") >= 1)
         .select("level", "node_id", "n_members",
                 F.length("text").cast("bigint").alias("n_chars"),
                 F.col("text").alias("summary")),
@@ -244,9 +211,9 @@ def raptor_tree(spark: SparkSession, sf_dir: str) -> DataFrame:
 def raptor_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Child→parent assignments per layer — the reference's ``labels``
     bookkeeping (`raptor.py:147-152`)."""
-    _, edges = _tree(spark, sf_dir)
     from ..session import ordered_once
-    return ordered_once(edges, "child_level", "child_id")
+    return ordered_once(relation(spark, "raptor_edges", sf_dir),
+                        "child_level", "child_id")
 
 
 def raptor_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -254,7 +221,7 @@ def raptor_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     how the reference indexes the summaries — they are stored as ordinary
     chunks and searched flat): brute-force cosine top-k of the query
     vector against EVERY node of every level."""
-    nodes, _ = _tree(spark, sf_dir)
+    nodes = relation(spark, "raptor_nodes", sf_dir)
     q = (nodes.filter((F.col("level") == 0)
                       & (F.col("node_id") == QUERY_NODE))
          .select(F.col("iemb").alias("qv")))

@@ -29,6 +29,8 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import documents_scan
+
 M_REGISTERS = 64          # 2^6 registers
 W_BITS = 54               # 60-bit bridge hash minus 6 register bits
 RHO_CAP = 40              # cap so 2^(RHO_CAP - M) stays a positive BIGINT
@@ -450,7 +452,7 @@ def bloom_url_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     flag.  Plan: build is one 4·|yesterday|-row groupBy collapsing to 512
     words; probe is a BROADCAST join of those words + a per-url bool_and
     (4 rows/url, map-side partial agg)."""
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet") \
+    d = documents_scan(spark, sf_dir) \
         .select("doc_id", _bloom_url("doc_id").alias("url"))
     bloom = bloom_build(d.filter(F.col("doc_id") % 2 == 0))
     batch = d.filter(F.col("doc_id") % 3 == 0)

@@ -48,7 +48,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..pipeline.snapshot_cache import relation
-from ..session import read_documents
+from ..session import memo, read_documents
 
 S = 1000           # smoothing — search.py:446,458 default
 TOPN_TAGS = 3      # search.py:458 topn_tags
@@ -59,7 +59,6 @@ UNIT = 1000        # per-mille readout (see module docstring)
 def _tags(spark, sf_dir) -> DataFrame:
     """(doc_id, tag): the tag_kwd stand-in, 3 rows/doc (memoized — every
     query in this module reads it at least twice)."""
-    from .dedup import _memo
 
     def build():
         d = read_documents(spark, sf_dir)
@@ -71,7 +70,7 @@ def _tags(spark, sf_dir) -> DataFrame:
                 .unionByName(d.select(
                     "doc_id", F.concat(F.lit("lang:"), "lang").alias("tag")))
                 .unionByName(kw))
-    return _memo("tagging_tags", spark, sf_dir, build)
+    return memo("tagging_tags", spark, sf_dir, build)
 
 
 def _kw_subquery() -> str:

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..pipeline.snapshot_cache import relation
-from ..session import read_documents
+from ..session import memo, read_documents
 
 
 # ---------------------------------------------------------------- doc_stats
@@ -525,9 +525,8 @@ def _tfidf_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
     match-keyword relation and as the kw: tag family.  The reference
     computes per-doc keywords at indexing (`rag/svr/task_executor.py`
     keyword step): the ``tfidf_keywords`` table."""
-    from .dedup import _memo
-    return _memo("tfidf_ranked", spark, sf_dir,
-                 lambda: _tfidf_ranked_build(spark, sf_dir))
+    return memo("tfidf_ranked", spark, sf_dir,
+                lambda: _tfidf_ranked_build(spark, sf_dir))
 
 
 def _tfidf_ranked_build(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..pipeline.snapshot_cache import relation
-from ..session import read_documents
+from ..session import documents_scan, read_documents
 
 SEQ_LEN = 512
 
@@ -810,11 +810,12 @@ def _quality_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unsorted classifier relation (the production shape — the sort in
     ``quality_classifier`` is driver-compare presentation only).
 
-    Reads the scan UNspread: the whole classifier is in-row JVM
-    expression work riding whole-stage codegen, so its plan stays
-    zero-Exchange (pinned by ``test_plan_is_in_row``); the spread
-    repartition only pays off for the heavy Python/explode consumers."""
-    d = (spark.read.parquet(f"{sf_dir}/documents.parquet")
+    Reads ``documents_scan``, not ``read_documents``: the whole
+    classifier is in-row JVM expression work riding whole-stage codegen,
+    so its plan stays zero-Exchange (pinned by ``test_plan_is_in_row``);
+    ``spread``'s repartition only pays off for the heavy Python/explode
+    consumers."""
+    d = (documents_scan(spark, sf_dir)
          .filter(F.length(F.trim("text")) > 0)
          .select("doc_id",
                  F.split(F.regexp_replace(F.lower(F.trim("text")),

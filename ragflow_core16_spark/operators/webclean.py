@@ -33,10 +33,11 @@ Operators:
   join back, both AQE-coalescible.
 
 Scale note: the weblines derivation itself is stateless per-row, so all
-three operators inherit the scan's partitioning.  The small-fixture scan
-goes through ``session.spread()`` (single-row-group parquet arrives as
-one split; at real scale the scan already has thousands and spread is a
-no-op guard) — beyond that the per-doc groupBys need no repartition.
+three operators inherit the scan's partitioning.  They read the corpus
+through ``session.read_documents``, whose ``spread`` widens a corpus of
+fewer files than cores (a fixture is one file, so one split) to the core
+count and returns one with a file per core as scanned — beyond that the
+per-doc groupBys need no repartition.
 """
 
 from __future__ import annotations
@@ -45,7 +46,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..pipeline.snapshot_cache import relation
-from ..session import read_documents
+from ..session import documents_scan, memo, read_documents
 
 LINE_WORDS = 10
 _BOILER = "subscribe to our newsletter follow us on social media"
@@ -329,7 +330,7 @@ def _corpus_keep_computed(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``corpus_keep``) reuses the persisted relation instead of re-running
     the LSH chain — the local-mode analogue of writing the decision
     columns once and scanning them thereafter."""
-    from .dedup import _memo, dedup_keep_decisions
+    from .dedup import dedup_keep_decisions
     from .training import (_BENCH_MOD, decontaminate_decisions,
                            repetition_quality_decisions)
     # dedup_keep covers EVERY document, so it anchors the join — quality
@@ -343,9 +344,9 @@ def _corpus_keep_computed(spark: SparkSession, sf_dir: str) -> DataFrame:
     gopher = repetition_quality_decisions(spark, sf_dir).select(
         "doc_id", "gopher_pass")
     c4 = c4_line_decisions(spark, sf_dir).select("doc_id", "c4_pass")
-    dk = _memo("dedup_keep_decisions", spark, sf_dir,
-               lambda: dedup_keep_decisions(spark, sf_dir)
-               ).select("doc_id", F.col("kept").alias("dedup_kept"))
+    dk = memo("dedup_keep_decisions", spark, sf_dir,
+              lambda: dedup_keep_decisions(spark, sf_dir)
+              ).select("doc_id", F.col("kept").alias("dedup_kept"))
     dec = decontaminate_decisions(spark, sf_dir).select(
         "doc_id", "n_shared_grams")
     g = F.coalesce(F.col("gopher_pass"), F.lit(False))
@@ -422,8 +423,7 @@ def domain_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     survivors per host.  The kept SET is provably identical to the window
     formulation, which is exactly what the oracle checks.  Host totals
     come from a separate count agg (map-side combinable)."""
-    docs = (spark.read.parquet(f"{sf_dir}/documents.parquet")
-            .select("doc_id"))
+    docs = documents_scan(spark, sf_dir).select("doc_id")
     prio = _md5i_col(F.concat(F.lit("42:prio:"),
                               F.col("doc_id").cast("string")))
     m = docs.select("doc_id", _host_col().alias("host"),
@@ -526,18 +526,15 @@ def _robots_txt_col(host):
 def robots_decisions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The decision relation before presentation ordering (plan-audited
     directly: the ``_ordered`` checkpoint would hide the join shape)."""
-    from ..session import spread
     # spread: the per-page rule-array filter + sort_array runs row-wise
     # over every page; a single scan split would serialize it on one core.
     # The shuffled relation is the thin doc_id projection, and at real
     # scale (scan already has ≥ parallelism splits) spread is a no-op.
-    docs = spread(spark.read.parquet(f"{sf_dir}/documents.parquet")
-                  .select("doc_id"))
+    docs = read_documents(spark, sf_dir).select("doc_id")
     # hosts-distinct branch reads its own UNspread scan: it collapses to
     # |hosts| rows immediately, so parallelising its map side buys nothing
     # and would add a second repartition Exchange to the broadcast branch
-    hosts_docs = (spark.read.parquet(f"{sf_dir}/documents.parquet")
-                  .select("doc_id"))
+    hosts_docs = documents_scan(spark, sf_dir).select("doc_id")
     sec = F.element_at(
         F.array(*[F.lit(s) for s in _ROBOTS_SECS]),
         (_md5i_col(F.concat(F.lit("42:sec:"),
@@ -636,8 +633,7 @@ FROM d ORDER BY doc_id
 def sitemap_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The coverage relation before presentation ordering (plan-audited
     directly; the ``_ordered`` checkpoint would hide the join shape)."""
-    docs = (spark.read.parquet(f"{sf_dir}/documents.parquet")
-            .select("doc_id"))
+    docs = documents_scan(spark, sf_dir).select("doc_id")
     sec = F.element_at(
         F.array(*[F.lit(s) for s in _ROBOTS_SECS]),
         (_md5i_col(F.concat(F.lit("42:sec:"),
@@ -987,8 +983,7 @@ def url_blocklist_decisions(spark: SparkSession, sf_dir: str) -> DataFrame:
     directly — the ``_ordered`` checkpoint would hide the join shape).
     All-JVM column derivation, so no ``spread()``: the scan's own splits
     are the right parallelism and the page side stays shuffle-free."""
-    docs = (spark.read.parquet(f"{sf_dir}/documents.parquet")
-            .select("doc_id"))
+    docs = documents_scan(spark, sf_dir).select("doc_id")
     sec = F.element_at(
         F.array(*[F.lit(s) for s in _ROBOTS_SECS]),
         (_md5i_col(F.concat(F.lit("42:sec:"),
@@ -1067,8 +1062,7 @@ _META_ROBOTS = ["index,follow", "noindex", "nofollow", "noindex,nofollow",
 
 
 def meta_robots_decisions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = (spark.read.parquet(f"{sf_dir}/documents.parquet")
-            .select("doc_id"))
+    docs = documents_scan(spark, sf_dir).select("doc_id")
     did = F.col("doc_id").cast("string")
     pick = (_md5i_col(F.concat(F.lit("42:mrb:"), did)) % 6).cast("int")
     content = F.element_at(
@@ -1186,35 +1180,14 @@ ORDER BY doc_id
 """
 
 
-# ------------------------------------------- decision-table materialization
-# At 100 TB nobody recomputes the dedup chain per query: a curation run
-# (jobs/curate_job.py) writes one per-document decision table per corpus
-# snapshot, and every later ``web_keep`` / ``corpus_keep`` is a SCAN of
-# that table.  The operators below model exactly that: an explicit
-# ``materialize_web_decisions`` write (invoked by the job, or once per
-# bench session as the snapshot-time step), with the query functions
-# routing over the written table when it exists and falling back to the
-# full recompute when it doesn't — so the driver's oracle comparison
-# (fresh session, no table) still exercises the complete compute path.
-#
-# Staleness is structural, not temporal: the table path embeds a
-# fingerprint of the backing documents files (name+size+mtime), so a
-# regenerated fixture under an unchanged sf_dir simply misses the cache.
-
-def web_decisions_path(sf_dir: str) -> str:
-    from ..pipeline.snapshot_cache import table_path
-    return table_path("web_decisions", sf_dir)
-
-
 def web_decisions_unordered(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full per-document decision relation, computed: content gates
     (``_corpus_keep_computed``) joined with the crawl-metadata gates.
     One row per non-eval document; every component column raw (blocked,
     not unblocked) so both ``web_keep`` and ``corpus_keep`` project from
     it."""
-    from .dedup import _memo
-    ck = _memo("corpus_keep_decisions", spark, sf_dir,
-               lambda: _corpus_keep_computed(spark, sf_dir))
+    ck = memo("corpus_keep_decisions", spark, sf_dir,
+              lambda: _corpus_keep_computed(spark, sf_dir))
     rb = robots_decisions(spark, sf_dir).select("doc_id", "allowed")
     bl = url_blocklist_decisions(spark, sf_dir).select("doc_id", "blocked")
     mr = meta_robots_decisions(spark, sf_dir).select("doc_id", "indexable")

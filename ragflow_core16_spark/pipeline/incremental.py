@@ -68,7 +68,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import read_documents
+from ..session import documents_scan, read_documents
 from .snapshot_cache import (DELTA_FAMILIES, FAMILIES, corpus_fingerprint,
                              materialize, read_table)
 
@@ -168,9 +168,7 @@ def dedup_index_delta_frames(spark: SparkSession, base_dir: str,
                 day1.limit(DAY1_IDS_COLLECT_MAX + 1).collect()]
     sh = _shingles_of(read_documents(spark, batch_dir))
     if day1_ids:
-        base_docs = (spark.read
-                     .parquet(f"{base_dir.rstrip('/')}/documents.parquet")
-                     .select("doc_id", "text"))
+        base_docs = documents_scan(spark, base_dir).select("doc_id", "text")
         pruned_base = (
             base_docs.join(day1, "doc_id", "left_semi")
             if len(day1_ids) > DAY1_IDS_COLLECT_MAX

@@ -1,4 +1,8 @@
-"""SparkSession factory with the engine's tuned configuration.
+"""SparkSession factory with the engine's tuned configuration, and the
+per-corpus plumbing every operator shares: the one documents reader
+(``documents_scan`` / ``read_documents``), the width rule ahead of
+Python stages (``spread``) and the session memo of shared intermediates
+(``memo`` / ``reset_shared_cache``).
 
 Settings chosen for the 100 TB design point, all standard Spark knobs
 (SURVEY.md §4.2): AQE on (coalescing + skew splitting), Arrow enabled for
@@ -9,7 +13,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_CONF = {
     "spark.sql.adaptive.enabled": "true",
@@ -21,7 +26,6 @@ DEFAULT_CONF = {
     # This is also the extraction mapInArrow's batch: the unit its output
     # columns are built in and its chunk ids are hashed in
     "spark.sql.execution.arrow.maxRecordsPerBatch": "64",
-    "spark.sql.files.maxPartitionBytes": "134217728",
     "spark.sql.session.timeZone": "UTC",
     # the JVM-wide cache of generated classes (Spark's default: 100).  A
     # long-lived session reruns the same plans: one day-2 curation cycle
@@ -41,62 +45,96 @@ DEFAULT_CONF = {
 }
 
 
-def _scan_splits(df, max_partition_bytes: int) -> int:
-    """Estimated scan-split count from the files backing the plan — pure
-    driver-side metadata (file index + sizes), NO plan→RDD conversion.
-    ``df.rdd.getNumPartitions()`` compiles the whole query to an RDD just
-    to read one number, which costs ~0.3-1 s of driver work per call and
-    was the dominant term of the ``paragraph_dedup`` bench regression
-    (each invocation rebuilds its plan, so every query paid it again).
-    Files on non-local schemes (no stat available) count as one split
-    each — the conservative direction for the < n test."""
-    import math
-    import os
-    splits = 0
-    for uri in df.inputFiles():
-        path = uri[7:] if uri.startswith("file:") and uri[5:7] == "//" else uri
-        try:
-            size = os.path.getsize(path)
-        except OSError:
-            splits += 1
-            continue
-        splits += max(1, math.ceil(size / max_partition_bytes))
-    return splits
+def documents_scan(spark, sf_dir: str):
+    """A corpus snapshot's documents, as a plain scan.  The one place
+    that names the layout (``<sf_dir>/documents.parquet``); operators
+    that feed an explode or a Python stage read ``read_documents``."""
+    return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
 
-def spread(df, partitions: int | None = None):
-    """Repartition a narrow input ahead of a Python (mapInPandas) stage.
+def spread(df):
+    """Repartition a narrow input ahead of a row-wise Python or explode
+    stage.
 
-    Small parquet inputs arrive as ONE scan partition (a 100 MB file is a
-    single split under maxPartitionBytes), which would serialize the whole
-    Arrow-UDF stage onto one core.  A round-robin repartition of the narrow
-    (doc_id, text) projection costs one tiny shuffle and buys full-cluster
-    parallelism for the Python stage.  At real scale the scan already has
-    thousands of splits and callers see a no-op (not even an Exchange);
-    use ``partitions=`` to pin an explicit width."""
-    spark = df.sparkSession
-    n = partitions or spark.sparkContext.defaultParallelism
-    raw = spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
-    digits = "".join(c for c in str(raw) if c.isdigit())
-    maxpb = int(digits) if digits else 134217728
-    if str(raw).lower().endswith(("m", "mb")):
-        maxpb *= 1024 * 1024
-    elif str(raw).lower().endswith(("k", "kb")):
-        maxpb *= 1024
-    elif str(raw).lower().endswith(("g", "gb")):
-        maxpb *= 1024 * 1024 * 1024
-    try:
-        splits = _scan_splits(df, maxpb)
-    except Exception:
-        splits = df.rdd.getNumPartitions()
-    return df.repartition(n) if splits < n else df
+    A small parquet file is one scan split, which would run the whole
+    stage on one core.  When the plan reads fewer files than
+    ``defaultParallelism``, a round-robin ``repartition`` to that width
+    costs one small shuffle; otherwise ``df`` itself comes back (no
+    Exchange).  The file count is plan metadata (``inputFiles``): no
+    file is opened or stat'd and the plan is not compiled to an RDD.
+    It is the scan's split count while every file is under
+    ``spark.sql.files.maxPartitionBytes`` (128 MB by default); a larger
+    file splits further, so the count can only under-state the width."""
+    n = df.sparkSession.sparkContext.defaultParallelism
+    return df.repartition(n) if len(df.inputFiles()) < n else df
 
 
 def read_documents(spark, sf_dir: str):
-    """A corpus snapshot's ``documents.parquet``, ``spread`` so the
-    operators' explodes and Python stages do not all run on the one scan
-    split a small single-row-group file yields (a no-op at real scale)."""
-    return spread(spark.read.parquet(f"{sf_dir}/documents.parquet"))
+    """``documents_scan`` through ``spread``: the operators' explodes and
+    Python stages do not all run on the one split a small file yields
+    (returned as scanned once the corpus has a file per core)."""
+    return spread(documents_scan(spark, sf_dir))
+
+
+#: (name, sf_dir) -> (session, value) of every ``memo`` entry
+_MEMO: dict = {}
+
+
+def _frames(value) -> list:
+    return [v for v in (value if isinstance(value, tuple) else (value,))
+            if isinstance(v, DataFrame)]
+
+
+def memo(name: str, spark, sf_dir: str, build):
+    """A session-scoped intermediate of one corpus, built once.
+
+    ``build()``'s DataFrame, or each DataFrame of the tuple it returns,
+    is persisted MEMORY_AND_DISK (the local-mode analogue of writing the
+    intermediate to a temp table between the jobs that share it); any
+    other value, such as a count, is kept as is.  An entry carries its
+    session object, so a call from another session (even one reusing a
+    dead session's id) builds again and replaces the entry; nothing
+    else evicts one.  Regenerating a corpus under an unchanged sf_dir
+    within one session is not detected: that is the temp-table
+    semantics this memo models.  ``reset_shared_cache`` forgets every
+    entry."""
+    hit = _MEMO.get((name, sf_dir))
+    if hit is not None and hit[0] is spark:
+        return hit[1]
+    value = build()
+    for df in _frames(value):
+        if not df.is_cached:
+            df.persist(StorageLevel.MEMORY_AND_DISK)
+    _MEMO[(name, sf_dir)] = (spark, value)
+    return value
+
+
+def reset_shared_cache() -> None:
+    """Unpersist and forget every ``memo`` entry, then every RDD the
+    active session still pins (bench hygiene: each measured run pays
+    its own materialization instead of inheriting a neighbor's, and
+    storage memory does not accumulate across an N-query session)."""
+    for _sess, value in _MEMO.values():
+        for df in _frames(value):
+            try:
+                df.unpersist()
+            except Exception:
+                pass
+    _MEMO.clear()
+    # final sweep: localCheckpoints (each RAPTOR level's assignment,
+    # ordered_once's presentation checkpoints) pin RDD blocks that never
+    # appear in the CacheManager, so DataFrame.unpersist can't reach
+    # them.  Every memo entry is forgotten above, so no cached plan can
+    # legally reference an old checkpoint block: anything still listed
+    # in sc.getPersistentRDDs is orphaned storage this reset owns.
+    try:
+        spark = SparkSession.getActiveSession()
+        if spark is not None:
+            jsc = spark.sparkContext._jsc
+            for rdd in list(jsc.getPersistentRDDs().values()):
+                rdd.unpersist()
+    except Exception:
+        pass
 
 
 def ordered_once(df, *cols):

@@ -36,6 +36,7 @@ from pyspark.sql.types import (BinaryType, IntegerType, LongType, StringType,
                                StructField, StructType)
 
 from ..datagen.pages import PAGES_SCHEMA, document_page
+from ..session import documents_scan
 
 _CRLF = b"\r\n"
 _EPOCH = pd.Timestamp("2024-01-01")
@@ -290,7 +291,7 @@ def warc_files_from_documents(spark: SparkSession, sf_dir: str,
     where md5i(seed:rvbad:doc) % 7 == 0: those record a digest of
     payload+'X' (content drifted between the dedup decision and storage),
     so digest verification has both outcomes to find."""
-    docs = (spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = (documents_scan(spark, sf_dir)
             .select("doc_id", "text")
             .withColumn("file_id", (F.col("doc_id") % n_files).cast("int")))
 

@@ -46,6 +46,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from ..session import documents_scan
+
 #: the documents-table schema (streaming file sources require it stated)
 DOCUMENTS_SCHEMA = StructType([
     StructField("doc_id", LongType(), True),
@@ -96,7 +98,7 @@ def _apply_batch(spark: SparkSession, batch_df: DataFrame, batch_id: int,
         # a crawl feed may RE-DELIVER ids it crawled before; detect via
         # the previous version's per-doc stats (no document scan)
         prev_ids = read_table(spark, "doc_stats", prev).select("doc_id")
-        batch_ids = (spark.read.parquet(bdocs).select("doc_id")
+        batch_ids = (documents_scan(spark, bdir).select("doc_id")
                      .join(prev_ids, "doc_id"))
         recrawl = not batch_ids.isEmpty()
         if recrawl:
@@ -106,9 +108,8 @@ def _apply_batch(spark: SparkSession, batch_df: DataFrame, batch_id: int,
             # rows once, then link the batch files in.  A lakehouse
             # format takes delete vectors instead; this is the plain-
             # parquet equivalent, paid only on re-delivery days.
-            surv = (spark.read.parquet(
-                        os.path.join(prev, "documents.parquet"))
-                    .join(spark.read.parquet(bdocs).select("doc_id"),
+            surv = (documents_scan(spark, prev)
+                    .join(documents_scan(spark, bdir).select("doc_id"),
                           "doc_id", "anti"))
             surv.write.mode("overwrite").parquet(vdocs)
             _link_tree(bdocs, vdocs)

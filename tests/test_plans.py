@@ -107,11 +107,11 @@ def test_lsh_ann_bucket_join_broadcasts_query(spark):
 
 def test_dedup_queries_share_persisted_intermediates(spark):
     """minhash/LSH/jaccard all derive from ONE persisted shingle relation
-    and ONE persisted wide signature (operators/dedup.py _memo): after the
+    and ONE persisted wide signature (session.memo entries): after the
     signature query builds them, the jaccard plan must read the in-memory
     relation instead of re-deriving shingles from parquet."""
     import ragflow_core16_spark.operators.dedup as D
-    D._MEMO.clear()
+    D.reset_shared_cache()
     D.minhash_lsh_pairs(spark, SF).count()     # builds + persists
     plan = _formatted(D.ngram_jaccard(spark, SF))
     assert "InMemoryTableScan" in plan
@@ -390,7 +390,7 @@ def test_ngram_jaccard_prunes_shingles_to_candidates(spark):
     the (doc, shingle) shuffle — only candidate docs' shingles move, never
     the whole corpus shingle relation."""
     import ragflow_core16_spark.operators.dedup as D
-    D._MEMO.clear()
+    D.reset_shared_cache()
     plan = _formatted(D.ngram_jaccard(spark, SF))
     # three broadcast pruning join SITES, all fed by ONE reused
     # candidate-doc broadcast subplan (ReuseExchange)

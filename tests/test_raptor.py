@@ -127,6 +127,52 @@ def test_levelup_plan_broadcasts_centroids(spark, ops):
     assert "BroadcastNestedLoopJoin" in plan  # broadcast side = centroids
 
 
+def test_family_build_clusters_once_for_both_kinds(spark, ops, tmp_path,
+                                                  monkeypatch):
+    """The ``raptor_tree`` family commits two kinds from ONE tree: the
+    edges build reuses the memoized tree the nodes build made, so the
+    clustering loop advances once per level, not twice."""
+    from pyspark.sql import functions as F
+
+    from ragflow_core16_spark.pipeline.snapshot_cache import (BY_NAME,
+                                                              read_table)
+    from ragflow_core16_spark.session import reset_shared_cache
+    advances = []
+    level_up = ops._level_up
+
+    def counting(nodes, n):
+        advances.append(n)
+        return level_up(nodes, n)
+
+    monkeypatch.setattr(ops, "_level_up", counting)
+    monkeypatch.setenv("RAG_CURATION_DIR", str(tmp_path / "cur"))
+    reset_shared_cache()
+    BY_NAME["raptor_tree"].build(spark, SF)
+    levels = (read_table(spark, "raptor_nodes", SF)
+              .agg(F.max("level")).first()[0])
+    assert levels > 1
+    assert len(advances) == levels
+    assert read_table(spark, "raptor_edges", SF).count() > 0
+
+
+def test_one_document_corpus_matches_oracle(spark, ops, tmp_path):
+    """A corpus with one embedded document has no level above 0: the
+    tree is its leaf and the edge relation is empty, as in the DuckDB
+    oracle, whose first level is guarded by ``n > 1``."""
+    from pyspark.sql import functions as F
+
+    from oracle_compare import compare
+    one = str(tmp_path / "one")
+    for table, key in (("documents", "doc_id"), ("embeddings", "vec_id")):
+        (spark.read.parquet(f"{SF}/{table}.parquet")
+         .filter(F.col(key) == 3).coalesce(1)
+         .write.parquet(f"{one}/{table}.parquet"))
+    for name, (fn, sql) in ops.QUERIES.items():
+        r = compare(spark, one, name, fn, sql)
+        assert r["cols_match"] and r["values_match"], r
+        assert r["n_spark"] == 0, r
+
+
 class TestSharedCacheReset:
     def test_tree_survives_cache_reset_and_rdd_unpersist(self, spark):
         """Regression: the tree cache holds persisted + localCheckpointed

@@ -1,63 +1,85 @@
-"""session.spread: metadata-based split estimation (no plan→RDD probe).
+"""session.spread and session.memo.
 
-The r3 bench regression in ``paragraph_dedup`` (1.95 → 6.12 s) traced to
-``spread()`` calling ``df.rdd.getNumPartitions()``: compiling the whole
-query to an RDD just to read one number costs ~0.3-1 s of driver work per
-invocation, and every query that touches ``_docs`` paid it on every call.
-The estimate now comes from the scan's file index + sizes.
+``spread`` widens an input of fewer files than ``defaultParallelism``
+and returns a wider one as it is.  The width comes from plan metadata
+(``inputFiles``), never from ``df.rdd.getNumPartitions()``: compiling the
+whole query to an RDD just to read one number cost ~0.3-1 s of driver
+work per call (the r3 ``paragraph_dedup`` bench regression, 1.95 → 6.12
+s).
+
+``TestMemo`` pins that ``reset_shared_cache`` forgets every session-scoped
+intermediate, counts included.
 
 ``TestCodegenCache`` pins that the session's generated-code cache outlives
 a working set larger than Spark's 100-entry default.
 """
 
-import pytest
-
-from ragflow_core16_spark.session import DEFAULT_CONF, _scan_splits, spread
+from ragflow_core16_spark.session import (DEFAULT_CONF, reset_shared_cache,
+                                          spread)
 
 SF = "/root/testdata/sf0.001"
 
 
-class TestScanSplits:
-    def test_small_parquet_is_one_split(self, spark):
-        df = spark.read.parquet(f"{SF}/documents.parquet")
-        assert _scan_splits(df, 128 * 1024 * 1024) == 1
-
-    def test_estimate_matches_actual_scan_partitions(self, spark):
-        # the estimate must agree with what Spark actually schedules for
-        # the default maxPartitionBytes (single small file → 1 split)
-        df = spark.read.parquet(f"{SF}/documents.parquet")
-        assert _scan_splits(df, 134217728) == df.rdd.getNumPartitions()
-
-    def test_tiny_max_partition_bytes_multiplies_splits(self, spark):
-        df = spark.read.parquet(f"{SF}/documents.parquet")
-        one = _scan_splits(df, 1 << 40)
-        many = _scan_splits(df, 4096)
-        assert one == 1 and many > one
-
-
 class TestSpread:
+    def test_file_count_is_the_scan_width(self, spark):
+        # the rule's premise: a fixture file under maxPartitionBytes is
+        # one scan split, so the file count is what Spark schedules
+        df = spark.read.parquet(f"{SF}/documents.parquet")
+        assert len(df.inputFiles()) == df.rdd.getNumPartitions() == 1
+
     def test_small_input_is_widened(self, spark):
         df = spark.read.parquet(f"{SF}/documents.parquet")
         out = spread(df)
         assert (out.rdd.getNumPartitions()
                 == spark.sparkContext.defaultParallelism)
 
-    def test_wide_enough_scan_is_untouched_no_exchange(self, spark):
-        # when the scan already has >= the requested width, spread must
-        # return the SAME frame — not even a no-op Exchange in the plan.
-        # (The estimate is scan-file-based by design: spread's contract is
-        # a raw scan / narrow projection, the only place a split shortage
-        # can originate.)
-        df = spark.read.parquet(f"{SF}/documents.parquet")
-        assert spread(df, partitions=1) is df
-
-    def test_explicit_width_pins_partitions(self, spark):
-        df = spark.read.parquet(f"{SF}/documents.parquet")
-        assert spread(df, partitions=7).rdd.getNumPartitions() == 7
+    def test_wide_enough_scan_is_untouched_no_exchange(self, spark,
+                                                       tmp_path):
+        # a directory of at least defaultParallelism files comes back as
+        # the SAME frame — not even a no-op Exchange in the plan
+        n = spark.sparkContext.defaultParallelism
+        spark.range(0, 40 * n, numPartitions=n).write.parquet(
+            str(tmp_path / "wide"))
+        df = spark.read.parquet(str(tmp_path / "wide"))
+        assert len(df.inputFiles()) == n
+        assert spread(df) is df
 
     def test_rows_preserved(self, spark):
         df = spark.read.parquet(f"{SF}/documents.parquet")
         assert spread(df).count() == df.count()
+
+    def test_max_partition_bytes_does_not_change_the_width(self, spark):
+        # a unit-suffixed setting ("1t" = 1 TiB) is not a byte count the
+        # rule reads: the one-file fixture still widens
+        key = "spark.sql.files.maxPartitionBytes"
+        spark.conf.set(key, "1t")
+        try:
+            df = spark.read.parquet(f"{SF}/documents.parquet")
+            assert (spread(df).rdd.getNumPartitions()
+                    == spark.sparkContext.defaultParallelism)
+        finally:
+            spark.conf.unset(key)
+
+
+class TestMemo:
+    def test_reset_forgets_graphrag_document_count(self, spark,
+                                                   monkeypatch):
+        from ragflow_core16_spark.operators import graphrag as G
+        counted = []
+        compute = G.relation
+
+        def counting(spark, kind, sf_dir):
+            counted.append(kind)
+            return compute(spark, kind, sf_dir)
+
+        monkeypatch.setattr(G, "relation", counting)
+        reset_shared_cache()
+        n = G._n_docs(spark, SF)
+        assert G._n_docs(spark, SF) == n
+        assert len(counted) == 1
+        reset_shared_cache()
+        assert G._n_docs(spark, SF) == n
+        assert len(counted) == 2
 
 
 class TestCodegenCache:

@@ -1,7 +1,8 @@
 """The snapshot-table family registry (``snapshot_cache.FAMILIES``) is the
 one declaration of which tables exist, which function computes each and
-which a day-2 delta maintains, and ``snapshot_cache.relation`` is the one
-scan-or-compute branch.  These checks read the package source — no
+which a day-2 delta maintains, ``snapshot_cache.relation`` is the one
+scan-or-compute branch, and ``session.documents_scan`` is the one reader
+of a corpus's documents.  These checks read the package source — no
 Spark."""
 
 import ast
@@ -12,14 +13,13 @@ import textwrap
 
 from ragflow_core16_spark.pipeline import snapshot_cache as SC
 
-PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(
-    __file__))), "ragflow_core16_spark")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PKG = os.path.join(REPO, "ragflow_core16_spark")
 OPERATORS = os.path.join(PKG, "operators")
 
 #: the operators' own ``read_table`` calls, as (module, function, kind):
 #: each falls back to something cheaper than its kind's full compute
-#: (``semantic_dedup`` scans only at the default threshold), and
-#: ``raptor._tree`` builds two kinds at once
+#: (``semantic_dedup`` scans only at the default threshold)
 DIRECT_SCANS = {
     ("dedup", "minhash_lsh_pairs", "dedup_pairs"),
     ("dedup", "ngram_jaccard", "dedup_pairs"),
@@ -30,8 +30,6 @@ DIRECT_SCANS = {
     ("retrieval", "_hybrid_scores", "term_postings"),
     ("similarity", "semantic_dedup", "semantic_labels"),
     ("webclean", "corpus_keep_decisions", "web_decisions"),
-    ("raptor", "_tree", "raptor_nodes"),
-    ("raptor", "_tree", "raptor_edges"),
 }
 
 
@@ -140,3 +138,52 @@ def test_operators_call_read_table_only_at_the_listed_sites():
                   for fn, callee, kind in _table_calls(tree)
                   if callee == "read_table"}
     assert found == DIRECT_SCANS
+
+
+def _names_documents(node) -> bool:
+    return any(isinstance(c, ast.Constant) and isinstance(c.value, str)
+               and "documents.parquet" in c.value for c in ast.walk(node))
+
+
+def _is_read(node) -> bool:
+    """``<x>.read`` somewhere down a ``.parquet`` call's receiver chain
+    (``spark.read``, ``spark.read.option(...)``), not ``<df>.write``."""
+    while isinstance(node, (ast.Attribute, ast.Call)):
+        if isinstance(node, ast.Attribute) and node.attr == "read":
+            return True
+        node = node.value if isinstance(node, ast.Attribute) else node.func
+    return False
+
+
+def _documents_reads(tree):
+    """Line of every ``<x>.read....parquet(path)`` whose path names
+    ``documents.parquet``, literally or through a variable assigned from
+    an expression that does."""
+    paths = {t.id for node in ast.walk(tree)
+             if isinstance(node, ast.Assign) and _names_documents(node.value)
+             for t in node.targets if isinstance(t, ast.Name)}
+    for node in ast.walk(tree):
+        if (isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "parquet"
+                and _is_read(node.func.value)
+                and any(_names_documents(a)
+                        or isinstance(a, ast.Name) and a.id in paths
+                        for a in node.args)):
+            yield node.lineno
+
+
+def test_only_session_reads_the_documents_layout():
+    reads = []
+    for top in (PKG, os.path.join(REPO, "jobs")):
+        for dirpath, _dirs, files in os.walk(top):
+            for f in sorted(files):
+                path = os.path.join(dirpath, f)
+                if (not f.endswith(".py")
+                        or path == os.path.join(PKG, "session.py")):
+                    continue
+                with open(path) as fh:
+                    tree = ast.parse(fh.read())
+                reads += [f"{os.path.relpath(path, REPO)}:{line}"
+                          for line in _documents_reads(tree)]
+    assert reads == []

@@ -683,11 +683,10 @@ class TestDecisionTable:
         # reading partial data
         import os
 
-        from ragflow_core16_spark.operators.webclean import (
-            web_decisions_path)
-        from ragflow_core16_spark.pipeline.snapshot_cache import read_table
+        from ragflow_core16_spark.pipeline.snapshot_cache import (
+            read_table, table_path)
         monkeypatch.setenv("RAG_CURATION_DIR", str(tmp_path / "cur"))
-        path = web_decisions_path(SF)
+        path = table_path("web_decisions", SF)
         spark.range(3).toDF("doc_id").write.parquet(
             os.path.join(path, "data", "crashed"))
         assert read_table(spark, "web_decisions", SF) is None
@@ -698,15 +697,14 @@ class TestDecisionTable:
         import os
         import shutil
 
-        from ragflow_core16_spark.operators.webclean import (
-            web_decisions_path)
+        from ragflow_core16_spark.pipeline.snapshot_cache import table_path
         monkeypatch.setenv("RAG_CURATION_DIR", str(tmp_path / "cur"))
         sf2 = tmp_path / "sf"
         sf2.mkdir()
         shutil.copy(f"{SF}/documents.parquet", sf2 / "documents.parquet")
-        p1 = web_decisions_path(str(sf2))
+        p1 = table_path("web_decisions", str(sf2))
         os.utime(sf2 / "documents.parquet", ns=(1, 1))
-        assert web_decisions_path(str(sf2)) != p1
+        assert table_path("web_decisions", str(sf2)) != p1
 
     def test_materialize_is_idempotent(self, spark, tmp_path, monkeypatch):
         from ragflow_core16_spark.operators.webclean import (
