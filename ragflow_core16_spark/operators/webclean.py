@@ -529,7 +529,7 @@ def robots_decisions(spark: SparkSession, sf_dir: str) -> DataFrame:
     # spread: the per-page rule-array filter + sort_array runs row-wise
     # over every page; a single scan split would serialize it on one core.
     # The shuffled relation is the thin doc_id projection, and at real
-    # scale (scan already has ≥ parallelism splits) spread is a no-op.
+    # scale (a corpus of at least one file per core) spread is a no-op.
     docs = read_documents(spark, sf_dir).select("doc_id")
     # hosts-distinct branch reads its own UNspread scan: it collapses to
     # |hosts| rows immediately, so parallelising its map side buys nothing
